@@ -102,6 +102,19 @@ import org.apache.spark.sql.SparkSession
   * it) unless SPARK_GRAFT_BENCH_BUDGET is set explicitly.
   */
 object Bench {
+
+  /** Whether a committed medians record can be the band base for a
+    * run at `sfDir` with `cpus` Spark cores: same SF, same
+    * `spark_cpus` (bands from a 32-core record would stamp a clean
+    * 4-core run contended), and not itself stamped contended. A
+    * record that does not carry `spark_cpus` never matches.
+    */
+  private[graft] def isBandRecord(text: String, sfDir: String, cpus: String): Boolean =
+    text.contains(s""""sf":"$sfDir"""") &&
+      "\"spark_cpus\":(\\d+)".r.findFirstMatchIn(text)
+        .exists(_.group(1) == cpus.trim) &&
+      !text.contains("\"contended\":true")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -396,15 +409,12 @@ object Bench {
                 }
               }.toSeq.sortBy(-_._1)
               finally listing.close()
-            // newest committed record that is itself CLEAN (same SF,
-            // not stamped contended) — a flagged run must never become
-            // the band base any more than it may become the record
+            // newest committed record that is itself CLEAN (same SF and
+            // cpus, not stamped contended) — a flagged run must never
+            // become the band base any more than it may become the record
             candidates.iterator.map { case (_, p) =>
               new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            }.find { text =>
-              text.contains(s""""sf":"$sfDir"""") &&
-                !text.contains("\"contended\":true")
-            }.map { text =>
+            }.find(isBandRecord(_, sfDir, cpus)).map { text =>
               // the medians map is flat name:number — a targeted regex
               // over the "queries" suffix avoids a JSON dependency
               val body = text.indexOf("\"queries\":") match {
@@ -423,7 +433,7 @@ object Bench {
         }
       if (prev.isEmpty) System.err.println(
         s"[bench] medians guardrail found no clean committed BENCH_r<N>_medians.json " +
-          s"for sf $sfDir under ${repoRoot.getOrElse("<unresolved repo root>")} — " +
+          s"for sf $sfDir at $cpus cpus under ${repoRoot.getOrElse("<unresolved repo root>")} — " +
           "band check skipped (nBandOutliers=0)")
       prev.fold(0)(p => medians.count { case (n, v) =>
         // io entries carry the tighter 1.5x band: their medians are

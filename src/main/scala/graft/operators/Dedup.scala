@@ -119,16 +119,14 @@ object Dedup {
     * the `graft_dedup_buckets_*` query metric (see [[candidatePairs]]).
     *
     * The (id, shingles) projection feeds both candidate generation and
-    * pair verification. This handle-less convenience wrapper defaults to
-    * `StorageLevel.NONE` (recompute the projection on both branches):
-    * the returned frame is lazy, so nothing here could ever release a
-    * cache, and a persisted default would leak executor storage in
-    * long-running sessions (callers had no handle to unpersist). Pass an
-    * explicit `storage` AND manage the lifecycle via
-    * [[minHashNearDupsResult]]'s `use`/unpersist when the projection is
-    * worth caching; at 100 TB, checkpoint it to parquet instead
-    * (`checkpointDir` on the Result variant) rather than relying on
-    * executor block storage.
+    * pair verification. This handle-less form never caches it
+    * (recompute the projection on both branches): the returned frame
+    * is lazy, so nothing here could ever release a cache, and a
+    * persisted projection would leak executor storage in long-running
+    * sessions. Use [[minHashNearDupsResult]] (`storage` plus its
+    * `use`/unpersist handle) when the projection is worth caching; at
+    * 100 TB, checkpoint it to parquet instead (its `checkpointDir`)
+    * rather than relying on executor block storage.
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     */
@@ -141,11 +139,10 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.NONE,
       metricName: Option[String] = None
   ): DataFrame =
     minHashNearDupsResult(df, idCol, textCol, shingleSize, numHashes, bands,
-      threshold, maxBucket, storage, metricName).pairs
+      threshold, maxBucket, StorageLevel.NONE, metricName).pairs
 
   /** [[minHashNearDups]] with a [[NearDupResult]] handle: caller-owned
     * cache lifecycle + the stable bucket-overflow metric name.
@@ -432,33 +429,9 @@ object Dedup {
       maxPostings: Int = 1000,
       metricName: Option[String] = None
   ): DataFrame =
-    ngramJaccardNearDupsResult(df, idCol, textCol, shingleSize, threshold,
-      maxPostings, StorageLevel.NONE, metricName).pairs
-
-  /** [[ngramJaccardNearDups]] with the [[NearDupResult]] cache-ownership
-    * protocol: `storage` persists the shared (id, shingles) projection
-    * (it feeds candidate generation once and verification twice), and
-    * the caller releases it via the handle.
-    */
-  def ngramJaccardNearDupsResult(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      threshold: Double = 0.7,
-      maxPostings: Int = 1000,
-      storage: StorageLevel = StorageLevel.NONE,
-      metricName: Option[String] = None
-  ): NearDupResult = {
-    val metric = metricName.getOrElse(s"graft_ngram_postings_${idCol}_$textCol")
-    val projected = shingleProjection(df, idCol, textCol, shingleSize)
-    val withShingles =
-      if (storage == StorageLevel.NONE) projected else projected.persist(storage)
-    NearDupResult(
-      ngramJaccardFromShingles(withShingles, threshold, maxPostings, metric),
-      metric,
-      if (storage == StorageLevel.NONE) None else Some(withShingles))
-  }
+    ngramJaccardFromShingles(shingleProjection(df, idCol, textCol, shingleSize),
+      threshold, maxPostings,
+      metricName.getOrElse(s"graft_ngram_postings_${idCol}_$textCol"))
 
   /** The `(id, sh)` shingle-SET projection the whole exact n-gram
     * family (Jaccard + containment) derives from — empty-set rows
@@ -473,7 +446,7 @@ object Dedup {
     df.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** [[ngramJaccardNearDupsResult]]'s pair-generation + verify stages
+  /** [[ngramJaccardNearDups]]'s pair-generation + verify stages
     * over a PREBUILT `(id, sh)` projection (see [[shingleProjection]]).
     */
   def ngramJaccardFromShingles(
@@ -610,7 +583,7 @@ object Dedup {
   }
 
   /** Last-ingested micro-batch id, persisted as `last_batch.txt` beside
-    * the index data — the [[ingestDedupBatch]] / [[Ivf.ingestAnnBatch]]
+    * the index data — the [[ingestDedupBatchTo]] / [[Ivf.ingestAnnBatchTo]]
     * replay guard. Only the last uncommitted batch can replay under
     * sequential micro-batching, so a single marker matched by EQUALITY
     * suffices (and a fresh checkpoint over an existing index, ids
@@ -895,12 +868,20 @@ object Dedup {
   /** One step of a SEQUENTIAL dedup-ingest fold — the streaming face
     * of the [[writeMinHashIndex]]/[[minHashProbeIndex]] family: probe
     * `batch` against the index at `path`, compute the novel rows
-    * ([[keepNovel]]), then append the WHOLE batch to the index, and
-    * return the novel rows. Driving this from
-    * `foreachBatch` (micro-batches execute strictly in sequence) makes
-    * each arriving batch deduplicate against EVERYTHING previously
-    * seen — the base corpus plus every earlier increment — which a
-    * one-shot probe cannot express.
+    * ([[keepNovel]]), hand them to `sink`, and append the WHOLE batch
+    * to the index. Driving this from `foreachBatch` (micro-batches
+    * execute strictly in sequence) makes each arriving batch
+    * deduplicate against EVERYTHING previously seen — the base corpus
+    * plus every earlier increment — which a one-shot probe cannot
+    * express.
+    *
+    * `sink(novel)` must be an eager ACTION over the frame (a
+    * parquet/noop write — it may not stash the frame for later).
+    * Because the novel frame's lineage reads only `batch` and the
+    * checkpointed probe pairs — never the index — the sink action
+    * runs OVERLAPPED with the index append (guide §2.6): the intra
+    * pass's banding/verify stages back-fill the append writes' stage
+    * tails instead of queueing behind them.
     *
     * Policy, stated not hidden: the index grows by the full batch, not
     * just its novel rows. "Novel" therefore means "no near-dup among
@@ -927,78 +908,23 @@ object Dedup {
     * foreachBatch's `batchId` and each append is recorded in a
     * `last_batch.txt` marker beside the index: an id EQUAL to the
     * marker (only the last uncommitted batch can replay under
-    * sequential micro-batching) SKIPS the append and returns only the
-    * anti-join. Equality, not <=, so pointing a FRESH checkpoint at an
+    * sequential micro-batching) SKIPS the append and only re-runs the
+    * sink. Equality, not <=, so pointing a FRESH checkpoint at an
     * existing index (ids restart at 0) never silently skips appends.
     * Replay emission is dedup-more, never dedup-less: the index
     * already holds the batch, so within-batch near-dups (kept on first
     * delivery by policy) anti-join away on replay, while singletons
     * re-emit identically (exact self-id pairs are excluded by the
-    * probe). The residual unguarded window is the single marker-file
-    * write immediately after the append — versus the whole sink-write
-    * + checkpoint-commit span without the guard. Idempotence of the
-    * DOWNSTREAM write of the returned rows remains the caller's
-    * at-least-once concern (key it by batchId).
+    * probe). The replay marker is written strictly after the append,
+    * so the residual unguarded window is that single marker-file write
+    * — versus the whole sink-write + checkpoint-commit span without
+    * the guard; a sink failure after the marker commits replays as
+    * already ingested, the designed at-least-once path. Idempotence of
+    * the sink's write remains the caller's at-least-once concern (key
+    * it by batchId).
     *
     * Caller persists `batch` if re-reading it is expensive — it is
     * scanned by the probe, the anti-join, and the index append.
-    */
-  def ingestDedupBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7,
-      maxBucket: Int = 1000,
-      batchId: Option[Long] = None,
-      dedupWithinBatch: Boolean = false
-  ): DataFrame = {
-    val (kept, alreadyIngested) = foldStep(spark, batch, idCol, textCol,
-      path, shingleSize, numHashes, bands, threshold, maxBucket, batchId,
-      dedupWithinBatch)
-    // MATERIALIZE novel before returning: the returned frame must be
-    // immune to WHEN the caller evaluates it relative to later fold
-    // steps' index appends. Since the probe pairs are checkpointed
-    // inside foldStep, `kept`'s lineage reads only `batch` and the
-    // materialized pair blocks — never the index — so the novel
-    // materialization and THIS step's index append are independent
-    // jobs and run OVERLAPPED (guide §2.6): the intra pass's
-    // banding/verify stages back-fill the append writes' stage tails
-    // instead of queueing behind them. The replay marker stays
-    // strictly after the append inside its thunk — the unguarded
-    // window is exactly the sequential form's; a novel-job failure
-    // after the marker commits replays as alreadyIngested, the
-    // designed at-least-once path (same class as a failed sink write).
-    if (!alreadyIngested) {
-      var novel: DataFrame = null
-      Actions.runConcurrently(
-        () => novel = kept.localCheckpoint(),
-        () => {
-          writeMinHashIndex(batch, idCol, textCol, path,
-            shingleSize, numHashes, bands, mode = "append")
-          batchId.foreach(LastBatchMarker.write(spark, path, _))
-        })
-      novel
-    } else kept.localCheckpoint()
-  }
-
-  /** [[ingestDedupBatch]] with the per-batch novel SINK inside the
-    * fold step: `sink(novel)` must be an eager ACTION over the frame
-    * (a parquet/noop write — it may not stash the frame for later).
-    * Because the novel frame's lineage reads only `batch` and the
-    * checkpointed probe pairs — never the index — the sink action
-    * runs OVERLAPPED with the index append (guide §2.6), and the fold
-    * step pays ONE novel job instead of two (the localCheckpoint
-    * [[ingestDedupBatch]] needs so its RETURNED frame is
-    * evaluation-time-immune, plus the caller's separate write of the
-    * checkpointed rows) — guide §1.2. Replay contract unchanged: a
-    * replayed batchId skips the append and re-runs the sink;
-    * at-least-once emission stays the caller's sink concern, keyed by
-    * batchId.
     */
   def ingestDedupBatchTo(
       spark: org.apache.spark.sql.SparkSession,
@@ -1015,33 +941,6 @@ object Dedup {
       dedupWithinBatch: Boolean = false,
       sink: DataFrame => Unit
   ): Unit = {
-    val (kept, alreadyIngested) = foldStep(spark, batch, idCol, textCol,
-      path, shingleSize, numHashes, bands, threshold, maxBucket, batchId,
-      dedupWithinBatch)
-    if (!alreadyIngested) {
-      Actions.runConcurrently(
-        () => sink(kept),
-        () => {
-          writeMinHashIndex(batch, idCol, textCol, path,
-            shingleSize, numHashes, bands, mode = "append")
-          batchId.foreach(LastBatchMarker.write(spark, path, _))
-        })
-    } else sink(kept)
-  }
-
-  /** Shared fold-step internals of [[ingestDedupBatch]] /
-    * [[ingestDedupBatchTo]]: the (lazy) novel frame and the replay
-    * flag. The novel frame's lineage reads only `batch` plus the
-    * probe-pair blocks checkpointed HERE — never the index — which is
-    * what makes both callers' overlap of novel evaluation with the
-    * index append safe.
-    */
-  private def foldStep(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, idCol: String, textCol: String, path: String,
-      shingleSize: Int, numHashes: Int, bands: Int, threshold: Double,
-      maxBucket: Int, batchId: Option[Long], dedupWithinBatch: Boolean
-  ): (DataFrame, Boolean) = {
     val alreadyIngested = batchId.exists { id =>
       LastBatchMarker.read(spark, path).contains(id)
     }
@@ -1051,7 +950,9 @@ object Dedup {
     // both payload joins, so one fold step ran the index-postings
     // join + shard-pruned shingle verification up to four times. The
     // pair frame is near-dup-pair-bounded (≪ batch), so the eager cut
-    // is cheap and every consumer reads materialized blocks.
+    // is cheap and every consumer reads materialized blocks. It is
+    // also what keeps `kept` off the index, so the sink can overlap
+    // the append below.
     val pairs = minHashProbeIndex(spark, batch, idCol, textCol, path,
       shingleSize, numHashes, bands, threshold, maxBucket)
       .localCheckpoint()
@@ -1075,7 +976,15 @@ object Dedup {
           intra.select(col("id_b").as(idCol)).distinct(),
           Seq(idCol), "left_anti")
       }
-    (kept, alreadyIngested)
+    if (!alreadyIngested) {
+      Actions.runConcurrently(
+        () => sink(kept),
+        () => {
+          writeMinHashIndex(batch, idCol, textCol, path,
+            shingleSize, numHashes, bands, mode = "append")
+          batchId.foreach(LastBatchMarker.write(spark, path, _))
+        })
+    } else sink(kept)
   }
 
   // ---------------------------------------------------------------------
@@ -1096,8 +1005,9 @@ object Dedup {
     * blocks; any pair within distance d agrees exactly on >= 1 block, so
     * grouping by (block index, block value) finds all candidates with
     * ONE shuffle — no all-pairs join. Verified with exact hamming.
-    * Handle-less wrapper → `storage` defaults to NONE (no way to
-    * unpersist from here); use [[simHashNearDupsResult]] to cache.
+    * The (id, hash) projection feeds both banding and verification; it
+    * is recomputed, never cached (a lazy handle-less result could not
+    * release a cache).
     */
   def simHashNearDups(
       df: DataFrame,
@@ -1105,34 +1015,14 @@ object Dedup {
       textCol: String,
       maxDistance: Int = 3,
       maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.NONE,
       metricName: Option[String] = None
-  ): DataFrame =
-    simHashNearDupsResult(df, idCol, textCol, maxDistance, maxBucket,
-      storage, metricName).pairs
-
-  /** [[simHashNearDups]] with a [[NearDupResult]] handle (caller-owned
-    * cache lifecycle + stable metric name).
-    */
-  def simHashNearDupsResult(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int = 3,
-      maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      metricName: Option[String] = None
-  ): NearDupResult = {
+  ): DataFrame = {
     val metric = metricName.getOrElse(s"graft_dedup_buckets_simhash_${idCol}_$textCol")
     val blocks = maxDistance + 1
     val bits = 64 / blocks
-    // (id, hash) feeds both banding and pair verification — persisted so
-    // the tokenize+simhash pass runs once (8 bytes/row cached)
-    val projected = df.select(
+    val hashed = df.select(
       col(idCol).as("id"),
       simHash(TextAnalysis.tokens(col(textCol))).as("h"))
-    val hashed =
-      if (storage == StorageLevel.NONE) projected else projected.persist(storage)
     val banded = hashed.select(
       col("id"),
       explode(array((0 until blocks).map { b =>
@@ -1142,11 +1032,9 @@ object Dedup {
       }: _*)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
     val pairs = candidatePairs(banded, maxBucket, metric)
-    val verified = verifyPairs(pairs, hashed.select(col("id"), col("h").as("payload")),
+    verifyPairs(pairs, hashed.select(col("id"), col("h").as("payload")),
       hamming64(col("payload_a"), col("payload_b")).as("hamming"))
       .filter(col("hamming") <= maxDistance)
-    NearDupResult(verified, metric,
-      if (storage == StorageLevel.NONE) None else Some(hashed))
   }
 
   // ---------------------------------------------------------------------
@@ -1155,9 +1043,10 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs via random-hyperplane LSH buckets
     * (reuses Similarity.signBucket); candidates verified with exact
-    * cosine. Same one-shuffle bucket-join shape as MinHash.
-    * Handle-less wrapper → `storage` defaults to NONE (no way to
-    * unpersist from here); use [[embeddingNearDupsResult]] to cache.
+    * cosine. Same one-shuffle bucket-join shape as MinHash. The
+    * (id, vector) projection feeds both banding and verification; it
+    * is re-read, never cached (a lazy handle-less result could not
+    * release a cache).
     */
   def embeddingNearDups(
       df: DataFrame,
@@ -1167,37 +1056,13 @@ object Dedup {
       planes: Int = 12,
       tables: Int = 4,
       maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.NONE,
       targetBucket: Int = 32,
       metricName: Option[String] = None
-  ): DataFrame =
-    embeddingNearDupsResult(df, idCol, vecCol, threshold, planes, tables,
-      maxBucket, storage, targetBucket, metricName).pairs
-
-  /** [[embeddingNearDups]] with a [[NearDupResult]] handle (caller-owned
-    * cache lifecycle + stable metric name).
-    */
-  def embeddingNearDupsResult(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double = 0.95,
-      planes: Int = 12,
-      tables: Int = 4,
-      maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      targetBucket: Int = 32,
-      metricName: Option[String] = None
-  ): NearDupResult = {
+  ): DataFrame = {
     val metric = metricName.getOrElse(s"graft_dedup_buckets_embedding_${idCol}_$vecCol")
     // bucketing is scale-invariant -> bucket raw vectors (no normalize
-    // pass); verification computes exact cosine on the raw payloads.
-    // Persisted (by default): the projection feeds both banding and
-    // verification, and re-reading wide vector columns from the scan
-    // twice can cost more than caching them once.
-    val projected = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val base =
-      if (storage == StorageLevel.NONE) projected else projected.persist(storage)
+    // pass); verification computes exact cosine on the raw payloads
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     // plane count grows with the corpus (Similarity.adaptivePlanes —
     // the r13 scale-probe fix): mean bucket occupancy stays
     // ~targetBucket at any n, so candidate volume is linear, not
@@ -1212,11 +1077,9 @@ object Dedup {
         VectorFunctions.signBuckets(col("v"), planesEff, tables, baseSeed = 17L)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     val pairs = candidatePairs(banded, maxBucket, metric)
-    val verified = verifyPairs(pairs, base.select(col("id"), col("v").as("payload")),
+    verifyPairs(pairs, base.select(col("id"), col("v").as("payload")),
       Similarity.cosine(col("payload_a"), col("payload_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
-    NearDupResult(verified, metric,
-      if (storage == StorageLevel.NONE) None else Some(base))
   }
 
   /** SEMANTIC dedup — the SemDeDup pipeline shape (Abbas et al. 2023,
@@ -1252,12 +1115,11 @@ object Dedup {
       planes: Int = 12,
       tables: Int = 4,
       maxBucket: Int = 1000,
-      storage: StorageLevel = StorageLevel.NONE,
       targetBucket: Int = 32,
       metricName: Option[String] = None
   ): DataFrame = {
     val pairs = embeddingNearDups(
-      df, idCol, vecCol, threshold, planes, tables, maxBucket, storage,
+      df, idCol, vecCol, threshold, planes, tables, maxBucket,
       targetBucket, metricName)
     Clusters.dedupClusters(df, idCol, Clusters.connectedComponents(pairs))
   }

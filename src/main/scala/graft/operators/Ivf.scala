@@ -425,7 +425,7 @@ object Ivf {
 
   /** The append-mode assign+quantize+write over an ALREADY-READ coarse
     * quantizer — shared by [[writeInt8Index]]'s append mode and
-    * [[ingestAnnBatch]] (which also probed with the same index object
+    * [[ingestAnnBatchTo]] (which also probed with the same index object
     * and must not pay the centroid collect twice per fold step).
     */
   private def appendInt8(
@@ -480,35 +480,28 @@ object Ivf {
     IvfIndex(flat, meta.dim, meta.nlist)
   }
 
-  /** ANN top-k over a [[writeInt8Index]] index: route each query to
-    * its nProbe cells with the PERSISTED centroids, scan ONLY those
-    * cells' code files, rank by the exact 64-bit integer dot — the
-    * steady-state serving read, bit-identical in scores and ranking to
-    * an in-session [[ivfInt8TopK]] over the same corpus and parameters
-    * (both derive from the same assignment + quantization projection;
-    * integer scoring has no accumulation-order freedom). Partition
-    * pruning follows the [[ivfTopKFromIndex]] protocol exactly —
-    * distinct probe cells (≤ nlist values) collect to the driver for
-    * the `cell IN (...)` predicate, the probe frame itself stays on
-    * the broadcast side, and a nondeterministic query frame falls back
-    * to an unpruned (correct, full-index) scan; see that scaladoc for
-    * the two-evaluation correctness argument.
+  /** ANN top-k over a [[writeInt8Index]] index whose coarse quantizer
+    * is already read ([[readInt8Index]]): route each query to its
+    * nProbe cells with the PERSISTED centroids, scan ONLY those cells'
+    * code files under `indexPath`, rank by the exact 64-bit integer
+    * dot — the steady-state serving read, bit-identical in scores and
+    * ranking to an in-session [[ivfInt8TopK]] over the same corpus and
+    * parameters (both derive from the same assignment + quantization
+    * projection; integer scoring has no accumulation-order freedom).
+    * Partition pruning follows the [[ivfTopKFromIndex]] protocol
+    * exactly — distinct probe cells (≤ nlist values) collect to the
+    * driver for the `cell IN (...)` predicate, the probe frame itself
+    * stays on the broadcast side, and a nondeterministic query frame
+    * falls back to an unpruned (correct, full-index) scan; see that
+    * scaladoc for the two-evaluation correctness argument.
+    *
+    * Callers probing the same persisted index repeatedly read the
+    * quantizer once and skip the per-call centroid collect. The caller
+    * owns index/path consistency. The `cells/` scan is created per
+    * call, and like any parquet read it lists its files right then:
+    * the returned frame sees the index as it stood at this call.
     */
   def ivfInt8ProbeIndex(
-      spark: SparkSession, indexPath: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nProbe: Int = 8
-  ): DataFrame =
-    ivfInt8ProbeIndexWith(spark, indexPath, readInt8Index(spark, indexPath),
-      queries, qidCol, qvecCol, k, nProbe)
-
-  /** [[ivfInt8ProbeIndex]] over an ALREADY-READ coarse quantizer —
-    * callers probing the same persisted index repeatedly (or probing
-    * AND appending in one fold step, [[ingestAnnBatch]]) skip the
-    * per-call centroid collect. The caller owns index/path
-    * consistency; the cells scan stays lazy, exactly as the path form.
-    */
-  def ivfInt8ProbeIndexWith(
       spark: SparkSession, indexPath: String, index: IvfIndex,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int = 8
@@ -532,124 +525,69 @@ object Ivf {
     rankInt8Probes(assigned, probes, k)
   }
 
-  /** One step of a SEQUENTIAL ANN-ingest fold — the [[Dedup.ingestDedupBatch]]
-    * shape for vectors: probe `batch`'s vectors against the persisted
-    * int8 index at `path` (top-k neighbors among everything previously
-    * SEEN — the base corpus plus every earlier increment), then append
-    * the batch itself under the index's FROZEN centroids, and return
-    * the neighbor frame. Drive it from foreachBatch; micro-batches
-    * execute strictly in sequence, so batch k retrieves against
-    * exactly batches < k — which a one-shot probe cannot express.
+  /** One step of a SEQUENTIAL ANN-ingest fold — the
+    * [[Dedup.ingestDedupBatchTo]] shape for vectors: probe `batch`'s
+    * vectors against the persisted int8 index at `path` (top-k
+    * neighbors among everything previously SEEN — the base corpus
+    * plus every earlier increment), hand the neighbor frame to `sink`,
+    * then append the batch itself under the index's FROZEN centroids.
+    * Drive it from foreachBatch; micro-batches execute strictly in
+    * sequence, so batch k retrieves against exactly batches < k —
+    * which a one-shot probe cannot express.
     *
-    * EAGER-MATERIALIZE-BEFORE-APPEND (the ingestDedupBatch discipline,
-    * now for the index path): the probe's plan reads `cells/` lazily,
-    * so evaluating the returned frame after the append would score the
-    * batch against its own just-appended vectors — every row's rank-1
-    * neighbor would become itself. localCheckpoint truncates lineage
-    * to materialized blocks BEFORE the append, making the frame immune
-    * to when the caller evaluates it (IvfSpec pins this).
-    *
-    * At-least-once replay (`batchId`): same contract as
-    * [[Dedup.ingestDedupBatch]] — pass foreachBatch's id and a
-    * replayed batch skips the append ([[Dedup.LastBatchMarker]],
-    * equality-matched). A replayed probe then scores against an index
-    * already holding the batch; the self-dot would win every row's
-    * rank 1, so the probe over-fetches k+1, EXCLUDES exact id
-    * self-pairs, and re-ranks — a singleton batch's replay emits
-    * bit-identically to its first delivery (sibling vectors from the
-    * same multi-row batch may still shift a replayed top-k;
-    * at-least-once emission stays the caller's sink contract, keyed
-    * by batchId).
-    *
-    * `nProbe` defaults to the index's nlist (exhaustive cell coverage:
-    * the retrieval is then the EXACT int8 top-k among seen vectors —
-    * closed-form for an external oracle); production serving uses a
-    * small nProbe, the [[ivfInt8ProbeIndex]] pruned path.
-    */
-  def ingestAnnBatch(
-      spark: SparkSession, batch: DataFrame, idCol: String, vecCol: String,
-      path: String, k: Int, nProbe: Int = Int.MaxValue,
-      batchId: Option[Long] = None
-  ): DataFrame =
-    ingestAnnBatchWith(spark, batch, idCol, vecCol, path,
-      readInt8Index(spark, path), k, nProbe, batchId)
-
-  /** [[ingestAnnBatch]] over an ALREADY-READ coarse quantizer — a
-    * strictly-sequential fold drives every step against ONE frozen
-    * centroid set (append never touches centroids/meta), so the fold's
-    * driver reads it once per fold ([[readInt8Index]] before the
-    * stream starts) instead of paying the centroid collect per
+    * `index` is the coarse quantizer read ONCE per fold
+    * ([[readInt8Index]] before the stream starts): append never
+    * touches centroids/meta, so every step runs against one frozen
+    * centroid set instead of paying the centroid collect per
     * micro-batch (r19, guide §1.2). The `cells/` scan inside the probe
     * is created per step, so each batch sees every earlier batch's
-    * append exactly as the path form does. The caller owns index/path
-    * consistency (the *With convention).
-    */
-  def ingestAnnBatchWith(
-      spark: SparkSession, batch: DataFrame, idCol: String, vecCol: String,
-      path: String, index: IvfIndex, k: Int, nProbe: Int = Int.MaxValue,
-      batchId: Option[Long] = None
-  ): DataFrame = {
-    val (neighbors, append) = foldStep(spark, batch, idCol, vecCol, path,
-      index, k, nProbe, batchId)
-    // probe reads cells/ lazily — materialize BEFORE the append
-    // (scaladoc above), then return the checkpointed frame
-    val out = neighbors.localCheckpoint()
-    append()
-    out
-  }
-
-  /** [[ingestAnnBatchWith]] with the per-batch neighbor SINK inside
-    * the fold step: `sink(neighbors)` must be an eager ACTION over the
-    * frame (a parquet/noop write — it may not stash the frame for
-    * later), and that action IS the eager-materialize-before-append
-    * discipline, so the step pays ONE neighbor job instead of two
-    * (the localCheckpoint [[ingestAnnBatchWith]] needs so its RETURNED
-    * frame is evaluation-time-immune, plus the caller's separate
-    * write of the checkpointed rows) — guide §1.2, r19. Replay
-    * contract unchanged: a replayed batchId skips the append and
-    * re-runs the sink; at-least-once emission stays the caller's sink
-    * concern, keyed by batchId.
+    * append. The caller owns index/path consistency.
+    *
+    * SINK-BEFORE-APPEND: `sink(neighbors)` must be an eager ACTION
+    * over the frame (a parquet/noop write — it may not stash the
+    * frame for later), and the probe is built and sunk strictly
+    * BEFORE the append. A probe built after the append would score
+    * the batch against its own just-appended vectors — every row's
+    * neighbors would include its batch siblings (IvfSpec pins this).
+    *
+    * At-least-once replay (`batchId`): same contract as
+    * [[Dedup.ingestDedupBatchTo]] — pass foreachBatch's id and a
+    * replayed batch skips the append ([[Dedup.LastBatchMarker]],
+    * equality-matched, written strictly after the append) and re-runs
+    * the sink. A replayed probe then scores against an index already
+    * holding the batch; the self-dot would win every row's rank 1, so
+    * the probe over-fetches k+1, EXCLUDES exact id self-pairs, and
+    * re-ranks — a singleton batch's replay emits bit-identically to
+    * its first delivery (sibling vectors from the same multi-row batch
+    * may still shift a replayed top-k; at-least-once emission stays
+    * the caller's sink contract, keyed by batchId).
+    *
+    * `nProbe` >= the index's nlist (e.g. `Int.MaxValue`) probes every
+    * cell: the retrieval is then the EXACT int8 top-k among seen
+    * vectors — closed-form for an external oracle; production serving
+    * uses a small nProbe, the [[ivfInt8ProbeIndex]] pruned path.
     */
   def ingestAnnBatchTo(
       spark: SparkSession, batch: DataFrame, idCol: String, vecCol: String,
       path: String, index: IvfIndex, k: Int, nProbe: Int,
       batchId: Option[Long], sink: DataFrame => Unit
   ): Unit = {
-    val (neighbors, append) = foldStep(spark, batch, idCol, vecCol, path,
-      index, k, nProbe, batchId)
-    // the sink action fully evaluates the probe against the
-    // PRE-append cells/ — strictly before the append mutates them
-    sink(neighbors)
-    append()
-  }
-
-  /** Shared fold-step internals: the lazy ranked-neighbor frame plus
-    * an append thunk (no-op on an already-ingested replay; writes the
-    * replay marker strictly AFTER its append). The caller must fully
-    * materialize the neighbor frame BEFORE invoking the thunk — the
-    * probe reads `cells/` lazily and the append mutates them.
-    */
-  private def foldStep(
-      spark: SparkSession, batch: DataFrame, idCol: String, vecCol: String,
-      path: String, index: IvfIndex, k: Int, nProbe: Int,
-      batchId: Option[Long]
-  ): (DataFrame, () => Unit) = {
     val alreadyIngested = batchId.exists { id =>
       Dedup.LastBatchMarker.read(spark, path).contains(id)
     }
     val probe = math.min(nProbe, index.nlist)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("int_dot").desc, col("id").asc)
-    val neighbors =
-      ivfInt8ProbeIndexWith(spark, path, index, batch, idCol, vecCol, k + 1, probe)
-        .filter(col("query_id") =!= col("id"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-    val append = () => if (!alreadyIngested) {
+    // the sink action fully evaluates the probe against the
+    // PRE-append cells/ — strictly before the append mutates them
+    sink(ivfInt8ProbeIndex(spark, path, index, batch, idCol, vecCol, k + 1, probe)
+      .filter(col("query_id") =!= col("id"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k))
+    if (!alreadyIngested) {
       appendInt8(batch, idCol, vecCol, path, index)
       batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
     }
-    (neighbors, append)
   }
 
   private def probeCells(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import Parallelism.widen
 
 /** Product quantization (PQ) — the third rung of the embedding
   * compression ladder (float32 → int8 → PQ codes) and the standard
@@ -87,28 +88,6 @@ object Pq {
     */
   private def intDot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.dotLong(a, b)
-
-  /** Widen a COMPUTE-DENSE stage's input to the cluster's parallelism
-    * when the source layout under-parallelizes it. The encode and the
-    * cell assignment each expand every input row ncode×/nlist× and
-    * push it through the integer-dot kernel — their cost is the
-    * expansion, not the scan, so inheriting the scan's partition
-    * count from the FILE LAYOUT (a single-row-group parquet ⇒ one
-    * task) serializes the one genuinely O(n·m·ncode) step in the
-    * family onto a handful of cores. The widening shuffle moves only
-    * the n skinny input rows — amortized thousands-fold by the
-    * in-task expansion that follows — and is skipped entirely when
-    * the source already carries enough partitions (the 100 TB case,
-    * where maxPartitionBytes supplies them). Measured at the 10×
-    * probe scale (20k vectors in 4 files, 16 cores): index build
-    * 13.8–67 s → 5 s steady. Results are partitioning-independent:
-    * every argmin is an exact integer min with a total tie order.
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val have = df.rdd.getNumPartitions
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (have < want) df.repartition(want) else df
-  }
 
   /** Flatten a collected (groupIdx, code/cell, values) codeword table
     * into the kernel's group-major / code-major / element-minor
@@ -254,6 +233,7 @@ object Pq {
   private def refineInput(
       corpus: DataFrame, vecCol: String
   ): DataFrame =
+    // each refinement pass expands every row across the whole grid
     widen(corpus).select(
       Similarity.int8Quantize(col(vecCol)).getField("q").as("__q"))
 
@@ -329,6 +309,7 @@ object Pq {
     val nc = cbRows.length / m
     val sub = cbRows.head.getSeq[Long](2).length
     val flat = flatten(cbRows, m, nc, sub)
+    // the per-row m×ncode argmin is the cost, not the scan
     widen(corpus).select(col(idCol).as("id"),
       graft.functions.VectorFunctions.pqEncodeCodes(
         Similarity.int8Quantize(col(vecCol)).getField("q"),
@@ -534,7 +515,7 @@ object Pq {
     * squared-L2, ties → smallest cell) over the same quantized row.
     * The encode-join-route composition this replaces evaluated the
     * corpus twice and shuffled BOTH projections into an id equi-join
-    * (plus each side's own [[widen]] repartition) — four
+    * (plus each side's own [[Parallelism.widen]] repartition) — four
     * corpus-proportional exchanges per index build/append for what is
     * a per-row computation. Identical rows: the join was on unique
     * ids, and both kernels are deterministic per-row functions.
@@ -560,6 +541,7 @@ object Pq {
     val dim = centRows.head.getSeq[Long](2).length
     val nCells = centRows.length
     val flatCent = flatten(centRows, 1, nCells, dim)
+    // the per-row m×ncode + nlist argmins are the cost, not the scan
     widen(corpus).select(
       col(idCol).as("id"),
       graft.functions.VectorFunctions.pqEncodeCodes(
@@ -779,7 +761,7 @@ object Pq {
   }
 
   /** The append-mode encode+route+write over ALREADY-READ quantizers —
-    * shared by [[writeIndex]]'s append mode and [[ingestBatch]] (which
+    * shared by [[writeIndex]]'s append mode and [[ingestBatchTo]] (which
     * also probed with the same index object and must not pay the
     * codebook/centroid collects twice per fold step).
     *
@@ -854,7 +836,7 @@ object Pq {
     * read lists files EAGERLY and pins that listing in the plan, so a
     * fold step probing a growing index must re-create this scan per
     * step — the quantizer side tables are frozen under append, the
-    * cells listing is not ([[ingestBatchWith]]).
+    * cells listing is not ([[ingestBatchTo]]).
     */
   private def cellsScan(
       spark: org.apache.spark.sql.SparkSession, path: String
@@ -864,34 +846,25 @@ object Pq {
         transform(col("codes"), c => (c.cast(IntegerType) + lit(128))).as("codes"),
         col("cell").cast(IntegerType).as("cell"))
 
-  /** ADC top-k over a [[writeIndex]] index: route each query with the
-    * PERSISTED centroids, scan ONLY the probed cells' code files, rank
-    * by the exact integer ADC dot — bit-identical in scores and
-    * ranking to an in-session [[ivfPqTopK]] over the same corpus and
-    * parameters (same quantizers; integer scoring has no
-    * accumulation-order freedom). Partition pruning follows the
-    * [[Ivf.ivfTopKFromIndex]] protocol: distinct probe cells
-    * (≤ nlist values) collect to the driver for the `cell IN (...)`
-    * predicate, and a nondeterministic query frame falls back to an
-    * unpruned (correct, full-index) scan — see that scaladoc for the
-    * two-evaluation correctness argument.
-    *
-    * The returned frame reads `cells/` LAZILY: a caller that appends
-    * to the index between building this frame and evaluating it would
-    * score against the mutated cells (the [[Ivf.ingestAnnBatch]]
-    * hazard class) — eagerly materialize (localCheckpoint/collect)
-    * before any append, as the ingest folds do.
-    */
   /** One step of a SEQUENTIAL PQ-ingest fold at a PRUNED probe — the
-    * production streaming-ANN shape ([[Ivf.ingestAnnBatch]] runs the
+    * production streaming-ANN shape ([[Ivf.ingestAnnBatchTo]] runs the
     * exhaustive-probe variant for its closed-form oracle; THIS is what
     * a deployment actually serves): probe `batch`'s vectors against
     * the persisted IVF-PQ index at `path` with `nProbe` ≪ nlist (top-k
     * ADC neighbors among everything previously SEEN, scanning only the
-    * probed cells' code files), then append the batch under the
-    * index's FROZEN quantizers, and return the neighbor frame. Drive
-    * it from foreachBatch; micro-batches execute strictly in sequence,
-    * so batch k retrieves against exactly batches < k.
+    * probed cells' code files), hand the neighbor frame to `sink`, then
+    * append the batch under the index's FROZEN quantizers. Drive it
+    * from foreachBatch; micro-batches execute strictly in sequence, so
+    * batch k retrieves against exactly batches < k.
+    *
+    * `side` is the index read ONCE per fold ([[readIndex]] before the
+    * stream starts): append never touches codebook/centroids/meta, so
+    * every step runs against one frozen quantizer set instead of
+    * paying two collect jobs per micro-batch (r19, guide §1.2). Only
+    * the `cells/` scan is re-created per step (a parquet read pins its
+    * file listing — see [[cellsScan]]), so each batch's probe sees
+    * every earlier batch's append. The caller owns side/path
+    * consistency.
     *
     * `maxQueries` bounds the RETRIEVAL side of each batch (the
     * [[graft.operators.Sampling.hashRank]]-minima slice, ties by id —
@@ -903,63 +876,19 @@ object Pq {
     * arithmetic (routing, ADC) is BIGINT-exact, so the whole fold is
     * closed-form re-derivable by an external oracle — no goldens.
     *
-    * EAGER-MATERIALIZE-BEFORE-APPEND + at-least-once replay marker:
-    * the [[Ivf.ingestAnnBatch]] disciplines, verbatim — the probe
-    * plan reads `cells/` lazily, so the neighbor frame is
-    * localCheckpoint'd BEFORE the append (else a late evaluation would
-    * score the batch against its own vectors), and a replayed batchId
-    * skips the re-append ([[Dedup.LastBatchMarker]]). A replayed probe
-    * then sees the batch already in the index: the self-pair would
-    * take rank 1, so the probe over-fetches k+1, drops exact id
-    * self-pairs, and re-ranks — a singleton batch replays
-    * bit-identically.
-    */
-  def ingestBatch(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String,
-      k: Int, nProbe: Int = 8, batchId: Option[Long] = None,
-      maxQueries: Int = Int.MaxValue
-  ): DataFrame =
-    ingestBatchWith(spark, batch, idCol, vecCol, path,
-      readIndex(spark, path), k, nProbe, batchId, maxQueries)
-
-  /** [[ingestBatch]] over ALREADY-READ quantizer side tables — a
-    * strictly-sequential fold drives every step against ONE frozen
-    * quantizer set (append never touches codebook/centroids/meta), so
-    * the driver of the fold reads them once per fold
-    * ([[readIndex]] before the stream starts) instead of paying two
-    * collect jobs per micro-batch (r19, guide §1.2). Only the
-    * `cells/` scan is re-created per step (a parquet read pins its
-    * file listing — see [[cellsScan]]), so each batch's probe sees
-    * every earlier batch's append exactly as the path form does.
-    * The caller owns index/path consistency (the *With convention).
-    */
-  def ingestBatchWith(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String, side: PqIndex,
-      k: Int, nProbe: Int = 8, batchId: Option[Long] = None,
-      maxQueries: Int = Int.MaxValue
-  ): DataFrame = {
-    val (neighbors, append) = foldStep(spark, batch, idCol, vecCol, path,
-      side, k, nProbe, batchId, maxQueries)
-    // the probe plan reads cells/ lazily — materialize BEFORE the
-    // append (scaladoc above), then return the checkpointed frame
-    val out = neighbors.localCheckpoint()
-    append()
-    out
-  }
-
-  /** [[ingestBatchWith]] with the per-batch neighbor SINK inside the
-    * fold step: `sink(neighbors)` must be an eager ACTION over the
-    * frame (a parquet/noop write — it may not stash the frame for
-    * later), and that action IS the eager-materialize-before-append
-    * discipline, so the step pays ONE neighbor job instead of two
-    * (the localCheckpoint [[ingestBatchWith]] needs so its RETURNED
-    * frame is evaluation-time-immune, plus the caller's separate
-    * write of the checkpointed rows) — guide §1.2, r19. Replay
-    * contract unchanged: a replayed batchId skips the append and
-    * re-runs the sink; at-least-once emission stays the caller's
-    * sink concern, keyed by batchId.
+    * SINK-BEFORE-APPEND + at-least-once replay marker: the
+    * [[Ivf.ingestAnnBatchTo]] disciplines, verbatim. `sink(neighbors)`
+    * must be an eager ACTION over the frame (a parquet/noop write — it
+    * may not stash the frame for later), and the probe lists `cells/`
+    * and is sunk strictly BEFORE the append (a probe listed after it
+    * would score the batch against its own vectors; PqSpec pins
+    * this). A replayed batchId skips the re-append ([[Dedup.LastBatchMarker]],
+    * written strictly after the append) and re-runs the sink; a
+    * replayed probe then sees the batch already in the index: the
+    * self-pair would take rank 1, so the probe over-fetches k+1, drops
+    * exact id self-pairs, and re-ranks — a singleton batch replays
+    * bit-identically. At-least-once emission stays the caller's sink
+    * concern, keyed by batchId.
     */
   def ingestBatchTo(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
@@ -967,25 +896,6 @@ object Pq {
       k: Int, nProbe: Int, batchId: Option[Long],
       maxQueries: Int, sink: DataFrame => Unit
   ): Unit = {
-    val (neighbors, append) = foldStep(spark, batch, idCol, vecCol, path,
-      side, k, nProbe, batchId, maxQueries)
-    // the sink action fully evaluates the probe against the
-    // PRE-append cells/ — strictly before the append mutates them
-    sink(neighbors)
-    append()
-  }
-
-  /** Shared fold-step internals: the lazy ranked-neighbor frame plus
-    * an append thunk (no-op on an already-ingested replay; writes the
-    * replay marker strictly AFTER its append). The caller must fully
-    * materialize the neighbor frame BEFORE invoking the thunk — the
-    * probe reads `cells/` lazily and the append mutates them.
-    */
-  private def foldStep(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String, side: PqIndex,
-      k: Int, nProbe: Int, batchId: Option[Long], maxQueries: Int
-  ): (DataFrame, () => Unit) = {
     require(maxQueries >= 1, s"maxQueries must be >= 1, got $maxQueries")
     val alreadyIngested = batchId.exists { id =>
       Dedup.LastBatchMarker.read(spark, path).contains(id)
@@ -997,34 +907,38 @@ object Pq {
         .limit(maxQueries) // TakeOrderedAndProject — no global sort
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dot").desc, col("id").asc)
-    val index = side.copy(encoded = cellsScan(spark, path))
-    val neighbors =
-      probeIndexWith(index, queries, idCol, vecCol, k + 1, nProbe)
-        .filter(col("query_id") =!= col("id"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-    val append = () => if (!alreadyIngested) {
-      appendEncoded(batch, idCol, vecCol, path, index)
+    // the sink action lists and evaluates the probe against the
+    // PRE-append cells/ — strictly before the append mutates them
+    sink(probeIndex(side.copy(encoded = cellsScan(spark, path)),
+        queries, idCol, vecCol, k + 1, nProbe)
+      .filter(col("query_id") =!= col("id"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k))
+    if (!alreadyIngested) {
+      appendEncoded(batch, idCol, vecCol, path, side)
       batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
     }
-    (neighbors, append)
   }
 
-  def probeIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nProbe: Int = 8
-  ): DataFrame =
-    probeIndexWith(readIndex(spark, path), queries, qidCol, qvecCol, k, nProbe)
-
-  /** [[probeIndex]] over an already-read [[PqIndex]] — callers probing
-    * the same persisted index repeatedly (or probing AND appending in
-    * one fold step, [[ingestBatch]]) skip the per-call codebook/
-    * centroid collects. The caller owns index/path consistency;
-    * `encoded` stays the lazy cells scan, so appends after this call
-    * are visible to a late evaluation exactly as with [[probeIndex]].
+  /** ADC top-k over a [[writeIndex]] index, read with [[readIndex]]:
+    * route each query with the PERSISTED centroids, scan ONLY the
+    * probed cells' code files, rank by the exact integer ADC dot —
+    * bit-identical in scores and ranking to an in-session
+    * [[ivfPqTopK]] over the same corpus and parameters (same
+    * quantizers; integer scoring has no accumulation-order freedom).
+    * Partition pruning follows the [[Ivf.ivfTopKFromIndex]] protocol:
+    * distinct probe cells (≤ nlist values) collect to the driver for
+    * the `cell IN (...)` predicate, and a nondeterministic query frame
+    * falls back to an unpruned (correct, full-index) scan — see that
+    * scaladoc for the two-evaluation correctness argument.
+    *
+    * Callers probing the same persisted index repeatedly read it once
+    * and skip the per-call codebook/centroid collects. The probe scans
+    * `index.encoded`, whose file listing was taken when the index was
+    * read ([[cellsScan]]): appends after that read are invisible until
+    * the scan is re-created, as [[ingestBatchTo]] does per step.
     */
-  def probeIndexWith(
+  def probeIndex(
       index: PqIndex,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int = 8

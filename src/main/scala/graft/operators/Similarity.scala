@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import Parallelism.widen
 
 /** Vector similarity search over embedding columns (`array<float>`).
   *
@@ -81,33 +82,6 @@ object Similarity {
       if (buckets <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
     math.min(62, math.max(floor, ceilLog2))
-  }
-
-  /** Widen a COMPUTE-DENSE stage's input to the session's parallelism
-    * when the source layout under-parallelizes it — the [[Pq]] encode
-    * discipline applied to the QUERY-DENSE brute-force kernels: a
-    * corpus×queries cross join expands every corpus row |queries|-fold
-    * through the cosine/dot kernel, so inheriting the scan's partition
-    * count from the FILE LAYOUT (a sub-128 MB parquet ⇒ ONE task)
-    * serializes the n·|q| kernel onto one core (r19 found the shared
-    * exact-kNN ground-truth artifact — 2000×2000 cosines — running
-    * 11 s single-task where 32 cores sat idle). The widening shuffle
-    * moves only the n input rows once, amortized |q|-fold by the
-    * in-task expansion, and is SKIPPED whenever the source already
-    * carries enough partitions — the 100 TB case, where
-    * maxPartitionBytes supplies them, so nothing changes at scale.
-    * Applied ONLY where |queries| is corpus-sized by shape
-    * ([[knnGraph]]) or the caller declares query density
-    * ([[exactTopKSample]] `widenCorpus`): for the ≤ 20-query audit
-    * batches the exchange costs more than the parallelism buys
-    * (measured r19 — x_ann_refresh_gain 3.99 s unwidened vs 5.71
-    * widened at sfx10). Results are partitioning-independent: every
-    * consumer ranks with a total tie order or aggregates exactly.
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val have = df.rdd.getNumPartitions
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (have < want) df.repartition(want) else df
   }
 
   /** Symmetric int8 scalar quantization — the standard 4× compression
@@ -444,7 +418,7 @@ object Similarity {
       .orderBy(xxhash64(col("query_id")), col("query_id"))
       .limit(maxQueries)
     // widen the expansion side: the |corpus|×|q| kernel must not
-    // inherit a small file's one-task layout (see [[widen]])
+    // inherit a small file's one-task layout (see [[Parallelism.widen]])
     // widenCorpus is the CALLER's call (unlike knnGraph/batchTopK,
     // where queries are corpus-sized by shape): the audits here cap
     // queries far below the corpus — often ≤ 20 rows — and for such
@@ -454,7 +428,7 @@ object Similarity {
     // caller (the exact kNN ground-truth graph: corpus as queries,
     // 4M+ kernel pairs in one scan task) wins 8× from it. Pass true
     // when |queries| approaches the cap; the shuffle is skipped at
-    // scale either way (see [[widen]]).
+    // scale either way (see [[Parallelism.widen]]).
     val base = keepRanked(corpus, vecCol)
     val paired = (if (widenCorpus) widen(base) else base).crossJoin(broadcast(q))
     val scored =
@@ -490,6 +464,7 @@ object Similarity {
     require(k > 0, s"k must be positive, got $k")
     val nonZero = df.filter(dot(col(vecCol), col(vecCol)) > 0.0)
     val q = nonZero.select(col(idCol).as("__qid"), col(vecCol).as("__qv"))
+    // corpus-as-queries: every row expands |corpus|-fold in its scan task
     val scored = widen(nonZero).crossJoin(broadcast(q))
       .filter(col(idCol) =!= col("__qid"))
       .select(col("__qid").as("query_id"), col(idCol).as("id"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.config.{FieldMapping, ValidationRule}
+import graft.operators.Parallelism.widen
 import graft.operators.{Clusters, Dedup, Drift, HeavyHitters, Multimodal, NgramLm, QualityClassifier, Similarity, TemporalJoins, TextAnalysis}
 import graft.rules.RuleCompiler
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -26,29 +27,6 @@ object Queries {
 
   private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** Widen a COMPUTE-DENSE single-pass entry's input to the session's
-    * parallelism when the FILE LAYOUT under-parallelizes the scan — the
-    * [[graft.operators.Pq]] encode discipline applied to catalog entries
-    * whose dominant cost is per-row kernel/aggregate work riding the
-    * scan task itself: every bench input is ONE single-row-group parquet
-    * file, so the scan (and the map-side partial aggregate / projection
-    * kernel fused above it) runs in ONE task while the rest of the
-    * session idles. The widening shuffle moves the skinny input rows
-    * once — far cheaper than the per-row decimal/text-kernel work it
-    * parallelizes (A/B-measured per entry; entries where the exchange
-    * cost the win back were left unwidened) — and is SKIPPED whenever
-    * the source already carries enough partitions: at 100 TB,
-    * maxPartitionBytes supplies scan splits and this is the identity.
-    * Only applied to entries whose results are partitioning-independent
-    * (exact integer/decimal aggregates, per-row projections, exact
-    * order statistics).
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val have = df.rdd.getNumPartitions
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (have < want) df.repartition(want) else df
-  }
 
   /** Shared 4/5-corpus / 1/5-batch MinHash index build + probe used by
     * x_dedup_incremental and x_incremental_ingest — one place for the
@@ -1679,6 +1657,7 @@ object Queries {
     // and a UNION ALL replay differ on null handling, so the contract
     // is pinned rather than left to either engine's default
     "x_unpivot" -> ((s, d) =>
+      // widened: the Expand×3 above the exchange is the per-row cost
       widen(t(s, d, "lineitem"))
         .unpivot(
           Array(col("l_orderkey")),
@@ -2694,6 +2673,7 @@ object Queries {
     // CUBE over (returnflag, linestatus): all four grouping levels in
     // one pass (the expand-based multi-level aggregate).
     "x_cube_counts" -> ((s, d) =>
+      // widened: the Expand×4 above the exchange is the per-row cost
       widen(t(s, d, "lineitem"))
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
@@ -2785,8 +2765,7 @@ object Queries {
     // at sf0.1; the oracle gate runs at sf0.01 only.
     "x_dedup_minhash" -> ((s, d) => {
       Dedup.minHashNearDups(t(s, d, "documents"), "doc_id", "text",
-        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
-        storage = StorageLevel.NONE)
+        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
     }),
 
     // Exact n-gram Jaccard near-dups (posting-list intersection counts,
@@ -3161,7 +3140,7 @@ object Queries {
     // SimHash near-dups (hamming <= 3) — rows-only.
     "x_dedup_simhash" -> ((s, d) => {
       Dedup.simHashNearDups(t(s, d, "documents"), "doc_id", "text",
-        maxDistance = 3, storage = StorageLevel.NONE)
+        maxDistance = 3)
     }),
 
     // Estimator-quality audit: how well the CHEAP near-dup signal
@@ -3174,7 +3153,7 @@ object Queries {
     // is pair-bounded.
     "x_simhash_vs_exact" -> ((s, d) => {
       val sim = Dedup.simHashNearDups(t(s, d, "documents"), "doc_id", "text",
-          maxDistance = 3, storage = StorageLevel.NONE)
+          maxDistance = 3)
         .select(col("id_a"), col("id_b"), lit(1L).as("__s"))
       val exact = ngramPairGraph(s, d)._1
         .select(col("id_a"), col("id_b"), lit(1L).as("__e"))
@@ -3249,7 +3228,7 @@ object Queries {
     // 271 pairs >= 0.35 at sf0.01) so the check is non-vacuous.
     "x_dedup_embedding" -> ((s, d) => {
       Dedup.embeddingNearDups(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.35, planes = 6, tables = 8, storage = StorageLevel.NONE)
+        threshold = 0.35, planes = 6, tables = 8)
     }),
 
     // SemDeDup-shaped semantic dedup: embedding near-dup pairs (same
@@ -3261,7 +3240,7 @@ object Queries {
     // the component/survivor logic on top is pure set algebra).
     "x_semantic_dedup" -> ((s, d) => {
       Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.35, planes = 6, tables = 8, storage = StorageLevel.NONE)
+        threshold = 0.35, planes = 6, tables = 8)
         .select(col("vec_id"))
     }),
 
@@ -3316,6 +3295,7 @@ object Queries {
     // BIGINT sum — both bit-deterministic across engines.
     "x_embed_quantize" -> ((s, d) => {
       val q = Similarity.int8Quantize(col("embedding"))
+      // widened: the per-row quantize kernel, not the scan, is the cost
       widen(t(s, d, "embeddings")).select(
         col("vec_id"),
         q.getField("max_abs").as("max_abs"),
@@ -3332,6 +3312,7 @@ object Queries {
     // refinement built on this aggregation is spec-asserted monotone.
     "x_embed_centroids" -> ((s, d) => {
       val q = Similarity.int8Quantize(col("embedding")).getField("q")
+      // widened: the per-row quantize + element-sum HOF is the cost
       widen(t(s, d, "embeddings"))
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
         .select(col("label").cast(LongType).as("label"),
@@ -3923,7 +3904,7 @@ object Queries {
           qs2, "qid", "qv", k = 10, maxQueries = exactAuditMaxQueries,
           metric = "dot")
       def probe(idx: graft.operators.Pq.PqIndex, qs2: DataFrame): DataFrame =
-        graft.operators.Pq.probeIndexWith(idx, qs2, "qid", "qv",
+        graft.operators.Pq.probeIndex(idx, qs2, "qid", "qv",
           k = 10, nProbe = 8)
       // the frozen and fresh legs audit the SAME drifted queries
       // against the SAME exact frame — the tagged recall join
@@ -3971,7 +3952,8 @@ object Queries {
       // both legs audit the same queries against the ONE shared exact
       // frame — tagged recall references it once, not once per leg
       def probe(sub: String): DataFrame =
-        graft.operators.Pq.probeIndex(s, root.resolve(sub).toString,
+        graft.operators.Pq.probeIndex(
+          graft.operators.Pq.readIndex(s, root.resolve(sub).toString),
           drifted, "qid", "qv", k = 10, nProbe = 8)
       Similarity.recallAtKTagged(
           Seq(lit("frozen") -> probe("frozen"),
@@ -4022,7 +4004,7 @@ object Queries {
       val idxPath = servedPqIndexDir(s, d)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.Pq.probeIndex(s, idxPath,
+      graft.operators.Pq.probeIndex(graft.operators.Pq.readIndex(s, idxPath),
           queries, "qid", "qv", k = 10, nProbe = 8)
         .select(col("query_id"), col("id").as("vec_id"), col("rank"),
           col("adc_dot"))
@@ -4078,7 +4060,7 @@ object Queries {
         "vec_id", "embedding", idxPath, mode = "append")
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.Pq.probeIndex(s, idxPath,
+      graft.operators.Pq.probeIndex(graft.operators.Pq.readIndex(s, idxPath),
           queries, "qid", "qv", k = 10, nProbe = 8)
         .select(col("query_id"), col("id").as("vec_id"), col("rank"),
           col("adc_dot"))
@@ -4123,6 +4105,7 @@ object Queries {
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Ivf.ivfInt8ProbeIndex(s, idxPath,
+          graft.operators.Ivf.readInt8Index(s, idxPath),
           queries, "qid", "qv", k = 10, nProbe = 8)
         .select(col("query_id"), col("id").as("vec_id"), col("rank"),
           col("int_dot"))
@@ -4162,6 +4145,7 @@ object Queries {
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Ivf.ivfInt8ProbeIndex(s, idxPath,
+          graft.operators.Ivf.readInt8Index(s, idxPath),
           queries, "qid", "qv", k = 10, nProbe = 8)
         .select(col("query_id"), col("id").as("vec_id"), col("rank"),
           col("int_dot"))
@@ -4200,6 +4184,7 @@ object Queries {
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Ivf.ivfInt8ProbeIndex(s, compacted,
+          graft.operators.Ivf.readInt8Index(s, compacted),
           queries, "qid", "qv", k = 10, nProbe = 8)
         .select(col("query_id"), col("id").as("vec_id"), col("rank"),
           col("int_dot"))
@@ -4470,7 +4455,7 @@ object Queries {
     // ([[Dedup.minHashProbeIndex]]), keeps only docs with no near-dup
     // among everything previously SEEN (base corpus + earlier
     // batches), then appends itself to the index
-    // ([[Dedup.ingestDedupBatch]] — policy and the
+    // ([[Dedup.ingestDedupBatchTo]] — policy and the
     // novelty-is-order-independent argument in its scaladoc).
     // foreachBatch's strict micro-batch sequencing IS the fold; a
     // one-shot batch probe (x_dedup_incremental) cannot express the
@@ -4531,7 +4516,7 @@ object Queries {
     }),
 
     // The ingest fold WITH intra-batch dedup — the #1 production
-    // ingest shape as ONE call ([[Dedup.ingestDedupBatch]]
+    // ingest shape as ONE call ([[Dedup.ingestDedupBatchTo]]
     // `dedupWithinBatch = true`): each micro-batch drops docs
     // near-duplicating anything previously SEEN, then drops every doc
     // with a SMALLER-ID near-dup among the batch's index-novel rows
@@ -4584,11 +4569,11 @@ object Queries {
 
     // STREAMING EMBEDDING ingest against the persisted, GROWING int8
     // IVF index — the ANN mirror of x_stream_dedup_index
-    // ([[Ivf.ingestAnnBatch]]): each micro-batch of vectors retrieves
+    // ([[Ivf.ingestAnnBatchTo]]): each micro-batch of vectors retrieves
     // its top-k neighbors among everything previously SEEN (base
     // corpus %4==0 plus earlier batches), then appends itself under
-    // the FROZEN seed centroids; the eager-localCheckpoint-before-
-    // append discipline keeps the returned frame immune to the index
+    // the FROZEN seed centroids; the sink-before-append discipline
+    // keeps the emitted neighbors immune to the index
     // mutation (spec-pinned in IvfSpec), and the batchId marker makes
     // a foreachBatch replay skip the re-append. nProbe = nlist
     // (exhaustive cells) so retrieval is the EXACT int8 top-k among
@@ -4624,9 +4609,8 @@ object Queries {
       val q = stream.writeStream
         .foreachBatch { (b: DataFrame, bid: Long) =>
           val batch = b.persist()
-          // sink inside the fold step: the parquet write IS the
-          // eager-materialize-before-append action — one neighbor job
-          // per batch instead of checkpoint + re-write (r19 §1.2)
+          // the parquet write IS the fold step's
+          // sink-before-append action (one neighbor job per batch)
           try
             graft.operators.Ivf.ingestAnnBatchTo(batch.sparkSession, batch,
                 "vec_id", "embedding", idxPath, frozenIdx, k = 5,
@@ -4649,7 +4633,7 @@ object Queries {
     // retrieves at nProbe = nlist for its closed-form oracle, which
     // makes it quadratic BY CONTRACT and excluded from decade probes).
     // This sibling folds micro-batches into a persisted IVF-PQ index
-    // ([[Pq.ingestBatch]]): each batch retrieves top-5 ADC neighbors
+    // ([[Pq.ingestBatchTo]]): each batch retrieves top-5 ADC neighbors
     // among everything previously SEEN at nProbe=8 of 64 — reading
     // ONLY the probed cells' m-byte code files — then appends itself
     // under the FROZEN seed quantizers. Retrieval per batch is bounded
@@ -4686,7 +4670,7 @@ object Queries {
       // codebook/centroids/meta are FROZEN across the whole fold
       // (append touches cells/ only) — read them once per execution
       // instead of two collect jobs per micro-batch; each batch's
-      // probe still re-scans cells/ (ingestBatchWith scaladoc), so
+      // probe still re-scans cells/ (ingestBatchTo scaladoc), so
       // batch k retrieves against exactly batches < k as before (r19)
       val frozenIdx = graft.operators.Pq.readIndex(s, idxPath)
       val stream = s.readStream.schema(schema)
@@ -4695,9 +4679,8 @@ object Queries {
       val q = stream.writeStream
         .foreachBatch { (b: DataFrame, bid: Long) =>
           val batch = b.persist()
-          // sink inside the fold step: the parquet write IS the
-          // eager-materialize-before-append action — one neighbor job
-          // per batch instead of checkpoint + re-write (r19 §1.2)
+          // the parquet write IS the fold step's
+          // sink-before-append action (one neighbor job per batch)
           try
             graft.operators.Pq.ingestBatchTo(batch.sparkSession, batch,
                 "vec_id", "embedding", idxPath, frozenIdx, k = 5, nProbe = 8,
@@ -4919,6 +4902,7 @@ object Queries {
     // exact long sums, one final IEEE division — so the doubles
     // hash-match the oracle; see NgramLm scaladoc).
     "x_lm_score" -> ((s, d) => {
+      // widened: the trigram scoring kernel, not the scan, is the cost
       val docs = widen(t(s, d, "documents"))
       NgramLm.score(docs, "doc_id", "lang", "text", lmModel(s, d), n = 3)
     }),
@@ -4928,6 +4912,7 @@ object Queries {
     // never funnels through per-lang window tasks. Exact percentile on
     // both engines (type-7 interpolation).
     "x_quality_bands" -> ((s, d) => {
+      // widened: the trigram scoring kernel, not the scan, is the cost
       val docs = widen(t(s, d, "documents"))
       NgramLm.qualityBuckets(docs, "doc_id", "lang", "text", lmModel(s, d),
         n = 3)
@@ -5166,6 +5151,7 @@ object Queries {
     // divisions or integer counts, bit-identical cross-engine.
     "x_gopher_rules" -> ((s, d) => {
       val boiler = "\nsubscribe now\nsubscribe now\nsubscribe now"
+      // widened: five text-rule kernels per row, not the scan, are the cost
       val docs = widen(t(s, d, "documents")).withColumn("text2",
         when(pmod(col("doc_id"), lit(7)) === 0, concat(col("text"), lit(boiler)))
           .otherwise(col("text")))
@@ -5522,8 +5508,7 @@ object Queries {
       // the survivors to catch short shingle-less docs — each stage
       // consumes the previous exactly once (no recomputed subtree)
       val nearDupLosers = Dedup.minHashNearDups(
-        docs, "doc_id", "text", threshold = 0.8,
-        storage = StorageLevel.NONE)
+        docs, "doc_id", "text", threshold = 0.8)
         .select(col("id_b").as("doc_id")).distinct()
       val surviving = Dedup.exactDedup(
         docs.join(nearDupLosers, Seq("doc_id"), "left_anti"),

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.col
 /** Compaction/repack for the PERSISTED INDEX layouts (MinHash LSH,
   * int8 IVF, IVF-PQ) — the index-aware sibling of [[Compaction]].
   *
-  * Every append cycle ([[graft.operators.Dedup.ingestDedupBatch]],
-  * [[graft.operators.Ivf.ingestAnnBatch]], `Pq.writeIndex` append
+  * Every append cycle ([[graft.operators.Dedup.ingestDedupBatchTo]],
+  * [[graft.operators.Ivf.ingestAnnBatchTo]], `Pq.writeIndex` append
   * mode) adds per-batch files under the index's partitioned datasets
   * (`bands/`, `shingles/`, `cells/`). After N micro-batches a
   * continuously-ingesting index fragments exactly like the small-file
@@ -114,7 +114,7 @@ object IndexCompaction {
     * keyed by dataset name). Layout is detected from `meta.txt` and
     * preserved exactly — partition columns, meta, and the ingest
     * replay marker all survive, so a probe (or the next
-    * `ingestDedupBatch`/`ingestAnnBatch` fold step) pointed at
+    * `ingestDedupBatchTo`/`ingestAnnBatchTo` fold step) pointed at
     * `outPath` behaves bit-identically to the fragmented original.
     */
   def compactIndex(

@@ -6,6 +6,21 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** One dedup-ingest fold step (bands=32, threshold 0.5) through a
+    * sink that collects: returns the novel doc ids the sink received.
+    */
+  private def ingest(
+      batch: org.apache.spark.sql.DataFrame, idx: String,
+      batchId: Option[Long] = None, dedupWithinBatch: Boolean = false
+  ): Set[Long] = {
+    var sunk: Set[Long] = Set.empty
+    Dedup.ingestDedupBatchTo(spark, batch, "doc_id", "text", idx,
+      bands = 32, threshold = 0.5, batchId = batchId,
+      dedupWithinBatch = dedupWithinBatch,
+      sink = n => sunk = n.select("doc_id").collect().map(_.getLong(0)).toSet)
+    sunk
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
     (2L, "the quick brown fox jumps over the lazy dog near the river bank today"), // exact dup of 1
@@ -157,8 +172,7 @@ class DedupSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val est = Dedup.minHashEstimatedPairs(docs, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val verified = Dedup.minHashNearDups(docs, "doc_id", "text",
-        threshold = 0.9, storage = org.apache.spark.storage.StorageLevel.NONE)
+    val verified = Dedup.minHashNearDups(docs, "doc_id", "text", threshold = 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // jaccard >= 0.9 pairs: signature agreement E = j, stderr ~ 0.06 —
     // clearing the 0.5 signature cut is a >6-sigma event per pair
@@ -190,8 +204,7 @@ class DedupSpec extends SparkTestBase {
   test("storage=NONE near-dup plans register no cache at all") {
     spark.sharedState.cacheManager.clearCache()
     val baseRdds = spark.sparkContext.getPersistentRDDs.keySet
-    val pairs = Dedup.simHashNearDups(docs, "doc_id", "text",
-      maxDistance = 8, storage = org.apache.spark.storage.StorageLevel.NONE)
+    val pairs = Dedup.simHashNearDups(docs, "doc_id", "text", maxDistance = 8)
     pairs.count()
     assert(spark.sharedState.cacheManager.isEmpty)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- baseRdds).isEmpty)
@@ -396,17 +409,12 @@ class DedupSpec extends SparkTestBase {
     // is structurally certain, not a hash accident
     Dedup.writeMinHashIndex(base, "doc_id", "text", idx,
       bands = 32, mode = "overwrite")
-    val novel1 = Dedup.ingestDedupBatch(spark, batch1, "doc_id", "text", idx,
-      bands = 32, threshold = 0.5)
-    // batch2 runs (and appends) BEFORE novel1 is ever collected — the
-    // localCheckpoint pin: without it novel1's lazy probe would re-read
-    // the index containing batch1 itself and C1/C1' would vanish
-    val novel2 = Dedup.ingestDedupBatch(spark, batch2, "doc_id", "text", idx,
-      bands = 32, threshold = 0.5)
-    assert(novel1.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(12L, 13L))
-    assert(novel2.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(23L))
+    val novel1 = ingest(batch1, idx)
+    // batch2 runs (and appends) before novel1 is checked: the sink
+    // collected batch1's rows during batch1's own step
+    val novel2 = ingest(batch2, idx)
+    assert(novel1 == Set(12L, 13L))
+    assert(novel2 == Set(23L))
   }
 
   test("ingestDedupBatch: batchId replay skips the append (no index " +
@@ -427,16 +435,13 @@ class DedupSpec extends SparkTestBase {
     val idxA = java.nio.file.Files.createTempDirectory("graft_ingest_wb_").toString
     Dedup.writeMinHashIndex(base, "doc_id", "text", idxA,
       bands = 32, mode = "overwrite")
-    val novelWb = Dedup.ingestDedupBatch(spark, batch1, "doc_id", "text", idxA,
-      bands = 32, threshold = 0.5, dedupWithinBatch = true)
-    assert(novelWb.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(12L), "within-batch pass must keep only the min-id survivor")
+    val novelWb = ingest(batch1, idxA, dedupWithinBatch = true)
+    assert(novelWb == Set(12L),
+      "within-batch pass must keep only the min-id survivor")
     // the index still grew by the FULL batch: a later doc ~13 (the
     // DROPPED within-batch sibling) must still be caught
     val later = Seq((21L, lastTo(c1, "ten"))).toDF("doc_id", "text")
-    val novelLater = Dedup.ingestDedupBatch(spark, later, "doc_id", "text",
-      idxA, bands = 32, threshold = 0.5)
-    assert(novelLater.count() == 0L,
+    assert(ingest(later, idxA).isEmpty,
       "full-batch indexing must catch near-dups of within-batch-dropped docs")
 
     // --- batchId replay guard ---
@@ -444,38 +449,30 @@ class DedupSpec extends SparkTestBase {
     Dedup.writeMinHashIndex(base, "doc_id", "text", idxB,
       bands = 32, mode = "overwrite")
     def postings() = spark.read.parquet(s"$idxB/bands").count()
-    val novel1 = Dedup.ingestDedupBatch(spark, batch1, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(0L))
-    assert(novel1.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(12L, 13L))
+    assert(ingest(batch1, idxB, batchId = Some(0L)) == Set(12L, 13L))
     val afterFirst = postings()
     // replay of batch 0 (at-least-once): append SKIPPED, emission is
     // dedup-more — the index already holds the batch, so the
     // within-batch pair (12, 13) anti-joins away; no singleton novel
     // docs in this batch, so the replay emits nothing extra
-    val replay = Dedup.ingestDedupBatch(spark, batch1, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(0L))
+    val replay = ingest(batch1, idxB, batchId = Some(0L))
     assert(postings() == afterFirst,
       "replayed batchId must not re-append postings")
-    assert(replay.select("doc_id").collect().isEmpty,
+    assert(replay.isEmpty,
       "replay emission must be dedup-more (12~13 now match the index)")
     // a singleton replays identically (exact self-id pairs excluded)
     val single = Seq((31L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
-    val s1 = Dedup.ingestDedupBatch(spark, single, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(1L))
+    val s1 = ingest(single, idxB, batchId = Some(1L))
     val afterSingle = postings()
-    val s2 = Dedup.ingestDedupBatch(spark, single, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(1L))
-    assert(s1.select("doc_id").collect().map(_.getLong(0)).toSet == Set(31L))
-    assert(s2.select("doc_id").collect().map(_.getLong(0)).toSet == Set(31L),
-      "a singleton's replay must re-emit identically")
+    val s2 = ingest(single, idxB, batchId = Some(1L))
+    assert(s1 == Set(31L))
+    assert(s2 == Set(31L), "a singleton's replay must re-emit identically")
     assert(postings() == afterSingle)
     // the NEXT batch id appends normally
     val next = Seq((41L, "uno dos tres cuatro cinco seis siete"))
       .toDF("doc_id", "text")
-    Dedup.ingestDedupBatch(spark, next, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(2L)).collect()
+    ingest(next, idxB, batchId = Some(2L))
     assert(postings() > afterSingle, "a fresh batchId must append")
   }
 
@@ -865,9 +862,10 @@ class DedupSpec extends SparkTestBase {
       Dedup.editDistancePairs(hot, "id", "s", col("s"), maxDist = 0))
   }
 
-  test("ingestDedupBatchTo: sink receives exactly ingestDedupBatch's novel " +
-      "rows (concurrent with the append), the index still grows by the " +
-      "full batch, and a replayed batchId re-sinks without re-appending") {
+  test("ingestDedupBatchTo with dedupWithinBatch and a batchId: the sink " +
+      "sees the min-id survivors (concurrent with the append), the index " +
+      "still grows by the full batch, and a replayed batchId re-sinks " +
+      "without re-appending") {
     val p20 = (0 until 20).map(i => s"p$i")
     val t0 = (p20 ++ Seq("q0", "q1", "q2")).mkString(" ")
     val c1 = "one two three four five six seven eight"
@@ -879,50 +877,31 @@ class DedupSpec extends SparkTestBase {
       (12L, c1),                                           // novel
       (13L, lastTo(c1, "nine"))                            // ~C1 within batch
     ).toDF("doc_id", "text")
-    val idxA = java.nio.file.Files.createTempDirectory("graft_ingest_to_a").toString
-    val idxB = java.nio.file.Files.createTempDirectory("graft_ingest_to_b").toString
-    Seq(idxA, idxB).foreach(d => Dedup.writeMinHashIndex(base, "doc_id",
-      "text", d, bands = 32, mode = "overwrite"))
-    val viaReturn = Dedup.ingestDedupBatch(spark, batch1, "doc_id", "text",
-        idxA, bands = 32, threshold = 0.5, batchId = Some(0L),
-        dedupWithinBatch = true)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    var sunk: Set[Long] = Set.empty
-    Dedup.ingestDedupBatchTo(spark, batch1, "doc_id", "text", idxB,
-      bands = 32, threshold = 0.5, batchId = Some(0L),
-      dedupWithinBatch = true,
-      sink = n => sunk = n.select("doc_id").collect().map(_.getLong(0)).toSet)
-    assert(sunk == viaReturn,
-      "the sink must see exactly the rows the returning variant returns")
-    // the index grew by the FULL batch on both paths: a later near-dup
-    // of the within-batch-DROPPED doc 13 is caught on both
+    val idx = java.nio.file.Files.createTempDirectory("graft_ingest_to").toString
+    Dedup.writeMinHashIndex(base, "doc_id", "text", idx,
+      bands = 32, mode = "overwrite")
+    assert(ingest(batch1, idx, batchId = Some(0L), dedupWithinBatch = true) ==
+      Set(12L), "the sink must see only the min-id survivor of 12~13")
+    // the index grew by the FULL batch: a later near-dup of the
+    // within-batch-DROPPED doc 13 is caught
     val later = Seq((21L, lastTo(c1, "ten"))).toDF("doc_id", "text")
-    Seq(idxA, idxB).foreach { d =>
-      val novelLater = Dedup.ingestDedupBatch(spark, later, "doc_id", "text",
-        d, bands = 32, threshold = 0.5)
-      assert(novelLater.count() == 0L,
-        s"index at $d must have grown by the full batch")
-    }
-    // replay: same batchId re-sinks (with the designed dedup-more-on-
-    // replay emission — identical to the returning variant's replay,
-    // which here anti-joins the whole batch away because 12 and 13 are
-    // mutual near-dups already in the index) and does not re-append
-    val postings = spark.read.parquet(s"$idxB/bands").count()
-    val replayReturn = Dedup.ingestDedupBatch(spark, batch1, "doc_id",
-        "text", idxA, bands = 32, threshold = 0.5, batchId = Some(0L),
-        dedupWithinBatch = true)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    var replayed: Set[Long] = Set.empty
+    assert(ingest(later, idx).isEmpty,
+      s"index at $idx must have grown by the full batch")
+    // replay: same batchId re-sinks with the designed dedup-more-on-
+    // replay emission (12 and 13 are mutual near-dups already in the
+    // index, so the whole batch anti-joins away) and does not re-append
+    val postings = spark.read.parquet(s"$idx/bands").count()
+    var replayed: Set[Long] = Set(-1L)
     var sinkRan = false
-    Dedup.ingestDedupBatchTo(spark, batch1, "doc_id", "text", idxB,
+    Dedup.ingestDedupBatchTo(spark, batch1, "doc_id", "text", idx,
       bands = 32, threshold = 0.5, batchId = Some(0L),
       dedupWithinBatch = true,
       sink = n => { sinkRan = true
         replayed = n.select("doc_id").collect().map(_.getLong(0)).toSet })
     assert(sinkRan, "a replayed batch must still run the sink")
-    assert(replayed == replayReturn,
-      "replay emission must match the returning variant's replay")
-    assert(spark.read.parquet(s"$idxB/bands").count() == postings,
+    assert(replayed.isEmpty,
+      "replay emission must be dedup-more (12~13 now match the index)")
+    assert(spark.read.parquet(s"$idx/bands").count() == postings,
       "a replayed batch must not re-append")
   }
 }

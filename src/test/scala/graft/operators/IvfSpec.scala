@@ -9,6 +9,28 @@ class IvfSpec extends SparkTestBase {
   private lazy val queries = emb.filter(col("vec_id") < 5)
     .select(col("vec_id").as("qid"), col("embedding").as("qv")).cache()
 
+  /** One ANN-ingest fold step (k=5, every cell probed) through a sink
+    * that collects: returns the (query_id, rank, id, int_dot) rows the
+    * sink received.
+    */
+  private def ingest(
+      batch: org.apache.spark.sql.DataFrame, dir: String, batchId: Long
+  ): Set[(Long, Int, Long, Long)] = {
+    var sunk = Set.empty[(Long, Int, Long, Long)]
+    Ivf.ingestAnnBatchTo(spark, batch, "vec_id", "embedding", dir,
+      Ivf.readInt8Index(spark, dir), k = 5, nProbe = Int.MaxValue,
+      batchId = Some(batchId),
+      sink = n => sunk = n.collect().map(r => (r.getAs[Long]("query_id"),
+        r.getAs[Int]("rank"), r.getAs[Long]("id"), r.getAs[Long]("int_dot"))).toSet)
+    sunk
+  }
+
+  /** Probe the index written at `dir`. */
+  private def probe(dir: String, qs: org.apache.spark.sql.DataFrame,
+      k: Int, nProbe: Int = 8) =
+    Ivf.ivfInt8ProbeIndex(spark, dir, Ivf.readInt8Index(spark, dir), qs,
+      "qid", "qv", k, nProbe)
+
   test("index build is deterministic and well-shaped") {
     val a = Ivf.buildIndex(emb, "vec_id", "embedding", 32)
     val b = Ivf.buildIndex(emb, "vec_id", "embedding", 32)
@@ -233,8 +255,7 @@ class IvfSpec extends SparkTestBase {
     assert(schema.simpleString == "array<tinyint>", schema.simpleString)
 
     val nProbe = 4
-    val fromDisk = Ivf.ivfInt8ProbeIndex(spark, dir, queries, "qid", "qv",
-      k = 10, nProbe = nProbe)
+    val fromDisk = probe(dir, queries, k = 10, nProbe = nProbe)
     val got = fromDisk.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         ((r.getAs[Long]("id"), r.getAs[Long]("int_dot")))).toMap
@@ -256,8 +277,7 @@ class IvfSpec extends SparkTestBase {
       }.flatten
       direct ++ nested
     }
-    val oneQuery = Ivf.ivfInt8ProbeIndex(spark, dir, queries.limit(1),
-      "qid", "qv", k = 10, nProbe = nProbe)
+    val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
     oneQuery.collect()
     val scans = scansOf(oneQuery.queryExecution.executedPlan)
       .filter(_.metadata.get("Location").exists(_.contains("ivf_int8_idx_")))
@@ -292,19 +312,14 @@ class IvfSpec extends SparkTestBase {
             .map { case ((_, id, d), i) => (q, i + 1, id, d) }
         }.toSet
 
-    val got1 = Ivf.ingestAnnBatch(spark, batch1, "vec_id", "embedding", dir,
-      k = 5, batchId = Some(0L))
-    // batch2 ingests (and MUTATES the index) before got1 is collected —
-    // the eager-localCheckpoint pin: a lazy got1 would now score batch1
-    // against itself and every rank-1 hit would be the self-dot
-    val got2 = Ivf.ingestAnnBatch(spark, batch2, "vec_id", "embedding", dir,
-      k = 5, batchId = Some(1L))
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("id"), r.getAs[Long]("int_dot"))).toSet
-    assert(asSet(got1) == exactTopK(base, batch1, 5),
+    val got1 = ingest(batch1, dir, batchId = 0L)
+    // batch2 ingests (and MUTATES the index) before got1 is checked —
+    // the sink-before-append pin: a probe built after batch1's own
+    // append would score batch1 against its siblings
+    val got2 = ingest(batch2, dir, batchId = 1L)
+    assert(got1 == exactTopK(base, batch1, 5),
       "batch1 must retrieve against the base corpus only")
-    assert(asSet(got2) == exactTopK(base.unionByName(batch1), batch2, 5),
+    assert(got2 == exactTopK(base.unionByName(batch1), batch2, 5),
       "batch2 must retrieve against base + batch1")
 
     // replay of batch2: append skipped (code rows unchanged), emission
@@ -312,8 +327,7 @@ class IvfSpec extends SparkTestBase {
     // since self-pairs are excluded and batch2's own vectors can enter
     // a replayed top-k, assert the guard via the index contents
     val codesBefore = spark.read.parquet(s"$dir/cells").count()
-    Ivf.ingestAnnBatch(spark, batch2, "vec_id", "embedding", dir,
-      k = 5, batchId = Some(1L)).collect()
+    ingest(batch2, dir, batchId = 1L)
     assert(spark.read.parquet(s"$dir/cells").count() == codesBefore,
       "replayed batchId must not re-append code rows")
     // a SINGLETON batch replays bit-identically (self excluded, k+1
@@ -322,17 +336,13 @@ class IvfSpec extends SparkTestBase {
     import spark.implicits._
     val single = Seq((10001L, (0 until 64).map(i => (i % 7).toFloat)))
       .toDF("vec_id", "embedding")
-    val s1 = Ivf.ingestAnnBatch(spark, single, "vec_id", "embedding", dir,
-      k = 5, batchId = Some(2L))
-    val s2 = Ivf.ingestAnnBatch(spark, single, "vec_id", "embedding", dir,
-      k = 5, batchId = Some(2L))
-    assert(asSet(s1) == asSet(s2), "singleton replay must emit identically")
+    val s1 = ingest(single, dir, batchId = 2L)
+    val s2 = ingest(single, dir, batchId = 2L)
+    assert(s1 == s2, "singleton replay must emit identically")
     // fresh batchId appends again
     val codesAfterSingle = spark.read.parquet(s"$dir/cells").count()
-    Ivf.ingestAnnBatch(spark,
-      Seq((10002L, (0 until 64).map(i => (i % 5).toFloat)))
-        .toDF("vec_id", "embedding"),
-      "vec_id", "embedding", dir, k = 5, batchId = Some(3L)).collect()
+    ingest(Seq((10002L, (0 until 64).map(i => (i % 5).toFloat)))
+      .toDF("vec_id", "embedding"), dir, batchId = 3L)
     assert(spark.read.parquet(s"$dir/cells").count() == codesAfterSingle + 1L)
   }
 
@@ -388,8 +398,7 @@ class IvfSpec extends SparkTestBase {
         rows.sortBy { case (_, id, d) => (-d, id) }.take(10).zipWithIndex
           .map { case ((_, id, d), i) => (q, i + 1) -> ((id, d)) }
       }.toMap
-    val got = Ivf.ivfInt8ProbeIndex(spark, dir, queries, "qid", "qv",
-        k = 10, nProbe = 4)
+    val got = probe(dir, queries, k = 10, nProbe = 4)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         ((r.getAs[Long]("id"), r.getAs[Long]("int_dot")))).toMap
     assert(got == expect)
@@ -432,7 +441,7 @@ class IvfSpec extends SparkTestBase {
       "a failed append must not grow cells/")
     val notAnIndex = java.nio.file.Files.createTempDirectory("not_idx_").toString
     intercept[IllegalArgumentException](
-      Ivf.ivfInt8ProbeIndex(spark, notAnIndex, queries, "qid", "qv", k = 5))
+      probe(notAnIndex, queries, k = 5))
   }
 
   test("ivfInt8TopK equals int8TopK restricted to the probed cells") {
@@ -484,11 +493,11 @@ class IvfSpec extends SparkTestBase {
     val raw = Ivf.buildIndex(emb2, "vec_id", "embedding", nlist = 8)
     assert(!raw.centroids.sameElements(refined.centroids))
     // probing round-trips
-    val res = Ivf.ivfInt8ProbeIndex(spark, s"$dir/idx",
+    val res = probe(s"$dir/idx",
       emb2.filter(org.apache.spark.sql.functions.col("vec_id") < 2)
         .select(org.apache.spark.sql.functions.col("vec_id").as("qid"),
           org.apache.spark.sql.functions.col("embedding").as("qv")),
-      "qid", "qv", k = 3, nProbe = 2)
+      k = 3, nProbe = 2)
     assert(res.count() > 0)
     // append must reuse the persisted quantizers, never retrain
     intercept[IllegalArgumentException] {
@@ -497,36 +506,20 @@ class IvfSpec extends SparkTestBase {
     }
   }
 
-  test("ingestAnnBatchTo: sink receives exactly ingestAnnBatchWith's rows, " +
-      "the append still grows the index, and a replayed batchId re-sinks " +
-      "without re-appending") {
-    val dirA = java.nio.file.Files.createTempDirectory("ivf_ann_to_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("ivf_ann_to_b").toString
+  test("ingestAnnBatchTo: the append grows the index by the full batch, and " +
+      "a replayed multi-row batchId re-sinks without re-appending") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_ann_to").toString
     val base = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val batch1 = emb.filter(pmod(col("vec_id"), lit(3)) === 1)
-    Seq(dirA, dirB).foreach(d => Ivf.writeInt8Index(base, "vec_id",
-      "embedding", d, nlist = 32, mode = "overwrite"))
-    val viaWith = Ivf.ingestAnnBatchWith(spark, batch1, "vec_id", "embedding",
-        dirA, Ivf.readInt8Index(spark, dirA), k = 5, batchId = Some(0L))
-      .collect().map(_.toString).sorted.toSeq
-    var sunk: Seq[String] = Nil
-    Ivf.ingestAnnBatchTo(spark, batch1, "vec_id", "embedding", dirB,
-      Ivf.readInt8Index(spark, dirB), k = 5, nProbe = Int.MaxValue,
-      batchId = Some(0L),
-      sink = n => sunk = n.collect().map(_.toString).sorted.toSeq)
-    assert(sunk == viaWith,
-      "the sink must see exactly the rows the returning variant returns")
-    assert(spark.read.parquet(s"$dirB/cells").count() ==
-      spark.read.parquet(s"$dirA/cells").count(),
-      "both variants must grow the index identically")
-    val rowsAfter = spark.read.parquet(s"$dirB/cells").count()
-    var replayed: Seq[String] = Nil
-    Ivf.ingestAnnBatchTo(spark, batch1, "vec_id", "embedding", dirB,
-      Ivf.readInt8Index(spark, dirB), k = 5, nProbe = Int.MaxValue,
-      batchId = Some(0L),
-      sink = n => replayed = n.collect().map(_.toString).sorted.toSeq)
+    Ivf.writeInt8Index(base, "vec_id", "embedding", dir, nlist = 32,
+      mode = "overwrite")
+    ingest(batch1, dir, batchId = 0L)
+    val rowsAfter = spark.read.parquet(s"$dir/cells").count()
+    assert(rowsAfter == base.count() + batch1.count(),
+      "the append must grow the index by the full batch")
+    val replayed = ingest(batch1, dir, batchId = 0L)
     assert(replayed.nonEmpty)
-    assert(spark.read.parquet(s"$dirB/cells").count() == rowsAfter,
+    assert(spark.read.parquet(s"$dir/cells").count() == rowsAfter,
       "a replayed batch must not re-append")
   }
 }

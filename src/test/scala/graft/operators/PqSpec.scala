@@ -11,6 +11,25 @@ class PqSpec extends SparkTestBase {
   private lazy val queries = emb.filter(col("vec_id") < 3)
     .select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
+  /** Probe the index written at `dir`. */
+  private def probe(dir: String, qs: org.apache.spark.sql.DataFrame,
+      k: Int, nProbe: Int) =
+    Pq.probeIndex(Pq.readIndex(spark, dir), qs, "qid", "qv", k, nProbe)
+
+  /** One PQ-ingest fold step (k=3, nProbe=3) through a sink that
+    * collects: returns the neighbor rows the sink received.
+    */
+  private def ingest(
+      batch: org.apache.spark.sql.DataFrame, idx: String,
+      batchId: Option[Long] = None, maxQueries: Int = Int.MaxValue
+  ): Array[org.apache.spark.sql.Row] = {
+    var sunk = Array.empty[org.apache.spark.sql.Row]
+    Pq.ingestBatchTo(spark, batch, "vec_id", "embedding", idx,
+      Pq.readIndex(spark, idx), k = 3, nProbe = 3, batchId = batchId,
+      maxQueries = maxQueries, sink = n => sunk = n.collect())
+    sunk
+  }
+
   test("pqCodebook is a complete (subspace, code) grid with dense codes") {
     val cb = Pq.pqCodebook(emb, "vec_id", "embedding", m = 8, ncode = 16)
     val rows = cb.collect()
@@ -114,8 +133,7 @@ class PqSpec extends SparkTestBase {
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         ((r.getAs[Long]("id"), r.getAs[Long]("adc_dot")))).toMap
-    val fromDisk = keyed(Pq.probeIndex(spark, dir, queries, "qid", "qv",
-      k = 10, nProbe = nProbe))
+    val fromDisk = keyed(probe(dir, queries, k = 10, nProbe = nProbe))
     val inSession = keyed(Pq.ivfPqTopK(emb, "vec_id", "embedding",
       queries, "qid", "qv", m = 8, ncode = 32, nlist = 16,
       nProbe = nProbe, k = 10))
@@ -134,8 +152,7 @@ class PqSpec extends SparkTestBase {
       }.flatten
       direct ++ nested
     }
-    val oneQuery = Pq.probeIndex(spark, dir, queries.limit(1), "qid", "qv",
-      k = 10, nProbe = nProbe)
+    val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
     oneQuery.collect()
     val scans = scansOf(oneQuery.queryExecution.executedPlan)
       .filter(_.metadata.get("Location").exists(_.contains("ivf_pq_idx_")))
@@ -170,8 +187,7 @@ class PqSpec extends SparkTestBase {
     Pq.writeIndex(emb, "vec_id", "embedding", fresh,
       m = 8, ncode = 32, nlist = 16, mode = "overwrite")
 
-    def keyed(dir: String) = Pq.probeIndex(spark, dir, queries, "qid", "qv",
-        k = 10, nProbe = 16).collect()
+    def keyed(dir: String) = probe(dir, queries, k = 10, nProbe = 16).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         ((r.getAs[Long]("id"), r.getAs[Long]("adc_dot")))).toMap
     assert(keyed(grown) == keyed(fresh))
@@ -264,8 +280,7 @@ class PqSpec extends SparkTestBase {
     try {
       Pq.writeIndex(emb, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite", refineIters = 2)
-      val fromDisk = Pq.probeIndex(spark, s"$dir/idx",
-          queries, "qid", "qv", k = 5, nProbe = 3)
+      val fromDisk = probe(s"$dir/idx", queries, k = 5, nProbe = 3)
         .select(col("query_id"), col("id"), col("adc_dot"), col("rank"))
         .collect().map(_.toString).sorted.toSeq
       val inSession = Pq.adcTopK(
@@ -300,16 +315,14 @@ class PqSpec extends SparkTestBase {
       val b2 = emb.filter(pmod(col("vec_id"), lit(4)) === 2)
       Pq.writeIndex(seed, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite")
-      val n1 = Pq.ingestBatch(spark, b1, "vec_id", "embedding", s"$dir/idx",
-        k = 3, nProbe = 3, batchId = Some(0L)).collect()
+      val n1 = ingest(b1, s"$dir/idx", batchId = Some(0L))
       // batch 1 retrieves against the seed only
       assert(n1.nonEmpty)
       n1.foreach { r =>
         assert(r.getLong(0) % 4 == 1) // query from the batch
         assert(r.getLong(1) % 4 == 0) // neighbor from the seed
       }
-      val n2 = Pq.ingestBatch(spark, b2, "vec_id", "embedding", s"$dir/idx",
-        k = 3, nProbe = 3, batchId = Some(1L)).collect()
+      val n2 = ingest(b2, s"$dir/idx", batchId = Some(1L))
       // batch 2 sees seed + batch 1 — and nothing from itself
       assert(n2.forall(r => r.getLong(1) % 4 != 2))
       assert(n2.exists(r => r.getLong(1) % 4 == 1),
@@ -324,13 +337,11 @@ class PqSpec extends SparkTestBase {
       val one = emb.filter(col("vec_id") === 1)
       Pq.writeIndex(seed, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite")
-      val first = Pq.ingestBatch(spark, one, "vec_id", "embedding", s"$dir/idx",
-        k = 3, nProbe = 3, batchId = Some(7L))
-        .collect().map(_.toString).sorted.toSeq
+      val first = ingest(one, s"$dir/idx", batchId = Some(7L))
+        .map(_.toString).sorted.toSeq
       val rowsAfter = spark.read.parquet(s"$dir/idx/cells").count()
-      val replay = Pq.ingestBatch(spark, one, "vec_id", "embedding", s"$dir/idx",
-        k = 3, nProbe = 3, batchId = Some(7L))
-        .collect().map(_.toString).sorted.toSeq
+      val replay = ingest(one, s"$dir/idx", batchId = Some(7L))
+        .map(_.toString).sorted.toSeq
       assert(replay == first, "a replayed singleton batch must emit bit-identically")
       assert(spark.read.parquet(s"$dir/idx/cells").count() == rowsAfter,
         "a replayed batch must not re-append")
@@ -347,8 +358,7 @@ class PqSpec extends SparkTestBase {
       val expected = batch
         .orderBy(Sampling.hashRank(col("vec_id")), col("vec_id")).limit(5)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val n = Pq.ingestBatch(spark, batch, "vec_id", "embedding", s"$dir/idx",
-        k = 3, nProbe = 3, maxQueries = 5).collect()
+      val n = ingest(batch, s"$dir/idx", maxQueries = 5)
       assert(n.map(_.getLong(0)).toSet.subsetOf(expected))
       // the append still ingested the FULL batch
       assert(spark.read.parquet(s"$dir/idx/cells").count() ==
@@ -356,40 +366,23 @@ class PqSpec extends SparkTestBase {
     } finally rmTree(dir)
   }
 
-  test("ingestBatchTo: sink receives exactly ingestBatchWith's rows, the " +
-      "append still grows the index, and a replayed batchId re-sinks " +
-      "without re-appending") {
-    val dirA = java.nio.file.Files.createTempDirectory("pq_ingest_to_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("pq_ingest_to_b").toString
+  test("ingestBatchTo: the append grows the index by the full batch, and " +
+      "a replayed multi-row batchId re-sinks without re-appending") {
+    val dir = java.nio.file.Files.createTempDirectory("pq_ingest_to").toString
     try {
       val seed = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
       val b1 = emb.filter(pmod(col("vec_id"), lit(4)) === 1)
-      Seq(dirA, dirB).foreach(d => Pq.writeIndex(seed, "vec_id", "embedding",
-        s"$d/idx", m = 8, ncode = 16, nlist = 8, mode = "overwrite"))
-      val viaWith = Pq.ingestBatchWith(spark, b1, "vec_id", "embedding",
-          s"$dirA/idx", Pq.readIndex(spark, s"$dirA/idx"), k = 3, nProbe = 3,
-          batchId = Some(0L))
-        .collect().map(_.toString).sorted.toSeq
-      var sunk: Seq[String] = Nil
-      Pq.ingestBatchTo(spark, b1, "vec_id", "embedding", s"$dirB/idx",
-        Pq.readIndex(spark, s"$dirB/idx"), k = 3, nProbe = 3,
-        batchId = Some(0L), maxQueries = Int.MaxValue,
-        sink = n => sunk = n.collect().map(_.toString).sorted.toSeq)
-      assert(sunk == viaWith,
-        "the sink must see exactly the rows the returning variant returns")
-      assert(spark.read.parquet(s"$dirB/idx/cells").count() ==
-        spark.read.parquet(s"$dirA/idx/cells").count(),
-        "both variants must grow the index identically")
+      Pq.writeIndex(seed, "vec_id", "embedding", s"$dir/idx",
+        m = 8, ncode = 16, nlist = 8, mode = "overwrite")
+      ingest(b1, s"$dir/idx", batchId = Some(0L))
+      val rowsAfter = spark.read.parquet(s"$dir/idx/cells").count()
+      assert(rowsAfter == seed.count() + b1.count(),
+        "the append must grow the index by the full batch")
       // replay: same batchId re-runs the sink, does not re-append
-      val rowsAfter = spark.read.parquet(s"$dirB/idx/cells").count()
-      var replayed: Seq[String] = Nil
-      Pq.ingestBatchTo(spark, b1, "vec_id", "embedding", s"$dirB/idx",
-        Pq.readIndex(spark, s"$dirB/idx"), k = 3, nProbe = 3,
-        batchId = Some(0L), maxQueries = Int.MaxValue,
-        sink = n => replayed = n.collect().map(_.toString).sorted.toSeq)
+      val replayed = ingest(b1, s"$dir/idx", batchId = Some(0L))
       assert(replayed.nonEmpty)
-      assert(spark.read.parquet(s"$dirB/idx/cells").count() == rowsAfter,
+      assert(spark.read.parquet(s"$dir/idx/cells").count() == rowsAfter,
         "a replayed batch must not re-append")
-    } finally { rmTree(dirA); rmTree(dirB) }
+    } finally rmTree(dir)
   }
 }

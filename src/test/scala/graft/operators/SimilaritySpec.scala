@@ -400,6 +400,18 @@ class SimilaritySpec extends SparkTestBase {
       ("b", 1L) -> ((2L, 3L)), ("b", 2L) -> ((0L, 2L))))
   }
 
+  test("recallAtKTagged rejects duplicate tags instead of merging their legs") {
+    import spark.implicits._
+    val exact = Seq((1L, 10L), (1L, 11L)).toDF("query_id", "id")
+    val legA = Seq((1L, 10L)).toDF("query_id", "id")
+    val legB = Seq((1L, 11L)).toDF("query_id", "id")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.recallAtKTagged(
+        Seq(lit("a") -> legA, lit("a") -> legB), exact, tagCol = "tag")
+    }
+    assert(e.getMessage.contains("pairwise distinct"), e.getMessage)
+  }
+
   test("recallAtK on real data: IVF recovers a meaningful share of the exact top-10") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 3)

@@ -39,7 +39,8 @@ class IndexCompactionSpec extends SparkTestBase {
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     def probe(path: String) =
-      Ivf.ivfInt8ProbeIndex(spark, path, queries, "qid", "qv", k = 10, nProbe = 4)
+      Ivf.ivfInt8ProbeIndex(spark, path, Ivf.readInt8Index(spark, path),
+          queries, "qid", "qv", k = 10, nProbe = 4)
         .collect().map(_.toString).sorted.toSeq
     assert(probe(compacted) == probe(frag))
     // meta survives: the probe above already validated against it, but
@@ -56,8 +57,9 @@ class IndexCompactionSpec extends SparkTestBase {
       frag, bands = 8, mode = "overwrite")
     // grow through the ingest fold so a last_batch.txt marker exists
     (1 to 3).foreach { k =>
-      Dedup.ingestDedupBatch(spark, docs.filter(m === k), "doc_id", "text",
-        frag, bands = 8, threshold = 0.5, batchId = Some(k.toLong)).count()
+      Dedup.ingestDedupBatchTo(spark, docs.filter(m === k), "doc_id", "text",
+        frag, bands = 8, threshold = 0.5, batchId = Some(k.toLong),
+        sink = _.count())
     }
     val compacted = tmp("mh_comp")
     val stats = IndexCompaction.compactIndex(spark, frag, compacted)
