@@ -3,11 +3,11 @@ package graft.queries
 import graft.config.{FieldMapping, ValidationRule}
 import graft.operators.Parallelism.widen
 import graft.operators.{Clusters, Dedup, Drift, HeavyHitters, Multimodal, NgramLm, QualityClassifier, Similarity, TemporalJoins, TextAnalysis}
+import graft.queries.Harness.replayToMemory
 import graft.rules.RuleCompiler
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -30,14 +30,13 @@ object Queries {
 
   /** Shared 4/5-corpus / 1/5-batch MinHash index build + probe used by
     * x_dedup_incremental and x_incremental_ingest — one place for the
-    * split, the tmp index path (dataset-dir-scoped: a fixed path would
-    * race concurrent runs at different SFs), and the LSH parameters.
+    * split, the scratch index path (dataset-dir-scoped: one path per SF
+    * in a session), and the LSH parameters.
     * Returns (batch frame, near-dup pairs at jaccard >= 0.5).
     */
   private def indexAndProbe(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = t(s, d, "documents")
-    val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_minhash_idx_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
+    val idxPath = Harness.scratch("minhash_idx", d).toString
     Dedup.writeMinHashIndex(
       docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text",
       idxPath, mode = "overwrite")
@@ -45,113 +44,17 @@ object Queries {
     (batch, Dedup.minHashProbeIndex(s, batch, "doc_id", "text", idxPath, threshold = 0.5))
   }
 
-  /** Shared exact-ngram near-dup PAIR GRAPH, computed once per dataset
-    * dir per session and reused by the whole family —
-    * `x_dedup_ngram` (the raw pairs), `x_dedup_clusters` (connected
-    * components over them), and `x_cluster_safe_split` (split labels
-    * hashed on the component root). This is the production shape at
-    * 100 TB: the candidate-generation + verification job is the
-    * expensive corpus-wide pass, and every downstream consumer
-    * (clustering, leakage-safe splitting, survivor selection) derives
-    * from ONE persisted pair-graph artifact rather than re-shingling
-    * the corpus per query — the same sharing the r10 verdict asked for
-    * (next-round #4). Memory bound: the pairs frame is ∝ the near-dup
-    * pair count (structurally ≪ corpus; 25 rows at sf0.01, 256 at
-    * sf0.1), persisted MEMORY_AND_DISK so a pathological pair set
-    * spills instead of evicting executor memory; components are
-    * pair-members only. The cache holds at most [[pairGraphCacheMax]]
-    * dataset dirs and evicts (unpersisting) beyond that; entries from
-    * a replaced SparkSession are recomputed (`eq` check) since cached
-    * plans cannot outlive their session.
+  /** Cumulative wall-clock spent BUILDING the shared per-dir artifacts
+    * this session (outermost builds only; see [[Harness.Artifact]]).
+    * Bench reports it as `artifact_sec`.
     */
-  private val dirMemoMax = 4
-
-  /** Per-(dataset dir, session) shared-artifact memo used by the pair
-    * graph and the passage spans. Entries from a replaced SparkSession
-    * are rebuilt (`eq` check — cached plans cannot outlive their
-    * session) and their persisted frames released best-effort; the map
-    * is bounded at [[dirMemoMax]] dirs (a session sees at most the
-    * three testdata SFs).
-    */
-  /** Cumulative wall-clock spent BUILDING shared per-dir artifacts
-    * this session (pair graph + components, shingle projection,
-    * passage spans, fuzzy pairs) — every [[memoPerDir]] build is
-    * timed into this accumulator, and each build forces its frame's
-    * materialization so the cost lands here rather than inside the
-    * first consuming query's discarded warmup rep. Bench reads
-    * [[artifactBuildSeconds]] and reports it as a first-class
-    * `artifact_sec` summary field: the one-time cost per corpus
-    * refresh that the steady-state per-query medians ride on.
-    */
-  private val artifactNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def artifactBuildSeconds: Double = artifactNanos.get / 1e9
+  def artifactBuildSeconds: Double = Harness.artifactBuildSeconds
 
   /** Per-artifact breakdown of [[artifactBuildSeconds]] (label →
     * cumulative seconds, outermost builds only). Bench emits it as
     * `artifact_breakdown` in the medians side file.
     */
-  private val artifactNanosByLabel =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def artifactBuildBreakdown: Map[String, Double] = {
-    val b = Map.newBuilder[String, Double]
-    artifactNanosByLabel.forEach((k, v) => b += (k -> v.toDouble / 1e9))
-    b.result()
-  }
-
-  // builds nest (the pair graph's build consumes the docShingles
-  // artifact): only the OUTERMOST build on a thread adds its elapsed
-  // time, so nested artifact builds aren't double-counted
-  private val buildDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
-  }
-
-  private def memoPerDir[T <: AnyRef](
-      cache: java.util.concurrent.ConcurrentHashMap[String, (SparkSession, T)],
-      s: SparkSession, d: String, label: String = "other",
-      // an external spark.catalog.clearCache() (or a cascading
-      // unpersist) silently strips a memoized frame's cache entry;
-      // without this re-check the memo would keep handing out the
-      // now-unpersisted frame and every consumer would re-run the
-      // corpus-wide build it exists to share. Sites pass a
-      // storageLevel probe; stale entries are released and rebuilt.
-      stillValid: T => Boolean = (_: T) => true)(
-      build: => T)(release: T => Unit): T = {
-    val hit = cache.get(d)
-    if (hit != null && (hit._1 eq s) && stillValid(hit._2)) hit._2
-    else cache.synchronized {
-      val again = cache.get(d)
-      if (again != null && (again._1 eq s) && stillValid(again._2)) again._2
-      else {
-        if (again != null || cache.size() >= dirMemoMax) {
-          val stale =
-            if (again != null) java.util.Collections.singletonMap(d, again)
-            else cache
-          stale.forEach { (k, v) =>
-            scala.util.Try(release(v._2))
-            cache.remove(k)
-          }
-        }
-        val depth: Int = buildDepth.get
-        buildDepth.set(depth + 1)
-        val t0 = System.nanoTime()
-        val built =
-          try build
-          finally {
-            buildDepth.set(depth)
-            if (depth == 0) {
-              val dt = System.nanoTime() - t0
-              artifactNanos.addAndGet(dt)
-              artifactNanosByLabel.merge(label, dt,
-                (a, b) => java.lang.Long.valueOf(a + b))
-            }
-          }
-        cache.put(d, (s, built))
-        built
-      }
-    }
-  }
+  def artifactBuildBreakdown: Map[String, Double] = Harness.artifactBuildBreakdown
 
   /** 30-minute-gap sessionization shared by `x_sessionize` and
     * `x_session_stats` — gap compared at MICROSECOND precision (ts_utc
@@ -171,13 +74,6 @@ object Queries {
       .agg(count(lit(1)).as("n_events"))
   }
 
-  /** Shared multi-pass fuzzy PAIR frame (substitution fixture) reused
-    * by `x_fuzzy_multipass` and `x_golden_records` — the same
-    * one-expensive-pass-many-consumers shape as the ngram pair graph.
-    */
-  private val fuzzyPairCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
   // private[graft]: graft.tools.AsymProbe measures this fixture's
   // block-occupancy growth across scale decades on the same frame the
   // artifact builds from
@@ -191,36 +87,32 @@ object Queries {
     titles.union(typos)
   }
 
-  private def fuzzyMultipassPairs(s: SparkSession, d: String): DataFrame =
-    memoPerDir(fuzzyPairCache, s, d, "fuzzy_pairs",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val all = fuzzyTitles(s, d)
-      // PASS PROVENANCE (r11 verdict #7): each pass tags its pairs, the
-      // shared frame carries per-pass membership flags — so the single-
-      // pass entry (x_fuzzy_match) FILTERS this artifact instead of
-      // recomputing the blocked join, and single-vs-multipass recall is
-      // directly comparable on the same fixture.
-      val prefixPass = Dedup.editDistancePairs(all, "doc_id", "title",
-        blockKey = substring(col("title"), 1, 6), maxDist = 2)
-        .withColumn("__pass", lit(1))
-      // positive-index suffix (greatest(1, len-5)) — negative substring
-      // starts disagree across engines for strings shorter than the key
-      val suffixPass = Dedup.editDistancePairs(all, "doc_id", "title",
-        blockKey = expr("substring(title, greatest(1, length(title) - 5), 6)"),
-        maxDist = 2)
-        .withColumn("__pass", lit(2))
-      val pairs = prefixPass.union(suffixPass)
-        .groupBy(col("id_a"), col("id_b"), col("dist"))
-        .agg(
-          max(when(col("__pass") === 1, 1L).otherwise(0L)).as("in_prefix"),
-          max(when(col("__pass") === 2, 1L).otherwise(0L)).as("in_suffix"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pairs.count() // materialize inside the timed artifact build
-      pairs
-    } { _.unpersist(blocking = false) }
-
-  private val pairGraphCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, (DataFrame, DataFrame))]()
+  /** Shared multi-pass fuzzy PAIR frame (substitution fixture) reused
+    * by `x_fuzzy_multipass` and `x_golden_records` — the same
+    * one-expensive-pass-many-consumers shape as the ngram pair graph.
+    */
+  private val fuzzyMultipassPairs = Harness.frame("fuzzy_pairs") { (s, d) =>
+    val all = fuzzyTitles(s, d)
+    // PASS PROVENANCE (r11 verdict #7): each pass tags its pairs, the
+    // shared frame carries per-pass membership flags — so the single-
+    // pass entry (x_fuzzy_match) FILTERS this artifact instead of
+    // recomputing the blocked join, and single-vs-multipass recall is
+    // directly comparable on the same fixture.
+    val prefixPass = Dedup.editDistancePairs(all, "doc_id", "title",
+      blockKey = substring(col("title"), 1, 6), maxDist = 2)
+      .withColumn("__pass", lit(1))
+    // positive-index suffix (greatest(1, len-5)) — negative substring
+    // starts disagree across engines for strings shorter than the key
+    val suffixPass = Dedup.editDistancePairs(all, "doc_id", "title",
+      blockKey = expr("substring(title, greatest(1, length(title) - 5), 6)"),
+      maxDist = 2)
+      .withColumn("__pass", lit(2))
+    prefixPass.union(suffixPass)
+      .groupBy(col("id_a"), col("id_b"), col("dist"))
+      .agg(
+        max(when(col("__pass") === 1, 1L).otherwise(0L)).as("in_prefix"),
+        max(when(col("__pass") === 2, 1L).otherwise(0L)).as("in_suffix"))
+  }
 
   /** Shared corpus-wide `(doc_id → shingle set)` projection — the ONE
     * expensive text pass both exact n-gram measures derive from: the
@@ -229,17 +121,9 @@ object Queries {
     * corpus (the r11 verdict's #4: the containment entry's corpus
     * projection duplicated the pair graph's work).
     */
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def docShingles(s: SparkSession, d: String): DataFrame =
-    memoPerDir(shingleCache, s, d, "doc_shingles",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val sh = Dedup.shingleProjection(t(s, d, "documents"), "doc_id", "text", 3)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      sh.count() // materialize inside the timed artifact build
-      sh
-    } { _.unpersist(blocking = false) }
+  private val docShingles = Harness.frame("doc_shingles") { (s, d) =>
+    Dedup.shingleProjection(t(s, d, "documents"), "doc_id", "text", 3)
+  }
 
   /** Shared RULE-ANNOTATED lineitem frame: ONE compiled-rule pass per
     * dir per session feeds the P8/P9/S6 parity entries — the
@@ -251,41 +135,46 @@ object Queries {
     * cache cannot feed a stream). Results are unchanged: the frame IS
     * each entry's previous first stage.
     */
-  private val annotatedLineitemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private val annotatedLineitem = Harness.frame("annotated_lineitem") { (s, d) =>
+    // cache ONLY what the three consumers (P8 counts, P9 fanout, S6
+    // report) read: the row key + the computed errors array. Caching
+    // all 11 lineitem columns spilled the 60M-row sfx100 build out of
+    // the storage pool (19.3× for 10× data in the r15 probe); the
+    // pruned frame is ~6× narrower and scales linearly. Rule inputs
+    // (quantity/date/regex fields) are consumed by compileRow before
+    // the projection, so results are unchanged.
+    t(s, d, "lineitem")
+      .withColumn("errors", RuleCompiler.compileRow(lineitemRules))
+      .select(col("l_orderkey"), col("l_linenumber"), col("errors"))
+  }
 
-  private def annotatedLineitem(s: SparkSession, d: String): DataFrame =
-    memoPerDir(annotatedLineitemCache, s, d, "annotated_lineitem",
-      stillValid = (f: DataFrame) => f.storageLevel != StorageLevel.NONE) {
-      // cache ONLY what the three consumers (P8 counts, P9 fanout, S6
-      // report) read: the row key + the computed errors array. Caching
-      // all 11 lineitem columns spilled the 60M-row sfx100 build out of
-      // the storage pool (19.3× for 10× data in the r15 probe); the
-      // pruned frame is ~6× narrower and scales linearly. Rule inputs
-      // (quantity/date/regex fields) are consumed by compileRow before
-      // the projection, so results are unchanged.
-      val f = t(s, d, "lineitem")
-        .withColumn("errors", RuleCompiler.compileRow(lineitemRules))
-        .select(col("l_orderkey"), col("l_linenumber"), col("errors"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      f.count() // materialize inside the timed artifact build
-      f
-    } { _.unpersist(blocking = false) }
-
-  private def ngramPairGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    memoPerDir(pairGraphCache, s, d, "ngram_pair_graph",
-      stillValid = (g: (DataFrame, DataFrame)) =>
-        g._1.storageLevel != StorageLevel.NONE) {
-      val pairs = Dedup.ngramJaccardFromShingles(
-        docShingles(s, d), threshold = 0.5, maxPostings = 1000,
-        metric = "graft_ngram_postings_doc_id_text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // connectedComponents is eager (per-round convergence checks) —
-      // its first action also materializes the persisted pairs, so the
-      // pair expansion runs exactly once per dir per session (and the
-      // shingle pass exactly once via the docShingles artifact)
-      (pairs, Clusters.connectedComponents(pairs))
-    } { case (pairs, _) => pairs.unpersist(blocking = false) }
+  /** Shared exact-ngram near-dup PAIR GRAPH `(pairs, components)`,
+    * computed once per dataset dir per session and reused by the whole
+    * family — `x_dedup_ngram` (the raw pairs), `x_dedup_clusters`
+    * (connected components over them), and `x_cluster_safe_split`
+    * (split labels hashed on the component root). This is the
+    * production shape at 100 TB: the candidate-generation +
+    * verification job is the expensive corpus-wide pass, and every
+    * downstream consumer (clustering, leakage-safe splitting, survivor
+    * selection) derives from ONE persisted pair-graph artifact rather
+    * than re-shingling the corpus per query — the same sharing the r10
+    * verdict asked for (next-round #4). Memory bound: the pairs frame
+    * is ∝ the near-dup pair count (structurally ≪ corpus; 25 rows at
+    * sf0.01, 256 at sf0.1); components are pair-members only.
+    */
+  private val ngramPairGraph = Harness.persisted("ngram_pair_graph",
+      (g: (DataFrame, DataFrame)) => g._1) { (s, d) =>
+    val pairs = Dedup.ngramJaccardFromShingles(
+      docShingles(s, d), threshold = 0.5, maxPostings = 1000,
+      metric = "graft_ngram_postings_doc_id_text")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // connectedComponents is eager (per-round convergence checks) and
+    // reads the pairs cached — its first action also materializes the
+    // persisted pairs, so the pair expansion runs exactly once per dir
+    // per session (and the shingle pass exactly once via the
+    // docShingles artifact)
+    (pairs, Clusters.connectedComponents(pairs))
+  }
 
   /** Shared duplicate-passage SPAN frame for the exact-substring
     * family: `x_dup_passages` reports it, `x_cut_passages` rewrites the
@@ -294,18 +183,9 @@ object Queries {
     * a pipeline both audits and cuts. Bounded: spans ∝ duplicated
     * passages (structurally ≪ corpus; 47 rows at sf0.01).
     */
-  private val passageSpanCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def passageSpans(s: SparkSession, d: String): DataFrame =
-    memoPerDir(passageSpanCache, s, d, "passage_spans",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val spans = Dedup.duplicatePassageSpans(
-        t(s, d, "documents"), "doc_id", "text", n = 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      spans.count() // materialize inside the timed artifact build
-      spans
-    } { _.unpersist(blocking = false) }
+  private val passageSpans = Harness.frame("passage_spans") { (s, d) =>
+    Dedup.duplicatePassageSpans(t(s, d, "documents"), "doc_id", "text", n = 8)
+  }
 
   /** Query cap for every recall audit's exact brute-force leg
     * ([[graft.operators.Similarity.exactTopKSample]]): at or above the
@@ -364,24 +244,16 @@ object Queries {
     * every test SF, a bounded sampled slice beyond it. ≤ min(|corpus|,
     * cap)·k rows, persisted MEMORY_AND_DISK.
     */
-  private val exactKnnCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def exactKnnGraph(s: SparkSession, d: String): DataFrame =
-    memoPerDir(exactKnnCache, s, d, "exact_knn_graph",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val emb = t(s, d, "embeddings")
-      val g = graft.operators.Similarity.exactTopKSample(
-        emb, "vec_id", "embedding", emb, "vec_id", "embedding",
-        k = 5, maxQueries = exactAuditMaxQueries,
-        metric = "cosine", excludeSelf = true,
-        // query-DENSE ground-truth pass (corpus as queries): widen the
-        // corpus side so the n² kernel never rides one scan task (r19)
-        widenCorpus = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      g.count() // materialize inside the timed artifact build
-      g
-    } { _.unpersist(blocking = false) }
+  private val exactKnnGraph = Harness.frame("exact_knn_graph") { (s, d) =>
+    val emb = t(s, d, "embeddings")
+    graft.operators.Similarity.exactTopKSample(
+      emb, "vec_id", "embedding", emb, "vec_id", "embedding",
+      k = 5, maxQueries = exactAuditMaxQueries,
+      metric = "cosine", excludeSelf = true,
+      // query-DENSE ground-truth pass (corpus as queries): widen the
+      // corpus side so the n² kernel never rides one scan task (r19)
+      widenCorpus = true)
+  }
 
   /** Shared per-corpus trigram LM model (the CCNet-style quality
     * prior) — the corpus-wide n-gram count aggregation in
@@ -391,18 +263,9 @@ object Queries {
     * consumers also hand `NgramLm.score` the SAME canonicalized model
     * plan, so its driver-side model collect happens once too.
     */
-  private val lmModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def lmModel(s: SparkSession, d: String): DataFrame =
-    memoPerDir(lmModelCache, s, d, "lm_model",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val m = NgramLm.trainModel(
-          t(s, d, "documents"), "lang", "text", n = 3, vocab = 500)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      m.count() // materialize inside the timed artifact build
-      m
-    } { _.unpersist(blocking = false) }
+  private val lmModel = Harness.frame("lm_model") { (s, d) =>
+    NgramLm.trainModel(t(s, d, "documents"), "lang", "text", n = 3, vocab = 500)
+  }
 
   /** Shared Gopher-rule signal frame over the PLAIN corpus text (the
     * standard thresholds every audit entry uses) — the five-signal
@@ -413,22 +276,14 @@ object Queries {
     * boilerplate-INJECTED text2 column, a different frame by design.
     * One row per non-null-text doc (corpus-bounded, ~7 int columns).
     */
-  private val gopherCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def gopherSignals(s: SparkSession, d: String): DataFrame =
-    memoPerDir(gopherCache, s, d, "gopher_signals",
-      stillValid = (p: DataFrame) => p.storageLevel != StorageLevel.NONE) {
-      val g = TextAnalysis.gopherRules(
-          t(s, d, "documents").filter(col("text").isNotNull),
-          "doc_id", "text",
-          minTokens = 50, maxTokens = 100000,
-          minMeanTokLen = 4.0, maxMeanTokLen = 10.0,
-          maxTop2Frac = 0.08, maxDupLineFrac = 0.2, minStopHits = 2)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      g.count() // materialize inside the timed artifact build
-      g
-    } { _.unpersist(blocking = false) }
+  private val gopherSignals = Harness.frame("gopher_signals") { (s, d) =>
+    TextAnalysis.gopherRules(
+      t(s, d, "documents").filter(col("text").isNotNull),
+      "doc_id", "text",
+      minTokens = 50, maxTokens = 100000,
+      minMeanTokLen = 4.0, maxMeanTokLen = 10.0,
+      maxTop2Frac = 0.08, maxDupLineFrac = 0.2, minStopHits = 2)
+  }
 
   /** events.parquet currently carries a MICROSECOND timestamp
     * (isAdjustedToUTC=false), which Spark reads natively; with the
@@ -519,40 +374,22 @@ object Queries {
     * assignment run once per dir per session; only the (id, codes,
     * cell) frame is data-proportional, persisted.
     */
-  private val pqIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, graft.operators.Pq.PqIndex)]()
-
-  private def pqIndex(s: SparkSession, d: String): graft.operators.Pq.PqIndex =
-    memoPerDir(pqIndexCache, s, d, "pq_index",
-      stillValid = (i: graft.operators.Pq.PqIndex) =>
-        i.encoded.storageLevel != StorageLevel.NONE) {
-      val idx = graft.operators.Pq.buildIndex(t(s, d, "embeddings"),
-        "vec_id", "embedding", m = 8, ncode = 256, nlist = 64)
-      val persisted = idx.copy(
-        encoded = idx.encoded.persist(StorageLevel.MEMORY_AND_DISK))
-      persisted.encoded.count() // materialize inside the timed build
-      persisted
-    } { _.encoded.unpersist(blocking = false) }
+  private val pqIndex = Harness.persisted("pq_index",
+      (i: graft.operators.Pq.PqIndex) => i.encoded) { (s, d) =>
+    graft.operators.Pq.buildIndex(t(s, d, "embeddings"),
+      "vec_id", "embedding", m = 8, ncode = 256, nlist = 64)
+  }
 
   /** Shared flat PQ-ADC top-10 frame: `x_ann_pq` reports it,
     * `x_pq_recall` audits the SAME result against the exact float
     * top-10. Bounded: |queries|·k rows persisted; rides [[pqIndex]].
     */
-  private val pqTopCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
-
-  private def pqTop10(s: SparkSession, d: String): DataFrame =
-    memoPerDir(pqTopCache, s, d, "pq_top10",
-      stillValid = (f: DataFrame) => f.storageLevel != StorageLevel.NONE) {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val f = graft.operators.Pq.adcTopK(pqIndex(s, d),
-          queries, "qid", "qv", k = 10)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      f.count() // materialize inside the timed artifact build
-      f
-    } { _.unpersist(blocking = false) }
+  private val pqTop10 = Harness.frame("pq_top10") { (s, d) =>
+    val emb = t(s, d, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    graft.operators.Pq.adcTopK(pqIndex(s, d), queries, "qid", "qv", k = 10)
+  }
 
   // --- the lineitem validation-rule set used by several queries --------
   // (range / date_range / not_null over typed parquet columns — the same
@@ -569,21 +406,13 @@ object Queries {
       Seq(ValidationRule("not_null", Map.empty)))
   )
 
-  /** Memory-sink table names must be unique per streaming query within
-    * a session; bench reps rerun catalog entries, so each run takes a
-    * fresh suffix.
-    */
-  private val streamRun = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** The file stream source watches a DIRECTORY (the landing-dir
-    * contract); testdata ships flat single files, so expose lineitem
+    * contract); testdata ships flat single files, so expose a table
     * through a dataset-scoped scratch dir via symlink. Shared by every
     * streaming catalog entry.
     */
   private def tableStreamDir(d: String, table: String): String = {
-    val streamDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_stream_${table}_" + d.replaceAll("[^A-Za-z0-9]", "_"))
+    val streamDir = Harness.scratch(s"stream_$table", d)
     java.nio.file.Files.createDirectories(streamDir)
     val link = streamDir.resolve(s"$table.parquet")
     if (!java.nio.file.Files.exists(link))
@@ -615,65 +444,43 @@ object Queries {
     *
     * Built once per dir per session (timed artifact); two 1-row
     * aggregates (corpus min; per-prefix maxes) are the only driver
-    * materializations.
+    * materializations. private[graft]: StreamingSpec replays the staged
+    * files in batch Scala.
     */
-  private val lateStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private[graft] val lateStream = Harness.staged("late_stream") { (s, d, root) =>
+    val dayUs = 86400000000L
+    val h36 = 36L * 3600000000L
+    val p = events(s, d).filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("ts_utc").as("ts"))
+    val tsmin = p.agg(min(unix_micros(col("ts")))).head().getLong(0)
+    val b = p.withColumn("dayoff",
+      expr(s"(unix_micros(ts) - ${tsmin}L) div ${dayUs}L"))
+    val maxes = b.agg(
+      max(when(col("dayoff") < 7, unix_micros(col("ts")))).as("m1"),
+      max(when(col("dayoff") < 21, unix_micros(col("ts")))).as("m123")).head()
+    val (m1, m123) = (maxes.getLong(0), maxes.getLong(1))
+    def part(lo: Int, hi: Int) =
+      b.filter(col("dayoff") >= lo && col("dayoff") < hi)
+        .select(col("event_id"), col("ts"))
+    val plantsKept = part(0, 7).filter(unix_micros(col("ts")) > m1 - h36)
+      .select((col("event_id") + lit(2000000000L)).as("event_id"), col("ts"))
+    val plantsLate = b.filter(col("dayoff") < 3)
+      .select((col("event_id") + lit(1000000000L)).as("event_id"), col("ts"))
+    val plantsDup = part(14, 21).filter(unix_micros(col("ts")) > m123 - h36)
+    Harness.stageFiles(root, Seq(
+      "f1" -> part(0, 7),
+      "f2" -> part(7, 14).unionAll(plantsKept),
+      "f3" -> part(14, 21).unionAll(plantsLate),
+      "f4" -> part(21, Int.MaxValue).unionAll(plantsDup))
+      .map { case (name, df) => name -> df.withColumn("src_file", lit(name)) })
+  }
 
-  private def lateStreamDir(s: SparkSession, d: String): String =
-    memoPerDir(lateStreamCache, s, d, "late_stream") {
-      val root = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_late_stream_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      java.nio.file.Files.createDirectories(root)
-      val dayUs = 86400000000L
-      val h36 = 36L * 3600000000L
-      val p = events(s, d).filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts_utc").as("ts"))
-      val tsmin = p.agg(min(unix_micros(col("ts")))).head().getLong(0)
-      val b = p.withColumn("dayoff",
-        expr(s"(unix_micros(ts) - ${tsmin}L) div ${dayUs}L"))
-      val maxes = b.agg(
-        max(when(col("dayoff") < 7, unix_micros(col("ts")))).as("m1"),
-        max(when(col("dayoff") < 21, unix_micros(col("ts")))).as("m123")).head()
-      val (m1, m123) = (maxes.getLong(0), maxes.getLong(1))
-      def part(lo: Int, hi: Int) =
-        b.filter(col("dayoff") >= lo && col("dayoff") < hi)
-          .select(col("event_id"), col("ts"))
-      val plantsKept = part(0, 7).filter(unix_micros(col("ts")) > m1 - h36)
-        .select((col("event_id") + lit(2000000000L)).as("event_id"), col("ts"))
-      val plantsLate = b.filter(col("dayoff") < 3)
-        .select((col("event_id") + lit(1000000000L)).as("event_id"), col("ts"))
-      val plantsDup = part(14, 21).filter(unix_micros(col("ts")) > m123 - h36)
-      val files = Seq(
-        "f1" -> part(0, 7),
-        "f2" -> part(7, 14).unionAll(plantsKept),
-        "f3" -> part(14, 21).unionAll(plantsLate),
-        "f4" -> part(21, Int.MaxValue).unionAll(plantsDup))
-      val baseMs = System.currentTimeMillis()
-      files.zipWithIndex.foreach { case ((name, df), i) =>
-        val tmp = root.resolve(s"__stage_$name")
-        df.withColumn("src_file", lit(name))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val walk = java.nio.file.Files.list(tmp)
-        val partFile =
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"no parquet part written under $tmp"))
-          } finally walk.close()
-        val dest = root.resolve(s"$name.parquet")
-        java.nio.file.Files.move(partFile, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(baseMs + i * 2000L))
-        deleteRecursively(tmp)
-      }
-      root.toString
-    } { _ => () }
+  /** Three single-file micro-batches of `frame`: file fk holds the
+    * idCol%4==k rows for k = 1, 2, 3 (%4==0 seeds the base index).
+    */
+  private def stageMod4Batches(root: java.nio.file.Path, frame: DataFrame, idCol: String): Unit =
+    Harness.stageFiles(root,
+      (1 to 3).map(k => s"f$k" -> frame.filter(pmod(col(idCol), lit(4)) === k)))
 
   /** Staged document increments for the streaming dedup-ingest fold
     * (`x_stream_dedup_index`): three single-file parquets holding the
@@ -685,132 +492,68 @@ object Queries {
     * the corpus (memoized artifact); the mutable index is per-RUN
     * state and lives with the entry, never here.
     */
-  private val ingestStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val ingestStage = Harness.staged("ingest_stage") { (s, d, root) =>
+    stageMod4Batches(root,
+      t(s, d, "documents").select(col("doc_id"), col("text")), "doc_id")
+  }
 
-  private def ingestStageDir(s: SparkSession, d: String): String =
-    memoPerDir(ingestStageCache, s, d, "ingest_stage") {
-      stageMod4Batches(
-        t(s, d, "documents").select(col("doc_id"), col("text")), "doc_id",
-        "graft_ingest_stage_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    } { _ => () }
-
-  private val annStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
-
-  /** The embeddings analog of [[ingestStageDir]]: vec_id%4 ∈ {1,2,3}
+  /** The embeddings analog of [[ingestStage]]: vec_id%4 ∈ {1,2,3}
     * staged as three fixed single-file micro-batches (%4==0 seeds the
     * index in the entry).
     */
-  private def annIngestStageDir(s: SparkSession, d: String): String =
-    memoPerDir(annStageCache, s, d, "ann_ingest_stage") {
-      stageMod4Batches(
-        t(s, d, "embeddings").select(col("vec_id"), col("embedding")), "vec_id",
-        "graft_ann_stage_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    } { _ => () }
-
-  // --- staged SEED indexes for the ingest folds (r16 verdict #1b) ------
-  // The three streaming-ingest entries each rebuilt their base-corpus
-  // seed index (MinHash over doc_id%4==0, int8 IVF over vec_id%4==0)
-  // INSIDE every timed rep — a pure function of the corpus paying
-  // Spark-build cost per run. The seed is now a memoized per-dir
-  // artifact (cost lands in artifact_sec, the corpus-refresh bucket);
-  // each run FILE-COPIES the tree into its private work dir, because
-  // the fold's appends mutate the index — stage-and-copy, never share.
-  // Staged dirs are per-JVM (pid-keyed: r15 burned rounds on two JVMs
-  // sharing a dataset-keyed tmpdir) and reaped by a shutdown hook.
-
-  private def registerTmpCleanup(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }))
-
-  /** Recursive local-fs copy of a staged index tree into a run's work
-    * dir. The copy is the run's to mutate; the stage stays pristine.
-    */
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(src)
-    try walk.iterator().asScala.foreach { p =>
-      val target = dst.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(target)
-      else {
-        Option(target.getParent)
-          .foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.copy(p, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } finally walk.close()
+  private val annIngestStage = Harness.staged("ann_ingest_stage") { (s, d, root) =>
+    stageMod4Batches(root,
+      t(s, d, "embeddings").select(col("vec_id"), col("embedding")), "vec_id")
   }
 
-  private def stagedTmpRoot(prefix: String, d: String): java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"${prefix}_${ProcessHandle.current().pid()}_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
+  /** Schemas of the staged document / embedding increment streams. */
+  private val docStreamSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+  private val vecStreamSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType))))
 
-  private val seedDedupIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  // --- staged SEED and SERVING indexes (r16 verdict #1b) ----------------
+  // The streaming-ingest entries each rebuilt their base-corpus seed
+  // index (MinHash over doc_id%4==0, int8 IVF / IVF-PQ over
+  // vec_id%4==0) INSIDE every timed rep — a pure function of the corpus
+  // paying Spark-build cost per run. Each seed is now a staged per-dir
+  // artifact (cost lands in artifact_sec, the corpus-refresh bucket);
+  // each run FILE-COPIES the tree into its private run dir, because the
+  // fold's appends mutate the index — stage-and-copy, never share
+  // (Harness.fold). The serving indexes are probe-only: their entries
+  // read the stage directly.
 
   /** Seed MinHash index over the base corpus (doc_id%4==0, bands=32 —
-    * the x_stream_dedup_index / x_stream_ingest_within seed), staged
-    * once per dataset dir.
+    * the x_stream_dedup_index / x_stream_ingest_within seed).
     */
-  private def seedDedupIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(seedDedupIdxCache, s, d, "seed_dedup_index") {
-      val root = stagedTmpRoot("graft_seed_dedup_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      Dedup.writeMinHashIndex(
-        t(s, d, "documents").select(col("doc_id"), col("text"))
-          .filter(pmod(col("doc_id"), lit(4)) === 0),
-        "doc_id", "text", root.toString, bands = 32, mode = "overwrite")
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  private val seedAnnIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val seedDedupIndex = Harness.staged("seed_dedup_index") { (s, d, root) =>
+    Dedup.writeMinHashIndex(
+      t(s, d, "documents").select(col("doc_id"), col("text"))
+        .filter(pmod(col("doc_id"), lit(4)) === 0),
+      "doc_id", "text", root.toString, bands = 32, mode = "overwrite")
+  }
 
   /** Seed int8 IVF index over the base embeddings (vec_id%4==0,
-    * nlist=64 — the x_stream_ann_ingest seed), staged once per dir.
+    * nlist=64 — the x_stream_ann_ingest seed).
     */
-  private def seedAnnIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(seedAnnIdxCache, s, d, "seed_ann_index") {
-      val root = stagedTmpRoot("graft_seed_ann_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      graft.operators.Ivf.writeInt8Index(
-        t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-          .filter(pmod(col("vec_id"), lit(4)) === 0),
-        "vec_id", "embedding", root.toString, nlist = 64, mode = "overwrite")
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  private val seedPqIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val seedAnnIndex = Harness.staged("seed_ann_index") { (s, d, root) =>
+    graft.operators.Ivf.writeInt8Index(
+      t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+        .filter(pmod(col("vec_id"), lit(4)) === 0),
+      "vec_id", "embedding", root.toString, nlist = 64, mode = "overwrite")
+  }
 
   /** Seed IVF-PQ index over the base embeddings (vec_id%4==0, m=8,
     * nlist=64, hash-sampled quantizers — the closed-form-oracle
-    * choice: the pruned fold re-derives them from the seed subset),
-    * staged once per dir — the x_stream_pq_ingest seed.
+    * choice: the pruned fold re-derives them from the seed subset) —
+    * the x_stream_pq_ingest seed.
     */
-  private def seedPqIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(seedPqIdxCache, s, d, "seed_pq_index") {
-      val root = stagedTmpRoot("graft_seed_pq_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      graft.operators.Pq.writeIndex(
-        t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-          .filter(pmod(col("vec_id"), lit(4)) === 0),
-        "vec_id", "embedding", root.toString, mode = "overwrite")
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  private val servedIvfIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val seedPqIndex = Harness.staged("seed_pq_index") { (s, d, root) =>
+    graft.operators.Pq.writeIndex(
+      t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+        .filter(pmod(col("vec_id"), lit(4)) === 0),
+      "vec_id", "embedding", root.toString, mode = "overwrite")
+  }
 
   /** Full-corpus persisted int8 IVF index — the SERVING artifact
     * x_ann_index_probe reads. Probes never mutate it, so the entry
@@ -818,20 +561,11 @@ object Queries {
     * split is exactly the production cost model, with the build in
     * artifact_sec instead of every timed rep.
     */
-  private def servedIvfIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(servedIvfIdxCache, s, d, "served_ivf_index") {
-      val root = stagedTmpRoot("graft_served_ivf_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      graft.operators.Ivf.writeInt8Index(
-        t(s, d, "embeddings"), "vec_id", "embedding",
-        root.toString, nlist = 64, mode = "overwrite")
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  private val fragmentedIvfIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val servedIvfIndex = Harness.staged("served_ivf_index") { (s, d, root) =>
+    graft.operators.Ivf.writeInt8Index(
+      t(s, d, "embeddings"), "vec_id", "embedding",
+      root.toString, nlist = 64, mode = "overwrite")
+  }
 
   /** A deliberately FRAGMENTED full-corpus int8 IVF index — the state
     * a continuously-ingesting deployment accumulates: seeded with the
@@ -839,26 +573,20 @@ object Queries {
     * centroid hash-minima — the x_ann_index_grow construction, so
     * grown == fresh-full), then grown by three appends. Each append
     * adds one file wave per cell directory; `x_index_compact` repacks
-    * a copy and probes it. Staged once per dir — fragmentation is a
-    * pure function of the corpus + append count.
+    * a copy and probes it. Fragmentation is a pure function of the
+    * corpus + append count.
     */
-  private def fragmentedIvfIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(fragmentedIvfIdxCache, s, d, "fragmented_ivf_index") {
-      val root = stagedTmpRoot("graft_frag_ivf_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val h = xxhash64(col("vec_id"))
-      graft.operators.Ivf.writeInt8Index(emb.filter(h < 0),
-        "vec_id", "embedding", root.toString, nlist = 64, mode = "overwrite")
-      (0 until 3).foreach { k =>
-        graft.operators.Ivf.writeInt8Index(
-          emb.filter(h >= 0 && pmod(col("vec_id"), lit(3)) === k),
-          "vec_id", "embedding", root.toString, nlist = 64, mode = "append")
-      }
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
+  private val fragmentedIvfIndex = Harness.staged("fragmented_ivf_index") { (s, d, root) =>
+    val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+    val h = xxhash64(col("vec_id"))
+    graft.operators.Ivf.writeInt8Index(emb.filter(h < 0),
+      "vec_id", "embedding", root.toString, nlist = 64, mode = "overwrite")
+    (0 until 3).foreach { k =>
+      graft.operators.Ivf.writeInt8Index(
+        emb.filter(h >= 0 && pmod(col("vec_id"), lit(3)) === k),
+        "vec_id", "embedding", root.toString, nlist = 64, mode = "append")
+    }
+  }
 
   /** Distribution-SHIFTED increment for the quantizer-refresh audit:
     * the corpus's vectors folded into the positive orthant (`abs` —
@@ -872,17 +600,14 @@ object Queries {
     emb.select((col("vec_id") + 10000000L).as("vec_id"),
       transform(col("embedding"), x => abs(x)).as("embedding"))
 
-  private val refreshIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
-
   /** Lloyd rounds for the density-adaptive refresh leg — shared by the
     * staged `adaptive/` index build and the golden generator
     * (tools/gen_pq_adaptive_golden.py pins the same constant).
     */
   private[queries] val adaptiveRefineIters = 5
 
-  /** The three persisted IVF-PQ indexes the refresh audits probe,
-    * staged once per dir: `frozen/` = quantizers trained on the BASE
+  /** The three persisted IVF-PQ indexes the refresh audits probe:
+    * `frozen/` = quantizers trained on the BASE
     * corpus with the drifted increment appended under them (the
     * append-mode contract — what a deployment accretes), `fresh/` =
     * hash-sampled quantizers retrained on the full union (what a
@@ -893,98 +618,39 @@ object Queries {
     * density-adaptive retrain `x_refresh_adaptive` measures. Pure
     * function of the corpus.
     */
-  private def refreshAuditIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(refreshIdxCache, s, d, "refresh_audit_indexes") {
-      val root = stagedTmpRoot("graft_refresh_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val inc = driftedIncrement(emb)
-      val union = emb.unionByName(inc)
-      val frozen = root.resolve("frozen").toString
-      // the three index chains are INDEPENDENT (disjoint directories;
-      // the frozen append depends only on the frozen build) — overlap
-      // them so the adaptive build's 5 Lloyd passes back-fill the
-      // other chains' write tails instead of queueing behind them
-      // (guide §2.6). Every build is exact-integer and partitioning-
-      // independent, so concurrency cannot change a single bit of any
-      // index (the refineFlat determinism contract).
-      graft.operators.Actions.runConcurrently(
-        () => {
-          graft.operators.Pq.writeIndex(emb, "vec_id", "embedding",
-            frozen, mode = "overwrite")
-          graft.operators.Pq.writeIndex(inc, "vec_id", "embedding",
-            frozen, mode = "append")
-        },
-        () => graft.operators.Pq.writeIndex(union, "vec_id", "embedding",
-          root.resolve("fresh").toString, mode = "overwrite"),
-        () => graft.operators.Pq.writeIndex(union, "vec_id", "embedding",
-          root.resolve("adaptive").toString, mode = "overwrite",
-          refineIters = adaptiveRefineIters))
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  private val servedPqIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
+  private val refreshAuditIndexes = Harness.staged("refresh_audit_indexes") { (s, d, root) =>
+    val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+    val inc = driftedIncrement(emb)
+    val union = emb.unionByName(inc)
+    val frozen = root.resolve("frozen").toString
+    // the three index chains are INDEPENDENT (disjoint directories;
+    // the frozen append depends only on the frozen build) — overlap
+    // them so the adaptive build's 5 Lloyd passes back-fill the
+    // other chains' write tails instead of queueing behind them
+    // (guide §2.6). Every build is exact-integer and partitioning-
+    // independent, so concurrency cannot change a single bit of any
+    // index (the refineFlat determinism contract).
+    graft.operators.Actions.runConcurrently(
+      () => {
+        graft.operators.Pq.writeIndex(emb, "vec_id", "embedding",
+          frozen, mode = "overwrite")
+        graft.operators.Pq.writeIndex(inc, "vec_id", "embedding",
+          frozen, mode = "append")
+      },
+      () => graft.operators.Pq.writeIndex(union, "vec_id", "embedding",
+        root.resolve("fresh").toString, mode = "overwrite"),
+      () => graft.operators.Pq.writeIndex(union, "vec_id", "embedding",
+        root.resolve("adaptive").toString, mode = "overwrite",
+        refineIters = adaptiveRefineIters))
+  }
 
   /** Full-corpus persisted IVF-PQ index (rides the session-shared
     * [[pqIndex]] encode) — the serving artifact x_pq_index_probe
-    * reads; probe-only, staged once per dir like [[servedIvfIndexDir]].
+    * reads; probe-only like [[servedIvfIndex]].
     */
-  private def servedPqIndexDir(s: SparkSession, d: String): String =
-    memoPerDir(servedPqIdxCache, s, d, "served_pq_index") {
-      val root = stagedTmpRoot("graft_served_pq_idx", d)
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-      graft.operators.Pq.writeIndex(pqIndex(s, d), root.toString,
-        mode = "overwrite")
-      registerTmpCleanup(root)
-      root.toString
-    } { _ => () }
-
-  /** Write `frame` as three single-file micro-batches under a fresh
-    * tmpdir: file k holds the idCol%4==k rows, modification times
-    * strictly increasing so a maxFilesPerTrigger=1 file stream replays
-    * them as three deterministic batches in order.
-    */
-  private def stageMod4Batches(
-      frame: DataFrame, idCol: String, dirName: String): String = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), dirName)
-    try deleteRecursively(root)
-    catch { case scala.util.control.NonFatal(_) => () }
-    java.nio.file.Files.createDirectories(root)
-    val baseMs = System.currentTimeMillis()
-    (1 to 3).foreach { k =>
-      val tmp = root.resolve(s"__stage_f$k")
-      frame.filter(pmod(col(idCol), lit(4)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val walk = java.nio.file.Files.list(tmp)
-      val partFile =
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written under $tmp"))
-        } finally walk.close()
-      val dest = root.resolve(s"f$k.parquet")
-      java.nio.file.Files.move(partFile, dest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(baseMs + k * 2000L))
-      deleteRecursively(tmp)
-    }
-    root.toString
+  private val servedPqIndex = Harness.staged("served_pq_index") { (s, d, root) =>
+    graft.operators.Pq.writeIndex(pqIndex(s, d), root.toString, mode = "overwrite")
   }
-
-  /** Previous run's scratch dir per streaming-ingest prefix — deleted
-    * when the next run starts (the `lastSink` discipline applied to
-    * disk): the returned frame reads the CURRENT run's novel/ parquet
-    * lazily, so the current dir must outlive the entry call.
-    */
-  private val lastIngestWork =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
   /** DuckDB n_err terms mirroring [[RuleCompiler]] over [[lineitemRules]],
     * shared by the three streaming oracles (error_rate / alerts /
@@ -1022,167 +688,6 @@ object Queries {
         (size(col("errors")) > 0).as("inv"))
       .as[(String, Boolean)]
   }
-
-  /** Start a bounded AvailableNow replay into a uniquely-named memory
-    * sink and block until it drains; returns the sink table name.
-    * While the query runs, the session's shuffle partitions — which fix
-    * every stateful operator's STATE STORE partition count at query
-    * start — are temporarily sized to the replay volume: state here is
-    * tiny (<= ~33k rows), and 32 state-store instances per operator per
-    * micro-batch are pure provider/commit overhead at that volume
-    * (measured ~2x on the replay entries). Production queries size this
-    * to the cluster; the conf is restored before returning, so the
-    * batch entries around this one are untouched.
-    *
-    * SEQUENTIAL-EXECUTION ASSUMPTION: mutating the shared session conf
-    * is safe because both drivers that execute catalog entries (Verify
-    * and Bench) run them strictly one at a time; a future concurrent
-    * catalog runner would race batch entries onto this replay's tiny
-    * partition count and must isolate the conf first
-    * (`SparkSession.newSession()` shares the catalog but not runtime
-    * conf — start the replay from a cloned session there).
-    */
-  /** Last sink table started per prefix: the NEXT replay of the same
-    * entry drops it, so repeated execution (bench reps, long sessions)
-    * holds at most one sink's rows per entry instead of accumulating
-    * every rep's — measured: x_stream_dedup reps DEGRADED 3.6 → 12-23 s
-    * across 9 consecutive replays before this, GC-thrashing on retained
-    * sink rows + state maps. Safe under the same sequential-execution
-    * assumption as the conf mutation above: by the time an entry
-    * replays again, the previous run's returned frame has been fully
-    * consumed by the (strictly sequential) Verify/Bench driver.
-    */
-  private val lastSink = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memory-backed checkpoint root when the platform offers one
-    * (`/dev/shm`, the Linux tmpfs): every micro-batch commits offsets,
-    * a commit log, the file-source log, and per-partition state
-    * deltas through the checkpoint FS. Measured (r13, idle local
-    * disk): moving this to tmpfs is timing-NEUTRAL — the replay
-    * floor is the shuffle + state-machine work itself (e.g. the
-    * alerts/counts replays key on `l_returnflag`, cardinality 3, so
-    * their stateful stage parallelism is 3 whatever the partition
-    * count), not checkpoint fsyncs. Retained anyway: it bounds disk
-    * churn under a loaded disk, and the explicit per-replay subdir +
-    * guaranteed post-stop delete beats relying on Spark's
-    * temp-checkpoint cleanup. Production streaming checkpoints are
-    * durable BY REQUIREMENT (exactly-once restart) — this applies
-    * only to the harness's bounded replays, whose checkpoints are
-    * dead the moment the replay drains.
-    */
-  /** Root is UNIQUE PER JVM (pid + JVM start nanos): the counter-based
-    * replay subdirs restart from 0 in every process, so a shared root
-    * could hand a fresh replay a leftover checkpoint from a crashed or
-    * concurrent JVM (kill -9 skips the post-stop delete; bench and sbt
-    * test can overlap). A resumed AvailableNow checkpoint has its
-    * offsets already committed — the replay would drain zero rows and
-    * the memory sink would be silently empty. Per-JVM roots make that
-    * impossible; a shutdown hook (plus the delete-before-start guard in
-    * replayToMemory) keeps crashed-JVM debris from accumulating in
-    * tmpfs. `SPARK_GRAFT_STREAM_CKPT=tmp` forces java.io.tmpdir for
-    * A/B timing against the tmpfs default (`shm`).
-    */
-  private val ckptRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val wantShm = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT", "shm") != "tmp"
-    val base = if (wantShm && java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val root = base.resolve(
-      s"graft_stream_ckpt_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try deleteRecursively(root)
-      catch { case scala.util.control.NonFatal(_) => () }))
-    root
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-
-  private def replayToMemory(
-      s: SparkSession, prefix: String, frame: DataFrame, mode: String,
-      statePartitions: Int = 4): String = {
-    Option(lastSink.get(prefix)).foreach(s.catalog.dropTempView(_))
-    val name = s"${prefix}_${streamRun.incrementAndGet()}"
-    val ckpt = ckptRoot.resolve(name)
-    // Belt-and-braces vs silent checkpoint resume: the root is per-JVM
-    // unique so this should never find anything, but a pre-existing
-    // checkpoint here would make AvailableNow replay NOTHING (offsets
-    // already committed) — never start over one.
-    try deleteRecursively(ckpt)
-    catch { case scala.util.control.NonFatal(_) => () }
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = frame.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      try deleteRecursively(ckpt)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    // A stopped replay's state-store providers stay cached in the
-    // executor's loadedProviders map (each replay uses a fresh
-    // checkpoint, so nothing ever re-uses them) until the maintenance
-    // thread's next pass — 9 consecutive x_stream_dedup replays still
-    // spiked to ~28 s with sink rows dropped but providers retained.
-    // StateStore.unloadAll is private[sql] (bytecode-public), hence
-    // reflection; the query is stopped, so unloading is pure cleanup.
-    try {
-      val cls = Class.forName(
-        "org.apache.spark.sql.execution.streaming.state.StateStore$")
-      cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
-    } catch { case _: ReflectiveOperationException => () }
-    pruneDeadStreamingListenerBuses(s)
-    lastSink.put(prefix, name)
-    name
-  }
-
-  /** Every streaming query runs on a CLONED session (isolated runtime
-    * conf), and the clone's `StreamingQueryManager` registers its own
-    * `StreamingQueryListenerBus` on the shared `LiveListenerBus` —
-    * which nothing ever unregisters when the query stops: a 24-replay
-    * probe session had 19 dead buses attached, every Spark event
-    * fanning out to each of them. Unregister every
-    * StreamingQueryListenerBus except the root session's own after
-    * each replay. All touched members are private[spark]/private[sql]
-    * (bytecode-public), hence reflection; best-effort — a Spark
-    * upgrade that breaks a lookup degrades to the old leaky behavior,
-    * never to an error.
-    */
-  private def pruneDeadStreamingListenerBuses(s: SparkSession): Unit = try {
-    val sc = s.sparkContext
-    val own = {
-      val mgr = s.streams
-      mgr.getClass.getDeclaredFields
-        .find(_.getType.getName.endsWith("StreamingQueryListenerBus"))
-        .map { f => f.setAccessible(true); f.get(mgr) }.orNull
-    }
-    if (own != null) {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val all = bus.getClass.getMethod("listeners").invoke(bus)
-        .asInstanceOf[java.util.List[AnyRef]]
-      // SparkListenerInterface itself is private[spark], so the remove
-      // call goes through reflection too (removeListener on the bus)
-      val remove = bus.getClass.getMethods
-        .find(m => m.getName == "removeListener" && m.getParameterCount == 1)
-      // snapshot first: removeListener mutates the backing list
-      val dead = new java.util.ArrayList[AnyRef]()
-      all.forEach { l =>
-        if (l.getClass.getName.endsWith("StreamingQueryListenerBus") && (l ne own))
-          dead.add(l)
-      }
-      dead.forEach(l => remove.foreach(_.invoke(bus, l)))
-    }
-  } catch { case scala.util.control.NonFatal(_) => () }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -3865,7 +3370,7 @@ object Queries {
     // retrain would recover it. Centroids/codebooks are FROZEN on
     // append by design (reproducibility); this entry appends a
     // genuinely shifted increment (the corpus folded into the
-    // positive orthant under disjoint ids — refreshAuditIndexDir) to
+    // positive orthant under disjoint ids — refreshAuditIndexes) to
     // a base-trained IVF-PQ index and reports recall@10 against the
     // exact float-dot truth over the union for THREE probe legs:
     // `frozen_base` (frozen index, undrifted queries — the healthy
@@ -3888,7 +3393,7 @@ object Queries {
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val inc = driftedIncrement(emb)
       val union = emb.unionByName(inc)
-      val root = java.nio.file.Paths.get(refreshAuditIndexDir(s, d))
+      val root = java.nio.file.Paths.get(refreshAuditIndexes(s, d))
       val drifted = inc.filter(col("vec_id") < 10000020L)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val base = emb.filter(col("vec_id") < 20L)
@@ -3943,7 +3448,7 @@ object Queries {
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val inc = driftedIncrement(emb)
       val union = emb.unionByName(inc)
-      val root = java.nio.file.Paths.get(refreshAuditIndexDir(s, d))
+      val root = java.nio.file.Paths.get(refreshAuditIndexes(s, d))
       val drifted = inc.filter(col("vec_id") < 10000020L)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val exact = Similarity.exactTopKSample(union, "vec_id", "embedding",
@@ -4001,7 +3506,7 @@ object Queries {
     // never mutate it, so the entry reads the stage directly.
     "x_pq_index_probe" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val idxPath = servedPqIndexDir(s, d)
+      val idxPath = servedPqIndex(s, d)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Pq.probeIndex(graft.operators.Pq.readIndex(s, idxPath),
@@ -4029,14 +3534,7 @@ object Queries {
     // index writes + the probe read.
     "x_pq_index_grow" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_pq_grow_run_${ProcessHandle.current().pid()}_" +
-          s"${streamRun.incrementAndGet()}")
-      Option(lastIngestWork.put("x_pq_index_grow", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      val work = Harness.runDir("x_pq_index_grow")
       val idxPath = work.resolve("idx").toString
       val ranked = emb.select(col("vec_id"),
         graft.operators.Sampling.hashRank(col("vec_id")).as("h0"),
@@ -4101,7 +3599,7 @@ object Queries {
     // never mutate the index, so the entry reads the stage directly.
     "x_ann_index_probe" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val idxPath = servedIvfIndexDir(s, d)
+      val idxPath = servedIvfIndex(s, d)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Ivf.ivfInt8ProbeIndex(s, idxPath,
@@ -4128,14 +3626,7 @@ object Queries {
     // io-classified: pays two index writes + the probe read.
     "x_ann_index_grow" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ivf_grow_run_${ProcessHandle.current().pid()}_" +
-          s"${streamRun.incrementAndGet()}")
-      Option(lastIngestWork.put("x_ann_index_grow", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      val work = Harness.runDir("x_ann_index_grow")
       val idxPath = work.resolve("idx").toString
       val h = xxhash64(col("vec_id"))
       graft.operators.Ivf.writeInt8Index(emb.filter(h < 0),
@@ -4170,17 +3661,10 @@ object Queries {
     // MinHash-layout equivalents.
     "x_index_compact" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_idx_compact_run_${ProcessHandle.current().pid()}_" +
-          s"${streamRun.incrementAndGet()}")
-      Option(lastIngestWork.put("x_index_compact", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      val work = Harness.runDir("x_index_compact")
       val compacted = work.resolve("idx").toString
       graft.sources.IndexCompaction.compactIndex(
-        s, fragmentedIvfIndexDir(s, d), compacted)
+        s, fragmentedIvfIndex(s, d), compacted)
       val queries = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.Ivf.ivfInt8ProbeIndex(s, compacted,
@@ -4203,17 +3687,10 @@ object Queries {
     // exact-Jaccard probe oracle (the x_dedup_incremental formulation
     // over the %4 split). io-classified: repack write + probe read.
     "x_minhash_compact" -> ((s, d) => {
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_mh_compact_run_${ProcessHandle.current().pid()}_" +
-          s"${streamRun.incrementAndGet()}")
-      Option(lastIngestWork.put("x_minhash_compact", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      val work = Harness.runDir("x_minhash_compact")
       val compacted = work.resolve("idx").toString
       graft.sources.IndexCompaction.compactIndex(
-        s, seedDedupIndexDir(s, d), compacted)
+        s, seedDedupIndex(s, d), compacted)
       val batch = t(s, d, "documents").select(col("doc_id"), col("text"))
         .filter(pmod(col("doc_id"), lit(4)) =!= 0)
       Dedup.minHashProbeIndex(s, batch, "doc_id", "text", compacted,
@@ -4422,7 +3899,7 @@ object Queries {
     }),
 
     // LATE-DATA accounting replay: four deterministic micro-batches
-    // (staged week files, maxFilesPerTrigger=1 — see lateStreamDir)
+    // (staged week files, maxFilesPerTrigger=1 — see lateStream)
     // through a 48 h-watermark streaming dedup. The three planted
     // outcomes — late-but-within-delay KEPT, beyond-delay DROPPED by
     // the watermark, duplicate-within-delay DROPPED by dedup state —
@@ -4433,7 +3910,7 @@ object Queries {
     // Output: per source file, survivors + an exact integer id
     // checksum.
     "x_stream_late_drops" -> ((s, d) => {
-      val dir = lateStreamDir(s, d)
+      val dir = lateStream(s, d)
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("ts", TimestampType),
@@ -4461,7 +3938,7 @@ object Queries {
     // one-shot batch probe (x_dedup_incremental) cannot express the
     // index growing between increments. Deterministic replay: the
     // staged files arrive as three fixed micro-batches
-    // (ingestStageDir), so "seen earlier" is exactly doc_id%4 < k and
+    // (ingestStage), so "seen earlier" is exactly doc_id%4 < k and
     // the DuckDB oracle re-derives every survivor by exact Jaccard.
     // bands=32 (4 rows/band, vs the family default 16×4): the oracle
     // is exact Jaccard at threshold 0.5, where a 16-band probe's
@@ -4472,48 +3949,17 @@ object Queries {
     // structurally near-certain (1-(1-0.5^4)^32 ≈ 0.88 at exactly
     // 0.5, >0.99 by J=0.6), the same margin DedupSpec uses.
     // Output: the kept doc_ids across all three increments.
-    "x_stream_dedup_index" -> ((s, d) => {
-      val stageDir = ingestStageDir(s, d)
-      val runId = streamRun.incrementAndGet()
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ingest_run_${ProcessHandle.current().pid()}_$runId")
-      Option(lastIngestWork.put("x_stream_dedup_index", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      java.nio.file.Files.createDirectories(work)
-      val idxPath = work.resolve("idx").toString
-      val outDir = work.resolve("novel").toString
-      // stage-and-copy: the seed index is a per-dir artifact; this
-      // run's appends mutate a private file copy of it
-      copyTree(java.nio.file.Paths.get(seedDedupIndexDir(s, d)),
-        work.resolve("idx"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      val ckpt = ckptRoot.resolve(s"ingest_$runId")
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val batch = b.persist()
-          // the sink write rides INSIDE the fold step: one novel job
-          // per batch (the write is the materialization), overlapped
-          // with the index append (ingestDedupBatchTo scaladoc)
-          try
-            Dedup.ingestDedupBatchTo(batch.sparkSession, batch,
-                "doc_id", "text", idxPath, bands = 32, threshold = 0.5,
-                batchId = Some(bid),
-                sink = n => n.select(col("doc_id"))
-                  .write.mode("append").parquet(outDir))
-          finally { batch.unpersist(blocking = false); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      pruneDeadStreamingListenerBuses(s)
-      s.read.parquet(outDir).select(col("doc_id"))
-    }),
+    "x_stream_dedup_index" -> ((s, d) =>
+      Harness.fold(s, d, "x_stream_dedup_index", ingestStage, seedDedupIndex,
+          docStreamSchema) { idxPath => (batch, bid, outDir) =>
+        // the sink write rides INSIDE the fold step: one novel job per
+        // batch (the write is the materialization), overlapped with
+        // the index append (ingestDedupBatchTo scaladoc)
+        Dedup.ingestDedupBatchTo(batch.sparkSession, batch,
+          "doc_id", "text", idxPath, bands = 32, threshold = 0.5,
+          batchId = Some(bid),
+          sink = n => n.select(col("doc_id")).write.mode("append").parquet(outDir))
+      }.select(col("doc_id"))),
 
     // The ingest fold WITH intra-batch dedup — the #1 production
     // ingest shape as ONE call ([[Dedup.ingestDedupBatchTo]]
@@ -4525,47 +3971,16 @@ object Queries {
     // batch, so later batches' novelty never depends on within-batch
     // survivor choices (the append-all-seen policy pin). Same staged
     // three-batch replay and bands=32 margin as x_stream_dedup_index.
-    "x_stream_ingest_within" -> ((s, d) => {
-      val stageDir = ingestStageDir(s, d)
-      val runId = streamRun.incrementAndGet()
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ingest_wb_run_${ProcessHandle.current().pid()}_$runId")
-      Option(lastIngestWork.put("x_stream_ingest_within", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      java.nio.file.Files.createDirectories(work)
-      val idxPath = work.resolve("idx").toString
-      val outDir = work.resolve("novel").toString
-      // stage-and-copy (see x_stream_dedup_index): same seed artifact,
-      // private copy per run
-      copyTree(java.nio.file.Paths.get(seedDedupIndexDir(s, d)),
-        work.resolve("idx"))
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      val ckpt = ckptRoot.resolve(s"ingest_wb_$runId")
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val batch = b.persist()
-          // sink inside the fold step — one novel job per batch,
-          // overlapped with the index append (see x_stream_dedup_index)
-          try
-            Dedup.ingestDedupBatchTo(batch.sparkSession, batch,
-                "doc_id", "text", idxPath, bands = 32, threshold = 0.5,
-                batchId = Some(bid), dedupWithinBatch = true,
-                sink = n => n.select(col("doc_id"))
-                  .write.mode("append").parquet(outDir))
-          finally { batch.unpersist(blocking = false); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      pruneDeadStreamingListenerBuses(s)
-      s.read.parquet(outDir).select(col("doc_id"))
-    }),
+    "x_stream_ingest_within" -> ((s, d) =>
+      Harness.fold(s, d, "x_stream_ingest_within", ingestStage, seedDedupIndex,
+          docStreamSchema) { idxPath => (batch, bid, outDir) =>
+        // sink inside the fold step — one novel job per batch,
+        // overlapped with the index append (see x_stream_dedup_index)
+        Dedup.ingestDedupBatchTo(batch.sparkSession, batch,
+          "doc_id", "text", idxPath, bands = 32, threshold = 0.5,
+          batchId = Some(bid), dedupWithinBatch = true,
+          sink = n => n.select(col("doc_id")).write.mode("append").parquet(outDir))
+      }.select(col("doc_id"))),
 
     // STREAMING EMBEDDING ingest against the persisted, GROWING int8
     // IVF index — the ANN mirror of x_stream_dedup_index
@@ -4579,54 +3994,23 @@ object Queries {
     // (exhaustive cells) so retrieval is the EXACT int8 top-k among
     // seen vectors — integer dots, closed-form for DuckDB; the pruned
     // nProbe serving shape is x_ann_index_probe's. io-classified.
-    "x_stream_ann_ingest" -> ((s, d) => {
-      val stageDir = annIngestStageDir(s, d)
-      val runId = streamRun.incrementAndGet()
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_ann_ingest_run_${ProcessHandle.current().pid()}_$runId")
-      Option(lastIngestWork.put("x_stream_ann_ingest", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      java.nio.file.Files.createDirectories(work)
-      val idxPath = work.resolve("idx").toString
-      val outDir = work.resolve("neighbors").toString
-      // stage-and-copy: seed int8 IVF index is a per-dir artifact;
-      // the fold's appends mutate this run's private copy
-      copyTree(java.nio.file.Paths.get(seedAnnIndexDir(s, d)),
-        work.resolve("idx"))
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType))))
-      // the coarse quantizer is FROZEN across the whole fold (append
-      // never touches centroids/meta) — read it once per execution
-      // instead of one centroid-collect job per micro-batch (r19)
-      val frozenIdx = graft.operators.Ivf.readInt8Index(s, idxPath)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      val ckpt = ckptRoot.resolve(s"ann_ingest_$runId")
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val batch = b.persist()
-          // the parquet write IS the fold step's
-          // sink-before-append action (one neighbor job per batch)
-          try
-            graft.operators.Ivf.ingestAnnBatchTo(batch.sparkSession, batch,
-                "vec_id", "embedding", idxPath, frozenIdx, k = 5,
-                nProbe = Int.MaxValue, batchId = Some(bid),
-                sink = n => n
-                  .select(col("query_id"), col("id"), col("rank"), col("int_dot"))
-                  .write.mode("append").parquet(outDir))
-          finally { batch.unpersist(blocking = false); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      pruneDeadStreamingListenerBuses(s)
-      s.read.parquet(outDir)
-        .select(col("query_id"), col("id"), col("rank"), col("int_dot"))
-    }),
+    "x_stream_ann_ingest" -> ((s, d) =>
+      Harness.fold(s, d, "x_stream_ann_ingest", annIngestStage, seedAnnIndex,
+          vecStreamSchema) { idxPath =>
+        // the coarse quantizer is FROZEN across the whole fold (append
+        // never touches centroids/meta) — read it once per execution
+        // instead of one centroid-collect job per micro-batch (r19)
+        val frozenIdx = graft.operators.Ivf.readInt8Index(s, idxPath)
+        (batch, bid, outDir) =>
+          // the parquet write IS the fold step's sink-before-append
+          // action (one neighbor job per batch)
+          graft.operators.Ivf.ingestAnnBatchTo(batch.sparkSession, batch,
+            "vec_id", "embedding", idxPath, frozenIdx, k = 5,
+            nProbe = Int.MaxValue, batchId = Some(bid),
+            sink = n => n
+              .select(col("query_id"), col("id"), col("rank"), col("int_dot"))
+              .write.mode("append").parquet(outDir))
+      }.select(col("query_id"), col("id"), col("rank"), col("int_dot"))),
 
     // THE PRUNED-PROBE STREAMING ANN INGEST — the production fold
     // shape x_stream_ann_ingest deliberately does not demonstrate (it
@@ -4647,56 +4031,25 @@ object Queries {
     // the 256 smallest (hashRank, id) per class, probes/LUT/ADC the
     // ivfPqOracleSql derivation with seed-trained quantizers. NO
     // goldens. io-classified + deep-warmup class.
-    "x_stream_pq_ingest" -> ((s, d) => {
-      val stageDir = annIngestStageDir(s, d)
-      val runId = streamRun.incrementAndGet()
-      val work = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_pq_ingest_run_${ProcessHandle.current().pid()}_$runId")
-      Option(lastIngestWork.put("x_stream_pq_ingest", work)).foreach { prev =>
-        try deleteRecursively(prev)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      java.nio.file.Files.createDirectories(work)
-      val idxPath = work.resolve("idx").toString
-      val outDir = work.resolve("neighbors").toString
-      // stage-and-copy: the seed PQ index is a per-dir artifact; the
-      // fold's appends mutate this run's private copy
-      copyTree(java.nio.file.Paths.get(seedPqIndexDir(s, d)),
-        work.resolve("idx"))
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType))))
-      // codebook/centroids/meta are FROZEN across the whole fold
-      // (append touches cells/ only) — read them once per execution
-      // instead of two collect jobs per micro-batch; each batch's
-      // probe still re-scans cells/ (ingestBatchTo scaladoc), so
-      // batch k retrieves against exactly batches < k as before (r19)
-      val frozenIdx = graft.operators.Pq.readIndex(s, idxPath)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir)
-      val ckpt = ckptRoot.resolve(s"pq_ingest_$runId")
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val batch = b.persist()
-          // the parquet write IS the fold step's
-          // sink-before-append action (one neighbor job per batch)
-          try
-            graft.operators.Pq.ingestBatchTo(batch.sparkSession, batch,
-                "vec_id", "embedding", idxPath, frozenIdx, k = 5, nProbe = 8,
-                batchId = Some(bid), maxQueries = 256,
-                sink = n => n
-                  .select(col("query_id"), col("id"), col("rank"), col("adc_dot"))
-                  .write.mode("append").parquet(outDir))
-          finally { batch.unpersist(blocking = false); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      pruneDeadStreamingListenerBuses(s)
-      s.read.parquet(outDir)
-        .select(col("query_id"), col("id"), col("rank"), col("adc_dot"))
-    }),
+    "x_stream_pq_ingest" -> ((s, d) =>
+      Harness.fold(s, d, "x_stream_pq_ingest", annIngestStage, seedPqIndex,
+          vecStreamSchema) { idxPath =>
+        // codebook/centroids/meta are FROZEN across the whole fold
+        // (append touches cells/ only) — read them once per execution
+        // instead of two collect jobs per micro-batch; each batch's
+        // probe still re-scans cells/ (ingestBatchTo scaladoc), so
+        // batch k retrieves against exactly batches < k as before (r19)
+        val frozenIdx = graft.operators.Pq.readIndex(s, idxPath)
+        (batch, bid, outDir) =>
+          // the parquet write IS the fold step's sink-before-append
+          // action (one neighbor job per batch)
+          graft.operators.Pq.ingestBatchTo(batch.sparkSession, batch,
+            "vec_id", "embedding", idxPath, frozenIdx, k = 5, nProbe = 8,
+            batchId = Some(bid), maxQueries = 256,
+            sink = n => n
+              .select(col("query_id"), col("id"), col("rank"), col("adc_dot"))
+              .write.mode("append").parquet(outDir))
+      }.select(col("query_id"), col("id"), col("rank"), col("adc_dot"))),
 
     // JSON/multimodal props extraction (events.props is a JSON string).
     "x_json_extract" -> ((s, d) => {
@@ -5934,9 +5287,8 @@ object Queries {
     // fact-to-fact join at 100 TB; results are layout-invariant, so the
     // oracle is the plain join SQL.
     "x_bucketed_join" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
-      val suffix = d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("bucketed", d).toString
+      val suffix = Harness.slug(d)
       // the two bucketed writes are independent (disjoint paths and
       // catalog names) — overlap them so the lineitem write's bucket
       // sort back-fills the orders write's commit tail (guide §2.6,
@@ -5967,8 +5319,7 @@ object Queries {
     // compacted copy. Compaction is content-preserving, so the oracle
     // is the same aggregate over the source table.
     "x_compact_roundtrip" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("compact", d).toString
       t(s, d, "documents").repartition(16)
         .write.mode("overwrite").parquet(s"$base/small")
       val stats = graft.sources.Compaction.compact(
@@ -5987,8 +5338,7 @@ object Queries {
     // shortest round-trippable repr; the timestamp goes through an
     // explicit yyyy-MM-dd HH:mm:ss string (CSV has no timestamp type).
     "x_csv_roundtrip" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_csv_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("csv", d).toString
       t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("o_date"),
@@ -6015,8 +5365,7 @@ object Queries {
     // (schema union across files), not a rewrite — at 100 TB this is
     // the only affordable way to widen a table in place.
     "x_schema_evolution" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_schema_evo_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("schema_evo", d).toString
       val docs = t(s, d, "documents")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), col("n_chars"))
@@ -6037,8 +5386,7 @@ object Queries {
     // content-neutral so the oracle is the plain WHERE query; the
     // row-group SKIPPING is plan-asserted in RangeLayoutSpec.
     "x_range_layout" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_rangelayout_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("rangelayout", d).toString
       graft.sources.RangeLayout.write(
         t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
         base, Seq("n_chars"), numFiles = 8)
@@ -6053,8 +5401,7 @@ object Queries {
     // per-dimension row-group skipping — including under skew — is
     // plan-asserted in ZOrderSpec.
     "x_zorder_layout" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("zorder", d).toString
       graft.sources.ZOrder.write(
         t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
         base, Seq("n_chars", "doc_id"), numFiles = 8)
@@ -6071,8 +5418,7 @@ object Queries {
     // against the exact count, and the oracle re-derives the exact
     // count + the envelope verdict (TRUE) in SQL.
     "x_hll_increments" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_hll_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("hll", d).toString
       val toks = t(s, d, "documents")
         .select(col("lang"), col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -6127,8 +5473,7 @@ object Queries {
     // also pins dynamic partition overwrite); layout is content-neutral
     // so the oracle is the plain WHERE.
     "x_partitioned_scan" -> ((s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_partitioned_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Harness.scratch("partitioned", d).toString
       graft.sources.PartitionedLayout.write(
         t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
         base, Seq("lang"))
@@ -6142,8 +5487,7 @@ object Queries {
     // is the plain aggregate on the source table. Completes the format
     // matrix: CSV in, parquet/JSONL/ORC both ways.
     "x_orc_roundtrip" -> ((s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_roundtrip_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Harness.scratch("orc_roundtrip", d).toString
       t(s, d, "documents").write.mode("overwrite").orc(out)
       s.read.orc(out)
         .groupBy(col("lang"))
@@ -6152,10 +5496,8 @@ object Queries {
     }),
 
     "x_jsonl_roundtrip" -> ((s, d) => {
-      // path scoped by dataset dir: a fixed path would race concurrent
-      // Verify/Bench runs at different SFs (and stale-read across them)
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_roundtrip_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      // path scoped by dataset dir: one path per SF in a session
+      val out = Harness.scratch("jsonl_roundtrip", d).toString
       graft.sources.Jsonl.write(
         t(s, d, "documents").select(col("doc_id"), col("lang"), col("text")),
         out, mode = "overwrite")
@@ -6688,7 +6030,7 @@ object Queries {
     // row-exact replay of the four-batch watermark semantics: wm
     // before batch i = max event time of batches < i − 48 h (µs),
     // survivors dedup to the first arrival per id (batch order) —
-    // mirrors lateStreamDir's staging plants exactly
+    // mirrors lateStream's staging plants exactly
     "x_stream_late_drops" ->
       """WITH p AS (
         |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts FROM events

@@ -457,11 +457,13 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got.keySet == Set("f1", "f2", "f3", "f4"))
 
-    // the staged dir the entry just built: replay its four batches in
-    // batch Scala and compare survivor counts + checksums
-    val slug = "graft_late_stream_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val staged = spark.read.parquet(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), slug).toString)
+    // the staged dir the entry just built (the memo hands back the same
+    // path): replay its four batches in batch Scala and compare
+    // survivor counts + checksums
+    val stagedDir = graft.queries.Queries.lateStream(spark, sfDir)
+    assert(java.nio.file.Paths.get(stagedDir).startsWith(graft.queries.Harness.scratchRoot),
+      s"staged dir $stagedDir is not under the per-JVM scratch root")
+    val staged = spark.read.parquet(stagedDir)
       .select(col("src_file"), col("event_id"), unix_micros(col("ts")).as("us"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
