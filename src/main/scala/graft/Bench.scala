@@ -43,24 +43,24 @@ import org.apache.spark.sql.SparkSession
   * ~2.2x the healthy ~63 s sf0.1 total, while a degenerate JIT
   * session (3-10x slow) still trips it.
   *
-  * `x_jsonl_roundtrip`, `x_dedup_incremental`, and `x_incremental_ingest` are the catalog
-  * entries whose timing includes a real disk write+read (a round-trip
-  * and index builds are their correctness contracts); they are listed
-  * under `io_queries` so total-time comparisons can discount them. The
-  * `x_stream_*` replays are flagged the same way: their cost is
-  * dominated by micro-batch + state-store machinery, a fixed harness
-  * overhead rather than plan work, so the budget weights them like io
-  * entries.
+  * Entries flagged `io` on their `CatalogEntry` (a real disk write and
+  * read-back, or a streaming replay whose cost is micro-batch and
+  * state-store machinery rather than plan work) are listed under
+  * `io_queries` so total-time comparisons can discount them, and the
+  * budget weights them as above.
   *
-  * PER-QUERY WARMUP (round 10): the global q1_agg warmup pays for
+  * PER-QUERY WARMUP (round 10): the global warmup (the catalog's first
+  * entry, the relational family's TPC-H-Q1 scan → hash agg) pays for
   * parquet-scan/shuffle/noop classloading, but each query still JIT-
   * compiles its OWN generated code on first execution, and iterative
-  * entries (x_dedup_clusters: checkpoint + per-round codegen) spread
+  * entries (the checkpointed dedup-cluster loop: per-round codegen) spread
   * that warmup over their first TWO reps — r9 recorded 11.1/8.1/3.0 s
   * reps, so the median-of-3 reported 8.1 s for a 3.0 s-steady plan.
   * The official artifact must track plan cost, not JVM mood: each query
   * now runs ONE DISCARDED warmup execution immediately before its timed
-  * reps (pass 1 only — a sick-session second pass is already hot).
+  * reps (pass 1 only — a sick-session second pass is already hot); an
+  * entry whose warm-up spans several executions says how many on its
+  * `CatalogEntry` (`warmups`).
   * Warmup times are recorded in the reps side file under "warmup" so
   * the JIT cost stays visible; SPARK_GRAFT_BENCH_WARMUP=0 disables the
   * extra execution for experiments that want cold-start numbers.
@@ -121,18 +121,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: exercise parquet scan + shuffle + codegen + noop
     // write once so the first timed query isn't charged JIT/classloading
-    SparkEntry.queries.get("q1_agg").foreach { fn =>
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    graft.queries.Queries.catalog.headOption.foreach { e =>
+      try e.build(spark, sfDir).write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () }
     }
     // per-query MEDIAN of 3 consecutive runs: single-shot timings moved
@@ -145,36 +139,11 @@ object Bench {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_REPS must be an integer >= 1, got '$repsRaw'"))
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    val ioQueries = Seq("x_jsonl_roundtrip", "x_dedup_incremental",
-      "x_incremental_ingest", "x_bucketed_join", "x_compact_roundtrip",
-      "x_range_layout", "x_zorder_layout", "x_orc_roundtrip",
-      "x_partitioned_scan", "x_hll_increments", "x_schema_evolution",
-      "x_csv_roundtrip", "x_ann_index_probe", "x_ann_index_grow",
-      "x_pq_index_probe", "x_pq_index_grow", "x_index_compact",
-      "x_ann_refresh_gain", "x_refresh_adaptive", "x_minhash_compact",
-      "x_stream_dedup_index", "x_stream_ingest_within", "x_stream_ann_ingest",
-      "x_stream_pq_ingest",
-      // streaming replays: micro-batch + state-store machinery dominates
-      // (see scaladoc) — weighted like io so the budget stays honest
-      "x_stream_dedup", "x_stream_error_rate", "x_stream_join",
-      "x_stream_sessionize", "x_stream_alerts", "x_stream_counts",
-      "x_stream_funnel", "x_stream_salted_counts", "x_stream_late_drops")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      // an exported-but-empty var must fail like a typo does — a
-      // zero-query run would print a healthy-looking 0.0 s total
-      require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but names no queries")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names not in catalog: ${unknown.mkString(",")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    val entry = graft.queries.Queries.catalog.map(e => e.name -> e).toMap
+    val (only, selected) = SparkEntry.subset("SPARK_GRAFT_BENCH_ONLY")
     // catalog-derived degenerate-session budget (see scaladoc); the env
     // var remains an explicit override for experiments
-    val nIo = ioQueries.count(selected.contains)
+    val nIo = selected.keys.count(entry(_).io)
     val defaultBudget = 0.9 * selected.size + 4.0 * nIo
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .map(_.toDouble).getOrElse(defaultBudget)
@@ -191,35 +160,6 @@ object Bench {
     }
     val ordered = selected.toSeq.sortBy(_._1)
     val doWarmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-    // DEEP-WARMUP CLASS (r17): the streaming-ingest folds converge
-    // over ~6 executions, not 1 — an isolated 8-rep run of
-    // x_stream_ingest_within measured monotone 49.6 (warmup) → 37.2 →
-    // 27.4 → 20.6 → 18.4 → 18.4 → 17.8 → 17.5 → 16.9 s with no state
-    // accumulation (stores unloaded, buses pruned, code cache 512m
-    // segmented): the fold's deep foreachBatch machinery is what the
-    // JIT chews through. A single discarded warmup leaves the
-    // median-of-3 mid-tail, tracking JVM mood instead of plan cost —
-    // exactly what the per-query warmup exists to prevent (r10). These
-    // entries get extra discarded warmup executions; warmup wall-clock
-    // stays visible in the reps side file (summed under "warmup").
-    // PER-ENTRY counts (r18): the within-batch fold's own 8-rep profile
-    // converges only by ~rep 5-6 (49.6 → 37.2 → 27.4 → 20.6 → 18.4 →
-    // 18.4 → 17.8 s), so its 3-warmup official median still sat ~1.5x
-    // the converged floor (r17 verdict finding #2) — it needs 5; the
-    // shallower folds converge by ~rep 3.
-    val deepWarmup = Map(
-      "x_stream_ingest_within" -> 5,
-      "x_stream_dedup_index" -> 3,
-      "x_stream_ann_ingest" -> 3,
-      "x_stream_pq_ingest" -> 3,
-      // first consumer of the heaviest staged artifact
-      // (refresh_audit_indexes, 4 persisted index builds): one warmup
-      // leaves its timed reps in the post-build GC/JIT shadow — r18
-      // measured 10.2 s in-session vs 5.0 s isolated-quiet with the
-      // artifact prebuilt. A second discarded execution absorbs the
-      // shadow; the build cost stays visible in artifact_sec + the
-      // side-file warmup sum.
-      "x_ann_refresh_gain" -> 2)
     // warmup times per query (pass-1 discarded reps), kept for the side
     // file so the JIT/checkpoint cost stays visible even though it no
     // longer pollutes the medians
@@ -241,8 +181,7 @@ object Bench {
     def runPass(warm: Boolean): Seq[(String, Seq[Double])] =
       ordered.map { case (name, fn) =>
         if (warm) {
-          val n = deepWarmup.getOrElse(name, 1)
-          val ws = (1 to n).map(_ => timeOnce(name, fn))
+          val ws = (1 to entry(name).warmups).map(_ => timeOnce(name, fn))
           // a failed warmup must keep the failure-sentinel semantics:
           // summing -1.0 into a multi-warmup total (10+12-1=21) would
           // hide the failure in the side file — record -1.0 instead
@@ -317,11 +256,11 @@ object Bench {
     // headline number alone cannot reveal a broken query — n_failed > 0
     // means the bench total is NOT comparable across rounds
     val nFailed = medians.count(_._2 < 0)
-    // Per-entry session-sickness flag (RepProbe learnings, r10→r11): a
-    // rep >3x its sibling reps within one entry is the degenerate-JIT
-    // signature at single-entry granularity — the session-level budget
+    // Per-entry session-sickness flag (r10→r11): a rep >3x its sibling
+    // reps within one entry is the degenerate-JIT signature at
+    // single-entry granularity — the session-level budget
     // check can miss it when the rest of the catalog is healthy (r10:
-    // x_cluster_safe_split reps 6.65/5.81/29.56 inside a sick:false
+    // the cluster-safe split's reps 6.65/5.81/29.56 inside a sick:false
     // session). Sub-second entries are exempt: 3x of 0.05 s is noise,
     // not sickness. The median already absorbs the outlier; this makes
     // it machine-visible in the artifact instead of narrative-only.
@@ -364,8 +303,8 @@ object Bench {
       s"""{"sf":"$sfDir","passes":$passes,"sick":$sick,"only":$onlyJson,"rep_outliers":$repOutliersJson,"load":$loadStatsJson,"rep_loads":$repLoadsJson,"warmup":$warmupJson,"reps":$repsJson}""")
     val qs = medians.map { case (k, v) => s"\"" + k + "\":" + jNum(v) }
       .mkString("{", ",", "}")
-    val ioJson = ioQueries.filter(selected.contains).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val ioSec = medians.collect { case (n, v) if v >= 0 && ioQueries.contains(n) => v }.sum
+    val ioJson = ordered.map(_._1).filter(entry(_).io).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val ioSec = medians.collect { case (n, v) if v >= 0 && entry(n).io => v }.sum
     // one-time shared-artifact build cost (pair graph, shingle
     // projection, passage spans, fuzzy pairs — the per-corpus-refresh
     // cost the steady-state medians ride on): first-class summary
@@ -442,8 +381,9 @@ object Bench {
         // io entries carry the tighter 1.5x band: their medians are
         // exactly the class where a ~2x session artifact slipped into
         // the record one round after the 2x guardrail shipped
-        // (x_ann_index_grow 9.57 vs 4.43 isolated, r17 finding #1)
-        val factor = if (ioQueries.contains(n)) 1.5 else 2.0
+        // (the int8 index-grow entry at 9.57 vs 4.43 s isolated, r17
+        // finding #1)
+        val factor = if (entry(n).io) 1.5 else 2.0
         v >= 0 && p.get(n).exists(b => b >= 0 && v > math.max(factor * b, b + 1.0))
       })
     }
@@ -477,7 +417,7 @@ object Bench {
         s""""spark_cpus":$cpus,""" +
         s""""n_queries":${medians.size},"n_failed":$nFailed,"passes":$passes,"sick":$sick,""" +
         s""""contended":$contended,"n_band_outliers":$nBandOutliers,""" +
-        s""""io_sec":$ioSec,"io_n":${ioQueries.count(selected.contains)},""" +
+        s""""io_sec":$ioSec,"io_n":$nIo,""" +
         s""""artifact_sec":${jNum(artifactSec)},""" +
         s""""n_rep_outliers":${repOutliers.size},""" +
         s""""load_median":${jNum(loadMedian)},"load_hot":$loadHot,""" +

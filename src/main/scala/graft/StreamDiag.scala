@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main for the streaming-fold per-replay cost growth seen in
   * round 18: executes one catalog entry N times in a single JVM and
   * prints, per execution, wall time plus the JVM counters that could
@@ -19,12 +17,7 @@ object StreamDiag {
     val q = sys.env.getOrElse("SPARK_GRAFT_DIAG_Q", "x_stream_salted_counts")
     val n = sys.env.getOrElse("SPARK_GRAFT_DIAG_N", "12").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.sessionBuilder(cpus)
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100"))
       .getOrCreate()

@@ -97,31 +97,15 @@ object Ivf {
     cur
   }
 
-  /** ANN top-k: probe each query's nProbe nearest cells, exact-cosine
-    * re-rank within the candidate union. Returns
-    * (query_id, id, cosine, rank).
+  /** ANN top-k over a prebuilt index and the corpus assigned to its
+    * cells (`assign` of an `(id, v)` projection): probe each query's
+    * nProbe nearest cells, exact-cosine re-rank within the candidate
+    * union. Returns (query_id, id, cosine, rank). The index build (an
+    * orderBy-limit collect) and the cell assignment are
+    * nProbe-independent, so a caller probing at several settings (the
+    * nProbe tuning sweep) builds them once.
     */
   def ivfTopK(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nlist: Int = 64, nProbe: Int = 8
-  ): DataFrame = {
-    val index = buildIndex(corpus, idCol, vecCol, nlist)
-    val assigned = assign(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("v")), "v", index)
-    ivfTopKWith(assigned, queries, qidCol, qvecCol, index, k, nProbe)
-  }
-
-  /** [[ivfTopK]] over a prebuilt index + assigned corpus — the `*With`
-    * convention for callers probing the SAME in-session index at
-    * several settings (the nProbe tuning sweep): the index build
-    * (an orderBy-limit collect) and the cell-assignment projection
-    * are nProbe-independent, so a sweep that rebuilt them per probe
-    * level paid (legs − 1) redundant corpus passes for bit-identical
-    * cells. Results are exactly [[ivfTopK]]'s for the same (nlist,
-    * nProbe) by construction — one shared rank block.
-    */
-  def ivfTopKWith(
       assigned: DataFrame,
       queries: DataFrame, qidCol: String, qvecCol: String,
       index: IvfIndex, k: Int, nProbe: Int = 8

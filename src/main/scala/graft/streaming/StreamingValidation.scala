@@ -77,6 +77,9 @@ class StreamingValidation(
       } finally annotated.unpersist()
       ()
     }
+}
+
+object StreamingValidation {
 
   /** Streaming exact dedup on arbitrary key columns — the streaming
     * face of [[graft.operators.Dedup.exactDedup]]. State is keyed by
@@ -94,45 +97,12 @@ class StreamingValidation(
     * DROPPED — a watermark-bounded operator cannot hold state for a
     * record with no event time. Validate timestamps upstream (the rule
     * engine's required/date_range rules route malformed rows to the
-    * error sink) if those rows must be preserved.
-    */
-  def dedupStream(
-      stream: DataFrame,
-      keyCols: Seq[String],
-      timeCol: String,
-      watermark: String = "1 hour"
-  ): DataFrame =
-    StreamingValidation.dedupStream(stream, keyCols, timeCol, watermark)
-
-  /** Windowed error-rate summary over the annotated stream: per
-    * (event-time window, line) row/error counts with a watermark to
-    * bound state — the streaming analogue of the reference's
-    * processing summary (src/etl_processor.py:148-157).
-    *
-    * Rows with a null/uncastable `timeCol` cannot be assigned to any
-    * event-time window and are excluded from these counts (they still
-    * flow to the error SINK via the writer — this summary is windowed
-    * observability, not the system of record for bad rows).
-    */
-  def errorRateByWindow(
-      annotated: DataFrame,
-      timeCol: String,
-      windowLen: String = "1 hour",
-      watermark: String = "2 hours",
-      keyCol: String = "line_id"
-  ): DataFrame =
-    StreamingValidation.errorRateByWindow(annotated, timeCol, windowLen, watermark, keyCol)
-}
-
-object StreamingValidation {
-
-  /** Streaming exact dedup (see the instance method's doc — watermark-
-    * bounded state via `dropDuplicatesWithinWatermark`). Static because
-    * it needs no config, so catalog queries can exercise the streaming
-    * dedup surface without an XML config. The dedup GUARANTEE holds for
-    * duplicates whose event times differ by less than `watermark`;
-    * choose a delay covering the whole replayed span when using this
-    * for bounded verification runs.
+    * error sink) if those rows must be preserved. Needs no config, so
+    * catalog queries can exercise the streaming dedup surface without
+    * an XML config. The dedup GUARANTEE holds for duplicates whose
+    * event times differ by less than `watermark`; choose a delay
+    * covering the whole replayed span when using this for bounded
+    * verification runs.
     */
   def dedupStream(
       stream: DataFrame,
@@ -147,10 +117,18 @@ object StreamingValidation {
       .dropDuplicatesWithinWatermark(keyCols)
       .drop("__event_time")
 
-  /** Windowed error-rate summary over an annotated stream (see the
-    * instance method's doc). Static because it needs no config — only
-    * the `errors` column any annotated frame carries — so catalog
-    * queries can exercise the streaming surface without an XML config.
+  /** Windowed error-rate summary over the annotated stream: per
+    * (event-time window, line) row/error counts with a watermark to
+    * bound state — the streaming analogue of the reference's
+    * processing summary (src/etl_processor.py:148-157).
+    *
+    * Rows with a null/uncastable `timeCol` cannot be assigned to any
+    * event-time window and are excluded from these counts (they still
+    * flow to the error SINK via the writer — this summary is windowed
+    * observability, not the system of record for bad rows). Needs no
+    * config — only the `errors` column any annotated frame carries — so
+    * catalog queries can exercise the streaming surface without an XML
+    * config.
     */
   def errorRateByWindow(
       annotated: DataFrame,

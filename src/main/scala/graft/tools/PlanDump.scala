@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a catalog entry's EXECUTED physical plan (post-AQE, with
   * reuse/exchange nodes resolved) after running it once — the audit
   * surface for "does this union reuse its join?", "did the filter push
@@ -23,13 +21,7 @@ object PlanDump {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = sys.env.get("SPARK_GRAFT_PLAN_OUT")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")

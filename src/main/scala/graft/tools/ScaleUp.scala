@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Seed-stable N× scale-up of a testdata dir — the empirical leg of
@@ -83,13 +83,7 @@ object ScaleUp {
     val n = if (args.length > 2) args(2).toInt else 10
     require(n >= 1 && n <= 1000, s"replicas out of range: $n")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def in(name: String): DataFrame =

@@ -8,7 +8,7 @@ class MainSpec extends SparkTestBase {
   test("CLI: full run writes sinks and archives; dry-run does not") {
     spark // ensure the shared session exists (Main's getOrCreate reuses it)
     val cfgPath = getClass.getResource("/mapping_config.xml").getPath
-    val out = Files.createTempDirectory("main_out_")
+    val out = tempDir("main_out_")
     // work on a COPY — the configured archive step moves the input file
     val csv = out.resolve("production_data.csv")
     Files.copy(java.nio.file.Paths.get(
@@ -40,7 +40,7 @@ class MainSpec extends SparkTestBase {
   test("CLI --batch isolates failures, reports n/total, archives successes") {
     spark
     val cfgPath = getClass.getResource("/mapping_config.xml").getPath
-    val dir = Files.createTempDirectory("main_batch_")
+    val dir = tempDir("main_batch_")
     val header = fixtureHeader
     Files.writeString(dir.resolve("prod_a.csv"), header +
       "2024-02-15 08:30:00,LINE001,B1,PROD-A1,145.5,450.2,45.5,OP0001,0\n")

@@ -4,18 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (JVM-wide — Spark startup
-  * dominates test wall time otherwise). Config mirrors Verify/Bench so
-  * tests exercise the same session semantics the driver verifies.
+  * dominates test wall time otherwise), built by the same
+  * [[SparkEntry.sessionBuilder]] as Verify and Bench, so tests exercise
+  * the session semantics the driver verifies.
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.sessionBuilder("4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -23,6 +18,12 @@ object SparkTestBase {
 
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+  /** A fresh dir under the JVM's scratch root ([[graft.queries.Harness.scratchRoot]]),
+    * which a shutdown hook deletes: specs leave nothing in the tmpdir.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(graft.queries.Harness.scratchRoot, prefix)
+
   /** sf0.001 testdata dir (smoke scale). */
   val sfDir = "/root/testdata/sf0.001"
   /** Canonical 9-column fixture CSV header (single source of truth for

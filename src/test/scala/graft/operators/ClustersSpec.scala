@@ -108,7 +108,7 @@ class ClustersSpec extends SparkTestBase {
   }
 
   test("durable checkpointDir produces the same components") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = tempDir("graft_cc_ckpt").toString
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L))
     val got = Clusters.connectedComponents(
       edges.toDF("id_a", "id_b"), checkpointDir = Some(dir), localThreshold = 0L)

@@ -340,7 +340,7 @@ class DedupSpec extends SparkTestBase {
 
   test("incremental index probe equals the in-memory cross pair set at sf0.01") {
     val docs01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_").toString
+    val idx = tempDir("graft_idx_").toString
     Dedup.writeMinHashIndex(
       docs01.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text",
       idx, mode = "overwrite")
@@ -404,7 +404,7 @@ class DedupSpec extends SparkTestBase {
       (22L, lastTo(c1, "ten")), // ~C1 (accepted, indexed): dropped
       (23L, "red orange yellow green blue indigo violet ultraviolet")
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ingest_").toString
+    val idx = tempDir("graft_ingest_").toString
     // bands=32 (2 rows/band) so the J=0.615 plant's candidate collision
     // is structurally certain, not a hash accident
     Dedup.writeMinHashIndex(base, "doc_id", "text", idx,
@@ -432,7 +432,7 @@ class DedupSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
 
     // --- dedupWithinBatch: min-id survivor of the 12~13 pair only ---
-    val idxA = java.nio.file.Files.createTempDirectory("graft_ingest_wb_").toString
+    val idxA = tempDir("graft_ingest_wb_").toString
     Dedup.writeMinHashIndex(base, "doc_id", "text", idxA,
       bands = 32, mode = "overwrite")
     val novelWb = ingest(batch1, idxA, dedupWithinBatch = true)
@@ -445,7 +445,7 @@ class DedupSpec extends SparkTestBase {
       "full-batch indexing must catch near-dups of within-batch-dropped docs")
 
     // --- batchId replay guard ---
-    val idxB = java.nio.file.Files.createTempDirectory("graft_ingest_replay_").toString
+    val idxB = tempDir("graft_ingest_replay_").toString
     Dedup.writeMinHashIndex(base, "doc_id", "text", idxB,
       bands = 32, mode = "overwrite")
     def postings() = spark.read.parquet(s"$idxB/bands").count()
@@ -477,7 +477,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("probe validates index parameters from meta.txt and prunes shingle shards") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_meta_").toString
+    val idx = tempDir("graft_idx_meta_").toString
     val docs01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     Dedup.writeMinHashIndex(docs01.filter(col("doc_id") < 400), "doc_id", "text",
       idx, mode = "overwrite", nShards = 16)
@@ -525,11 +525,11 @@ class DedupSpec extends SparkTestBase {
     val b = docs01.filter(col("doc_id") >= 200 && col("doc_id") < 400)
     val probe = docs01.filter(col("doc_id") >= 400)
 
-    val grown = java.nio.file.Files.createTempDirectory("graft_idx_grow_").toString
+    val grown = tempDir("graft_idx_grow_").toString
     Dedup.writeMinHashIndex(a, "doc_id", "text", grown, mode = "overwrite")
     Dedup.writeMinHashIndex(b, "doc_id", "text", grown, mode = "append")
 
-    val fresh = java.nio.file.Files.createTempDirectory("graft_idx_full_").toString
+    val fresh = tempDir("graft_idx_full_").toString
     Dedup.writeMinHashIndex(docs01.filter(col("doc_id") < 400), "doc_id", "text",
       fresh, mode = "overwrite")
 
@@ -551,7 +551,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("probe-time bucket cap filters postings; stats quantify the loss") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_cap_").toString
+    val idx = tempDir("graft_idx_cap_").toString
     Dedup.writeMinHashIndex(docs, "doc_id", "text", idx, mode = "overwrite")
     // every posting sits in a bucket of size >= 1; cap 0 removes all
     val probed = Dedup.minHashProbeIndex(
@@ -877,7 +877,7 @@ class DedupSpec extends SparkTestBase {
       (12L, c1),                                           // novel
       (13L, lastTo(c1, "nine"))                            // ~C1 within batch
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ingest_to").toString
+    val idx = tempDir("graft_ingest_to").toString
     Dedup.writeMinHashIndex(base, "doc_id", "text", idx,
       bands = 32, mode = "overwrite")
     assert(ingest(batch1, idx, batchId = Some(0L), dedupWithinBatch = true) ==

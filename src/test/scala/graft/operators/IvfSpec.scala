@@ -90,7 +90,7 @@ class IvfSpec extends SparkTestBase {
     val assigned = Ivf.assign(
       emb.select(col("vec_id").as("id"), col("embedding").as("v")).coalesce(1),
       "v", index)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index_").toString
+    val dir = tempDir("ivf_index_").toString
     Ivf.writeIndex(assigned, dir)
 
     // one directory per occupied cell on disk
@@ -126,8 +126,8 @@ class IvfSpec extends SparkTestBase {
       s"probe read $filesRead files; expected <= $nProbe of $cellDirs cell dirs")
 
     // identical results to the in-memory probe path (same index/centroids)
-    val inMemory = Ivf.ivfTopK(emb, "vec_id", "embedding",
-      queries.limit(1), "qid", "qv", k = 10, nlist = nlist, nProbe = nProbe)
+    val inMemory = Ivf.ivfTopK(assigned, queries.limit(1), "qid", "qv", index,
+      k = 10, nProbe = nProbe)
       .select("query_id", "id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val fromDisk = rows.map(r =>
@@ -140,7 +140,7 @@ class IvfSpec extends SparkTestBase {
     val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist)
     val assigned = Ivf.assign(
       emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index_big_").toString
+    val dir = tempDir("ivf_index_big_").toString
     Ivf.writeIndex(assigned, dir)
 
     // 2000-query synthetic batch (4 shifted replicas of the corpus):
@@ -174,7 +174,7 @@ class IvfSpec extends SparkTestBase {
     val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist)
     val assigned = Ivf.assign(
       emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index_nd_").toString
+    val dir = tempDir("ivf_index_nd_").toString
     Ivf.writeIndex(assigned, dir)
 
     // rand() makes the frame nondeterministic even though qid/qv are
@@ -217,8 +217,10 @@ class IvfSpec extends SparkTestBase {
       queries, "qid", "qv", 10)
       .select("query_id", "id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Ivf.ivfTopK(emb, "vec_id", "embedding",
-      queries, "qid", "qv", k = 10, nlist = 32, nProbe = 8)
+    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist = 32)
+    val assigned = Ivf.assign(
+      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
+    val approx = Ivf.ivfTopK(assigned, queries, "qid", "qv", index, k = 10, nProbe = 8)
     val approxSet = approx.select("query_id", "id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // every query probes its own cell -> always finds itself
@@ -230,24 +232,8 @@ class IvfSpec extends SparkTestBase {
     assert(approx.count() <= 50)
   }
 
-  test("ivfTopKWith over one shared index equals per-level ivfTopK rebuilds") {
-    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist = 32)
-    val assigned = Ivf.assign(
-      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
-        ((r.getAs[Long]("id"), r.getAs[Double]("cosine")))).toMap
-    Seq(2, 4, 8).foreach { p =>
-      val shared = keyed(Ivf.ivfTopKWith(assigned, queries, "qid", "qv",
-        index, k = 10, nProbe = p))
-      val rebuilt = keyed(Ivf.ivfTopK(emb, "vec_id", "embedding",
-        queries, "qid", "qv", k = 10, nlist = 32, nProbe = p))
-      assert(shared == rebuilt, s"nProbe=$p diverged")
-    }
-  }
-
   test("persisted int8 index: probe is bit-identical to in-session, scan pruned to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_int8_idx_").toString
+    val dir = tempDir("ivf_int8_idx_").toString
     Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = 32,
       mode = "overwrite")
     // tinyint codes on disk — the honest 4x compression
@@ -289,7 +275,7 @@ class IvfSpec extends SparkTestBase {
 
   test("ingestAnnBatch: retrieves against everything SEEN, is eager before " +
       "the append, and a replayed batchId skips the re-append") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ann_ingest_").toString
+    val dir = tempDir("ivf_ann_ingest_").toString
     val base = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val batch1 = emb.filter(pmod(col("vec_id"), lit(3)) === 1)
     val batch2 = emb.filter(pmod(col("vec_id"), lit(3)) === 2)
@@ -367,7 +353,7 @@ class IvfSpec extends SparkTestBase {
   }
 
   test("persisted int8 index: append routes increments through the frozen centroids") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_int8_grow_").toString
+    val dir = tempDir("ivf_int8_grow_").toString
     val embA = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val embB = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
     val idxA = Ivf.writeInt8Index(embA, "vec_id", "embedding", dir, nlist = 32)
@@ -439,7 +425,7 @@ class IvfSpec extends SparkTestBase {
     // nothing from the failed appends became visible
     assert(spark.read.parquet(s"$dir/cells").count() == cellRows,
       "a failed append must not grow cells/")
-    val notAnIndex = java.nio.file.Files.createTempDirectory("not_idx_").toString
+    val notAnIndex = tempDir("not_idx_").toString
     intercept[IllegalArgumentException](
       probe(notAnIndex, queries, k = 5))
   }
@@ -482,7 +468,7 @@ class IvfSpec extends SparkTestBase {
   }
 
   test("writeInt8Index refineIters: refined centroids persist and probe; append rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_refined_").toString
+    val dir = tempDir("ivf_refined_").toString
     val emb2 = emb.limit(100)
     val refined = Ivf.writeInt8Index(emb2, "vec_id", "embedding", s"$dir/idx",
       nlist = 8, mode = "overwrite", refineIters = 2)
@@ -508,7 +494,7 @@ class IvfSpec extends SparkTestBase {
 
   test("ingestAnnBatchTo: the append grows the index by the full batch, and " +
       "a replayed multi-row batchId re-sinks without re-appending") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ann_to").toString
+    val dir = tempDir("ivf_ann_to").toString
     val base = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val batch1 = emb.filter(pmod(col("vec_id"), lit(3)) === 1)
     Ivf.writeInt8Index(base, "vec_id", "embedding", dir, nlist = 32,

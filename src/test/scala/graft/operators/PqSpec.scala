@@ -120,7 +120,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("persisted PQ index: probe is bit-identical to in-session, scan pruned to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_pq_idx_").toString
+    val dir = tempDir("ivf_pq_idx_").toString
     Pq.writeIndex(emb, "vec_id", "embedding", dir,
       m = 8, ncode = 32, nlist = 16, mode = "overwrite")
     // tinyint payloads on disk — the honest 1-byte-per-subspace codes
@@ -178,12 +178,12 @@ class PqSpec extends SparkTestBase {
       c("vec_id") % 2 === 0)
     val rest = emb.exceptAll(seed)
 
-    val grown = java.nio.file.Files.createTempDirectory("ivf_pq_grow_").toString
+    val grown = tempDir("ivf_pq_grow_").toString
     Pq.writeIndex(seed, "vec_id", "embedding", grown,
       m = 8, ncode = 32, nlist = 16, mode = "overwrite")
     Pq.writeIndex(rest, "vec_id", "embedding", grown,
       m = 8, ncode = 32, nlist = 16, mode = "append")
-    val fresh = java.nio.file.Files.createTempDirectory("ivf_pq_full_").toString
+    val fresh = tempDir("ivf_pq_full_").toString
     Pq.writeIndex(emb, "vec_id", "embedding", fresh,
       m = 8, ncode = 32, nlist = 16, mode = "overwrite")
 
@@ -276,7 +276,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("refined persisted index: probe is bit-identical to the in-session build") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_refined").toString
+    val dir = tempDir("pq_refined").toString
     try {
       Pq.writeIndex(emb, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite", refineIters = 2)
@@ -294,7 +294,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("refineIters is rejected on append (must reuse persisted quantizers)") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_refined_app").toString
+    val dir = tempDir("pq_refined_app").toString
     try {
       Pq.writeIndex(emb, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite")
@@ -308,7 +308,7 @@ class PqSpec extends SparkTestBase {
   // --- the pruned-probe ingest fold ---------------------------------------
 
   test("ingestBatch: neighbors come from SEEN vectors only, appends grow the index") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_ingest").toString
+    val dir = tempDir("pq_ingest").toString
     try {
       val seed = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
       val b1 = emb.filter(pmod(col("vec_id"), lit(4)) === 1)
@@ -331,7 +331,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("ingestBatch replay: same batchId skips the re-append, singleton emits identically") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_ingest_rep").toString
+    val dir = tempDir("pq_ingest_rep").toString
     try {
       val seed = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
       val one = emb.filter(col("vec_id") === 1)
@@ -349,7 +349,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("ingestBatch maxQueries caps the retrieval slice at the hashRank minima") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_ingest_cap").toString
+    val dir = tempDir("pq_ingest_cap").toString
     try {
       val seed = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
       val batch = emb.filter(pmod(col("vec_id"), lit(4)) === 1)
@@ -368,7 +368,7 @@ class PqSpec extends SparkTestBase {
 
   test("ingestBatchTo: the append grows the index by the full batch, and " +
       "a replayed multi-row batchId re-sinks without re-appending") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_ingest_to").toString
+    val dir = tempDir("pq_ingest_to").toString
     try {
       val seed = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
       val b1 = emb.filter(pmod(col("vec_id"), lit(4)) === 1)

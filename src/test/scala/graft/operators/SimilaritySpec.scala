@@ -416,8 +416,10 @@ class SimilaritySpec extends SparkTestBase {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val ann = Ivf.ivfTopK(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 10, nlist = 16, nProbe = 4)
+    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist = 16)
+    val assigned = Ivf.assign(
+      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
+    val ann = Ivf.ivfTopK(assigned, queries, "qid", "qv", index, k = 10, nProbe = 4)
     val exact = Similarity.batchTopK(emb, "vec_id", "embedding",
       queries, "qid", "qv", k = 10)
     val rows = Similarity.recallAtK(ann, exact).collect()

@@ -17,7 +17,7 @@ class PipelineSpec extends SparkTestBase {
     getClass.getResource("/production_data_fixture.csv").getPath
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_test_").toString
+    tempDir("graft_test_").toString
 
   // ------------------------------------------------------------------
   // Parity mode: only the rules the reference engine actually executes
@@ -149,7 +149,7 @@ class PipelineSpec extends SparkTestBase {
     import spark.implicits._
     // two rows sharing (timestamp, line_id, batch_number) — unlike the
     // fixture, where timestamps differ and the dup check stays silent
-    val csv = Files.createTempFile("dup_", ".csv")
+    val csv = tempDir("dup_").resolve("dup.csv")
     Files.writeString(csv,
       """timestamp,line_id,batch_number,product_code,temperature_c,pressure_kpa,humidity_pct,operator_id,defect_count
         |2024-02-15 08:30:00,LINE001,BATCH1,PROD-A1,145.5,450.2,45.5,OP0001,0
@@ -169,7 +169,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("rows already invalid keep their own errors under duplicate_check") {
-    val csv = Files.createTempFile("dup2_", ".csv")
+    val csv = tempDir("dup2_").resolve("dup2.csv")
     Files.writeString(csv,
       """timestamp,line_id,batch_number,product_code,temperature_c,pressure_kpa,humidity_pct,operator_id,defect_count
         |2024-02-15 08:30:00,LINE001,BATCH1,PROD-A1,300.0,450.2,45.5,OP0001,0
@@ -187,7 +187,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("header-only input yields a zero summary, not a crash") {
-    val csv = Files.createTempFile("empty_", ".csv")
+    val csv = tempDir("empty_").resolve("empty.csv")
     Files.writeString(csv,
       "timestamp,line_id,batch_number,product_code,temperature_c,pressure_kpa,humidity_pct,operator_id,defect_count\n")
     val p = new ValidationPipeline(cfg, parityMode = true)
@@ -206,7 +206,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("zero-variance outlier column flags nothing (NaN z-score guard)") {
-    val csv = Files.createTempFile("const_", ".csv")
+    val csv = tempDir("const_").resolve("const.csv")
     // identical temperatures -> stddev 0 -> z is NaN; the guard must
     // keep every row valid instead of flagging all of them
     Files.writeString(csv,
@@ -268,7 +268,7 @@ class PipelineSpec extends SparkTestBase {
   test("error sink truncates FieldValue to 255 chars") {
     import spark.implicits._
     val longVal = "x" * 400
-    val csv = Files.createTempFile("trunc_", ".csv")
+    val csv = tempDir("trunc_").resolve("trunc.csv")
     Files.writeString(csv,
       s"""timestamp,line_id,batch_number,product_code,temperature_c,pressure_kpa,humidity_pct,operator_id,defect_count
          |2024-02-15 08:30:00,$longVal,BATCH1,PROD-A1,145.5,450.2,45.5,OP0001,0
@@ -306,7 +306,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("glob source reads many files in one scan with per-file lineage") {
-    val dir = Files.createTempDirectory("glob_")
+    val dir = tempDir("glob_")
     val header = fixtureHeader
     Files.writeString(dir.resolve("production_a.csv"), header +
       "2024-02-15 08:30:00,LINE001,B1,PROD-A1,145.5,450.2,45.5,OP0001,0\n")
@@ -326,7 +326,7 @@ class PipelineSpec extends SparkTestBase {
     // the reference validates columns per file (src/data_validator.py:96-104);
     // with enforceSchema=false Spark's header checker does the same — without
     // it a reordered vendor CSV in a glob is silently read positionally
-    val dir = Files.createTempDirectory("reorder_")
+    val dir = tempDir("reorder_")
     val good = fixtureHeader +
       "2024-02-15 08:30:00,LINE001,B1,PROD-A1,145.5,450.2,45.5,OP0001,0\n"
     // line_id and batch_number swapped — same column SET, wrong ORDER
@@ -363,7 +363,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("runBatch isolates a corrupt file and reports success/total") {
-    val dir = Files.createTempDirectory("batch_")
+    val dir = tempDir("batch_")
     val header = fixtureHeader
     Files.writeString(dir.resolve("prod_a.csv"), header +
       "2024-02-15 08:30:00,LINE001,B1,PROD-A1,145.5,450.2,45.5,OP0001,0\n")
@@ -392,7 +392,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("runBatch disambiguates colliding basenames from a multi-dir glob") {
-    val dir = Files.createTempDirectory("collide_")
+    val dir = tempDir("collide_")
     val header = fixtureHeader
     Files.createDirectories(dir.resolve("vendorA"))
     Files.createDirectories(dir.resolve("vendorB"))
@@ -422,7 +422,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("archive moves the file with a timestamp prefix when enabled") {
-    val dir = Files.createTempDirectory("arch_")
+    val dir = tempDir("arch_")
     val f = dir.resolve("input.csv")
     Files.writeString(f, "a,b\n1,2\n")
     val p = new ValidationPipeline(cfg)

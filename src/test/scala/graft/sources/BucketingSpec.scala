@@ -2,12 +2,11 @@ package graft.sources
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class BucketingSpec extends SparkTestBase {
 
   test("bucketed join matches the plain join and plans ZERO exchanges") {
-    val tmp = Files.createTempDirectory("bucketing_").toString
+    val tmp = tempDir("bucketing_").toString
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .select("o_orderkey", "o_orderpriority")
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -35,7 +34,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("writeBucketed overwrite is idempotent; layout survives re-registration") {
-    val tmp = Files.createTempDirectory("bucketing_ow_").toString
+    val tmp = tempDir("bucketing_ow_").toString
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .select("o_orderkey", "o_totalprice")
     Bucketing.writeBucketed(orders, "t_orders_ow", s"$tmp/o",

@@ -2,12 +2,11 @@ package graft.sources
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class CompactionSpec extends SparkTestBase {
 
   test("compact merges small files to the byte-derived count, content intact") {
-    val tmp = Files.createTempDirectory("compaction_").toString
+    val tmp = tempDir("compaction_").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.repartition(32).write.parquet(s"$tmp/small")
 
@@ -39,7 +38,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("coalesce path plans no shuffle; rebalance path plans one") {
-    val tmp = Files.createTempDirectory("compaction_plan_").toString
+    val tmp = tempDir("compaction_plan_").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .repartition(8).write.parquet(s"$tmp/in")
     // plan inspection on the frames compact() builds

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
 class IndexCompactionSpec extends SparkTestBase {
 
   private def tmp(name: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(name)
-    p.toFile.deleteOnExit()
-    p.resolve("idx").toString
+    tempDir(name).resolve("idx").toString
   }
 
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()

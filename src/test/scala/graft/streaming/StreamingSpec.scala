@@ -22,9 +22,9 @@ class StreamingSpec extends SparkTestBase {
       |""".stripMargin
 
   test("file-source stream validates new CSVs and writes both sinks") {
-    val inDir = Files.createTempDirectory("stream_in_")
-    val outDir = Files.createTempDirectory("stream_out_")
-    val ckpt = Files.createTempDirectory("stream_ckpt_")
+    val inDir = tempDir("stream_in_")
+    val outDir = tempDir("stream_out_")
+    val ckpt = tempDir("stream_ckpt_")
     val header = fixtureHeader
     Files.writeString(inDir.resolve("batch1.csv"), header + fixtureRows)
 
@@ -67,7 +67,7 @@ class StreamingSpec extends SparkTestBase {
           .withColumn("humidity_pct", lit("50.0"))
           .withColumn("operator_id", lit("OP0001"))
           .withColumn("defect_count", lit("0")))
-    val windowed = new StreamingValidation(cfg)
+    val windowed = StreamingValidation
       .errorRateByWindow(annotated, "timestamp", "1 hour", "2 hours")
 
     val q = windowed.writeStream
@@ -123,7 +123,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, String, String)] // (ts, doc_key, payload)
-    val deduped = new StreamingValidation(cfg).dedupStream(
+    val deduped = StreamingValidation.dedupStream(
       mem.toDF().toDF("ts", "doc_key", "payload"),
       keyCols = Seq("doc_key"), timeCol = "ts", watermark = "1 hour")
     val q = deduped.writeStream.format("memory").queryName("stream_dedup")

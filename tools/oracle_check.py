@@ -7,6 +7,10 @@ results against the Verify parquet dumps.
 Usage: python3 tools/oracle_check.py [sfDir] [verifyOutDir]
 Defaults: /root/testdata/sf0.01 /tmp/verify_out
 (uses the driver-side python env: duckdb + pandas)
+
+Exits 1 when any dump is a MISMATCH, an ORACLE_SQL_ERROR or rows_only (no
+oracle); an oracle with no dump dir is counted as missing_dump but does not
+fail the run, since SPARK_GRAFT_VERIFY_ONLY runs dump only some entries.
 """
 import sys
 import duckdb, json, glob, os, sys
@@ -61,7 +65,15 @@ for name in sorted(os.listdir(out)):
     results[name] = {"status": "OK" if (schema_match and rows_match and hash_match) else "MISMATCH",
                      "schema": schema_match, "rows": rows_match, "hash": hash_match, "detail": detail[:500]}
 
-ok = sum(1 for r in results.values() if r["status"] == "OK")
-for name, r in results.items():
-    print(name, json.dumps(r)[:600])
-print(f"\n{ok} OK / {sum(1 for r in results.values() if r['status']=='MISMATCH')} MISMATCH / {sum(1 for r in results.values() if r['status']=='rows_only')} rows_only")
+# an oracle whose entry has no dump dir: the entry failed in Verify, or a
+# SPARK_GRAFT_VERIFY_ONLY subset run skipped it; reported, never fatal
+missing = sorted(set(oracle) - set(results))
+for name in missing:
+    print(name, json.dumps({"status": "missing_dump"}))
+counts = {k: sum(1 for r in results.values() if r["status"] == k)
+          for k in ("OK", "MISMATCH", "ORACLE_SQL_ERROR", "rows_only")}
+print(f"\n{counts['OK']} OK / {counts['MISMATCH']} MISMATCH / "
+      f"{counts['ORACLE_SQL_ERROR']} ORACLE_SQL_ERROR / {counts['rows_only']} rows_only / "
+      f"{len(missing)} missing_dump")
+# a dump the oracle disagrees with, cannot run against, or does not cover fails the check
+sys.exit(1 if counts["MISMATCH"] or counts["ORACLE_SQL_ERROR"] or counts["rows_only"] else 0)
