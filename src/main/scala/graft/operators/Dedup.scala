@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.sources.IndexManifest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -545,41 +546,19 @@ object Dedup {
   // Incremental MinHash index (dedup new batches against a corpus)
   // ---------------------------------------------------------------------
 
-  /** LSH parameters an index was built with, persisted as `meta.txt`
-    * beside the data (any Hadoop filesystem). Key=value lines — no
-    * parser dependencies, human-readable at 3 AM.
+  /** LSH parameters an index was built with — the parameter lines of
+    * its manifest ([[graft.sources.IndexManifest]]).
     */
   private[operators] final case class IndexMeta(
-      shingleSize: Int, numHashes: Int, bands: Int, nShards: Int)
+      shingleSize: Int, numHashes: Int, bands: Int, nShards: Int) {
+    def params: Seq[(String, String)] = Seq("format" -> "minhash",
+      "shingleSize" -> s"$shingleSize", "numHashes" -> s"$numHashes",
+      "bands" -> s"$bands", "nShards" -> s"$nShards")
+  }
 
   private[operators] object IndexMeta {
-    private def metaPath(path: String) = new org.apache.hadoop.fs.Path(s"$path/meta.txt")
-
-    def write(spark: org.apache.spark.sql.SparkSession, path: String, m: IndexMeta): Unit = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(p, true)
-      try out.write(
-        s"shingleSize=${m.shingleSize}\nnumHashes=${m.numHashes}\nbands=${m.bands}\nnShards=${m.nShards}\n"
-          .getBytes("UTF-8"))
-      finally out.close()
-    }
-
-    def read(spark: org.apache.spark.sql.SparkSession, path: String): Option[IndexMeta] = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = text.linesIterator.filter(_.contains('=')).map { l =>
-          val Array(k, v) = l.split("=", 2); (k.trim, v.trim.toInt)
-        }.toMap
-        Some(IndexMeta(kv("shingleSize"), kv("numHashes"), kv("bands"), kv("nShards")))
-      }
-    }
+    def of(m: IndexManifest): IndexMeta = IndexMeta(m.intParam("shingleSize"),
+      m.intParam("numHashes"), m.intParam("bands"), m.intParam("nShards"))
   }
 
   /** Last-ingested micro-batch id, persisted as `last_batch.txt` beside
@@ -629,10 +608,15 @@ object Dedup {
     *    exact-Jaccard verification of candidates. Sharding lets a probe
     *    read only the shards holding candidate ids instead of the whole
     *    (corpus-sized) shingle store.
-    *  - `meta.txt`: the LSH parameters. A probe with different
-    *    parameters would bucket into silently disjoint hash spaces and
-    *    report zero pairs — [[minHashProbeIndex]] validates against
-    *    this file and fails loudly instead.
+    *  - `meta.txt`: the manifest ([[graft.sources.IndexManifest]]) —
+    *    the LSH parameters plus every committed file of both datasets.
+    *    A probe with different parameters would bucket into silently
+    *    disjoint hash spaces and report zero pairs —
+    *    [[minHashProbeIndex]] validates against it and fails loudly
+    *    instead. The manifest rename is the commit: both datasets are
+    *    staged first, so a failed write leaves the previous version
+    *    readable, and an overwrite deletes the old files only after
+    *    the new manifest is in place.
     *
     * The bucket sizes come from an algebraic count(*) joined back onto
     * the posting rows (no collect_list — per-bucket memory is constant,
@@ -662,10 +646,12 @@ object Dedup {
     val params = IndexMeta(shingleSize, numHashes, bands, nShards)
     // append onto an existing index must use ITS parameters, or the
     // increments' buckets/shards live in disjoint hash spaces
-    IndexMeta.read(spark, path).foreach { existing =>
-      require(existing == params,
-        s"index at $path was built with $existing; cannot $mode with $params")
+    IndexManifest.read(spark, path).foreach { existing =>
+      val built = IndexMeta.of(existing)
+      require(built == params,
+        s"index at $path was built with $built; cannot $mode with $params")
     }
+    val base = IndexManifest.base(spark, path, mode)
     // band from THIS frame's projection, never from a re-read of
     // path/shingles: under mode="append" (the corpus-growth workflow) a
     // re-read would see old increments too and re-append every existing
@@ -677,15 +663,15 @@ object Dedup {
       .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
     val src = if (storage == StorageLevel.NONE) projected else projected.persist(storage)
-    try {
-      val shinglesWrite: () => Unit = () =>
+    val written = try {
+      val shinglesWrite = () => IndexManifest.write(
         src
           .withColumn("shard", pmod(xxhash64(col("id")), lit(nShards.toLong)))
           // co-locate shards before the partitioned write: without this,
           // every task splits into every shard — tasks × nShards small
           // files at corpus scale
-          .repartition(col("shard"))
-          .write.mode(mode).partitionBy("shard").parquet(s"$path/shingles")
+          .repartition(col("shard")),
+        path, "shingles", Some("shard"))
       // bucket_size via a WINDOW count over (band, bucket), NOT a
       // collect_list+size (a viral duplicate's bucket would be
       // materialized whole in one reducer's non-spillable aggregation
@@ -698,24 +684,22 @@ object Dedup {
       // the file layout the partitionBy("band") write wants.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band"), col("bucket"))
-      val bandsWrite: () => Unit = () =>
+      val bandsWrite = () => IndexManifest.write(
         src
           .select(col("id"), posexplode(minHashBands(col("sh"), numHashes, bands)))
           .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
           .withColumn("bucket_size", count(lit(1)).over(w).cast(IntegerType))
-          .select(col("band"), col("bucket"), col("bucket_size"), col("id"))
-          .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
+          .select(col("band"), col("bucket"), col("bucket_size"), col("id")),
+        path, "bands", Some("band"))
       // the two dataset writes are INDEPENDENT (disjoint directories,
       // both deterministic projections of src) — overlap them so the
       // tail of one write's stages back-fills the other's idle slots
       // (Spark schedules concurrent driver-thread jobs FIFO; the
-      // optimization-guide §2.6 shape). Failure semantics match the
-      // sequential form: any failure propagates before meta is
-      // written, leaving the same torn-directory window the replay
-      // marker already documents.
+      // optimization-guide §2.6 shape). Any failure propagates before
+      // the manifest commits, so no reader sees a partial write.
       Actions.runConcurrently(shinglesWrite, bandsWrite)
     } finally if (storage != StorageLevel.NONE) src.unpersist()
-    IndexMeta.write(spark, path, params)
+    IndexManifest.commit(spark, path, params.params, written, base)
   }
 
   /** Near-dup pairs between a new `batch` and an indexed corpus (see
@@ -738,9 +722,13 @@ object Dedup {
     *
     * Parameters must match the index build — the LSH bucket hashes are
     * deterministic kernels, so differing parameters means disjoint hash
-    * spaces and silently zero pairs. The build writes them to
-    * `meta.txt`; this probe validates against it and fails loudly on
-    * mismatch (indexes without the file are trusted as documented).
+    * spaces and silently zero pairs. The build writes them to the
+    * manifest (`meta.txt`); this probe validates against it and fails
+    * loudly on a mismatch or on an index without one.
+    *
+    * Both scans come from ONE manifest version read when the probe is
+    * built: they list nothing and infer no schema, and an append that
+    * commits later (the fold's concurrent one) is invisible to them.
     *
     * The batch shingle projection is evaluated twice (banding +
     * verification); every input is a parquet scan through deterministic
@@ -764,14 +752,12 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucket: Int = 1000
   ): DataFrame = {
-    val meta = IndexMeta.read(spark, path)
-    meta.foreach { built =>
-      val probing = IndexMeta(shingleSize, numHashes, bands, built.nShards)
-      require(built == probing,
-        s"index at $path was built with $built; probing with $probing would " +
-          "bucket into a disjoint hash space and silently find nothing")
-    }
-    val nShards = meta.map(_.nShards)
+    val manifest = IndexManifest.load(spark, path, "minhash")
+    val built = IndexMeta.of(manifest)
+    val probing = IndexMeta(shingleSize, numHashes, bands, built.nShards)
+    require(built == probing,
+      s"index at $path was built with $built; probing with $probing would " +
+        "bucket into a disjoint hash space and silently find nothing")
     val batchSh = batch
       .select(col(idCol).as("batch_id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -782,20 +768,17 @@ object Dedup {
     // materializes the candidate-bounded frame once; discovery and
     // verification both read the blocks (r18).
     val candidates =
-      probeCandidates(spark, batchSh, path, numHashes, bands, maxBucket)
+      probeCandidates(manifest.scan(spark, path, "bands"), batchSh,
+        numHashes, bands, maxBucket)
         .localCheckpoint()
-    val corpusShAll = spark.read.parquet(s"$path/shingles")
     // prune the shingle scan to the shards that hold candidates: the
     // collect is bounded by nShards (distinct shard values), never by
     // candidate count
-    val corpusSh = nShards match {
-      case Some(n) =>
-        val hit = candidates
-          .select(pmod(xxhash64(col("corpus_id")), lit(n.toLong)).as("shard"))
-          .distinct().collect().map(_.getLong(0))
-        corpusShAll.filter(col("shard").isin(hit.toIndexedSeq: _*))
-      case None => corpusShAll // pre-sharding index layout: full scan
-    }
+    val hit = candidates
+      .select(pmod(xxhash64(col("corpus_id")), lit(built.nShards.toLong)).as("shard"))
+      .distinct().collect().map(_.getLong(0))
+    val corpusSh = manifest.scan(spark, path, "shingles")
+      .filter(col("shard").isin(hit.toIndexedSeq: _*))
     candidates
       .join(batchSh.select(col("batch_id"), col("sh").as("sh_a")), "batch_id")
       .join(corpusSh.select(col("id").as("corpus_id"), col("sh").as("sh_b")), "corpus_id")
@@ -812,12 +795,12 @@ object Dedup {
     * bounded by banding collisions (∝ near-dup pairs at healthy
     * parameters), never corpus size — the r19 scale evidence for the
     * checkpoint-never-becomes-the-spill-hazard argument (guide §5).
-    * `batchSh` is the (batch_id, sh) shingle projection.
+    * `postings` is the index's `bands/` scan ([[postingsScan]]) and
+    * `batchSh` the (batch_id, sh) shingle projection.
     */
   private[graft] def probeCandidates(
-      spark: org.apache.spark.sql.SparkSession,
+      postings: DataFrame,
       batchSh: DataFrame,
-      path: String,
       numHashes: Int,
       bands: Int,
       maxBucket: Int
@@ -825,13 +808,21 @@ object Dedup {
     val batchBands = batchSh
       .select(col("batch_id"), posexplode(minHashBands(col("sh"), numHashes, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    spark.read.parquet(s"$path/bands")
+    postings
       .filter(col("bucket_size") <= maxBucket)
       .join(batchBands, Seq("band", "bucket"))
       .select(col("batch_id"), col("id").as("corpus_id"))
       .filter(col("batch_id") =!= col("corpus_id"))
       .dropDuplicates("batch_id", "corpus_id")
   }
+
+  /** The `bands/` postings of the index at `path`, at its current
+    * manifest version.
+    */
+  private[graft] def postingsScan(
+      spark: org.apache.spark.sql.SparkSession, path: String
+  ): DataFrame =
+    IndexManifest.load(spark, path, "minhash").scan(spark, path, "bands")
 
   /** Recall loss a probe with this `maxBucket` would incur: postings in
     * overflowing buckets, distinct overflowing buckets, and the largest
@@ -844,7 +835,7 @@ object Dedup {
       path: String,
       maxBucket: Int
   ): (Long, Long, Int) = {
-    val r = spark.read.parquet(s"$path/bands")
+    val r = postingsScan(spark, path)
       .agg(
         coalesce(sum(when(col("bucket_size") > maxBucket, 1L).otherwise(0L)),
           lit(0L)).as("overflow_postings"),

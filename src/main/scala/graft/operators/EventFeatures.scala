@@ -378,7 +378,6 @@ object EventFeatures {
       df: DataFrame, tsCol: String, keyCol: String, halfLifeDays: Int = 1
   ): DataFrame = {
     require(halfLifeDays >= 1, s"halfLifeDays must be >= 1, got $halfLifeDays")
-    import org.apache.spark.sql.types.LongType
     val day = datediff(to_date(col(tsCol)), lit("1970-01-01"))
     val daily = df
       .groupBy(col(keyCol), day.as("__d"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.sources.IndexManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -271,44 +272,23 @@ object Ivf {
   // Persisted int8 index — the build-once / probe-many serving split
   // ---------------------------------------------------------------------
 
-  /** Index parameters persisted as `meta.txt` beside the data (the
-    * [[Dedup.writeMinHashIndex]] contract): key=value lines, no parser
-    * dependencies. A probe or append against mismatched parameters
-    * would score in a silently different space — both validate against
-    * this file and fail loudly instead.
+  /** Index parameters — the parameter lines of the index's manifest
+    * ([[graft.sources.IndexManifest]]). A probe or append against
+    * mismatched parameters would score in a silently different space —
+    * both validate against them and fail loudly instead.
     */
-  private[operators] final case class Int8IndexMeta(nlist: Int, dim: Int)
+  private[operators] final case class Int8IndexMeta(nlist: Int, dim: Int) {
+    def params: Seq[(String, String)] =
+      Seq("format" -> "ivf_int8", "nlist" -> s"$nlist", "dim" -> s"$dim")
+  }
 
   private[operators] object Int8IndexMeta {
-    private def metaPath(path: String) =
-      new org.apache.hadoop.fs.Path(s"$path/meta.txt")
-
-    def write(spark: SparkSession, path: String, m: Int8IndexMeta): Unit = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(p, true)
-      try out.write(
-        s"format=ivf_int8\nnlist=${m.nlist}\ndim=${m.dim}\n".getBytes("UTF-8"))
-      finally out.close()
-    }
-
-    def read(spark: SparkSession, path: String): Option[Int8IndexMeta] = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = text.linesIterator.filter(_.contains("="))
-          .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-        require(kv.get("format").contains("ivf_int8"),
-          s"$p is not an ivf_int8 index meta (format=${kv.get("format")})")
-        Some(Int8IndexMeta(kv("nlist").toInt, kv("dim").toInt))
-      }
-    }
+    def of(manifest: IndexManifest): Int8IndexMeta =
+      Int8IndexMeta(manifest.intParam("nlist"), manifest.intParam("dim"))
   }
+
+  private def manifestAt(spark: SparkSession, path: String): IndexManifest =
+    IndexManifest.load(spark, path, "ivf_int8")
 
   /** Build (or grow) the PERSISTED int8 IVF index — the serving shape
     * of a 100 TB ANN deployment, where the index is built once per
@@ -326,13 +306,17 @@ object Ivf {
     *    nProbe/nlist of the files.
     *  - `centroids/`: (cell, c array<double>) — the coarse quantizer,
     *    so a probe session reconstructs routing WITHOUT the corpus.
-    *  - `meta.txt`: nlist + dim ([[Int8IndexMeta]]).
+    *  - `meta.txt`: the manifest — nlist + dim ([[Int8IndexMeta]]) plus
+    *    every committed file. Its rename commits a write: the datasets
+    *    are staged first, and an overwrite deletes the old files only
+    *    after the new manifest is in place.
     *
     * `mode="append"` is the corpus-growth workflow: the increment is
     * assigned and quantized under the EXISTING centroids (read back
     * from `centroids/` — appending under fresh centroids would route
     * old and new vectors through different quantizers) and its code
-    * rows append to `cells/`; centroids and meta are untouched.
+    * files join `cells/` in a new manifest version; centroids and the
+    * parameters are untouched.
     * Callers own id disjointness across increments, the
     * [[Dedup.writeMinHashIndex]] contract. Codes come from THIS
     * frame's projection, never a re-read of the index (the same
@@ -365,56 +349,52 @@ object Ivf {
         "through the persisted centroids (rebuild fresh to retrain)")
     val spark = corpus.sparkSession
     if (mode == "append") {
-      val existing = readInt8Index(spark, path) // throws if absent/foreign
+      val manifest = manifestAt(spark, path) // throws if absent/foreign
+      val existing = readInt8IndexFrom(spark, path, manifest)
       require(existing.nlist == nlist,
         s"index at $path was built with nlist=${existing.nlist}; " +
           s"cannot append with nlist=$nlist")
-      appendInt8(corpus, idCol, vecCol, path, existing)
+      appendInt8(corpus, idCol, vecCol, path, existing, manifest)
       return existing
     }
+    val base = IndexManifest.base(spark, path, mode)
     val index = {
       val built = buildIndex(corpus, idCol, vecCol, nlist)
       if (refineIters > 0) refineCentroids(corpus, vecCol, built, refineIters)
       else built
     }
-    // centroids + meta are written on the fresh build only; the two
-    // dataset writes are independent (disjoint directories) — overlap
-    // them (Actions scaladoc). Meta stays strictly LAST, preserving
-    // the "meta present ⇒ index complete" reader contract.
-    Actions.runConcurrently(
+    // centroids are written on the fresh build only; the two dataset
+    // writes are independent (disjoint directories) — overlap them
+    // (Actions scaladoc). The manifest commits strictly LAST, and it
+    // lists only the new files, so cells empty in the new corpus never
+    // keep stale ids scored under the old centroids.
+    val written = Actions.runConcurrently(
       () => {
         import spark.implicits._
-        (0 until index.nlist).map { cell =>
+        IndexManifest.write((0 until index.nlist).map { cell =>
           (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
-        }.toDF("cell", "c")
-          .coalesce(1)
-          .write.mode(mode).parquet(s"$path/centroids")
+        }.toDF("cell", "c").coalesce(1), path, "centroids", None)
       },
-      () => int8Assigned(corpus, idCol, vecCol, index)
+      () => IndexManifest.write(int8Assigned(corpus, idCol, vecCol, index)
         .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
         // co-locate cells before the partitioned write (the
         // writeMinHashIndex discipline): without this every task splits
         // into every cell — tasks × nlist small files at corpus scale
-        .repartition(col("cell"))
-        .write.mode(mode)
-        // a fresh build must REPLACE cells/ wholesale: under a session's
-        // partitionOverwriteMode=dynamic, cells empty in the new corpus
-        // would keep their old files and probes would silently merge
-        // stale ids scored under the new centroids
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$path/cells"))
-    Int8IndexMeta.write(spark, path, Int8IndexMeta(index.nlist, index.dim))
+        .repartition(col("cell")), path, "cells", Some("cell")))
+    IndexManifest.commit(spark, path, Int8IndexMeta(index.nlist, index.dim).params,
+      written, base)
     index
   }
 
   /** The append-mode assign+quantize+write over an ALREADY-READ coarse
-    * quantizer — shared by [[writeInt8Index]]'s append mode and
-    * [[ingestAnnBatchTo]] (which also probed with the same index object
-    * and must not pay the centroid collect twice per fold step).
+    * quantizer, committed on top of `base` (the manifest version the
+    * increment extends) — shared by [[writeInt8Index]]'s append mode
+    * and [[ingestAnnBatchTo]] (which also probed with the same index
+    * object and must not pay the centroid collect twice per fold step).
     */
   private def appendInt8(
       corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, index: IvfIndex
+      path: String, index: IvfIndex, base: IndexManifest
   ): Unit = {
     // EVERY row's dim must match — a mixed-dim increment's short
     // vectors the kernels silently truncate-score (min(len, dim)
@@ -422,31 +402,30 @@ object Ivf {
     // the assign/quantize projection ([[Similarity.requireDim]]): the
     // separate min/max aggregate it replaces paid one full extra scan
     // of the corpus-proportional embedding column per append (r19,
-    // guide §1.2). A mismatch aborts the append job before its commit
-    // — same fail-loudly / nothing-written contract, now raised from
-    // the task instead of the driver.
+    // guide §1.2). A mismatch aborts the staged write before the
+    // manifest commits — same fail-loudly / nothing-visible contract,
+    // raised from the task instead of the driver.
     val guarded = corpus.withColumn(vecCol,
       Similarity.requireDim(col(vecCol), index.dim, s"at $path"))
-    int8Assigned(guarded, idCol, vecCol, index)
+    val written = IndexManifest.write(int8Assigned(guarded, idCol, vecCol, index)
       .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
-      .repartition(col("cell"))
-      .write.mode("append")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell").parquet(s"$path/cells")
+      .repartition(col("cell")), path, "cells", Some("cell"))
+    IndexManifest.commit(corpus.sparkSession, path, base.params, Seq(written), Some(base))
   }
 
   /** Reconstruct the coarse quantizer of a [[writeInt8Index]] index
-    * from its `centroids/` + `meta.txt` — bounded at nlist × dim
-    * doubles, never touches `cells/`. Fails loudly on a missing or
-    * foreign meta file (a new format owes its readers strictness; the
-    * pre-meta trust grandfathered into the MinHash probe does not
-    * apply here).
+    * from its `centroids/` + manifest — bounded at nlist × dim
+    * doubles, one collect job, never touches `cells/`. Fails loudly on
+    * a missing or foreign manifest.
     */
-  def readInt8Index(spark: SparkSession, path: String): IvfIndex = {
-    val meta = Int8IndexMeta.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no meta.txt under $path — not a written ivf_int8 index"))
-    val rows = spark.read.parquet(s"$path/centroids")
+  def readInt8Index(spark: SparkSession, path: String): IvfIndex =
+    readInt8IndexFrom(spark, path, manifestAt(spark, path))
+
+  private def readInt8IndexFrom(
+      spark: SparkSession, path: String, manifest: IndexManifest
+  ): IvfIndex = {
+    val meta = Int8IndexMeta.of(manifest)
+    val rows = manifest.scan(spark, path, "centroids")
       .select(col("cell").cast("int"), col("c").cast("array<double>"))
       .collect() // <= nlist rows by construction
     require(rows.length == meta.nlist,
@@ -481,21 +460,32 @@ object Ivf {
     *
     * Callers probing the same persisted index repeatedly read the
     * quantizer once and skip the per-call centroid collect. The caller
-    * owns index/path consistency. The `cells/` scan is created per
-    * call, and like any parquet read it lists its files right then:
-    * the returned frame sees the index as it stood at this call.
+    * owns index/path consistency. The `cells/` scan is built per call
+    * from the manifest version current at that call: it reads exactly
+    * that version's files (no listing, no schema inference), so the
+    * returned frame sees the index as it stood at this call even if an
+    * append commits before it is evaluated.
     */
   def ivfInt8ProbeIndex(
       spark: SparkSession, indexPath: String, index: IvfIndex,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int = 8
+  ): DataFrame =
+    probeInt8(manifestAt(spark, indexPath).scan(spark, indexPath, "cells"),
+      index, queries, qidCol, qvecCol, k, nProbe)
+
+  /** [[ivfInt8ProbeIndex]] over one manifest version's `cells/` scan. */
+  private def probeInt8(
+      cells: DataFrame, index: IvfIndex,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int, nProbe: Int
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= index.nlist,
       s"nProbe $nProbe out of range for nlist=${index.nlist}")
     val probes = int8Probes(queries, qidCol, qvecCol, index, nProbe)
     val deterministic = queries.queryExecution.analyzed
       .find(_.expressions.exists(!_.deterministic)).isEmpty
-    val all = spark.read.parquet(s"$indexPath/cells")
+    val all = cells
       .select(col("id"), col("cell"), col("cq").cast("array<bigint>").as("cq"))
     // nProbe == nlist probes every cell — the discovery collect would
     // be one wasted job ending in an always-true filter (the
@@ -523,22 +513,26 @@ object Ivf {
     * ([[readInt8Index]] before the stream starts): append never
     * touches centroids/meta, so every step runs against one frozen
     * centroid set instead of paying the centroid collect per
-    * micro-batch (r19, guide §1.2). The `cells/` scan inside the probe
-    * is created per step, so each batch sees every earlier batch's
-    * append. The caller owns index/path consistency.
+    * micro-batch (r19, guide §1.2). Each step reads the manifest once:
+    * the probe scans that version's `cells/` files, so each batch sees
+    * every earlier batch's append, and the append commits the next
+    * version on top of it. The caller owns index/path consistency.
     *
-    * SINK-BEFORE-APPEND: `sink(neighbors)` must be an eager ACTION
-    * over the frame (a parquet/noop write — it may not stash the
-    * frame for later), and the probe is built and sunk strictly
-    * BEFORE the append. A probe built after the append would score
-    * the batch against its own just-appended vectors — every row's
-    * neighbors would include its batch siblings (IvfSpec pins this).
+    * PROBE PINNED, SINK OVERLAPPED: the probe frame is built first,
+    * pinned to the step's manifest version, and `sink(neighbors)` —
+    * an eager ACTION over the frame (a parquet/noop write — it may not
+    * stash the frame for later) — runs concurrently with the append +
+    * replay marker ([[Actions.runConcurrently]], the
+    * [[Dedup.ingestDedupBatchTo]] shape). The append commits a LATER
+    * version, which the pinned probe cannot see: it never scores the
+    * batch against its own just-appended vectors (IvfSpec pins this).
     *
     * At-least-once replay (`batchId`): same contract as
     * [[Dedup.ingestDedupBatchTo]] — pass foreachBatch's id and a
     * replayed batch skips the append ([[Dedup.LastBatchMarker]],
-    * equality-matched, written strictly after the append) and re-runs
-    * the sink. A replayed probe then scores against an index already
+    * equality-matched, written strictly after the manifest commits)
+    * and re-runs the sink — also after a sink failure whose concurrent
+    * append already committed. A replayed probe then scores against an index already
     * holding the batch; the self-dot would win every row's rank 1, so
     * the probe over-fetches k+1, EXCLUDES exact id self-pairs, and
     * re-ranks — a singleton batch's replay emits bit-identically to
@@ -562,16 +556,20 @@ object Ivf {
     val probe = math.min(nProbe, index.nlist)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("int_dot").desc, col("id").asc)
-    // the sink action fully evaluates the probe against the
-    // PRE-append cells/ — strictly before the append mutates them
-    sink(ivfInt8ProbeIndex(spark, path, index, batch, idCol, vecCol, k + 1, probe)
+    val current = manifestAt(spark, path)
+    val neighbors = probeInt8(current.scan(spark, path, "cells"), index,
+        batch, idCol, vecCol, k + 1, probe)
       .filter(col("query_id") =!= col("id"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k))
-    if (!alreadyIngested) {
-      appendInt8(batch, idCol, vecCol, path, index)
-      batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
-    }
+      .filter(col("rank") <= k)
+    if (alreadyIngested) sink(neighbors)
+    else Actions.runConcurrently(
+      () => sink(neighbors),
+      () => {
+        appendInt8(batch, idCol, vecCol, path, index, current)
+        batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
+      })
+    ()
   }
 
   private def probeCells(

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.IndexManifest
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import Parallelism.widen
 
 /** Product quantization (PQ) — the third rung of the embedding
@@ -95,7 +96,7 @@ object Pq {
     * complete grid; centroid cells by construction).
     */
   private def flatten(
-      rows: Array[org.apache.spark.sql.Row], groups: Int, nc: Int, sub: Int
+      rows: Array[Row], groups: Int, nc: Int, sub: Int
   ): Array[Long] = {
     val flat = new Array[Long](groups * nc * sub)
     // grid completeness is ENFORCED, not assumed: a duplicate
@@ -274,7 +275,7 @@ object Pq {
     * grid shape — the refinement entry point shared by buildIndex.
     */
   private def flatCodebook(
-      cbRows: Array[org.apache.spark.sql.Row], m: Int
+      cbRows: Array[Row], m: Int
   ): (Array[Long], Int, Int) = {
     val nc = cbRows.length / m
     val sub = cbRows.head.getSeq[Long](2).length
@@ -327,32 +328,6 @@ object Pq {
     * per-query partial WindowGroupLimit. The corpus-side scan touches
     * codes only; nothing data-proportional is collected or sorted.
     */
-  /** Collect the codebook once (≤ m×ncode rows — plan-constant, the
-    * IVF centroid-collect discipline) and re-seat it as a local frame:
-    * the one corpus pass that builds it runs exactly once, every
-    * consumer broadcasts the small relation, and nothing is left
-    * behind in the cache manager. Returns (codebook, nc) where nc is
-    * the actual per-subspace code count (< ncode on a small corpus) —
-    * the flat LUT stride.
-    */
-  private def localCodebook(
-      corpus: DataFrame, idCol: String, vecCol: String, m: Int, ncode: Int
-  ): (DataFrame, Int) = {
-    val built = pqCodebook(corpus, idCol, vecCol, m, ncode)
-    val spark = corpus.sparkSession
-    val cbRows = built.collect()
-    // the Ivf.buildIndex discipline: validate the SAMPLE uniform-dim
-    // at collect time (free); a mixed-dim corpus is a caller error —
-    // mismatched rows would silently zip-truncate in the encode
-    val lens = cbRows.map(_.getSeq[Long](2).length).distinct
-    require(lens.length <= 1,
-      s"non-uniform embedding dims in the hash sample (codeword lengths " +
-        s"${lens.sorted.mkString(",")}) — filter the corpus to one dim first")
-    (spark.createDataFrame(
-      spark.sparkContext.parallelize(cbRows.toIndexedSeq, 1), built.schema),
-      cbRows.length / m)
-  }
-
   /** Per-query flat ADC lookup table: one array of m·nc longs ordered
     * by (subspace, code) — entry [j·nc + c] is dot(query subvector j,
     * codeword c of subspace j). Broadcast-join + sorted collect,
@@ -400,22 +375,42 @@ object Pq {
     * codes plus a cell id per vector, the ONLY data-proportional
     * state. At scale, persist `encoded` `partitionBy("cell")` (the
     * [[Ivf.writeInt8Index]] layout with m-byte payloads) so probes
-    * read ~nProbe/nlist of the files.
+    * read ~nProbe/nlist of the files. `codebookFlat` and
+    * `centroidsFlat` are the same two grids as the kernels' flat
+    * arrays ([[flatten]] layout), kept so that encoding and routing an
+    * increment run no collect.
     */
   final case class PqIndex(
       m: Int, nc: Int, nlist: Int, dim: Int,
-      codebook: DataFrame, centroids: DataFrame, encoded: DataFrame)
+      codebook: DataFrame, centroids: DataFrame, encoded: DataFrame,
+      codebookFlat: Array[Long], centroidsFlat: Array[Long])
 
-  /** Build the all-integer IVF-PQ index: PQ codebook (hash-sampled
-    * int8 subvectors, [[pqCodebook]]), coarse quantizer (`nlist`
-    * hash-sampled FULL int8 code vectors, salt 7 — a routing decision
-    * distinct from the codebook's sampling), per-vector PQ codes
-    * ([[pqEncode]]) and cells (integer squared-L2 argmin over full
-    * codes — the standard L2 coarse quantizer; same cc − 2·dot
-    * reduction as pqEncode, ties → smallest cell). Two corpus
-    * projections feed one id equi-join; every comparison is
-    * BIGINT-exact, so the whole index is bit-replayable in any engine.
+  private val codebookSchema = StructType(Seq(StructField("subspace", IntegerType),
+    StructField("code", IntegerType), StructField("cw", ArrayType(LongType))))
+  private val centroidsSchema = StructType(Seq(StructField("cell", IntegerType),
+    StructField("ccode", ArrayType(LongType)), StructField("__cc", LongType)))
+
+  /** A [[PqIndex]] over flat quantizer grids: the codebook and centroid
+    * frames are local relations re-seated from the arrays (one
+    * partition each; every consumer broadcasts them).
     */
+  private def pqIndex(
+      spark: SparkSession, m: Int, nc: Int, nlist: Int, dim: Int,
+      cbFlat: Array[Long], centFlat: Array[Long], encoded: DataFrame
+  ): PqIndex = {
+    val sub = cbFlat.length / (m * nc)
+    val cbRows = for (g <- 0 until m; c <- 0 until nc) yield
+      Row(g, c, cbFlat.slice((g * nc + c) * sub, (g * nc + c + 1) * sub).toSeq)
+    val centRows = (0 until centFlat.length / dim).map { cell =>
+      val cc = centFlat.slice(cell * dim, (cell + 1) * dim)
+      Row(cell, cc.toSeq, cc.foldLeft(0L)((a, v) => a + v * v))
+    }
+    def local(rows: Seq[Row], schema: StructType) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    PqIndex(m, nc, nlist, dim, local(cbRows, codebookSchema),
+      local(centRows, centroidsSchema), encoded, cbFlat, centFlat)
+  }
+
   /** The coarse-quantizer sample frame: `nlist` hash-sampled (salt 7)
     * full int8 code vectors with dense cell ids and their self-dots —
     * one TakeOrdered cut, ≤ nlist rows.
@@ -433,80 +428,59 @@ object Pq {
         (row_number().over(Window.orderBy(
           Sampling.hashRank(col("__id"), salt = 7L), col("__id"))) - 1)
           .cast(IntegerType))
-      .select(col("cell"), col("ccode"),
-        intDot(col("ccode"), col("ccode")).as("__cc"))
+      .select(lit(0).as("grp"), col("cell"), col("ccode"))
 
+  /** Build the all-integer IVF-PQ index: PQ codebook (hash-sampled
+    * int8 subvectors, [[pqCodebook]]), coarse quantizer (`nlist`
+    * hash-sampled FULL int8 code vectors, salt 7 — a routing decision
+    * distinct from the codebook's sampling), per-vector PQ codes
+    * ([[pqEncode]]) and cells (integer squared-L2 argmin over full
+    * codes — the standard L2 coarse quantizer; same cc − 2·dot
+    * reduction as pqEncode, ties → smallest cell). Every comparison is
+    * BIGINT-exact, so the whole index is bit-replayable in any engine.
+    */
   def buildIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ncode: Int, nlist: Int, refineIters: Int = 0
   ): PqIndex = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     require(refineIters >= 0, s"refineIters must be >= 0, got $refineIters")
-    val spark = corpus.sparkSession
-    val centBuilt = centroidsBuilt(corpus, idCol, vecCol, nlist)
     // the codebook sample and the coarse-quantizer sample are two
     // INDEPENDENT TakeOrdered collects over the same corpus — overlap
     // them so the second's scan back-fills the first's straggler tail
-    // (guide §2.6; the x_pq_index_grow seed-cut shape, r19)
-    var cbRes: (DataFrame, Int) = null
-    var rows0: Array[org.apache.spark.sql.Row] = null
-    Actions.runConcurrently(
-      () => cbRes = localCodebook(corpus, idCol, vecCol, m, ncode),
-      () => rows0 = centBuilt.collect()) // ≤ nlist rows — plan-constant
-    val (codebook0, nc) = cbRes
-    require(rows0.nonEmpty, "empty corpus — cannot build a PQ index")
+    // (guide §2.6; the x_pq_index_grow seed-cut shape, r19); both are
+    // plan-constant (≤ m·ncode and ≤ nlist rows)
+    val Seq(cbRows, centRows) = Actions.runConcurrently(
+      () => pqCodebook(corpus, idCol, vecCol, m, ncode).collect(),
+      () => centroidsBuilt(corpus, idCol, vecCol, nlist).collect())
+    require(centRows.nonEmpty, "empty corpus — cannot build a PQ index")
+    // the Ivf.buildIndex discipline: validate the SAMPLE uniform-dim
+    // at collect time (free); a mixed-dim corpus is a caller error —
+    // mismatched rows would silently zip-truncate in the encode
+    val lens = cbRows.map(_.getSeq[Long](2).length).distinct
+    require(lens.length <= 1,
+      s"non-uniform embedding dims in the hash sample (codeword lengths " +
+        s"${lens.sorted.mkString(",")}) — filter the corpus to one dim first")
     // the coarse quantizer's full-code length IS the embedding dim —
     // carried on the index so append guards and writeIndex never pay
     // a job to rediscover it
-    val dim = rows0.head.getSeq[Long](1).length
+    val dim = centRows.head.getSeq[Long](2).length
+    val (cbFlat0, nc, sub) = flatCodebook(cbRows, m)
+    // the coarse grid is one "group" spanning the full code — flatten's
+    // dense-grid/duplicate/length enforcement covers it too
+    val centFlat0 = flatten(centRows, 1, centRows.length, dim)
     // density-adaptive training (refineIters > 0): the hash-sampled
     // grids above stay the INITIALIZERS, and [[refineFlat]] runs
     // integer Lloyd over the corpus — codebook per subspace, coarse
     // quantizer over full codes. Both refined grids remain exact
     // integer tables, so encode/routing/ADC determinism is unchanged.
-    val codebook =
-      if (refineIters == 0) codebook0
-      else {
-        val rows = codebook0.collect() // local frame, ≤ m·nc rows
-        val (flat, nc2, sub) = flatCodebook(rows, m)
-        val refined = refineFlat(refineInput(corpus, vecCol),
-          flat, m, nc2, sub, refineIters)
-        val outRows = for (g <- 0 until m; c <- 0 until nc2) yield
-          org.apache.spark.sql.Row(g, c,
-            refined.slice((g * nc2 + c) * sub, (g * nc2 + c + 1) * sub).toSeq)
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(outRows.toIndexedSeq, 1),
-          codebook0.schema)
-      }
-    val centroids = {
-      val rows =
-        if (refineIters == 0) rows0.toIndexedSeq
-        else {
-          val nCells = rows0.length
-          val flat = new Array[Long](nCells * dim)
-          rows0.foreach { r =>
-            val cell = r.getInt(0)
-            val cc = r.getSeq[Long](1)
-            require(cell >= 0 && cell < nCells, s"non-dense cell id $cell")
-            require(cc.length == dim,
-              s"centroid dim ${cc.length} != $dim at cell $cell")
-            var i = 0
-            while (i < dim) { flat(cell * dim + i) = cc(i); i += 1 }
-          }
-          // the coarse grid is one "subspace" spanning the full code
-          val refined = refineFlat(refineInput(corpus, vecCol),
-            flat, 1, nCells, dim, refineIters)
-          (0 until nCells).map { cell =>
-            val cc = refined.slice(cell * dim, (cell + 1) * dim)
-            org.apache.spark.sql.Row(cell, cc.toSeq,
-              cc.foldLeft(0L)((a, v) => a + v * v))
-          }
-        }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), centBuilt.schema)
-    }
-    val encoded = encodeAndRoute(corpus, idCol, vecCol, codebook, m, centroids)
-    PqIndex(m, nc, nlist, dim, codebook, centroids, encoded)
+    def refined(flat: Array[Long], groups: Int, n: Int, width: Int) =
+      if (refineIters == 0) flat
+      else refineFlat(refineInput(corpus, vecCol), flat, groups, n, width, refineIters)
+    val cbFlat = refined(cbFlat0, m, nc, sub)
+    val centFlat = refined(centFlat0, 1, centRows.length, dim)
+    pqIndex(corpus.sparkSession, m, nc, nlist, dim, cbFlat, centFlat,
+      encodeAndRoute(corpus, idCol, vecCol, m, nc, cbFlat, dim, centFlat))
   }
 
   /** Corpus → (id, codes, cell) in ONE fused projection: the
@@ -518,38 +492,23 @@ object Pq {
     * (plus each side's own [[Parallelism.widen]] repartition) — four
     * corpus-proportional exchanges per index build/append for what is
     * a per-row computation. Identical rows: the join was on unique
-    * ids, and both kernels are deterministic per-row functions.
+    * ids, and both kernels are deterministic per-row functions. The
+    * grids arrive as flat arrays, so this runs no job.
     */
   private def encodeAndRoute(
       corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, m: Int, centroids: DataFrame
+      m: Int, nc: Int, cbFlat: Array[Long], dim: Int, centFlat: Array[Long]
   ): DataFrame = {
-    val cbRows = codebook.select(col("subspace").cast(IntegerType),
-      col("code").cast(IntegerType), col("cw")).collect()
-    require(cbRows.nonEmpty, "empty codebook — build it on a non-empty corpus")
-    require(cbRows.length % m == 0,
-      s"codebook rows ${cbRows.length} not a complete m=$m grid")
-    val nc = cbRows.length / m
-    val sub = cbRows.head.getSeq[Long](2).length
-    val flatCb = flatten(cbRows, m, nc, sub)
-    // the coarse grid is one "group" spanning the full code — reuse
-    // flatten's dense-grid/duplicate/length enforcement for it too
-    val centRows = centroids
-      .select(lit(0).as("grp"), col("cell").cast(IntegerType), col("ccode"))
-      .collect()
-    require(centRows.nonEmpty, "empty centroid table")
-    val dim = centRows.head.getSeq[Long](2).length
-    val nCells = centRows.length
-    val flatCent = flatten(centRows, 1, nCells, dim)
+    val sub = cbFlat.length / (m * nc)
     // the per-row m×ncode + nlist argmins are the cost, not the scan
     widen(corpus).select(
       col(idCol).as("id"),
       graft.functions.VectorFunctions.pqEncodeCodes(
         Similarity.int8Quantize(col(vecCol)).getField("q"),
-        flatCb, m, nc, sub).as("codes"),
+        cbFlat, m, nc, sub).as("codes"),
       element_at(graft.functions.VectorFunctions.pqEncodeCodes(
         Similarity.int8Quantize(col(vecCol)).getField("q"),
-        flatCent, 1, nCells, dim), lit(1)).as("cell"))
+        centFlat, 1, centFlat.length / dim, dim), lit(1)).as("cell"))
   }
 
   /** ADC top-k against a built [[PqIndex]]: per-query top `k` ids by
@@ -627,48 +586,24 @@ object Pq {
   // Persisted IVF-PQ index — the build-once / probe-many serving split
   // ---------------------------------------------------------------------
 
-  /** Index parameters persisted as `meta.txt` beside the data (the
-    * [[Ivf.writeInt8Index]] contract): key=value lines. A probe or
-    * append against mismatched parameters would score in a silently
-    * different space — both validate against this file and fail
-    * loudly instead.
+  /** Index parameters — the parameter lines of the index's manifest
+    * ([[graft.sources.IndexManifest]]). A probe or append against
+    * mismatched parameters would score in a silently different space —
+    * both validate against them and fail loudly instead.
     */
   private[operators] final case class PqIndexMeta(
-      m: Int, nc: Int, nlist: Int, dim: Int)
+      m: Int, nc: Int, nlist: Int, dim: Int) {
+    def params: Seq[(String, String)] = Seq("format" -> "ivf_pq", "m" -> s"$m",
+      "nc" -> s"$nc", "nlist" -> s"$nlist", "dim" -> s"$dim")
+  }
 
   private[operators] object PqIndexMeta {
-    private def metaPath(path: String) =
-      new org.apache.hadoop.fs.Path(s"$path/meta.txt")
-
-    def write(spark: org.apache.spark.sql.SparkSession, path: String,
-        meta: PqIndexMeta): Unit = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(p, true)
-      try out.write((s"format=ivf_pq\nm=${meta.m}\nnc=${meta.nc}\n" +
-        s"nlist=${meta.nlist}\ndim=${meta.dim}\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-
-    def read(spark: org.apache.spark.sql.SparkSession,
-        path: String): Option[PqIndexMeta] = {
-      val p = metaPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val kv = text.linesIterator.filter(_.contains("="))
-          .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-        require(kv.get("format").contains("ivf_pq"),
-          s"$p is not an ivf_pq index meta (format=${kv.get("format")})")
-        Some(PqIndexMeta(kv("m").toInt, kv("nc").toInt,
-          kv("nlist").toInt, kv("dim").toInt))
-      }
-    }
+    def of(manifest: IndexManifest): PqIndexMeta = PqIndexMeta(manifest.intParam("m"),
+      manifest.intParam("nc"), manifest.intParam("nlist"), manifest.intParam("dim"))
   }
+
+  private def manifestAt(spark: SparkSession, path: String): IndexManifest =
+    IndexManifest.load(spark, path, "ivf_pq")
 
   /** Write (or grow) the PERSISTED IVF-PQ index — the serving shape of
     * a 100 TB deployment, where the corpus is encoded once per refresh
@@ -687,53 +622,20 @@ object Pq {
     *    codeword values are in [-127, 127], no shift needed.
     *  - `centroids/`: (cell, ccode array<tinyint>) — the coarse
     *    quantizer's full int8 code vectors.
-    *  - `meta.txt`: m, nc, nlist, dim ([[PqIndexMeta]]).
+    *  - `meta.txt`: the manifest — m, nc, nlist, dim ([[PqIndexMeta]])
+    *    plus every committed file. Its rename commits a write: the
+    *    datasets are staged first, and an overwrite deletes the old
+    *    files only after the new manifest is in place.
     *
     * `mode="append"` is the corpus-growth workflow: the increment is
     * encoded under the EXISTING codebook and routed by the EXISTING
     * centroids (read back from disk — fresh quantizers would place old
-    * and new vectors in incomparable spaces) and its code rows append
-    * to `cells/`; codebook, centroids and meta are untouched. Callers
-    * own id disjointness across increments (the
-    * [[Dedup.writeMinHashIndex]] contract), and every increment row's
-    * dim is validated against the index.
+    * and new vectors in incomparable spaces) and its code files join
+    * `cells/` in a new manifest version; codebook, centroids and the
+    * parameters are untouched. Callers own id disjointness across
+    * increments (the [[Dedup.writeMinHashIndex]] contract), and every
+    * increment row's dim is validated against the index.
     */
-  /** Persist an already-built [[PqIndex]] (fresh builds only — append
-    * needs the raw increment, use the corpus form). Callers holding a
-    * session-shared index avoid re-paying the encode.
-    */
-  def writeIndex(index: PqIndex, path: String, mode: String): Unit = {
-    require(mode != "append",
-      "append needs the raw increment corpus — use the corpus form")
-    val spark = index.encoded.sparkSession
-    // the three dataset writes are independent (disjoint directories,
-    // deterministic projections) — overlap them (Actions scaladoc);
-    // meta is written strictly AFTER all three, preserving the
-    // "meta present ⇒ index complete" reader contract
-    Actions.runConcurrently(
-      () => index.codebook
-        .select(col("subspace"), col("code"),
-          col("cw").cast("array<tinyint>").as("cw"))
-        .coalesce(1).write.mode(mode).parquet(s"$path/codebook"),
-      () => index.centroids
-        .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
-        .coalesce(1).write.mode(mode).parquet(s"$path/centroids"),
-      () => index.encoded
-        .select(col("id"),
-          transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-          col("cell"))
-        // co-locate cells before the partitioned write (the
-        // writeInt8Index discipline): without this every task splits
-        // into every cell — tasks × nlist small files at corpus scale
-        .repartition(col("cell"))
-        .write.mode(mode)
-        // a fresh build must REPLACE cells/ wholesale (see writeInt8Index)
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$path/cells"))
-    PqIndexMeta.write(spark, path,
-      PqIndexMeta(index.m, index.nc, index.nlist, index.dim))
-  }
-
   def writeIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       m: Int = 8, ncode: Int = 256, nlist: Int = 64, mode: String = "error",
@@ -751,97 +653,125 @@ object Pq {
       return
     }
     val spark = corpus.sparkSession
-    val meta = PqIndexMeta.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no meta.txt under $path — not a written ivf_pq index"))
+    val manifest = manifestAt(spark, path)
+    val meta = PqIndexMeta.of(manifest)
     require(meta.m == m && meta.nlist == nlist,
       s"index at $path was built with m=${meta.m}/nlist=${meta.nlist}; " +
         s"cannot append with m=$m/nlist=$nlist")
-    appendEncoded(corpus, idCol, vecCol, path, readIndexWithMeta(spark, path, meta))
+    appendEncoded(corpus, idCol, vecCol, path, readIndexFrom(spark, path, manifest), manifest)
   }
 
-  /** The append-mode encode+route+write over ALREADY-READ quantizers —
-    * shared by [[writeIndex]]'s append mode and [[ingestBatchTo]] (which
-    * also probed with the same index object and must not pay the
-    * codebook/centroid collects twice per fold step).
+  /** Persist an already-built [[PqIndex]] (fresh builds only — append
+    * needs the raw increment, use the corpus form). Callers holding a
+    * session-shared index avoid re-paying the encode.
+    */
+  def writeIndex(index: PqIndex, path: String, mode: String): Unit = {
+    require(mode != "append",
+      "append needs the raw increment corpus — use the corpus form")
+    val spark = index.encoded.sparkSession
+    val base = IndexManifest.base(spark, path, mode)
+    // the three dataset writes are independent (disjoint directories,
+    // deterministic projections) — overlap them (Actions scaladoc); the
+    // manifest commits strictly AFTER all three
+    val written = Actions.runConcurrently(
+      () => IndexManifest.write(index.codebook
+        .select(col("subspace"), col("code"),
+          col("cw").cast("array<tinyint>").as("cw"))
+        .coalesce(1), path, "codebook", None),
+      () => IndexManifest.write(index.centroids
+        .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
+        .coalesce(1), path, "centroids", None),
+      () => IndexManifest.write(index.encoded
+        .select(col("id"),
+          transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
+          col("cell"))
+        // co-locate cells before the partitioned write (the
+        // writeInt8Index discipline): without this every task splits
+        // into every cell — tasks × nlist small files at corpus scale
+        .repartition(col("cell")), path, "cells", Some("cell")))
+    IndexManifest.commit(spark, path,
+      PqIndexMeta(index.m, index.nc, index.nlist, index.dim).params, written, base)
+  }
+
+  /** The append-mode encode+route+write over ALREADY-READ quantizers,
+    * committed on top of `base` (the manifest version the increment
+    * extends) — shared by [[writeIndex]]'s append mode and
+    * [[ingestBatchTo]] (which also probed with the same index object
+    * and must not pay the codebook/centroid collects twice per fold
+    * step). The quantizers travel as flat arrays on the index, so the
+    * encode runs no collect.
     *
     * Every increment row's dim must match the index (short vectors
     * would silently truncate-encode): the guard rides INSIDE the
     * encode projection ([[Similarity.requireDim]]) — the separate
     * min/max aggregate this replaces paid one full extra scan of the
     * corpus-proportional embedding column per append (r19, guide
-    * §1.2). A mismatch aborts the append job before its commit, so
-    * the fail-loudly / nothing-written contract is unchanged in kind
-    * (the exception is now a task-raised SparkException instead of a
-    * driver-side IllegalArgumentException).
+    * §1.2). A mismatch aborts the staged write before the manifest
+    * commits, so nothing becomes visible (the exception is a
+    * task-raised SparkException).
     */
   private def appendEncoded(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      index: PqIndex
+      index: PqIndex, base: IndexManifest
   ): Unit = {
     val guarded = corpus.withColumn(vecCol,
       Similarity.requireDim(col(vecCol), index.dim, s"at $path"))
     // encode + route the increment under the FROZEN quantizers; codes
     // come from THIS frame's projection, never a re-read of the index
     // (the writeMinHashIndex quadratic-append hazard)
-    encodeAndRoute(guarded, idCol, vecCol, index.codebook, index.m,
-        index.centroids)
-      .select(col("id"),
-        transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode("append")
-      .partitionBy("cell").parquet(s"$path/cells")
+    val written = IndexManifest.write(
+      encodeAndRoute(guarded, idCol, vecCol, index.m, index.nc,
+          index.codebookFlat, index.dim, index.centroidsFlat)
+        .select(col("id"),
+          transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
+          col("cell"))
+        .repartition(col("cell")), path, "cells", Some("cell"))
+    IndexManifest.commit(corpus.sparkSession, path, base.params, Seq(written), Some(base))
   }
 
-  /** Reconstruct a [[PqIndex]] from a [[writeIndex]] directory: the
-    * codebook and centroids collect to plan-constant local frames
-    * (≤ m·nc and ≤ nlist rows — never touches `cells/` for this);
-    * `encoded` is a LAZY scan of `cells/` with codes widened back
-    * (+128) — data-proportional state stays on disk until a probe
-    * filters it.
+  /** Reconstruct a [[PqIndex]] from a [[writeIndex]] directory at its
+    * current manifest version: the codebook and centroids collect to
+    * plan-constant grids (≤ m·nc and ≤ nlist rows — two jobs, nothing
+    * else: the scans come from the manifest, so there is no listing or
+    * schema inference); `encoded` is a LAZY scan of the version's
+    * `cells/` files with codes widened back (+128) — data-proportional
+    * state stays on disk until a probe filters it.
     */
-  def readIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String
-  ): PqIndex =
-    readIndexWithMeta(spark, path, PqIndexMeta.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no meta.txt under $path — not a written ivf_pq index")))
+  def readIndex(spark: SparkSession, path: String): PqIndex =
+    readIndexFrom(spark, path, manifestAt(spark, path))
 
-  private def readIndexWithMeta(
-      spark: org.apache.spark.sql.SparkSession, path: String, meta: PqIndexMeta
+  private def readIndexFrom(
+      spark: SparkSession, path: String, manifest: IndexManifest
   ): PqIndex = {
-    def localize(df: DataFrame): DataFrame = {
-      val rows = df.collect()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), df.schema)
-    }
+    val meta = PqIndexMeta.of(manifest)
     // the two side-table collects are independent single-file reads —
     // overlap them (guide §2.6): every probe session pays this read
-    var codebook: DataFrame = null
-    var centroids: DataFrame = null
-    Actions.runConcurrently(
-      () => codebook = localize(spark.read.parquet(s"$path/codebook")
+    val Seq(cbRows, centRows) = Actions.runConcurrently(
+      () => manifest.scan(spark, path, "codebook")
         .select(col("subspace").cast(IntegerType), col("code").cast(IntegerType),
-          col("cw").cast("array<bigint>").as("cw"))),
-      () => centroids = localize(spark.read.parquet(s"$path/centroids")
-        .select(col("cell").cast(IntegerType),
-          col("ccode").cast("array<bigint>").as("ccode"))
-        .withColumn("__cc", intDot(col("ccode"), col("ccode")))))
-    PqIndex(meta.m, meta.nc, meta.nlist, meta.dim,
-      codebook, centroids, cellsScan(spark, path))
+          col("cw").cast("array<bigint>"))
+        .collect(),
+      () => manifest.scan(spark, path, "centroids")
+        .select(lit(0), col("cell").cast(IntegerType), col("ccode").cast("array<bigint>"))
+        .collect())
+    require(cbRows.nonEmpty && centRows.nonEmpty, s"index at $path has empty quantizers")
+    val sub = cbRows.head.getSeq[Long](2).length
+    pqIndex(spark, meta.m, meta.nc, meta.nlist, meta.dim,
+      flatten(cbRows, meta.m, meta.nc, sub),
+      flatten(centRows, 1, centRows.length, meta.dim), cellsScan(spark, path, manifest))
   }
 
-  /** The lazy, widened (id, codes, cell) scan of `cells/`. A parquet
-    * read lists files EAGERLY and pins that listing in the plan, so a
-    * fold step probing a growing index must re-create this scan per
-    * step — the quantizer side tables are frozen under append, the
-    * cells listing is not ([[ingestBatchTo]]).
+  /** The lazy, widened (id, codes, cell) scan of `cells/` at one
+    * manifest version: it reads exactly the files that version lists,
+    * so it never sees a later append. A fold step probing a growing
+    * index builds it per step from the current manifest — the
+    * quantizer side tables are frozen under append, the cells are not
+    * ([[ingestBatchTo]]).
     */
   private def cellsScan(
-      spark: org.apache.spark.sql.SparkSession, path: String
+      spark: SparkSession, path: String, manifest: IndexManifest
   ): DataFrame =
-    spark.read.parquet(s"$path/cells")
+    manifest.scan(spark, path, "cells")
       .select(col("id"),
         transform(col("codes"), c => (c.cast(IntegerType) + lit(128))).as("codes"),
         col("cell").cast(IntegerType).as("cell"))
@@ -852,19 +782,19 @@ object Pq {
     * a deployment actually serves): probe `batch`'s vectors against
     * the persisted IVF-PQ index at `path` with `nProbe` ≪ nlist (top-k
     * ADC neighbors among everything previously SEEN, scanning only the
-    * probed cells' code files), hand the neighbor frame to `sink`, then
+    * probed cells' code files), hand the neighbor frame to `sink`, and
     * append the batch under the index's FROZEN quantizers. Drive it
     * from foreachBatch; micro-batches execute strictly in sequence, so
     * batch k retrieves against exactly batches < k.
     *
     * `side` is the index read ONCE per fold ([[readIndex]] before the
-    * stream starts): append never touches codebook/centroids/meta, so
-    * every step runs against one frozen quantizer set instead of
-    * paying two collect jobs per micro-batch (r19, guide §1.2). Only
-    * the `cells/` scan is re-created per step (a parquet read pins its
-    * file listing — see [[cellsScan]]), so each batch's probe sees
-    * every earlier batch's append. The caller owns side/path
-    * consistency.
+    * stream starts): append never touches codebook/centroids or the
+    * parameters, so every step runs against one frozen quantizer set
+    * instead of paying two collect jobs per micro-batch (r19, guide
+    * §1.2). Each step reads the manifest once: the probe scans the
+    * `cells/` files of that version ([[cellsScan]]), so it sees every
+    * earlier batch's append, and the append commits the next version
+    * on top of it. The caller owns side/path consistency.
     *
     * `maxQueries` bounds the RETRIEVAL side of each batch (the
     * [[graft.operators.Sampling.hashRank]]-minima slice, ties by id —
@@ -876,22 +806,26 @@ object Pq {
     * arithmetic (routing, ADC) is BIGINT-exact, so the whole fold is
     * closed-form re-derivable by an external oracle — no goldens.
     *
-    * SINK-BEFORE-APPEND + at-least-once replay marker: the
-    * [[Ivf.ingestAnnBatchTo]] disciplines, verbatim. `sink(neighbors)`
-    * must be an eager ACTION over the frame (a parquet/noop write — it
-    * may not stash the frame for later), and the probe lists `cells/`
-    * and is sunk strictly BEFORE the append (a probe listed after it
-    * would score the batch against its own vectors; PqSpec pins
-    * this). A replayed batchId skips the re-append ([[Dedup.LastBatchMarker]],
-    * written strictly after the append) and re-runs the sink; a
-    * replayed probe then sees the batch already in the index: the
-    * self-pair would take rank 1, so the probe over-fetches k+1, drops
-    * exact id self-pairs, and re-ranks — a singleton batch replays
-    * bit-identically. At-least-once emission stays the caller's sink
-    * concern, keyed by batchId.
+    * PROBE PINNED, SINK OVERLAPPED: the probe frame is built first (its
+    * cell-discovery collect included), pinned to the manifest version
+    * read at the start of the step. `sink(neighbors)` must be an eager
+    * ACTION over the frame (a parquet/noop write — it may not stash the
+    * frame for later); it runs concurrently with the append + replay
+    * marker ([[Actions.runConcurrently]], the
+    * [[Dedup.ingestDedupBatchTo]] shape), and since the append only
+    * commits a LATER version, the probe never scores the batch against
+    * its own vectors (PqSpec pins this). A replayed batchId skips the
+    * re-append ([[Dedup.LastBatchMarker]], written strictly after the
+    * manifest commits) and re-runs the sink — also after a sink failure
+    * whose concurrent append already committed; a replayed probe then
+    * sees the batch already in the index: the self-pair would take
+    * rank 1, so the probe over-fetches k+1, drops exact id self-pairs,
+    * and re-ranks — a singleton batch replays bit-identically.
+    * At-least-once emission stays the caller's sink concern, keyed by
+    * batchId.
     */
   def ingestBatchTo(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+      spark: SparkSession, batch: DataFrame,
       idCol: String, vecCol: String, path: String, side: PqIndex,
       k: Int, nProbe: Int, batchId: Option[Long],
       maxQueries: Int, sink: DataFrame => Unit
@@ -907,17 +841,20 @@ object Pq {
         .limit(maxQueries) // TakeOrderedAndProject — no global sort
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dot").desc, col("id").asc)
-    // the sink action lists and evaluates the probe against the
-    // PRE-append cells/ — strictly before the append mutates them
-    sink(probeIndex(side.copy(encoded = cellsScan(spark, path)),
+    val current = manifestAt(spark, path)
+    val neighbors = probeIndex(side.copy(encoded = cellsScan(spark, path, current)),
         queries, idCol, vecCol, k + 1, nProbe)
       .filter(col("query_id") =!= col("id"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k))
-    if (!alreadyIngested) {
-      appendEncoded(batch, idCol, vecCol, path, side)
-      batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
-    }
+      .filter(col("rank") <= k)
+    if (alreadyIngested) sink(neighbors)
+    else Actions.runConcurrently(
+      () => sink(neighbors),
+      () => {
+        appendEncoded(batch, idCol, vecCol, path, side, current)
+        batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
+      })
+    ()
   }
 
   /** ADC top-k over a [[writeIndex]] index, read with [[readIndex]]:
@@ -934,9 +871,12 @@ object Pq {
     *
     * Callers probing the same persisted index repeatedly read it once
     * and skip the per-call codebook/centroid collects. The probe scans
-    * `index.encoded`, whose file listing was taken when the index was
-    * read ([[cellsScan]]): appends after that read are invisible until
-    * the scan is re-created, as [[ingestBatchTo]] does per step.
+    * `index.encoded`, which holds the `cells/` files of the manifest
+    * version read by [[readIndex]] ([[cellsScan]]): later appends
+    * commit later versions and stay invisible until the scan is
+    * rebuilt from the current manifest, as [[ingestBatchTo]] does per
+    * step. Building the probe runs one job, the probe-cell collect
+    * (none when nProbe == nlist).
     */
   def probeIndex(
       index: PqIndex,

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.config._
 import graft.rules.RuleCompiler
-import graft.rules.RuleCompiler.{emptyErrors, errorEntry}
+import graft.rules.RuleCompiler.errorEntry
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

@@ -1374,8 +1374,8 @@ private[queries] object DedupEntries {
     // The MINHASH leg of index compaction, driver-visible (r17 verdict
     // #6 — the layout was ScalaTest-only): repack the staged seed
     // MinHash index (bands/ re-packed one file per band dir, shingles/
-    // per shard, meta + marker preserved — IndexCompaction.compactIndex
-    // detects the layout from meta.txt) and probe the COMPACTED index
+    // per shard, parameters + marker preserved — IndexCompaction.compactIndex
+    // rewrites every dataset the manifest lists) and probe the COMPACTED index
     // with the non-seed docs. Compaction permutes file placement only:
     // every posting/shingle row survives (including per-increment
     // bucket_size values — the maxBucket cap is a per-row filter), so

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Hive-style partitioned parquet layout — the third skipping
   * mechanism next to [[RangeLayout]]/[[ZOrder]] (row-group stats) and

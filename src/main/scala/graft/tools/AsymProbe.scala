@@ -68,11 +68,11 @@ object AsymProbe {
       val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       val batchSh = graft.operators.Dedup.shingleProjection(
         batch, "doc_id", "text", 3).withColumnRenamed("id", "batch_id")
+      val bandsScan = graft.operators.Dedup.postingsScan(spark, idx.toString)
       val candidates = graft.operators.Dedup.probeCandidates(
-        spark, batchSh, idx.toString, numHashes = 64, bands = 16,
+        bandsScan, batchSh, numHashes = 64, bands = 16,
         maxBucket = 1000).count()
-      val postings = spark.read.parquet(s"$idx/bands")
-        .filter(col("bucket_size") <= 1000).count()
+      val postings = bandsScan.filter(col("bucket_size") <= 1000).count()
       val verified = graft.operators.Dedup.minHashProbeIndex(
         spark, batch, "doc_id", "text", idx.toString, threshold = 0.5).count()
       val nBatch = batch.count()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 class HeavyHittersSpec extends SparkTestBase {
   import spark.implicits._

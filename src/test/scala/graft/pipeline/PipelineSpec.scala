@@ -146,7 +146,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("duplicate_check marks every member of a dup group; field_value=multiple") {
-    import spark.implicits._
     // two rows sharing (timestamp, line_id, batch_number) — unlike the
     // fixture, where timestamps differ and the dup check stays silent
     val csv = tempDir("dup_").resolve("dup.csv")
@@ -266,7 +265,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("error sink truncates FieldValue to 255 chars") {
-    import spark.implicits._
     val longVal = "x" * 400
     val csv = tempDir("trunc_").resolve("trunc.csv")
     Files.writeString(csv,

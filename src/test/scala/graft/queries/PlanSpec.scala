@@ -162,7 +162,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("lm score is a kernel projection: no join, no explode after training") {
-    import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val model = graft.operators.NgramLm.trainModel(docs, "lang", "text")
     val p = graft.operators.NgramLm.score(docs, "doc_id", "lang", "text", model)

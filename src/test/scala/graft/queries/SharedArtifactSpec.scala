@@ -202,7 +202,6 @@ class SharedArtifactSpec extends SparkTestBase {
   }
 
   test("lm model: trained and collected once, shared by score and bands, invisibly") {
-    import org.apache.spark.sql.functions._
     import graft.operators.NgramLm
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val a = SparkEntry.queries("x_lm_score")(spark, sfDir)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Index repack invariants: the compacted index (a) answers probes
   * bit-identically to the fragmented original, (b) actually reduces
-  * the file count the appends accreted, and (c) carries the meta +
-  * replay-marker sidecars forward so the next ingest fold step can
-  * point at the repacked directory unchanged.
+  * the file count the appends accreted, and (c) carries the parameters
+  * (in its own manifest) and the replay marker forward so the next
+  * ingest fold step can point at the repacked directory unchanged.
   */
 class IndexCompactionSpec extends SparkTestBase {
 
@@ -41,11 +41,25 @@ class IndexCompactionSpec extends SparkTestBase {
           queries, "qid", "qv", k = 10, nProbe = 4)
         .collect().map(_.toString).sorted.toSeq
     assert(probe(compacted) == probe(frag))
-    // meta survives: the probe above already validated against it, but
-    // also assert the bytes are verbatim
-    def read(p: String) = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-    assert(read(s"$compacted/meta.txt") == read(s"$frag/meta.txt"))
+    // the output carries its own manifest: the source's parameter lines,
+    // and exactly the compacted files
+    def lines(p: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p, "meta.txt")), "UTF-8").linesIterator.toSeq
+    def params(p: String) = lines(p).filter(l => l.contains("=") &&
+      !l.startsWith("dataset ") && !l.startsWith("file "))
+    assert(params(compacted) == params(frag))
+    assert(params(compacted).exists(_.startsWith("format=")))
+    val listed = lines(compacted).filter(_.startsWith("file ")).map(_.split(" ", 3)(2)).toSet
+    val root = java.nio.file.Paths.get(compacted)
+    val onDisk = {
+      val s = java.nio.file.Files.walk(root)
+      try s.filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet"))
+        .toArray.map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+      finally s.close()
+    }
+    assert(listed == onDisk)
+    assert(listed.size == stats.values.map(_.filesAfter).sum)
   }
 
   test("MinHash: compacted probe pairs are identical, marker survives") {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 class PartitionedLayoutSpec extends SparkTestBase {
-  import spark.implicits._
 
   private val base = s"${System.getProperty("java.io.tmpdir")}/graft_partlayout_spec"
 

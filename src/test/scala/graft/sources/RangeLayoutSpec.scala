@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 class RangeLayoutSpec extends SparkTestBase {
-  import spark.implicits._
 
   private val base = s"${System.getProperty("java.io.tmpdir")}/graft_rangelayout_spec"
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 class ZOrderSpec extends SparkTestBase {
-  import spark.implicits._
 
   private val base = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_spec"
 

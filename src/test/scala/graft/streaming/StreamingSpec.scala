@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.config.XmlConfigParser
-import graft.pipeline.ValidationPipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
