@@ -593,6 +593,20 @@ object Dedup {
     }
   }
 
+  /** `scan` (an index dataset with an `id` column) without the rows of
+    * `batch` when `replay` — the scan a replayed ANN fold step's first
+    * delivery probed, whose append has since committed (exact as long
+    * as the batch's ids are new to the index).
+    */
+  private[operators] def unseen(
+      scan: DataFrame, batch: DataFrame, idCol: String, replay: Boolean
+  ): DataFrame =
+    if (!replay) scan
+    else {
+      val ids = batch.select(col(idCol).as("__batch_id"))
+      scan.join(ids, scan("id") === ids("__batch_id"), "left_anti")
+    }
+
   /** Persist a corpus's MinHash-LSH index so incoming batches can be
     * near-dup-checked WITHOUT re-reading or re-shingling the corpus —
     * the production shape at 100 TB, where each crawl increment is tiny
@@ -646,12 +660,12 @@ object Dedup {
     val params = IndexMeta(shingleSize, numHashes, bands, nShards)
     // append onto an existing index must use ITS parameters, or the
     // increments' buckets/shards live in disjoint hash spaces
-    IndexManifest.read(spark, path).foreach { existing =>
+    val base = IndexManifest.base(spark, path, mode, "minhash")
+    base.foreach { existing =>
       val built = IndexMeta.of(existing)
       require(built == params,
         s"index at $path was built with $built; cannot $mode with $params")
     }
-    val base = IndexManifest.base(spark, path, mode)
     // band from THIS frame's projection, never from a re-read of
     // path/shingles: under mode="append" (the corpus-growth workflow) a
     // re-read would see old increments too and re-append every existing
@@ -663,15 +677,15 @@ object Dedup {
       .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
     val src = if (storage == StorageLevel.NONE) projected else projected.persist(storage)
-    val written = try {
-      val shinglesWrite = () => IndexManifest.write(
+    try IndexManifest.commit(spark, path, params.params, base) { stage =>
+      val shinglesWrite = () => stage.write(
         src
           .withColumn("shard", pmod(xxhash64(col("id")), lit(nShards.toLong)))
           // co-locate shards before the partitioned write: without this,
           // every task splits into every shard — tasks × nShards small
           // files at corpus scale
           .repartition(col("shard")),
-        path, "shingles", Some("shard"))
+        "shingles", Some("shard"))
       // bucket_size via a WINDOW count over (band, bucket), NOT a
       // collect_list+size (a viral duplicate's bucket would be
       // materialized whole in one reducer's non-spillable aggregation
@@ -684,22 +698,23 @@ object Dedup {
       // the file layout the partitionBy("band") write wants.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band"), col("bucket"))
-      val bandsWrite = () => IndexManifest.write(
+      val bandsWrite = () => stage.write(
         src
           .select(col("id"), posexplode(minHashBands(col("sh"), numHashes, bands)))
           .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
           .withColumn("bucket_size", count(lit(1)).over(w).cast(IntegerType))
           .select(col("band"), col("bucket"), col("bucket_size"), col("id")),
-        path, "bands", Some("band"))
+        "bands", Some("band"))
       // the two dataset writes are INDEPENDENT (disjoint directories,
       // both deterministic projections of src) — overlap them so the
       // tail of one write's stages back-fills the other's idle slots
       // (Spark schedules concurrent driver-thread jobs FIFO; the
       // optimization-guide §2.6 shape). Any failure propagates before
-      // the manifest commits, so no reader sees a partial write.
+      // the manifest commits and discards the stage, so no reader
+      // sees a partial write.
       Actions.runConcurrently(shinglesWrite, bandsWrite)
     } finally if (storage != StorageLevel.NONE) src.unpersist()
-    IndexManifest.commit(spark, path, params.params, written, base)
+    ()
   }
 
   /** Near-dup pairs between a new `batch` and an indexed corpus (see

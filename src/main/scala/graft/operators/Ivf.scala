@@ -357,7 +357,7 @@ object Ivf {
       appendInt8(corpus, idCol, vecCol, path, existing, manifest)
       return existing
     }
-    val base = IndexManifest.base(spark, path, mode)
+    val base = IndexManifest.base(spark, path, mode, "ivf_int8")
     val index = {
       val built = buildIndex(corpus, idCol, vecCol, nlist)
       if (refineIters > 0) refineCentroids(corpus, vecCol, built, refineIters)
@@ -368,21 +368,22 @@ object Ivf {
     // (Actions scaladoc). The manifest commits strictly LAST, and it
     // lists only the new files, so cells empty in the new corpus never
     // keep stale ids scored under the old centroids.
-    val written = Actions.runConcurrently(
-      () => {
-        import spark.implicits._
-        IndexManifest.write((0 until index.nlist).map { cell =>
-          (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
-        }.toDF("cell", "c").coalesce(1), path, "centroids", None)
-      },
-      () => IndexManifest.write(int8Assigned(corpus, idCol, vecCol, index)
-        .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
-        // co-locate cells before the partitioned write (the
-        // writeMinHashIndex discipline): without this every task splits
-        // into every cell — tasks × nlist small files at corpus scale
-        .repartition(col("cell")), path, "cells", Some("cell")))
-    IndexManifest.commit(spark, path, Int8IndexMeta(index.nlist, index.dim).params,
-      written, base)
+    val params = Int8IndexMeta(index.nlist, index.dim).params
+    IndexManifest.commit(spark, path, params, base) { stage =>
+      Actions.runConcurrently(
+        () => {
+          import spark.implicits._
+          stage.write((0 until index.nlist).map { cell =>
+            (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
+          }.toDF("cell", "c").coalesce(1), "centroids", None)
+        },
+        () => stage.write(int8Assigned(corpus, idCol, vecCol, index)
+          .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
+          // co-locate cells before the partitioned write (the
+          // writeMinHashIndex discipline): without this every task splits
+          // into every cell — tasks × nlist small files at corpus scale
+          .repartition(col("cell")), "cells", Some("cell")))
+    }
     index
   }
 
@@ -407,10 +408,12 @@ object Ivf {
     // raised from the task instead of the driver.
     val guarded = corpus.withColumn(vecCol,
       Similarity.requireDim(col(vecCol), index.dim, s"at $path"))
-    val written = IndexManifest.write(int8Assigned(guarded, idCol, vecCol, index)
-      .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
-      .repartition(col("cell")), path, "cells", Some("cell"))
-    IndexManifest.commit(corpus.sparkSession, path, base.params, Seq(written), Some(base))
+    IndexManifest.commit(corpus.sparkSession, path, base.params, Some(base)) { stage =>
+      Seq(stage.write(int8Assigned(guarded, idCol, vecCol, index)
+        .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
+        .repartition(col("cell")), "cells", Some("cell")))
+    }
+    ()
   }
 
   /** Reconstruct the coarse quantizer of a [[writeInt8Index]] index
@@ -532,13 +535,13 @@ object Ivf {
     * replayed batch skips the append ([[Dedup.LastBatchMarker]],
     * equality-matched, written strictly after the manifest commits)
     * and re-runs the sink — also after a sink failure whose concurrent
-    * append already committed. A replayed probe then scores against an index already
-    * holding the batch; the self-dot would win every row's rank 1, so
-    * the probe over-fetches k+1, EXCLUDES exact id self-pairs, and
-    * re-ranks — a singleton batch's replay emits bit-identically to
-    * its first delivery (sibling vectors from the same multi-row batch
-    * may still shift a replayed top-k; at-least-once emission stays
-    * the caller's sink contract, keyed by batchId).
+    * append already committed. The replayed probe's version already
+    * holds the batch, so its scan drops the batch's ids
+    * ([[Dedup.unseen]]): the replay emits what the first delivery did,
+    * for any batch size, as long as batch ids are new to the index.
+    * The probe also over-fetches k+1 and EXCLUDES exact id self-pairs
+    * (at-least-once emission stays the caller's sink contract, keyed
+    * by batchId).
     *
     * `nProbe` >= the index's nlist (e.g. `Int.MaxValue`) probes every
     * cell: the retrieval is then the EXACT int8 top-k among seen
@@ -557,8 +560,9 @@ object Ivf {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("int_dot").desc, col("id").asc)
     val current = manifestAt(spark, path)
-    val neighbors = probeInt8(current.scan(spark, path, "cells"), index,
-        batch, idCol, vecCol, k + 1, probe)
+    val neighbors = probeInt8(
+        Dedup.unseen(current.scan(spark, path, "cells"), batch, idCol, alreadyIngested),
+        index, batch, idCol, vecCol, k + 1, probe)
       .filter(col("query_id") =!= col("id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -669,28 +669,30 @@ object Pq {
     require(mode != "append",
       "append needs the raw increment corpus — use the corpus form")
     val spark = index.encoded.sparkSession
-    val base = IndexManifest.base(spark, path, mode)
     // the three dataset writes are independent (disjoint directories,
     // deterministic projections) — overlap them (Actions scaladoc); the
     // manifest commits strictly AFTER all three
-    val written = Actions.runConcurrently(
-      () => IndexManifest.write(index.codebook
-        .select(col("subspace"), col("code"),
-          col("cw").cast("array<tinyint>").as("cw"))
-        .coalesce(1), path, "codebook", None),
-      () => IndexManifest.write(index.centroids
-        .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
-        .coalesce(1), path, "centroids", None),
-      () => IndexManifest.write(index.encoded
-        .select(col("id"),
-          transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-          col("cell"))
-        // co-locate cells before the partitioned write (the
-        // writeInt8Index discipline): without this every task splits
-        // into every cell — tasks × nlist small files at corpus scale
-        .repartition(col("cell")), path, "cells", Some("cell")))
-    IndexManifest.commit(spark, path,
-      PqIndexMeta(index.m, index.nc, index.nlist, index.dim).params, written, base)
+    val params = PqIndexMeta(index.m, index.nc, index.nlist, index.dim).params
+    val base = IndexManifest.base(spark, path, mode, "ivf_pq")
+    IndexManifest.commit(spark, path, params, base) { stage =>
+      Actions.runConcurrently(
+        () => stage.write(index.codebook
+          .select(col("subspace"), col("code"),
+            col("cw").cast("array<tinyint>").as("cw"))
+          .coalesce(1), "codebook", None),
+        () => stage.write(index.centroids
+          .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
+          .coalesce(1), "centroids", None),
+        () => stage.write(index.encoded
+          .select(col("id"),
+            transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
+            col("cell"))
+          // co-locate cells before the partitioned write (the
+          // writeInt8Index discipline): without this every task splits
+          // into every cell — tasks × nlist small files at corpus scale
+          .repartition(col("cell")), "cells", Some("cell")))
+    }
+    ()
   }
 
   /** The append-mode encode+route+write over ALREADY-READ quantizers,
@@ -719,14 +721,16 @@ object Pq {
     // encode + route the increment under the FROZEN quantizers; codes
     // come from THIS frame's projection, never a re-read of the index
     // (the writeMinHashIndex quadratic-append hazard)
-    val written = IndexManifest.write(
-      encodeAndRoute(guarded, idCol, vecCol, index.m, index.nc,
-          index.codebookFlat, index.dim, index.centroidsFlat)
-        .select(col("id"),
-          transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-          col("cell"))
-        .repartition(col("cell")), path, "cells", Some("cell"))
-    IndexManifest.commit(corpus.sparkSession, path, base.params, Seq(written), Some(base))
+    IndexManifest.commit(corpus.sparkSession, path, base.params, Some(base)) { stage =>
+      Seq(stage.write(
+        encodeAndRoute(guarded, idCol, vecCol, index.m, index.nc,
+            index.codebookFlat, index.dim, index.centroidsFlat)
+          .select(col("id"),
+            transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
+            col("cell"))
+          .repartition(col("cell")), "cells", Some("cell")))
+    }
+    ()
   }
 
   /** Reconstruct a [[PqIndex]] from a [[writeIndex]] directory at its
@@ -817,12 +821,13 @@ object Pq {
     * its own vectors (PqSpec pins this). A replayed batchId skips the
     * re-append ([[Dedup.LastBatchMarker]], written strictly after the
     * manifest commits) and re-runs the sink — also after a sink failure
-    * whose concurrent append already committed; a replayed probe then
-    * sees the batch already in the index: the self-pair would take
-    * rank 1, so the probe over-fetches k+1, drops exact id self-pairs,
-    * and re-ranks — a singleton batch replays bit-identically.
-    * At-least-once emission stays the caller's sink concern, keyed by
-    * batchId.
+    * whose concurrent append already committed. The replayed probe's
+    * version already holds the batch, so its scan drops the batch's ids
+    * ([[Dedup.unseen]]) and the replay emits what the first delivery
+    * did, for any batch size, as long as batch ids are new to the
+    * index. The probe also over-fetches k+1 and drops exact id
+    * self-pairs. At-least-once emission stays the caller's sink
+    * concern, keyed by batchId.
     */
   def ingestBatchTo(
       spark: SparkSession, batch: DataFrame,
@@ -842,7 +847,9 @@ object Pq {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dot").desc, col("id").asc)
     val current = manifestAt(spark, path)
-    val neighbors = probeIndex(side.copy(encoded = cellsScan(spark, path, current)),
+    val neighbors = probeIndex(
+        side.copy(encoded = Dedup.unseen(cellsScan(spark, path, current), batch, idCol,
+          alreadyIngested)),
         queries, idCol, vecCol, k + 1, nProbe)
       .filter(col("query_id") =!= col("id"))
       .withColumn("rank", row_number().over(w))

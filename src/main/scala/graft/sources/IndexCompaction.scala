@@ -85,16 +85,17 @@ object IndexCompaction {
     // the per-dataset rewrites are independent (disjoint source and
     // destination directories) — overlap them so one dataset's write
     // tail back-fills the other's idle slots (Actions scaladoc)
-    val written = graft.operators.Actions.runConcurrently(manifest.datasets.map { d =>
-      () => {
-        val df = manifest.scan(spark, inPath, d.name)
-        IndexManifest.write(d.partitionCol match {
-          case Some(pc) => df.repartition(col(pc))
-          case None => df.coalesce(1)
-        }, outPath, d.name, d.partitionCol)
-      }
-    }: _*)
-    IndexManifest.commit(spark, outPath, manifest.params, written, base = None)
+    val written = IndexManifest.commit(spark, outPath, manifest.params, base = None) { stage =>
+      graft.operators.Actions.runConcurrently(manifest.datasets.map { d =>
+        () => {
+          val df = manifest.scan(spark, inPath, d.name)
+          stage.write(d.partitionCol match {
+            case Some(pc) => df.repartition(col(pc))
+            case None => df.coalesce(1)
+          }, d.name, d.partitionCol)
+        }
+      }: _*)
+    }
     copyFileIfExists(spark, s"$inPath/last_batch.txt", s"$outPath/last_batch.txt")
     written.map { w =>
       val before = manifest.filesOf(w.dataset.name)

@@ -18,15 +18,17 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * file 1834 cells/cell=3/part-00000-….snappy.parquet
   * }}}
   *
-  * Writers ([[write]]) let Spark write into a hidden `_staging-<uuid>`
-  * dir under the root (ignored by every Parquet reader: `_`-prefixed,
-  * no `=`), list only that dir, and move its files into the dataset's
-  * partition dirs; [[commit]] then replaces `meta.txt` by a rename, and
-  * that rename is the commit point. A file outside the manifest — a
-  * torn append's output, a stray copy — is never read through it.
-  * After a replacing commit the old version's files are deleted, so
-  * each dataset dir stays a plain partitioned Parquet table holding
-  * exactly the committed files.
+  * Writers ([[IndexManifest.commit]]) let Spark write every dataset
+  * into one hidden `_staging-<uuid>` dir under the root (ignored by
+  * every Parquet reader: `_`-prefixed, no `=`) and list only that dir.
+  * Only when every dataset is staged do the files move into the
+  * datasets' partition dirs, and a rename then replaces `meta.txt`:
+  * that rename is the commit point. A failed write removes what it
+  * staged or moved. A file outside the manifest — a crashed write's
+  * output, a stray copy — is never read through it. After a replacing
+  * commit the old version's files are deleted, so each dataset dir
+  * stays a plain partitioned Parquet table holding exactly the
+  * committed files.
   *
   * Readers ([[IndexManifest.scan]]) build each dataset's scan from one
   * manifest version with its recorded schema: no listing, no schema
@@ -148,87 +150,119 @@ private[graft] object IndexManifest {
     IndexManifest(params.result(), datasets.result(), files.result())
   }
 
-  /** The committed manifest a write in `mode` builds on (None: the write
-    * starts a fresh index). `append` extends the current version,
-    * `overwrite` replaces it, and `error`/`errorifexists` refuse a
-    * non-empty root.
+  /** True when `root` does not exist or holds nothing but hidden
+    * entries (a crashed write's staging dir is never read).
     */
-  def base(spark: SparkSession, root: String, mode: String): Option[IndexManifest] =
+  private def vacant(fs: FileSystem, root: Path): Boolean =
+    !fs.exists(root) || fs.listStatus(root).forall(s => hidden(s.getPath.getName))
+
+  /** The committed manifest of the `format` index a write in `mode`
+    * builds on (None: the write starts a fresh index). `append` extends
+    * the current version — a root that holds anything must then carry
+    * a manifest of this layout with its dataset lines, or the append
+    * fails loudly (committing only the increment would silently drop
+    * the unlisted corpus); `overwrite` replaces it, and
+    * `error`/`errorifexists` refuse a non-empty root.
+    */
+  def base(spark: SparkSession, root: String, mode: String, format: String): Option[IndexManifest] = {
+    val p = new Path(root)
+    val fs = fsOf(spark, p)
     mode.toLowerCase(java.util.Locale.ROOT) match {
-      case "append" => read(spark, root)
+      case "append" if vacant(fs, p) => None
+      case "append" =>
+        val m = load(spark, root, format)
+        require(m.datasets.nonEmpty,
+          s"$root/meta.txt lists no datasets (written before index manifests) — rebuild the index")
+        Some(m)
       case "overwrite" => None
       case "error" | "errorifexists" | "default" =>
-        val p = new Path(root)
-        val fs = fsOf(spark, p)
-        require(!fs.exists(p) || fs.listStatus(p).isEmpty,
-          s"index path $root already exists and is not empty (mode=$mode)")
+        require(vacant(fs, p), s"index path $root already exists and is not empty (mode=$mode)")
         None
       case other => throw new IllegalArgumentException(
         s"unsupported index write mode '$other' (append, overwrite or error)")
     }
-
-  /** Write `df` as new files of dataset `name` of the index at `root`,
-    * partitioned by `partitionCol`: Spark writes into a hidden staging
-    * dir, the driver lists only that dir and moves its files into
-    * `root/name/`. Nothing is visible to a manifest reader until
-    * [[commit]].
-    */
-  def write(df: DataFrame, root: String, name: String, partitionCol: Option[String]): Written = {
-    val spark = df.sparkSession
-    val rootPath = qualified(spark, root)
-    val fs = fsOf(spark, rootPath)
-    val stage = new Path(rootPath, s"_staging-${UUID.randomUUID()}")
-    try {
-      val w = df.write
-      partitionCol.fold(w)(w.partitionBy(_)).parquet(stage.toString)
-      val prefix = stage.toUri.getPath + "/"
-      val entries = listFiles(fs, stage).filterNot(f => hidden(f.getPath.getName)).map { f =>
-        val rel = s"$name/${f.getPath.toUri.getPath.stripPrefix(prefix)}"
-        val target = new Path(rootPath, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(f.getPath, target))
-          throw new java.io.IOException(s"could not move ${f.getPath} to $target")
-        Entry(rel, f.getLen)
-      }
-      Written(Dataset(name, GraftManifestScan.nullable(
-        StructType(df.schema.filterNot(f => partitionCol.contains(f.name)))), partitionCol),
-        entries)
-    } finally { fs.delete(stage, true); () }
   }
 
-  /** Commit `written` on top of `base` (the [[base]] of the write) with
-    * `params` as the index parameters: the new `meta.txt` is written
-    * beside the old one and renamed over it. Without a base the commit
-    * replaces the index, and only then are files of the datasets'
-    * dirs that the new version does not list deleted.
+  /** The hidden dir one index write stages its datasets in (ignored by
+    * every Parquet reader: `_`-prefixed, no `=`). Nothing staged is
+    * visible to any reader — a manifest reader or a bare
+    * `spark.read.parquet` of a dataset dir — until [[commit]] moves it.
+    */
+  final class Stage private[IndexManifest] (fs: FileSystem, val dir: Path) {
+
+    /** Write `df` as new files of dataset `name`, partitioned by
+      * `partitionCol`, into `dir/name`, and list only that dir. Each
+      * entry's path under the stage is its path under the index root.
+      */
+    def write(df: DataFrame, name: String, partitionCol: Option[String]): Written = {
+      val w = df.write
+      partitionCol.fold(w)(w.partitionBy(_)).parquet(new Path(dir, name).toString)
+      val prefix = dir.toUri.getPath + "/"
+      Written(Dataset(name, GraftManifestScan.nullable(
+        StructType(df.schema.filterNot(f => partitionCol.contains(f.name)))), partitionCol),
+        listFiles(fs, new Path(dir, name)).filterNot(f => hidden(f.getPath.getName))
+          .map(f => Entry(f.getPath.toUri.getPath.stripPrefix(prefix), f.getLen)))
+    }
+  }
+
+  /** Write one new version of the index at `root` on top of `base` (the
+    * [[base]] of the write) with `params` as the index parameters:
+    * `writes` stages the datasets' new files ([[Stage.write]], run
+    * concurrently or not), then the files move into the datasets'
+    * partition dirs and a new `meta.txt`, written into the stage, is
+    * renamed over the old one. Any failure before that rename deletes
+    * the stage and every file already moved, so the dataset dirs keep
+    * exactly the committed files. Without a base the commit replaces
+    * the index, and only after the rename are the old version's files
+    * deleted. Returns what `writes` staged.
     */
   def commit(
       spark: SparkSession, root: String, params: Seq[(String, String)],
-      written: Seq[Written], base: Option[IndexManifest]
-  ): Unit = {
-    val old = base.map(_.datasets).getOrElse(Nil)
-    written.foreach { w =>
-      old.find(_.name == w.dataset.name).foreach { d =>
-        require(d == w.dataset, s"index at $root: appended ${w.dataset} does not match $d")
-      }
-    }
-    val next = IndexManifest(params,
-      old ++ written.map(_.dataset).filterNot(d => old.exists(_.name == d.name)),
-      base.map(_.files).getOrElse(Nil) ++ written.flatMap(_.files))
+      base: Option[IndexManifest]
+  )(writes: Stage => Seq[Written]): Seq[Written] = {
     val rootPath = qualified(spark, root)
     val fs = fsOf(spark, rootPath)
-    val tmp = new Path(rootPath, s"_meta-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(next.text.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(rootPath.toUri, spark.sessionState.newHadoopConf())
-      .rename(tmp, new Path(rootPath, "meta.txt"), Options.Rename.OVERWRITE)
-    if (base.isEmpty) {
-      val keep = next.files.map(e => new Path(rootPath, e.path)).toSet
-      next.datasets.map(d => new Path(rootPath, d.name)).foreach { dir =>
-        listFiles(fs, dir).map(_.getPath).filterNot(keep).foreach(fs.delete(_, false))
-        fs.listStatus(dir).filter(s => s.isDirectory && fs.listStatus(s.getPath).isEmpty)
-          .foreach(s => fs.delete(s.getPath, true))
+    val stage = new Stage(fs, new Path(rootPath, s"_staging-${UUID.randomUUID()}"))
+    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
+    var committed = false
+    try {
+      val written = writes(stage)
+      base.foreach { b =>
+        written.foreach { w =>
+          require(b.dataset(w.dataset.name) == w.dataset,
+            s"index at $root: appended ${w.dataset} does not match ${b.dataset(w.dataset.name)}")
+        }
       }
-    }
+      val old = base.map(_.datasets).getOrElse(Nil)
+      val next = IndexManifest(params,
+        old ++ written.map(_.dataset).filterNot(d => old.exists(_.name == d.name)),
+        base.map(_.files).getOrElse(Nil) ++ written.flatMap(_.files))
+      val tmp = new Path(stage.dir, "_meta")
+      val out = fs.create(tmp, false)
+      try out.write(next.text.getBytes("UTF-8")) finally out.close()
+      written.flatMap(_.files).foreach { e =>
+        val target = new Path(rootPath, e.path)
+        fs.mkdirs(target.getParent)
+        if (!fs.rename(new Path(stage.dir, e.path), target))
+          throw new java.io.IOException(s"could not move ${e.path} out of ${stage.dir}")
+        moved += target
+      }
+      FileContext.getFileContext(rootPath.toUri, spark.sessionState.newHadoopConf())
+        .rename(tmp, new Path(rootPath, "meta.txt"), Options.Rename.OVERWRITE)
+      committed = true
+      if (base.isEmpty) {
+        val keep = next.files.map(e => new Path(rootPath, e.path)).toSet
+        next.datasets.map(d => new Path(rootPath, d.name)).filter(fs.exists).foreach { dir =>
+          listFiles(fs, dir).map(_.getPath).filterNot(keep).foreach(fs.delete(_, false))
+          fs.listStatus(dir).filter(s => s.isDirectory && fs.listStatus(s.getPath).isEmpty)
+            .foreach(s => fs.delete(s.getPath, true))
+        }
+      }
+      written
+    } catch {
+      case e: Throwable =>
+        if (!committed) moved.foreach(fs.delete(_, false))
+        throw e
+    } finally { fs.delete(stage.dir, true); () }
   }
 }

@@ -499,12 +499,15 @@ class IvfSpec extends SparkTestBase {
     val batch1 = emb.filter(pmod(col("vec_id"), lit(3)) === 1)
     Ivf.writeInt8Index(base, "vec_id", "embedding", dir, nlist = 32,
       mode = "overwrite")
-    ingest(batch1, dir, batchId = 0L)
+    val first = ingest(batch1, dir, batchId = 0L)
     val rowsAfter = spark.read.parquet(s"$dir/cells").count()
     assert(rowsAfter == base.count() + batch1.count(),
       "the append must grow the index by the full batch")
     val replayed = ingest(batch1, dir, batchId = 0L)
     assert(replayed.nonEmpty)
+    // the replay probes an index that already holds the batch, yet
+    // emits what the first delivery did: no neighbor from the batch
+    assert(replayed == first)
     assert(spark.read.parquet(s"$dir/cells").count() == rowsAfter,
       "a replayed batch must not re-append")
   }

@@ -374,13 +374,16 @@ class PqSpec extends SparkTestBase {
       val b1 = emb.filter(pmod(col("vec_id"), lit(4)) === 1)
       Pq.writeIndex(seed, "vec_id", "embedding", s"$dir/idx",
         m = 8, ncode = 16, nlist = 8, mode = "overwrite")
-      ingest(b1, s"$dir/idx", batchId = Some(0L))
+      val first = ingest(b1, s"$dir/idx", batchId = Some(0L))
       val rowsAfter = spark.read.parquet(s"$dir/idx/cells").count()
       assert(rowsAfter == seed.count() + b1.count(),
         "the append must grow the index by the full batch")
       // replay: same batchId re-runs the sink, does not re-append
       val replayed = ingest(b1, s"$dir/idx", batchId = Some(0L))
       assert(replayed.nonEmpty)
+      // the replay probes an index that already holds the batch, yet
+      // emits what the first delivery did: no neighbor from the batch
+      assert(replayed.map(_.toString).sorted.toSeq == first.map(_.toString).sorted.toSeq)
       assert(spark.read.parquet(s"$dir/idx/cells").count() == rowsAfter,
         "a replayed batch must not re-append")
     } finally rmTree(dir)

@@ -204,6 +204,67 @@ class IndexManifestSpec extends SparkTestBase {
     assert(e.getMessage.contains("no meta.txt"))
   }
 
+  /** Every file under `dir`, relative to it. */
+  private def tree(dir: String): Set[String] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.filter(Files.isRegularFile(_)).toArray.map(p => Paths.get(dir).relativize(
+      p.asInstanceOf[Path]).toString).toSet
+    finally s.close()
+  }
+
+  private def minHashIndex(name: String): String = {
+    val dir = tempDir(name).resolve("idx").toString
+    Dedup.writeMinHashIndex(docs.limit(50), "doc_id", "text", dir, mode = "overwrite")
+    dir
+  }
+
+  test("an append onto a MinHash dir without a manifest, or with a pre-manifest meta.txt, " +
+      "throws and leaves the existing files in place") {
+    val legacy = "shingleSize=3\nnumHashes=64\nbands=16\nnShards=64\n"
+    Seq(None, Some(legacy)).foreach { meta =>
+      val dir = minHashIndex("mf_mh_append")
+      Files.delete(Paths.get(dir, "meta.txt"))
+      Files.deleteIfExists(Paths.get(dir, ".meta.txt.crc"))
+      meta.foreach(m => Files.write(Paths.get(dir, "meta.txt"), m.getBytes("UTF-8")))
+      val before = tree(dir)
+      val shingles = spark.read.parquet(s"$dir/shingles").count()
+      intercept[IllegalArgumentException] {
+        Dedup.writeMinHashIndex(docs.limit(60), "doc_id", "text", dir, mode = "append")
+      }
+      assert(tree(dir) == before, meta)
+      assert(spark.read.parquet(s"$dir/shingles").count() == shingles, meta)
+    }
+  }
+
+  test("a failed dataset write leaves a concurrent sibling's files out of its dataset dir") {
+    val dir = minHashIndex("mf_sibling")
+    val before = tree(dir)
+    val shingles = spark.read.parquet(s"$dir/shingles").count()
+    val base = IndexManifest.read(spark, dir)
+    val e = intercept[Exception] {
+      IndexManifest.commit(spark, dir, base.get.params, base) { stage =>
+        graft.operators.Actions.runConcurrently(
+          () => stage.write(spark.read.parquet(s"$dir/shingles"), "shingles", Some("shard")),
+          () => stage.write(spark.read.parquet(s"$dir/bands")
+            .withColumn("id", when(col("id") >= 0, raise_error(lit("boom")))
+              .otherwise(col("id"))), "bands", Some("band")))
+      }
+    }
+    assert(e.toString.contains("boom") || Option(e.getCause).exists(_.toString.contains("boom")),
+      e.toString)
+    assert(spark.read.parquet(s"$dir/shingles").count() == shingles)
+    assert(tree(dir) == before)
+  }
+
+  test("an index built from a corpus with no shingles commits and probes empty") {
+    val dir = tempDir("mf_empty").resolve("idx").toString
+    val short = docs.limit(5).withColumn("text", lit("two words"))
+    Dedup.writeMinHashIndex(short, "doc_id", "text", dir, mode = "overwrite")
+    assert(Files.exists(Paths.get(dir, "meta.txt")))
+    assert(Dedup.minHashProbeIndex(spark, docs.limit(5), "doc_id", "text", dir,
+      threshold = 0.0).count() == 0)
+  }
+
   test("an overwrite commits the new manifest and leaves only its files") {
     val dir = pqIndex("mf_over")
     val first = Files.walk(Paths.get(dir, "cells")).filter(Files.isRegularFile(_))
