@@ -561,52 +561,6 @@ object Dedup {
       m.intParam("numHashes"), m.intParam("bands"), m.intParam("nShards"))
   }
 
-  /** Last-ingested micro-batch id, persisted as `last_batch.txt` beside
-    * the index data — the [[ingestDedupBatchTo]] / [[Ivf.ingestAnnBatchTo]]
-    * replay guard. Only the last uncommitted batch can replay under
-    * sequential micro-batching, so a single marker matched by EQUALITY
-    * suffices (and a fresh checkpoint over an existing index, ids
-    * restarting at 0, never silently skips appends).
-    */
-  private[operators] object LastBatchMarker {
-    private def markerPath(path: String) =
-      new org.apache.hadoop.fs.Path(s"$path/last_batch.txt")
-
-    def write(spark: org.apache.spark.sql.SparkSession, path: String, id: Long): Unit = {
-      val p = markerPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(p, true)
-      try out.write(s"$id\n".getBytes("UTF-8")) finally out.close()
-    }
-
-    def read(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] = {
-      val p = markerPath(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.trim.toLongOption
-      }
-    }
-  }
-
-  /** `scan` (an index dataset with an `id` column) without the rows of
-    * `batch` when `replay` — the scan a replayed ANN fold step's first
-    * delivery probed, whose append has since committed (exact as long
-    * as the batch's ids are new to the index).
-    */
-  private[operators] def unseen(
-      scan: DataFrame, batch: DataFrame, idCol: String, replay: Boolean
-  ): DataFrame =
-    if (!replay) scan
-    else {
-      val ids = batch.select(col(idCol).as("__batch_id"))
-      scan.join(ids, scan("id") === ids("__batch_id"), "left_anti")
-    }
-
   /** Persist a corpus's MinHash-LSH index so incoming batches can be
     * near-dup-checked WITHOUT re-reading or re-shingling the corpus —
     * the production shape at 100 TB, where each crawl increment is tiny
@@ -656,16 +610,30 @@ object Dedup {
       nShards: Int = 64,
       storage: StorageLevel = StorageLevel.NONE
   ): Unit = {
-    val spark = corpus.sparkSession
     val params = IndexMeta(shingleSize, numHashes, bands, nShards)
     // append onto an existing index must use ITS parameters, or the
     // increments' buckets/shards live in disjoint hash spaces
-    val base = IndexManifest.base(spark, path, mode, "minhash")
+    val base = IndexManifest.base(corpus.sparkSession, path, mode, "minhash")
     base.foreach { existing =>
       val built = IndexMeta.of(existing)
       require(built == params,
         s"index at $path was built with $built; cannot $mode with $params")
     }
+    appendMinHash(corpus, idCol, textCol, path, params, base, storage)
+  }
+
+  /** The shingle + posting write of `corpus` under `meta`, committed
+    * on top of `base` with its parameter lines (replay marker included),
+    * or as a fresh index with `meta`'s when there is none — shared by
+    * [[writeMinHashIndex]] and [[ingestDedupBatchTo]], whose append
+    * extends the manifest version its probe read.
+    */
+  private def appendMinHash(
+      corpus: DataFrame, idCol: String, textCol: String, path: String,
+      meta: IndexMeta, base: Option[IndexManifest],
+      storage: StorageLevel = StorageLevel.NONE
+  ): Unit = {
+    val spark = corpus.sparkSession
     // band from THIS frame's projection, never from a re-read of
     // path/shingles: under mode="append" (the corpus-growth workflow) a
     // re-read would see old increments too and re-append every existing
@@ -674,13 +642,13 @@ object Dedup {
     // inside this call, so an optional persist (one shingle-kernel run
     // instead of two) can be released before returning.
     val projected = corpus
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
+      .select(col(idCol).as("id"), shingles(col(textCol), meta.shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
     val src = if (storage == StorageLevel.NONE) projected else projected.persist(storage)
-    try IndexManifest.commit(spark, path, params.params, base) { stage =>
+    try IndexManifest.commit(spark, path, base.fold(meta.params)(_.params), base) { stage =>
       val shinglesWrite = () => stage.write(
         src
-          .withColumn("shard", pmod(xxhash64(col("id")), lit(nShards.toLong)))
+          .withColumn("shard", pmod(xxhash64(col("id")), lit(meta.nShards.toLong)))
           // co-locate shards before the partitioned write: without this,
           // every task splits into every shard — tasks × nShards small
           // files at corpus scale
@@ -700,7 +668,7 @@ object Dedup {
         .partitionBy(col("band"), col("bucket"))
       val bandsWrite = () => stage.write(
         src
-          .select(col("id"), posexplode(minHashBands(col("sh"), numHashes, bands)))
+          .select(col("id"), posexplode(minHashBands(col("sh"), meta.numHashes, meta.bands)))
           .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
           .withColumn("bucket_size", count(lit(1)).over(w).cast(IntegerType))
           .select(col("band"), col("bucket"), col("bucket_size"), col("id")),
@@ -766,8 +734,17 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucket: Int = 1000
+  ): DataFrame =
+    probeMinHash(IndexManifest.load(spark, path, "minhash"), batch, idCol, textCol, path,
+      shingleSize, numHashes, bands, threshold, maxBucket)
+
+  /** [[minHashProbeIndex]] over one manifest version of the index at `path`. */
+  private def probeMinHash(
+      manifest: IndexManifest, batch: DataFrame, idCol: String, textCol: String,
+      path: String, shingleSize: Int, numHashes: Int, bands: Int,
+      threshold: Double, maxBucket: Int
   ): DataFrame = {
-    val manifest = IndexManifest.load(spark, path, "minhash")
+    val spark = batch.sparkSession
     val built = IndexMeta.of(manifest)
     val probing = IndexMeta(shingleSize, numHashes, bands, built.nShards)
     require(built == probing,
@@ -881,13 +858,11 @@ object Dedup {
     * plus every earlier increment — which a one-shot probe cannot
     * express.
     *
-    * `sink(novel)` must be an eager ACTION over the frame (a
-    * parquet/noop write — it may not stash the frame for later).
-    * Because the novel frame's lineage reads only `batch` and the
-    * checkpointed probe pairs — never the index — the sink action
-    * runs OVERLAPPED with the index append (guide §2.6): the intra
-    * pass's banding/verify stages back-fill the append writes' stage
-    * tails instead of queueing behind them.
+    * The novel frame's lineage reads only `batch` and the checkpointed
+    * probe pairs — never the index — so `sink(novel)` runs OVERLAPPED
+    * with the index append (guide §2.6): the intra pass's
+    * banding/verify stages back-fill the append writes' stage tails
+    * instead of queueing behind them.
     *
     * Policy, stated not hidden: the index grows by the full batch, not
     * just its novel rows. "Novel" therefore means "no near-dup among
@@ -906,28 +881,12 @@ object Dedup {
     * still grows by the FULL batch either way, so downstream novelty
     * never depends on within-batch survivor choices.
     *
-    * At-least-once replay (`batchId`): foreachBatch can re-deliver a
-    * micro-batch after a failure between this call's index append and
-    * the stream's checkpoint commit. Without a guard, the replay
-    * re-appends the whole batch's postings/shingles — duplicated index
-    * entries, conflicting bucket_size rows, repeated growth. Pass
-    * foreachBatch's `batchId` and each append is recorded in a
-    * `last_batch.txt` marker beside the index: an id EQUAL to the
-    * marker (only the last uncommitted batch can replay under
-    * sequential micro-batching) SKIPS the append and only re-runs the
-    * sink. Equality, not <=, so pointing a FRESH checkpoint at an
-    * existing index (ids restart at 0) never silently skips appends.
-    * Replay emission is dedup-more, never dedup-less: the index
-    * already holds the batch, so within-batch near-dups (kept on first
-    * delivery by policy) anti-join away on replay, while singletons
-    * re-emit identically (exact self-id pairs are excluded by the
-    * probe). The replay marker is written strictly after the append,
-    * so the residual unguarded window is that single marker-file write
-    * — versus the whole sink-write + checkpoint-commit span without
-    * the guard; a sink failure after the marker commits replays as
-    * already ingested, the designed at-least-once path. Idempotence of
-    * the sink's write remains the caller's at-least-once concern (key
-    * it by batchId).
+    * At-least-once replay (`batchId`): the
+    * [[graft.sources.IndexManifest.foldStep]] contract. Replay emission
+    * is dedup-more, never dedup-less: the replay's probe sees the index
+    * that already holds the batch, so within-batch near-dups (kept on
+    * first delivery by policy) anti-join away, while singletons re-emit
+    * identically (exact self-id pairs are excluded by the probe).
     *
     * Caller persists `batch` if re-reading it is expensive — it is
     * scanned by the probe, the anti-join, and the index append.
@@ -947,23 +906,20 @@ object Dedup {
       dedupWithinBatch: Boolean = false,
       sink: DataFrame => Unit
   ): Unit = {
-    val alreadyIngested = batchId.exists { id =>
-      LastBatchMarker.read(spark, path).contains(id)
-    }
-    // MATERIALIZE the probe pairs once (r18): everything downstream
-    // lazily re-evaluates the probe pipeline — with dedupWithinBatch
-    // the anti-joined batch feeds the intra pass's banding branch AND
-    // both payload joins, so one fold step ran the index-postings
-    // join + shard-pruned shingle verification up to four times. The
-    // pair frame is near-dup-pair-bounded (≪ batch), so the eager cut
-    // is cheap and every consumer reads materialized blocks. It is
-    // also what keeps `kept` off the index, so the sink can overlap
-    // the append below.
-    val pairs = minHashProbeIndex(spark, batch, idCol, textCol, path,
-      shingleSize, numHashes, bands, threshold, maxBucket)
-      .localCheckpoint()
-    val afterIndex = keepNovel(batch, idCol, pairs)
-    val kept =
+    IndexManifest.foldStep(spark, path, "minhash", batchId) { (current, _) =>
+      // MATERIALIZE the probe pairs once (r18): everything downstream
+      // lazily re-evaluates the probe pipeline — with dedupWithinBatch
+      // the anti-joined batch feeds the intra pass's banding branch AND
+      // both payload joins, so one fold step ran the index-postings
+      // join + shard-pruned shingle verification up to four times. The
+      // pair frame is near-dup-pair-bounded (≪ batch), so the eager cut
+      // is cheap and every consumer reads materialized blocks. It is
+      // also what keeps `kept` off the index, so the sink can overlap
+      // the append.
+      val pairs = probeMinHash(current, batch, idCol, textCol, path,
+        shingleSize, numHashes, bands, threshold, maxBucket)
+        .localCheckpoint()
+      val afterIndex = keepNovel(batch, idCol, pairs)
       if (!dedupWithinBatch) afterIndex
       else {
         // intra-batch pass over the index-novel rows only (index dups
@@ -982,15 +938,7 @@ object Dedup {
           intra.select(col("id_b").as(idCol)).distinct(),
           Seq(idCol), "left_anti")
       }
-    if (!alreadyIngested) {
-      Actions.runConcurrently(
-        () => sink(kept),
-        () => {
-          writeMinHashIndex(batch, idCol, textCol, path,
-            shingleSize, numHashes, bands, mode = "append")
-          batchId.foreach(LastBatchMarker.write(spark, path, _))
-        })
-    } else sink(kept)
+    }(base => appendMinHash(batch, idCol, textCol, path, IndexMeta.of(base), Some(base)))(sink)
   }
 
   // ---------------------------------------------------------------------

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * candidates with exact cosine.
   *
   * Scale path (100 TB): centroid assignment is one narrow projection
-  * (the centroid table is a plan constant — no join); the assigned
-  * corpus is written `partitionBy("cell")` once, so a query's probes
-  * touch only nProbe/nlist of the files (partition pruning). Here the
-  * cells stay in-memory and the probe is a hash join on the cell id.
+  * (the centroid table is a plan constant — no join); the persisted
+  * index ([[writeInt8Index]]) is written `partitionBy("cell")` once,
+  * so a query's probes touch only nProbe/nlist of the files (partition
+  * pruning). In [[ivfTopK]] the cells stay in-memory and the probe is
+  * a hash join on the cell id.
   *
   * Centroids are a deterministic hashed sample of the corpus (the k
   * vectors with the smallest xxhash64(id)) — reproducible across runs
@@ -219,55 +220,6 @@ object Ivf {
         col("pos").cast("int").as("pos"), col("id"))
   }
 
-  /** Persist the assigned corpus partitioned by cell id — the on-disk
-    * index layout of the 100 TB path. One directory per cell means a
-    * probe's `cell IN (...)` predicate prunes the scan to nProbe/nlist
-    * of the files (asserted in IvfSpec).
-    */
-  def writeIndex(assigned: DataFrame, path: String): Unit =
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** ANN top-k over a written index: compute each query's probe cells,
-    * then scan ONLY those cells' partitions. Only the DISTINCT probe
-    * cells are collected to the driver — at most nlist values, however
-    * many queries are in the batch — to build the partition-pruning
-    * `cell IN (...)` predicate; the (query, cell) probe frame itself
-    * stays a lazy DataFrame on the broadcast side of the join, so a
-    * large query batch never materializes queries×nProbe rows as a
-    * driver-side Array (the broadcast relation is subject to Spark's
-    * broadcast memory accounting instead). The probe projection (a
-    * narrow map over the query batch) is evaluated twice — once for the
-    * distinct cells, once in the join — which is cheaper than pinning
-    * it for the lifetime of the query, but is only CORRECT when the two
-    * evaluations agree: if the query frame contains a nondeterministic
-    * expression (rand-derived ids, sampling), evaluation #2 could probe
-    * a cell the pruning predicate from evaluation #1 never saw, and
-    * that query would silently lose candidates. Such frames are
-    * detected and probed WITHOUT cell pruning (full index scan —
-    * correct, just unpruned). Sources that return different data across
-    * two scans (a directory being concurrently rewritten) are not
-    * detectable here; snapshot such inputs first.
-    */
-  def ivfTopKFromIndex(
-      spark: SparkSession, indexPath: String, index: IvfIndex,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nProbe: Int = 8
-  ): DataFrame = {
-    val probeFrame = probeCells(queries, qidCol, qvecCol, index, nProbe)
-    val deterministic = queries.queryExecution.analyzed
-      .find(_.expressions.exists(!_.deterministic)).isEmpty
-    val all = spark.read.parquet(indexPath)
-    val corpus =
-      if (deterministic) {
-        val cells = probeFrame.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        all.filter(col("cell").isin(cells: _*))
-      } else all
-    rank(corpus.join(broadcast(probeFrame), Seq("cell"))
-      .select(col("query_id"), col("id"),
-        Similarity.cosine(col("v"), col("qv")).as("cosine")), k)
-  }
-
   // ---------------------------------------------------------------------
   // Persisted int8 index — the build-once / probe-many serving split
   // ---------------------------------------------------------------------
@@ -454,12 +406,7 @@ object Ivf {
     * ranking to an in-session [[ivfInt8TopK]] over the same corpus and
     * parameters (both derive from the same assignment + quantization
     * projection; integer scoring has no accumulation-order freedom).
-    * Partition pruning follows the [[ivfTopKFromIndex]] protocol
-    * exactly — distinct probe cells (≤ nlist values) collect to the
-    * driver for the `cell IN (...)` predicate, the probe frame itself
-    * stays on the broadcast side, and a nondeterministic query frame
-    * falls back to an unpruned (correct, full-index) scan; see that
-    * scaladoc for the two-evaluation correctness argument.
+    * The scan is pruned to the probed cells by [[pruneToProbed]].
     *
     * Callers probing the same persisted index repeatedly read the
     * quantizer once and skip the per-call centroid collect. The caller
@@ -477,6 +424,41 @@ object Ivf {
     probeInt8(manifestAt(spark, indexPath).scan(spark, indexPath, "cells"),
       index, queries, qidCol, qvecCol, k, nProbe)
 
+  /** `cells` (a persisted index's cell-partitioned scan) pruned to the
+    * cells `probes` (one row per query and probed cell) routes
+    * `queries` to. Only the DISTINCT probe cells are collected to the
+    * driver — at most nlist values, however many queries are in the
+    * batch — to build the partition-pruning `cell IN (...)` predicate;
+    * the probe frame itself stays a lazy DataFrame on the broadcast
+    * side of the caller's join, so a large query batch never
+    * materializes queries×nProbe rows as a driver-side Array. The
+    * probe projection (a narrow map over the query batch) is evaluated
+    * twice — once for the distinct cells, once in the join — which is
+    * cheaper than pinning it for the lifetime of the query, but is only
+    * CORRECT when the two evaluations agree: if the query frame
+    * contains a nondeterministic expression (rand-derived ids,
+    * sampling), evaluation #2 could probe a cell the predicate from
+    * evaluation #1 never saw, and that query would silently lose
+    * candidates. Such frames are detected and probed WITHOUT pruning
+    * (full index scan — correct, just unpruned). Sources that return
+    * different data across two scans (a directory being concurrently
+    * rewritten) are not detectable here; snapshot such inputs first.
+    * `exhaustive` (every cell probed) skips the collect: it would be
+    * one wasted job ending in an always-true filter, paid per
+    * micro-batch by the exhaustive ingest fold.
+    */
+  private[operators] def pruneToProbed(
+      cells: DataFrame, queries: DataFrame, probes: DataFrame, exhaustive: Boolean
+  ): DataFrame =
+    if (exhaustive ||
+        queries.queryExecution.analyzed.find(_.expressions.exists(!_.deterministic)).nonEmpty)
+      cells
+    else {
+      val hit = probes.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).toSeq // <= nlist values
+      cells.filter(col("cell").isin(hit: _*))
+    }
+
   /** [[ivfInt8ProbeIndex]] over one manifest version's `cells/` scan. */
   private def probeInt8(
       cells: DataFrame, index: IvfIndex,
@@ -486,19 +468,9 @@ object Ivf {
     require(nProbe >= 1 && nProbe <= index.nlist,
       s"nProbe $nProbe out of range for nlist=${index.nlist}")
     val probes = int8Probes(queries, qidCol, qvecCol, index, nProbe)
-    val deterministic = queries.queryExecution.analyzed
-      .find(_.expressions.exists(!_.deterministic)).isEmpty
-    val all = cells
-      .select(col("id"), col("cell"), col("cq").cast("array<bigint>").as("cq"))
-    // nProbe == nlist probes every cell — the discovery collect would
-    // be one wasted job ending in an always-true filter (the
-    // exhaustive ingest-fold shape pays it per micro-batch)
-    val assigned =
-      if (deterministic && nProbe < index.nlist) {
-        val cells = probes.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq // <= nlist values
-        all.filter(col("cell").isin(cells: _*))
-      } else all
+    val assigned = pruneToProbed(
+      cells.select(col("id"), col("cell"), col("cq").cast("array<bigint>").as("cq")),
+      queries, probes, exhaustive = nProbe == index.nlist)
     rankInt8Probes(assigned, probes, k)
   }
 
@@ -514,34 +486,20 @@ object Ivf {
     *
     * `index` is the coarse quantizer read ONCE per fold
     * ([[readInt8Index]] before the stream starts): append never
-    * touches centroids/meta, so every step runs against one frozen
+    * touches centroids, so every step runs against one frozen
     * centroid set instead of paying the centroid collect per
     * micro-batch (r19, guide §1.2). Each step reads the manifest once:
     * the probe scans that version's `cells/` files, so each batch sees
     * every earlier batch's append, and the append commits the next
     * version on top of it. The caller owns index/path consistency.
     *
-    * PROBE PINNED, SINK OVERLAPPED: the probe frame is built first,
-    * pinned to the step's manifest version, and `sink(neighbors)` —
-    * an eager ACTION over the frame (a parquet/noop write — it may not
-    * stash the frame for later) — runs concurrently with the append +
-    * replay marker ([[Actions.runConcurrently]], the
-    * [[Dedup.ingestDedupBatchTo]] shape). The append commits a LATER
-    * version, which the pinned probe cannot see: it never scores the
-    * batch against its own just-appended vectors (IvfSpec pins this).
-    *
-    * At-least-once replay (`batchId`): same contract as
-    * [[Dedup.ingestDedupBatchTo]] — pass foreachBatch's id and a
-    * replayed batch skips the append ([[Dedup.LastBatchMarker]],
-    * equality-matched, written strictly after the manifest commits)
-    * and re-runs the sink — also after a sink failure whose concurrent
-    * append already committed. The replayed probe's version already
-    * holds the batch, so its scan drops the batch's ids
-    * ([[Dedup.unseen]]): the replay emits what the first delivery did,
-    * for any batch size, as long as batch ids are new to the index.
-    * The probe also over-fetches k+1 and EXCLUDES exact id self-pairs
-    * (at-least-once emission stays the caller's sink contract, keyed
-    * by batchId).
+    * The probe frame is built from the step's manifest version, and
+    * the append commits a LATER one, so the probe never scores the
+    * batch against its own just-appended vectors (IvfSpec pins this);
+    * the sink overlaps the append. Replay (`batchId`) is the
+    * [[graft.sources.IndexManifest.foldStep]] contract, and the
+    * neighbor frame is [[foldNeighbors]]'s: a replay emits what the
+    * first delivery did.
     *
     * `nProbe` >= the index's nlist (e.g. `Int.MaxValue`) probes every
     * cell: the retrieval is then the EXACT int8 top-k among seen
@@ -553,27 +511,36 @@ object Ivf {
       path: String, index: IvfIndex, k: Int, nProbe: Int,
       batchId: Option[Long], sink: DataFrame => Unit
   ): Unit = {
-    val alreadyIngested = batchId.exists { id =>
-      Dedup.LastBatchMarker.read(spark, path).contains(id)
-    }
     val probe = math.min(nProbe, index.nlist)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("int_dot").desc, col("id").asc)
-    val current = manifestAt(spark, path)
-    val neighbors = probeInt8(
-        Dedup.unseen(current.scan(spark, path, "cells"), batch, idCol, alreadyIngested),
-        index, batch, idCol, vecCol, k + 1, probe)
+    IndexManifest.foldStep(spark, path, "ivf_int8", batchId) { (current, replay) =>
+      foldNeighbors(current.scan(spark, path, "cells"), batch, idCol, replay, k, "int_dot") {
+        (cells, n) => probeInt8(cells, index, batch, idCol, vecCol, n, probe)
+      }
+    }(appendInt8(batch, idCol, vecCol, path, index, _))(sink)
+  }
+
+  /** The ANN folds' neighbor frame ([[ingestAnnBatchTo]],
+    * [[Pq.ingestBatchTo]]): `probe(seen, k + 1)` over-fetches one
+    * neighbor, exact id self-pairs are dropped, and the rest re-rank by
+    * `score` desc, id asc, to the top `k`. On a `replay` the scanned
+    * version already holds the batch, so `seen` drops the batch's ids
+    * from `cells`: the replay emits what the first delivery did, for
+    * any batch size, as long as batch ids are new to the index.
+    */
+  private[operators] def foldNeighbors(
+      cells: DataFrame, batch: DataFrame, idCol: String, replay: Boolean, k: Int, score: String
+  )(probe: (DataFrame, Int) => DataFrame): DataFrame = {
+    val seen =
+      if (!replay) cells
+      else {
+        val ids = batch.select(col(idCol).as("__batch_id"))
+        cells.join(ids, cells("id") === ids("__batch_id"), "left_anti")
+      }
+    val w = Window.partitionBy(col("query_id")).orderBy(col(score).desc, col("id").asc)
+    probe(seen, k + 1)
       .filter(col("query_id") =!= col("id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    if (alreadyIngested) sink(neighbors)
-    else Actions.runConcurrently(
-      () => sink(neighbors),
-      () => {
-        appendInt8(batch, idCol, vecCol, path, index, current)
-        batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
-      })
-    ()
   }
 
   private def probeCells(

@@ -536,25 +536,31 @@ object Pq {
     val luts = queryLuts(queries, qidCol, qvecCol, index.codebook, index.m)
     val candidates =
       if (nProbe >= index.nlist) index.encoded.crossJoin(broadcast(luts))
-      else {
-        val probed = queries
-          .select(col(qidCol).as("query_id"),
-            Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
-          .crossJoin(broadcast(index.centroids))
-          .withColumn("__d",
-            col("__cc") - lit(2L) * intDot(col("__q"), col("ccode")))
-          .withColumn("__rn",
-            row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("cell").asc)))
-          .filter(col("__rn") <= nProbe)
-          .select(col("query_id"), col("cell"))
-        index.encoded
-          .join(broadcast(probed.join(luts, Seq("query_id"))), Seq("cell"))
-      }
+      else index.encoded.join(
+        broadcast(routed(index, queries, qidCol, qvecCol, nProbe).join(luts, Seq("query_id"))),
+        Seq("cell"))
     rankAdc(candidates
       .select(col("query_id"), col("id"),
         adcScore(col("codes"), col("lut"), index.m, index.nc).as("adc_dot")), k)
   }
+
+  /** Each query's `nProbe` nearest cells by exact integer squared-L2
+    * (cc − 2·dot, ties → smallest cell): (query_id, cell).
+    */
+  private def routed(
+      index: PqIndex, queries: DataFrame, qidCol: String, qvecCol: String, nProbe: Int
+  ): DataFrame =
+    queries
+      .select(col(qidCol).as("query_id"),
+        Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
+      .crossJoin(broadcast(index.centroids))
+      .withColumn("__d",
+        col("__cc") - lit(2L) * intDot(col("__q"), col("ccode")))
+      .withColumn("__rn",
+        row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col("__d").asc, col("cell").asc)))
+      .filter(col("__rn") <= nProbe)
+      .select(col("query_id"), col("cell"))
 
   /** One-shot flat PQ-ADC top-k (build + exhaustive serve). Callers
     * serving many query batches should [[buildIndex]] once and
@@ -810,24 +816,13 @@ object Pq {
     * arithmetic (routing, ADC) is BIGINT-exact, so the whole fold is
     * closed-form re-derivable by an external oracle — no goldens.
     *
-    * PROBE PINNED, SINK OVERLAPPED: the probe frame is built first (its
-    * cell-discovery collect included), pinned to the manifest version
-    * read at the start of the step. `sink(neighbors)` must be an eager
-    * ACTION over the frame (a parquet/noop write — it may not stash the
-    * frame for later); it runs concurrently with the append + replay
-    * marker ([[Actions.runConcurrently]], the
-    * [[Dedup.ingestDedupBatchTo]] shape), and since the append only
-    * commits a LATER version, the probe never scores the batch against
-    * its own vectors (PqSpec pins this). A replayed batchId skips the
-    * re-append ([[Dedup.LastBatchMarker]], written strictly after the
-    * manifest commits) and re-runs the sink — also after a sink failure
-    * whose concurrent append already committed. The replayed probe's
-    * version already holds the batch, so its scan drops the batch's ids
-    * ([[Dedup.unseen]]) and the replay emits what the first delivery
-    * did, for any batch size, as long as batch ids are new to the
-    * index. The probe also over-fetches k+1 and drops exact id
-    * self-pairs. At-least-once emission stays the caller's sink
-    * concern, keyed by batchId.
+    * The probe frame (its cell-discovery collect included) is built
+    * from the step's manifest version, and the append commits a LATER
+    * one, so the probe never scores the batch against its own vectors
+    * (PqSpec pins this); the sink overlaps the append. Replay
+    * (`batchId`) is the [[graft.sources.IndexManifest.foldStep]]
+    * contract, and the neighbor frame is [[Ivf.foldNeighbors]]'s: a
+    * replay emits what the first delivery did.
     */
   def ingestBatchTo(
       spark: SparkSession, batch: DataFrame,
@@ -836,32 +831,16 @@ object Pq {
       maxQueries: Int, sink: DataFrame => Unit
   ): Unit = {
     require(maxQueries >= 1, s"maxQueries must be >= 1, got $maxQueries")
-    val alreadyIngested = batchId.exists { id =>
-      Dedup.LastBatchMarker.read(spark, path).contains(id)
-    }
     val queries =
       if (maxQueries == Int.MaxValue) batch
       else batch
         .orderBy(Sampling.hashRank(col(idCol)), col(idCol))
         .limit(maxQueries) // TakeOrderedAndProject — no global sort
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dot").desc, col("id").asc)
-    val current = manifestAt(spark, path)
-    val neighbors = probeIndex(
-        side.copy(encoded = Dedup.unseen(cellsScan(spark, path, current), batch, idCol,
-          alreadyIngested)),
-        queries, idCol, vecCol, k + 1, nProbe)
-      .filter(col("query_id") =!= col("id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    if (alreadyIngested) sink(neighbors)
-    else Actions.runConcurrently(
-      () => sink(neighbors),
-      () => {
-        appendEncoded(batch, idCol, vecCol, path, side, current)
-        batchId.foreach(Dedup.LastBatchMarker.write(spark, path, _))
-      })
-    ()
+    IndexManifest.foldStep(spark, path, "ivf_pq", batchId) { (current, replay) =>
+      Ivf.foldNeighbors(cellsScan(spark, path, current), batch, idCol, replay, k, "adc_dot") {
+        (cells, n) => probeIndex(side.copy(encoded = cells), queries, idCol, vecCol, n, nProbe)
+      }
+    }(appendEncoded(batch, idCol, vecCol, path, side, _))(sink)
   }
 
   /** ADC top-k over a [[writeIndex]] index, read with [[readIndex]]:
@@ -870,11 +849,8 @@ object Pq {
     * bit-identical in scores and ranking to an in-session
     * [[ivfPqTopK]] over the same corpus and parameters (same
     * quantizers; integer scoring has no accumulation-order freedom).
-    * Partition pruning follows the [[Ivf.ivfTopKFromIndex]] protocol:
-    * distinct probe cells (≤ nlist values) collect to the driver for
-    * the `cell IN (...)` predicate, and a nondeterministic query frame
-    * falls back to an unpruned (correct, full-index) scan — see that
-    * scaladoc for the two-evaluation correctness argument.
+    * The scan is pruned to the probed cells by [[Ivf.pruneToProbed]],
+    * over [[adcTopK]]'s routing frame.
     *
     * Callers probing the same persisted index repeatedly read it once
     * and skip the per-call codebook/centroid collects. The probe scans
@@ -892,26 +868,8 @@ object Pq {
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= index.nlist,
       s"nProbe $nProbe out of range for nlist=${index.nlist}")
-    val deterministic = queries.queryExecution.analyzed
-      .find(_.expressions.exists(!_.deterministic)).isEmpty
-    // nProbe == nlist probes every cell — skip the discovery collect
-    // (adcTopK's exhaustive branch never reads the pruning filter)
-    val pruned =
-      if (deterministic && nProbe < index.nlist) {
-        val cells = queries
-          .select(col(qidCol).as("query_id"),
-            Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
-          .crossJoin(broadcast(index.centroids))
-          .withColumn("__d",
-            col("__cc") - lit(2L) * intDot(col("__q"), col("ccode")))
-          .withColumn("__rn",
-            row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("cell").asc)))
-          .filter(col("__rn") <= nProbe)
-          .select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ nlist values
-        index.encoded.filter(col("cell").isin(cells: _*))
-      } else index.encoded
+    val pruned = Ivf.pruneToProbed(index.encoded, queries,
+      routed(index, queries, qidCol, qvecCol, nProbe), exhaustive = nProbe == index.nlist)
     adcTopK(index.copy(encoded = pruned), queries, qidCol, qvecCol, k, nProbe)
   }
 }

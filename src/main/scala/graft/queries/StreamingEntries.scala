@@ -627,8 +627,8 @@ private[queries] object StreamingEntries {
     CatalogEntry("x_stream_pq_ingest", (s, d) =>
       Harness.fold(s, d, "x_stream_pq_ingest", annIngestStage, seedPqIndex,
           vecStreamSchema) { idxPath =>
-        // codebook/centroids/meta are FROZEN across the whole fold
-        // (append touches cells/ only) — read them once per execution
+        // codebook/centroids are FROZEN across the whole fold (an
+        // append adds cells/ files only) — read them once per execution
         // instead of two collect jobs per micro-batch; each batch's
         // probe still re-scans cells/ (ingestBatchTo scaladoc), so
         // batch k retrieves against exactly batches < k as before (r19)

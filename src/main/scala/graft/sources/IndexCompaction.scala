@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -13,10 +12,10 @@ import org.apache.spark.sql.functions.col
   * (`bands/`, `shingles/`, `cells/`). After N micro-batches a
   * continuously-ingesting index fragments exactly like the small-file
   * problem plain-table compaction solves — except an index is not a
-  * plain table: it carries partition columns the probes prune on, a
-  * `meta.txt` manifest the probes read their files from, and a
-  * `last_batch.txt` replay marker the ingest folds consult. A naive
-  * directory rewrite destroys all three.
+  * plain table: it carries partition columns the probes prune on and
+  * a `meta.txt` manifest the probes read their files from, whose
+  * `last_batch=` line is the replay marker the ingest folds consult. A
+  * naive directory rewrite destroys both.
   *
   * [[compactIndex]] reads the source's manifest ([[IndexManifest]]),
   * rewrites each dataset it lists from that version's files — a
@@ -25,8 +24,8 @@ import org.apache.spark.sql.functions.col
   * the same `repartition(partitionCol)` discipline the index writers
   * use), an unpartitioned side table (`centroids/`, `codebook/`) with
   * a single-file coalesce — and commits the output's own manifest
-  * with the same parameter lines, listing exactly the compacted
-  * files. `last_batch.txt` is copied verbatim. The rewrite goes to a
+  * with the same parameter lines (the replay marker included),
+  * listing exactly the compacted files. The rewrite goes to a
   * NEW directory — atomic swap stays with the caller, the
   * [[Compaction]] contract.
   *
@@ -48,30 +47,11 @@ object IndexCompaction {
 
   import Compaction.CompactionStats
 
-  private def copyFileIfExists(
-      spark: SparkSession, src: String, dst: String): Unit = {
-    val from = new Path(src)
-    val fs = from.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(from)) {
-      val in = fs.open(from)
-      val bytes =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          buf.toByteArray
-        } finally in.close()
-      val out = fs.create(new Path(dst), true)
-      try out.write(bytes) finally out.close()
-    }
-  }
-
   /** Repack the index at `inPath` into `outPath` (per-dataset stats
     * keyed by dataset name, file counts and bytes from the two
     * manifests — nothing is listed). The layout is preserved exactly —
-    * partition columns, parameters, and the ingest replay marker all
-    * survive, so a probe (or the next
+    * partition columns and the parameter lines, the ingest replay
+    * marker among them, all survive, so a probe (or the next
     * `ingestDedupBatchTo`/`ingestAnnBatchTo` fold step) pointed at
     * `outPath` behaves bit-identically to the fragmented original.
     */
@@ -96,7 +76,6 @@ object IndexCompaction {
         }
       }: _*)
     }
-    copyFileIfExists(spark, s"$inPath/last_batch.txt", s"$outPath/last_batch.txt")
     written.map { w =>
       val before = manifest.filesOf(w.dataset.name)
       w.dataset.name -> CompactionStats(before.size, before.map(_.len).sum,

@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * {{{
   * format=ivf_pq            parameter lines, key=value (format: minhash, ivf_int8, ivf_pq)
   * m=8
+  * last_batch=7             the ingest fold's replay marker ([[IndexManifest.foldStep]])
   * dataset cells cell {"type":"struct",...}     name, partition column ("-" for none), data schema
   * file 1834 cells/cell=3/part-00000-….snappy.parquet
   * }}}
@@ -264,5 +265,45 @@ private[graft] object IndexManifest {
         if (!committed) moved.foreach(fs.delete(_, false))
         throw e
     } finally { fs.delete(stage.dir, true); () }
+  }
+
+  /** One step of a SEQUENTIAL ingest fold over the `format` index at
+    * `root` — the one body of `Dedup.ingestDedupBatchTo`,
+    * `Pq.ingestBatchTo` and `Ivf.ingestAnnBatchTo`. The manifest is
+    * loaded once: `probe` builds the step's output frame from that
+    * version, then `sink` (an eager ACTION over the frame — a
+    * parquet/noop write that may not stash it) runs concurrently with
+    * `append` ([[graft.operators.Actions.runConcurrently]]). `append`
+    * must commit the batch on top of the version it is given, with
+    * that version's parameter lines: they carry `last_batch=<batchId>`,
+    * so one `meta.txt` rename commits the batch and its replay marker
+    * together. Without a `batchId` the marker is carried unchanged.
+    *
+    * At-least-once replay: foreachBatch can re-deliver a micro-batch
+    * after a failure between the append's commit and the stream's
+    * checkpoint commit — a sink failure after the concurrent append
+    * committed included. A `batchId` EQUAL to the manifest's
+    * `last_batch` (only the last uncommitted batch can replay under
+    * sequential micro-batching) skips the append and re-runs only the
+    * probe, told `replay = true` because its version already holds the
+    * batch, and the sink. Equality, not <=, so a fresh checkpoint
+    * pointed at an existing index (ids restart at 0) never skips an
+    * append; a replacing write starts with no marker. A crash before
+    * the rename leaves neither the batch nor the marker, so the
+    * re-delivery appends it. Idempotence of the sink's write stays the
+    * caller's concern (key it by batchId).
+    */
+  def foldStep(spark: SparkSession, root: String, format: String, batchId: Option[Long])(
+      probe: (IndexManifest, Boolean) => DataFrame)(
+      append: IndexManifest => Unit)(
+      sink: DataFrame => Unit): Unit = {
+    val current = load(spark, root, format)
+    val replay = batchId.exists(id => current.param("last_batch").contains(id.toString))
+    val out = probe(current, replay)
+    if (replay) sink(out)
+    else graft.operators.Actions.runConcurrently(() => sink(out), () => append(
+      batchId.fold(current)(id => current.copy(
+        params = current.params.filterNot(_._1 == "last_batch") :+ ("last_batch" -> id.toString)))))
+    ()
   }
 }

@@ -446,8 +446,10 @@ class DedupSpec extends SparkTestBase {
 
     // --- batchId replay guard ---
     val idxB = tempDir("graft_ingest_replay_").toString
+    // a non-default nShards: the fold appends under the index's own
+    // parameters, not the writer's defaults
     Dedup.writeMinHashIndex(base, "doc_id", "text", idxB,
-      bands = 32, mode = "overwrite")
+      bands = 32, mode = "overwrite", nShards = 8)
     def postings() = spark.read.parquet(s"$idxB/bands").count()
     assert(ingest(batch1, idxB, batchId = Some(0L)) == Set(12L, 13L))
     val afterFirst = postings()

@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkTestBase {
@@ -23,6 +26,16 @@ class IvfSpec extends SparkTestBase {
       sink = n => sunk = n.collect().map(r => (r.getAs[Long]("query_id"),
         r.getAs[Int]("rank"), r.getAs[Long]("id"), r.getAs[Long]("int_dot"))).toSet)
     sunk
+  }
+
+  /** Every file scan of an executed plan, through AQE's wrapper nodes. */
+  private def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
+    val direct = p.collect { case f: FileSourceScanExec => f }
+    val nested = p.collect {
+      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+      case q: QueryStageExec => scansOf(q.plan)
+    }.flatten
+    direct ++ nested
   }
 
   /** Probe the index written at `dir`. */
@@ -80,68 +93,10 @@ class IvfSpec extends SparkTestBase {
     assert(pi >= 0, s"no Partial WindowGroupLimit:\n$p")
   }
 
-  test("written index prunes probe scans to nProbe cells' files; results unchanged") {
-    val nlist = 32
-    val nProbe = 4
-    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist)
-    // coalesce(1): exactly one part file per cell dir, so the
-    // files-read assertion below pins PRUNING, not the incidental
-    // (task × cell) file layout of the source partitioning
-    val assigned = Ivf.assign(
-      emb.select(col("vec_id").as("id"), col("embedding").as("v")).coalesce(1),
-      "v", index)
-    val dir = tempDir("ivf_index_").toString
-    Ivf.writeIndex(assigned, dir)
-
-    // one directory per occupied cell on disk
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val cellDirs =
-      try listing.filter(_.getFileName.toString.startsWith("cell=")).count()
-      finally listing.close()
-    val occupiedCells = assigned.select("cell").distinct().count()
-    assert(cellDirs == occupiedCells)
-
-    val fromIndex = Ivf.ivfTopKFromIndex(spark, dir, index,
-      queries.limit(1), "qid", "qv", k = 10, nProbe = nProbe)
-    val rows = fromIndex.collect()
-
-    // the scan must have read only the probed cells' files, not the
-    // whole index: numFiles metric on the executed scan node (recurse
-    // through AQE's leaf-like wrapper nodes)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val direct = p.collect { case f: FileSourceScanExec => f }
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case q: QueryStageExec => scansOf(q.plan)
-      }.flatten
-      direct ++ nested
-    }
-    val scans = scansOf(fromIndex.queryExecution.executedPlan)
-      .filter(_.metadata.get("Location").exists(_.contains("ivf_index_")))
-    assert(scans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
-    val filesRead = scans.map(_.metrics("numFiles").value).sum
-    assert(filesRead <= nProbe,
-      s"probe read $filesRead files; expected <= $nProbe of $cellDirs cell dirs")
-
-    // identical results to the in-memory probe path (same index/centroids)
-    val inMemory = Ivf.ivfTopK(assigned, queries.limit(1), "qid", "qv", index,
-      k = 10, nProbe = nProbe)
-      .select("query_id", "id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val fromDisk = rows.map(r =>
-      (r.getAs[Long]("query_id"), r.getAs[Long]("id"), r.getAs[Int]("rank"))).toSet
-    assert(fromDisk == inMemory)
-  }
-
-  test("ivfTopKFromIndex handles a large query batch without driver-side row materialization") {
-    val nlist = 16
-    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist)
-    val assigned = Ivf.assign(
-      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
+  test("ivfInt8ProbeIndex handles a large query batch without driver-side row materialization") {
     val dir = tempDir("ivf_index_big_").toString
-    Ivf.writeIndex(assigned, dir)
+    val index = Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = 16,
+      mode = "overwrite")
 
     // 2000-query synthetic batch (4 shifted replicas of the corpus):
     // large enough that an Array[Row] materialization of queries×nProbe
@@ -149,13 +104,12 @@ class IvfSpec extends SparkTestBase {
     val big = emb.crossJoin(spark.range(4).select(col("id").as("rep")))
       .select((col("vec_id") + col("rep") * lit(10000L)).as("qid"),
         col("embedding").as("qv"))
-    val res = Ivf.ivfTopKFromIndex(spark, dir, index, big, "qid", "qv",
+    val res = Ivf.ivfInt8ProbeIndex(spark, dir, index, big, "qid", "qv",
       k = 3, nProbe = 2)
 
     // plan pin: the probe side must remain the lazy query-frame subtree.
-    // The old implementation collect()ed the probe rows and re-created a
-    // DataFrame from them, which surfaces as a LocalRelation/
-    // LocalTableScan leaf in the plan — forbid that shape.
+    // A collect()ed probe frame re-created as a DataFrame surfaces as a
+    // LocalRelation/LocalTableScan leaf in the plan — forbid that shape.
     val optimized = res.queryExecution.optimizedPlan
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val localLeaves = optimized.collect { case l: LocalRelation => l }
@@ -170,46 +124,38 @@ class IvfSpec extends SparkTestBase {
   }
 
   test("nondeterministic query frames probe without cell pruning (no silent drops)") {
-    val nlist = 16
-    val index = Ivf.buildIndex(emb, "vec_id", "embedding", nlist)
-    val assigned = Ivf.assign(
-      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
-    val dir = tempDir("ivf_index_nd_").toString
-    Ivf.writeIndex(assigned, dir)
-
-    // rand() makes the frame nondeterministic even though qid/qv are
-    // stable — the pruning predicate and the join side could disagree,
-    // so pruning must be skipped entirely
-    val noisy = queries.withColumn("noise", rand())
-    val res = Ivf.ivfTopKFromIndex(spark, dir, index, noisy, "qid", "qv",
-      k = 3, nProbe = 2)
-    res.collect()
-    // the scan was NOT pruned: every index file was read
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val direct = p.collect { case f: FileSourceScanExec => f }
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case q: QueryStageExec => scansOf(q.plan)
-      }.flatten
-      direct ++ nested
+    val int8 = tempDir("ivf_index_nd_").toString
+    val index = Ivf.writeInt8Index(emb, "vec_id", "embedding", int8, nlist = 16,
+      mode = "overwrite")
+    val pq = tempDir("pq_index_nd_").toString
+    Pq.writeIndex(emb, "vec_id", "embedding", pq, m = 8, ncode = 32, nlist = 16,
+      mode = "overwrite")
+    val side = Pq.readIndex(spark, pq)
+    // both persisted layouts prune through the one probed-cell filter
+    Seq[(String, String, DataFrame => DataFrame)](
+      ("ivf_index_nd_", int8,
+        qs => Ivf.ivfInt8ProbeIndex(spark, int8, index, qs, "qid", "qv", k = 3, nProbe = 2)),
+      ("pq_index_nd_", pq,
+        qs => Pq.probeIndex(side, qs, "qid", "qv", k = 3, nProbe = 2))
+    ).foreach { case (tag, dir, probe) =>
+      // rand() makes the frame nondeterministic even though qid/qv are
+      // stable — the pruning predicate and the join side could disagree,
+      // so pruning must be skipped entirely
+      val res = probe(queries.withColumn("noise", rand()))
+      res.collect()
+      // the scan was NOT pruned: every index file was read
+      val idxScans = scansOf(res.queryExecution.executedPlan)
+        .filter(_.metadata.get("Location").exists(_.contains(tag)))
+      assert(idxScans.nonEmpty, tag)
+      val allFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "cells"))
+        .filter(p => p.toString.endsWith(".parquet")).count()
+      assert(idxScans.map(_.metrics("numFiles").value).sum == allFiles,
+        s"$tag: expected an unpruned scan under a nondeterministic query frame")
+      // results identical to the deterministic frame's (noise is unused)
+      def ranked(df: DataFrame) = df.select("query_id", "id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(ranked(res) == ranked(probe(queries)), tag)
     }
-    val idxScans = scansOf(res.queryExecution.executedPlan)
-      .filter(_.metadata.get("Location").exists(_.contains("ivf_index_nd_")))
-    assert(idxScans.nonEmpty)
-    val allFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    assert(idxScans.map(_.metrics("numFiles").value).sum == allFiles,
-      "expected an unpruned scan under a nondeterministic query frame")
-    // results identical to the deterministic frame's (noise is unused)
-    val clean = Ivf.ivfTopKFromIndex(spark, dir, index, queries, "qid", "qv",
-      k = 3, nProbe = 2)
-      .select("query_id", "id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val got = res.select("query_id", "id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == clean)
   }
 
   test("ivfTopK finds the self-match and achieves reasonable recall") {
@@ -251,18 +197,16 @@ class IvfSpec extends SparkTestBase {
         ((r.getAs[Long]("id"), r.getAs[Long]("int_dot")))).toMap
     assert(got == inSession, "disk probe diverged from the in-session composition")
 
+    // one directory per occupied cell on disk
+    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "cells"))
+    val cellDirs =
+      try listing.filter(_.getFileName.toString.startsWith("cell=")).count()
+      finally listing.close()
+    assert(cellDirs == Ivf.assign(emb.select(col("vec_id").as("id"), col("embedding").as("v")),
+      "v", Ivf.readInt8Index(spark, dir)).select("cell").distinct().count())
+
     // the probe read ONLY the probed cells' code files (repartition by
     // cell at write time => exactly one file per cell dir)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val direct = p.collect { case f: FileSourceScanExec => f }
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case q: QueryStageExec => scansOf(q.plan)
-      }.flatten
-      direct ++ nested
-    }
     val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
     oneQuery.collect()
     val scans = scansOf(oneQuery.queryExecution.executedPlan)

@@ -67,7 +67,7 @@ class IndexCompactionSpec extends SparkTestBase {
     val m = pmod(col("doc_id"), lit(4))
     Dedup.writeMinHashIndex(docs.filter(m === 0), "doc_id", "text",
       frag, bands = 8, mode = "overwrite")
-    // grow through the ingest fold so a last_batch.txt marker exists
+    // grow through the ingest fold so the manifest carries a replay marker
     (1 to 3).foreach { k =>
       Dedup.ingestDedupBatchTo(spark, docs.filter(m === k), "doc_id", "text",
         frag, bands = 8, threshold = 0.5, batchId = Some(k.toLong),
@@ -85,11 +85,13 @@ class IndexCompactionSpec extends SparkTestBase {
         .collect().map(_.toString).sorted.toSeq
     assert(probe(compacted) == probe(frag))
     assert(probe(compacted).nonEmpty, "probe found no pairs — vacuous equality")
-    // the replay marker rides along: the NEXT fold step must see it
-    // (LastBatchMarker is operators-private — read the sidecar bytes)
-    val marker = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$compacted/last_batch.txt")), "UTF-8")
-    assert(marker.trim == "3")
+    // the replay marker rides along: a replay of the last batch on the
+    // compacted index re-sinks without re-appending
+    def shingles = spark.read.parquet(s"$compacted/shingles").count()
+    val before = shingles
+    Dedup.ingestDedupBatchTo(spark, docs.filter(m === 3), "doc_id", "text",
+      compacted, bands = 8, threshold = 0.5, batchId = Some(3L), sink = _.count())
+    assert(shingles == before, "a replayed batchId re-appended onto the compacted index")
   }
 
   test("an unknown layout fails loudly") {

@@ -37,6 +37,11 @@ class IndexManifestSpec extends SparkTestBase {
     Pq.writeIndex(inc, "vec_id", "embedding", dir, m = 8, ncode = 16, nlist = 8,
       mode = "append")
 
+  /** One PQ-ingest fold step of `inc` onto the index at `dir`. */
+  private def fold(dir: String, batchId: Long): Unit =
+    Pq.ingestBatchTo(spark, inc, "vec_id", "embedding", dir, Pq.readIndex(spark, dir),
+      k = 3, nProbe = 2, batchId = Some(batchId), maxQueries = 8, sink = _.count())
+
   /** Exhaustive probe (every cell) of the index at `dir`, sorted rows. */
   private def probe(dir: String): Seq[String] = {
     val idx = Pq.readIndex(spark, dir)
@@ -72,20 +77,33 @@ class IndexManifestSpec extends SparkTestBase {
 
   test("torn append: a restored pre-append meta.txt hides the append, and re-running it " +
       "converges to the uninterrupted index") {
-    val dir = pqIndex("mf_torn")
-    val before = probe(dir)
-    // the commit file and its checksum, as they stood before the append
-    val meta = Seq("meta.txt", ".meta.txt.crc").map(Paths.get(dir, _)).filter(Files.exists(_))
-    val saved = meta.map(p => p -> Files.readAllBytes(p))
-    append(dir)
-    assert(probe(dir) != before, "the append must change the probe — else this test shows nothing")
-    saved.foreach { case (p, bytes) => Files.write(p, bytes) }
-    assert(probe(dir) == before)
-    append(dir)
-    val clean = pqIndex("mf_clean")
-    append(clean)
-    assert(probe(dir) == probe(clean))
-    assert(codes(dir) == codes(clean))
+    // a plain append, and a fold step whose replay marker commits with it
+    Seq[String => Unit](append(_), fold(_, 5L)).foreach { grow =>
+      val dir = pqIndex("mf_torn")
+      val before = probe(dir)
+      // the commit file and its checksum, as they stood before the append
+      val meta = Seq("meta.txt", ".meta.txt.crc").map(Paths.get(dir, _)).filter(Files.exists(_))
+      val saved = meta.map(p => p -> Files.readAllBytes(p))
+      grow(dir)
+      assert(probe(dir) != before,
+        "the append must change the probe — else this test shows nothing")
+      saved.foreach { case (p, bytes) => Files.write(p, bytes) }
+      assert(probe(dir) == before)
+      grow(dir)
+      val clean = pqIndex("mf_clean")
+      grow(clean)
+      assert(probe(dir) == probe(clean))
+      assert(codes(dir) == codes(clean))
+    }
+  }
+
+  test("an overwrite drops the replay marker: a fresh checkpoint's batch 0 is appended") {
+    val dir = pqIndex("mf_stale")
+    fold(dir, 0L)
+    Pq.writeIndex(base, "vec_id", "embedding", dir, m = 8, ncode = 16, nlist = 8,
+      mode = "overwrite")
+    fold(dir, 0L)
+    assert(codes(dir).size == emb.count(), "the re-run batch 0 never reached the index")
   }
 
   test("a copied index dir probes and appends independently of its source") {
