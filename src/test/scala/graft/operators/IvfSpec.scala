@@ -197,14 +197,6 @@ class IvfSpec extends SparkTestBase {
         ((r.getAs[Long]("id"), r.getAs[Long]("int_dot")))).toMap
     assert(got == inSession, "disk probe diverged from the in-session composition")
 
-    // one directory per occupied cell on disk
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "cells"))
-    val cellDirs =
-      try listing.filter(_.getFileName.toString.startsWith("cell=")).count()
-      finally listing.close()
-    assert(cellDirs == Ivf.assign(emb.select(col("vec_id").as("id"), col("embedding").as("v")),
-      "v", Ivf.readInt8Index(spark, dir)).select("cell").distinct().count())
-
     // the probe read ONLY the probed cells' code files (repartition by
     // cell at write time => exactly one file per cell dir)
     val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
@@ -215,6 +207,44 @@ class IvfSpec extends SparkTestBase {
     val filesRead = scans.map(_.metrics("numFiles").value).sum
     assert(filesRead <= nProbe,
       s"one-query probe read $filesRead files; expected <= $nProbe")
+  }
+
+  test("written index prunes probe scans to nProbe cells' files; results unchanged") {
+    val nlist = 32
+    val nProbe = 4
+    val dir = tempDir("ivf_index_").toString
+    val index = Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = nlist,
+      mode = "overwrite")
+
+    // one directory per occupied cell on disk
+    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "cells"))
+    val cellDirs =
+      try listing.filter(_.getFileName.toString.startsWith("cell=")).count()
+      finally listing.close()
+    val occupiedCells = Ivf.assign(
+      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
+      .select("cell").distinct().count()
+    assert(cellDirs == occupiedCells)
+
+    // the scan read only the probed cells' files, not the whole index
+    val fromIndex = Ivf.ivfInt8ProbeIndex(spark, dir, index,
+      queries.limit(1), "qid", "qv", k = 10, nProbe = nProbe)
+    val rows = fromIndex.collect()
+    val scans = scansOf(fromIndex.queryExecution.executedPlan)
+      .filter(_.metadata.get("Location").exists(_.contains("ivf_index_")))
+    assert(scans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
+    val filesRead = scans.map(_.metrics("numFiles").value).sum
+    assert(filesRead <= nProbe,
+      s"probe read $filesRead files; expected <= $nProbe of $cellDirs cell dirs")
+
+    // identical results to the in-session probe (same centroids)
+    val inSession = Ivf.ivfInt8TopK(emb, "vec_id", "embedding",
+        queries.limit(1), "qid", "qv", k = 10, nlist = nlist, nProbe = nProbe)
+      .select("query_id", "id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val fromDisk = rows.map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("id"), r.getAs[Int]("rank"))).toSet
+    assert(fromDisk.nonEmpty && fromDisk == inSession)
   }
 
   test("ingestAnnBatch: retrieves against everything SEEN, is eager before " +
