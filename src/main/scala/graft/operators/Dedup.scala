@@ -567,17 +567,18 @@ object Dedup {
     * relative to the accumulated corpus. Two parquet datasets under
     * `path`:
     *
-    *  - `bands/`: (band, bucket, bucket_size, id), partitioned by band
-    *    — the LSH postings. `bucket_size` is denormalized per row so a
+    *  - `bands/`: (bucket, bucket_size, id, band), sorted by band —
+    *    the LSH postings. `bucket_size` is denormalized per row so a
     *    probe can cap hot buckets with a cheap scan filter; the cap is
     *    a PROBE-time parameter, nothing is lost at build time.
-    *  - `shingles/`: (id, sh), partitioned by `shard` =
+    *  - `shingles/`: (id, sh, shard), sorted by `shard` =
     *    pmod(xxhash64(id), nShards) — the shingle sets, for
     *    exact-Jaccard verification of candidates. Sharding lets a probe
-    *    read only the shards holding candidate ids instead of the whole
-    *    (corpus-sized) shingle store.
+    *    read only the files whose shard range holds candidate ids
+    *    instead of the whole (corpus-sized) shingle store.
     *  - `meta.txt`: the manifest ([[graft.sources.IndexManifest]]) —
-    *    the LSH parameters plus every committed file of both datasets.
+    *    the LSH parameters plus every committed file of both datasets
+    *    with its key range.
     *    A probe with different parameters would bucket into silently
     *    disjoint hash spaces and report zero pairs —
     *    [[minHashProbeIndex]] validates against it and fails loudly
@@ -613,7 +614,7 @@ object Dedup {
     val params = IndexMeta(shingleSize, numHashes, bands, nShards)
     // append onto an existing index must use ITS parameters, or the
     // increments' buckets/shards live in disjoint hash spaces
-    val base = IndexManifest.base(corpus.sparkSession, path, mode, "minhash")
+    val base = IndexManifest.base(corpus.sparkSession, path, mode, "minhash").onto
     base.foreach { existing =>
       val built = IndexMeta.of(existing)
       require(built == params,
@@ -647,12 +648,7 @@ object Dedup {
     val src = if (storage == StorageLevel.NONE) projected else projected.persist(storage)
     try IndexManifest.commit(spark, path, base.fold(meta.params)(_.params), base) { stage =>
       val shinglesWrite = () => stage.write(
-        src
-          .withColumn("shard", pmod(xxhash64(col("id")), lit(meta.nShards.toLong)))
-          // co-locate shards before the partitioned write: without this,
-          // every task splits into every shard — tasks × nShards small
-          // files at corpus scale
-          .repartition(col("shard")),
+        src.withColumn("shard", pmod(xxhash64(col("id")), lit(meta.nShards.toLong))),
         "shingles", Some("shard"))
       // bucket_size via a WINDOW count over (band, bucket), NOT a
       // collect_list+size (a viral duplicate's bucket would be
@@ -661,9 +657,7 @@ object Dedup {
       // re-evaluates the banding kernel for the pre-count — two full
       // scans). WindowExec buffers each bucket through a SPILLABLE
       // external sorter, so a viral bucket costs disk, never an OOM,
-      // and the kernel projection is scanned exactly once. The window's
-      // exchange also lands each band on few tasks, which is exactly
-      // the file layout the partitionBy("band") write wants.
+      // and the kernel projection is scanned exactly once.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band"), col("bucket"))
       val bandsWrite = () => stage.write(
@@ -671,7 +665,7 @@ object Dedup {
           .select(col("id"), posexplode(minHashBands(col("sh"), meta.numHashes, meta.bands)))
           .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
           .withColumn("bucket_size", count(lit(1)).over(w).cast(IntegerType))
-          .select(col("band"), col("bucket"), col("bucket_size"), col("id")),
+          .select(col("bucket"), col("bucket_size"), col("id"), col("band")),
         "bands", Some("band"))
       // the two dataset writes are INDEPENDENT (disjoint directories,
       // both deterministic projections of src) — overlap them so the
@@ -695,9 +689,10 @@ object Dedup {
     * of corpus bytes). Verification then reads ONLY the shingle shards
     * containing candidate ids: candidate corpus_ids are hashed to their
     * shard, the distinct shards are collected (bounded by the index's
-    * nShards, like Ivf's cell literals) and pushed as a partition
-    * filter, so a small probe touches a small slice of the shingle
-    * store instead of all of it. Hot corpus buckets are skipped by the
+    * nShards, like Ivf's cell literals) and pushed as a `shard IN`
+    * filter, which drops the files whose shard range misses it, so a
+    * small probe touches a small slice of the shingle store instead of
+    * all of it. Hot corpus buckets are skipped by the
     * `bucket_size <= maxBucket` scan filter — deliberately PUSHED DOWN
     * to the parquet scan (row-group skipping), which also means an
     * attached `observe` could not see the skipped rows; quantify the

@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale path (100 TB): centroid assignment is one narrow projection
   * (the centroid table is a plan constant — no join); the persisted
-  * index ([[writeInt8Index]]) is written `partitionBy("cell")` once,
-  * so a query's probes touch only nProbe/nlist of the files (partition
-  * pruning). In [[ivfTopK]] the cells stay in-memory and the probe is
-  * a hash join on the cell id.
+  * index ([[writeInt8Index]]) is written sorted by cell once, and its
+  * manifest records each file's cell range, so a query's probes read
+  * only the files whose range holds a probed cell. In [[ivfTopK]] the
+  * cells stay in-memory and the probe is a hash join on the cell id.
   *
   * Centroids are a deterministic hashed sample of the corpus (the k
   * vectors with the smallest xxhash64(id)) — reproducible across runs
@@ -54,7 +54,7 @@ object Ivf {
   }
 
   /** Corpus with its IVF cell id (nearest centroid). At scale, persist
-    * this `partitionBy("cell")`.
+    * this sorted by cell ([[writeInt8Index]]).
     */
   def assign(corpus: DataFrame, vecCol: String, index: IvfIndex): DataFrame =
     corpus.withColumn("cell",
@@ -249,13 +249,13 @@ object Ivf {
     * codes per call; fine in-session, wrong across sessions). Layout
     * under `path`:
     *
-    *  - `cells/`: (id, cq) partitioned by `cell` — the int8 codes,
+    *  - `cells/`: (id, cq, cell) sorted by `cell` — the int8 codes,
     *    stored as `array<tinyint>` (the honest 4× compression: one
     *    byte per element on disk; [[ivfInt8ProbeIndex]] widens back to
     *    the kernel's long lanes losslessly, every value is in
-    *    [-127, 127] by construction). One directory per cell means a
-    *    probe's `cell IN (...)` predicate prunes the scan to
-    *    nProbe/nlist of the files.
+    *    [-127, 127] by construction). The manifest records each file's
+    *    cell range, so a probe's `cell IN (...)` predicate drops the
+    *    files that hold none of the probed cells.
     *  - `centroids/`: (cell, c array<double>) — the coarse quantizer,
     *    so a probe session reconstructs routing WITHOUT the corpus.
     *  - `meta.txt`: the manifest — nlist + dim ([[Int8IndexMeta]]) plus
@@ -296,47 +296,43 @@ object Ivf {
       path: String, nlist: Int = 64, mode: String = "error",
       refineIters: Int = 0
   ): IvfIndex = {
-    require(mode != "append" || refineIters == 0,
-      "refineIters applies to fresh builds only — append must route " +
-        "through the persisted centroids (rebuild fresh to retrain)")
     val spark = corpus.sparkSession
-    if (mode == "append") {
-      val manifest = manifestAt(spark, path) // throws if absent/foreign
-      val existing = readInt8IndexFrom(spark, path, manifest)
-      require(existing.nlist == nlist,
-        s"index at $path was built with nlist=${existing.nlist}; " +
-          s"cannot append with nlist=$nlist")
-      appendInt8(corpus, idCol, vecCol, path, existing, manifest)
-      return existing
+    IndexManifest.base(spark, path, mode, "ivf_int8") match {
+      case IndexManifest.Append(onto) =>
+        require(refineIters == 0,
+          "refineIters applies to fresh builds only — append must route " +
+            "through the persisted centroids (rebuild fresh to retrain)")
+        val manifest = onto.getOrElse(manifestAt(spark, path)) // throws: no meta.txt
+        val existing = readInt8IndexFrom(spark, path, manifest)
+        require(existing.nlist == nlist,
+          s"index at $path was built with nlist=${existing.nlist}; " +
+            s"cannot append with nlist=$nlist")
+        appendInt8(corpus, idCol, vecCol, path, existing, manifest)
+        existing
+      case IndexManifest.Replace =>
+        val index = {
+          val built = buildIndex(corpus, idCol, vecCol, nlist)
+          if (refineIters > 0) refineCentroids(corpus, vecCol, built, refineIters)
+          else built
+        }
+        // centroids are written on the fresh build only; the two dataset
+        // writes are independent (disjoint directories) — overlap them
+        // (Actions scaladoc). The manifest commits strictly LAST, and it
+        // lists only the new files, so cells empty in the new corpus never
+        // keep stale ids scored under the old centroids.
+        val params = Int8IndexMeta(index.nlist, index.dim).params
+        IndexManifest.commit(spark, path, params, None) { stage =>
+          Actions.runConcurrently(
+            () => {
+              import spark.implicits._
+              stage.write((0 until index.nlist).map { cell =>
+                (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
+              }.toDF("cell", "c"), "centroids", None)
+            },
+            () => stage.write(int8Cells(corpus, idCol, vecCol, index), "cells", Some("cell")))
+        }
+        index
     }
-    val base = IndexManifest.base(spark, path, mode, "ivf_int8")
-    val index = {
-      val built = buildIndex(corpus, idCol, vecCol, nlist)
-      if (refineIters > 0) refineCentroids(corpus, vecCol, built, refineIters)
-      else built
-    }
-    // centroids are written on the fresh build only; the two dataset
-    // writes are independent (disjoint directories) — overlap them
-    // (Actions scaladoc). The manifest commits strictly LAST, and it
-    // lists only the new files, so cells empty in the new corpus never
-    // keep stale ids scored under the old centroids.
-    val params = Int8IndexMeta(index.nlist, index.dim).params
-    IndexManifest.commit(spark, path, params, base) { stage =>
-      Actions.runConcurrently(
-        () => {
-          import spark.implicits._
-          stage.write((0 until index.nlist).map { cell =>
-            (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
-          }.toDF("cell", "c").coalesce(1), "centroids", None)
-        },
-        () => stage.write(int8Assigned(corpus, idCol, vecCol, index)
-          .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
-          // co-locate cells before the partitioned write (the
-          // writeMinHashIndex discipline): without this every task splits
-          // into every cell — tasks × nlist small files at corpus scale
-          .repartition(col("cell")), "cells", Some("cell")))
-    }
-    index
   }
 
   /** The append-mode assign+quantize+write over an ALREADY-READ coarse
@@ -361,12 +357,17 @@ object Ivf {
     val guarded = corpus.withColumn(vecCol,
       Similarity.requireDim(col(vecCol), index.dim, s"at $path"))
     IndexManifest.commit(corpus.sparkSession, path, base.params, Some(base)) { stage =>
-      Seq(stage.write(int8Assigned(guarded, idCol, vecCol, index)
-        .select(col("id"), col("cell"), col("cq").cast("array<tinyint>").as("cq"))
-        .repartition(col("cell")), "cells", Some("cell")))
+      Seq(stage.write(int8Cells(guarded, idCol, vecCol, index), "cells", Some("cell")))
     }
     ()
   }
+
+  /** The `cells/` rows of `corpus` under `index`: (id, cq tinyint codes, cell). */
+  private def int8Cells(
+      corpus: DataFrame, idCol: String, vecCol: String, index: IvfIndex
+  ): DataFrame =
+    int8Assigned(corpus, idCol, vecCol, index)
+      .select(col("id"), col("cq").cast("array<tinyint>").as("cq"), col("cell"))
 
   /** Reconstruct the coarse quantizer of a [[writeInt8Index]] index
     * from its `centroids/` + manifest — bounded at nlist × dim
@@ -424,11 +425,12 @@ object Ivf {
     probeInt8(manifestAt(spark, indexPath).scan(spark, indexPath, "cells"),
       index, queries, qidCol, qvecCol, k, nProbe)
 
-  /** `cells` (a persisted index's cell-partitioned scan) pruned to the
+  /** `cells` (a persisted index's cell-sorted scan) pruned to the
     * cells `probes` (one row per query and probed cell) routes
     * `queries` to. Only the DISTINCT probe cells are collected to the
     * driver — at most nlist values, however many queries are in the
-    * batch — to build the partition-pruning `cell IN (...)` predicate;
+    * batch — to build the `cell IN (...)` predicate that drops the
+    * files whose cell range holds no probed cell;
     * the probe frame itself stays a lazy DataFrame on the broadcast
     * side of the caller's join, so a large query batch never
     * materializes queries×nProbe rows as a driver-side Array. The

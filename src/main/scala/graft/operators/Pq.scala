@@ -373,9 +373,9 @@ object Pq {
     * are plan-constant local frames (≤ m·ncode and ≤ nlist rows),
     * `encoded` is the corpus as (id, codes, cell) — m bytes of PQ
     * codes plus a cell id per vector, the ONLY data-proportional
-    * state. At scale, persist `encoded` `partitionBy("cell")` (the
-    * [[Ivf.writeInt8Index]] layout with m-byte payloads) so probes
-    * read ~nProbe/nlist of the files. `codebookFlat` and
+    * state. At scale, persist `encoded` sorted by cell ([[writeIndex]],
+    * the [[Ivf.writeInt8Index]] layout with m-byte payloads) so probes
+    * read only the files whose cell range holds a probed cell. `codebookFlat` and
     * `centroidsFlat` are the same two grids as the kernels' flat
     * arrays ([[flatten]] layout), kept so that encoding and routing an
     * increment run no collect.
@@ -616,14 +616,14 @@ object Pq {
     * and probed by many query batches that must never pay the encode
     * again. Layout under `path`:
     *
-    *  - `cells/`: (id, codes) partitioned by `cell` — the PQ codes,
+    *  - `cells/`: (id, codes, cell) sorted by `cell` — the PQ codes,
     *    stored as `array<tinyint>` SHIFTED BY −128 (codes span
     *    0..nc−1 ≤ 255; tinyint is signed, so the shift is the honest
     *    1-byte-per-subspace representation — m bytes per vector, a
     *    32× compression of dim-64 float32 at the defaults; readers
-    *    widen back losslessly). One directory per cell → a probe's
-    *    `cell IN (...)` predicate prunes the scan to nProbe/nlist of
-    *    the files.
+    *    widen back losslessly). The manifest records each file's cell
+    *    range, so a probe's `cell IN (...)` predicate drops the files
+    *    that hold none of the probed cells.
     *  - `codebook/`: (subspace, code, cw array<tinyint>) — int8
     *    codeword values are in [-127, 127], no shift needed.
     *  - `centroids/`: (cell, ccode array<tinyint>) — the coarse
@@ -647,59 +647,61 @@ object Pq {
       m: Int = 8, ncode: Int = 256, nlist: Int = 64, mode: String = "error",
       refineIters: Int = 0
   ): Unit = {
-    // append encodes/routes under the PERSISTED quantizers (read back
-    // below) — re-training them here would strand the existing codes
-    // in a different space; a refresh cycle rebuilds fresh instead
-    require(mode != "append" || refineIters == 0,
-      "refineIters applies to fresh builds only — append must reuse the " +
-        "persisted quantizers (re-encode the union to retrain)")
-    if (mode != "append") {
-      writeIndex(buildIndex(corpus, idCol, vecCol, m, ncode, nlist,
-        refineIters), path, mode)
-      return
-    }
     val spark = corpus.sparkSession
-    val manifest = manifestAt(spark, path)
-    val meta = PqIndexMeta.of(manifest)
-    require(meta.m == m && meta.nlist == nlist,
-      s"index at $path was built with m=${meta.m}/nlist=${meta.nlist}; " +
-        s"cannot append with m=$m/nlist=$nlist")
-    appendEncoded(corpus, idCol, vecCol, path, readIndexFrom(spark, path, manifest), manifest)
+    IndexManifest.base(spark, path, mode, "ivf_pq") match {
+      case IndexManifest.Append(onto) =>
+        // append encodes/routes under the PERSISTED quantizers (read
+        // back below) — re-training them here would strand the existing
+        // codes in a different space; a refresh cycle rebuilds fresh
+        require(refineIters == 0,
+          "refineIters applies to fresh builds only — append must reuse the " +
+            "persisted quantizers (re-encode the union to retrain)")
+        val manifest = onto.getOrElse(manifestAt(spark, path)) // throws: no meta.txt
+        val meta = PqIndexMeta.of(manifest)
+        require(meta.m == m && meta.nlist == nlist,
+          s"index at $path was built with m=${meta.m}/nlist=${meta.nlist}; " +
+            s"cannot append with m=$m/nlist=$nlist")
+        appendEncoded(corpus, idCol, vecCol, path, readIndexFrom(spark, path, manifest), manifest)
+      case IndexManifest.Replace =>
+        writeBuilt(buildIndex(corpus, idCol, vecCol, m, ncode, nlist, refineIters), path)
+    }
   }
 
   /** Persist an already-built [[PqIndex]] (fresh builds only — append
     * needs the raw increment, use the corpus form). Callers holding a
     * session-shared index avoid re-paying the encode.
     */
-  def writeIndex(index: PqIndex, path: String, mode: String): Unit = {
-    require(mode != "append",
-      "append needs the raw increment corpus — use the corpus form")
+  def writeIndex(index: PqIndex, path: String, mode: String): Unit =
+    IndexManifest.base(index.encoded.sparkSession, path, mode, "ivf_pq") match {
+      case IndexManifest.Append(_) => throw new IllegalArgumentException(
+        "append needs the raw increment corpus — use the corpus form")
+      case IndexManifest.Replace => writeBuilt(index, path)
+    }
+
+  /** The fresh write of a built [[PqIndex]] ([[writeIndex]]). */
+  private def writeBuilt(index: PqIndex, path: String): Unit = {
     val spark = index.encoded.sparkSession
     // the three dataset writes are independent (disjoint directories,
     // deterministic projections) — overlap them (Actions scaladoc); the
     // manifest commits strictly AFTER all three
     val params = PqIndexMeta(index.m, index.nc, index.nlist, index.dim).params
-    val base = IndexManifest.base(spark, path, mode, "ivf_pq")
-    IndexManifest.commit(spark, path, params, base) { stage =>
+    IndexManifest.commit(spark, path, params, None) { stage =>
       Actions.runConcurrently(
         () => stage.write(index.codebook
           .select(col("subspace"), col("code"),
-            col("cw").cast("array<tinyint>").as("cw"))
-          .coalesce(1), "codebook", None),
+            col("cw").cast("array<tinyint>").as("cw")), "codebook", None),
         () => stage.write(index.centroids
-          .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
-          .coalesce(1), "centroids", None),
-        () => stage.write(index.encoded
-          .select(col("id"),
-            transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-            col("cell"))
-          // co-locate cells before the partitioned write (the
-          // writeInt8Index discipline): without this every task splits
-          // into every cell — tasks × nlist small files at corpus scale
-          .repartition(col("cell")), "cells", Some("cell")))
+          .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode")),
+          "centroids", None),
+        () => stage.write(shiftedCells(index.encoded), "cells", Some("cell")))
     }
     ()
   }
+
+  /** `cells/` rows of an (id, codes, cell) frame: codes as tinyint − 128. */
+  private def shiftedCells(encoded: DataFrame): DataFrame =
+    encoded.select(col("id"),
+      transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"), col("cell"))
 
   /** The append-mode encode+route+write over ALREADY-READ quantizers,
     * committed on top of `base` (the manifest version the increment
@@ -728,13 +730,8 @@ object Pq {
     // come from THIS frame's projection, never a re-read of the index
     // (the writeMinHashIndex quadratic-append hazard)
     IndexManifest.commit(corpus.sparkSession, path, base.params, Some(base)) { stage =>
-      Seq(stage.write(
-        encodeAndRoute(guarded, idCol, vecCol, index.m, index.nc,
-            index.codebookFlat, index.dim, index.centroidsFlat)
-          .select(col("id"),
-            transform(col("codes"), c => (c - lit(128)).cast("tinyint")).as("codes"),
-            col("cell"))
-          .repartition(col("cell")), "cells", Some("cell")))
+      Seq(stage.write(shiftedCells(encodeAndRoute(guarded, idCol, vecCol, index.m, index.nc,
+        index.codebookFlat, index.dim, index.centroidsFlat)), "cells", Some("cell")))
     }
     ()
   }

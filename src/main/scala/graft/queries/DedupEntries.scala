@@ -1373,8 +1373,8 @@ private[queries] object DedupEntries {
 
     // The MINHASH leg of index compaction, driver-visible (r17 verdict
     // #6 — the layout was ScalaTest-only): repack the staged seed
-    // MinHash index (bands/ re-packed one file per band dir, shingles/
-    // per shard, parameters + marker preserved — IndexCompaction.compactIndex
+    // MinHash index (bands/ and shingles/ re-packed into disjoint key-range
+    // files, parameters + marker preserved — IndexCompaction.compactIndex
     // rewrites every dataset the manifest lists) and probe the COMPACTED index
     // with the non-seed docs. Compaction permutes file placement only:
     // every posting/shingle row survives (including per-increment

@@ -572,7 +572,7 @@ object Queries {
     * negative-xxhash half (which provably owns the full corpus's
     * centroid hash-minima — the x_ann_index_grow construction, so
     * grown == fresh-full), then grown by three appends. Each append
-    * adds one file wave per cell directory; `x_index_compact` repacks
+    * adds one cells/ file spanning its cell range; `x_index_compact` repacks
     * a copy and probes it. Fragmentation is a pure function of the
     * corpus + append count.
     */

@@ -402,8 +402,8 @@ private[queries] object VectorEntries {
         |FROM read_parquet('/root/repo/tools/golden/diversity_sample.parquet') g, ck
         |WHERE g.corpus_key = ck.k""".stripMargin),
 
-    // IVF cell-population histogram: the partition-balance read
-    // before a `partitionBy(cell)` index layout (a giant cell defeats
+    // IVF cell-population histogram: the balance read before a
+    // cell-sorted index layout (a giant cell defeats
     // probe pruning; many empty cells waste list overhead) — the IVF
     // counterpart of x_minhash_bucket_hist. Verified against the
     // kernel-replay golden.
@@ -1864,8 +1864,8 @@ private[queries] object VectorEntries {
     // this composition needs NO replay golden: the oracle re-derives
     // centroids, cells, probes, codebook, codes, LUTs and ranking.
     // Candidate volume ∝ probed-cell occupancy; at scale the encoded
-    // corpus persists partitionBy(cell) (the writeInt8Index layout
-    // with 8-byte PQ codes), so probes read ~nProbe/nlist of the data.
+    // corpus persists sorted by cell (the writeInt8Index layout with
+    // 8-byte PQ codes), so probes read only the files holding their cells.
     CatalogEntry("x_ann_ivf_pq", (s, d) => {
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
@@ -1884,9 +1884,9 @@ private[queries] object VectorEntries {
     // The PERSISTED serving split of the same composition — write the
     // IVF-PQ index to disk (tinyint codebook/centroids/codes, codes
     // shifted −128 for the honest 1-byte-per-subspace layout,
-    // partitioned by cell, meta-validated), then answer the query
-    // batch by reading ONLY the probed cells' code files (partition-
-    // pruned `cell IN (...)`, PqSpec-asserted) and ranking by the
+    // sorted by cell, meta-validated), then answer the query batch by
+    // reading ONLY the code files whose cell range holds a probed cell
+    // (`cell IN (...)` against the manifest's ranges, PqSpec-asserted) and ranking by the
     // exact integer ADC dot. Scores and ranking are BIT-IDENTICAL to
     // the in-session x_ann_ivf_pq (same quantizers; integer scoring
     // has no accumulation-order freedom), so the entry shares its

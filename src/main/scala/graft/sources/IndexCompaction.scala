@@ -1,33 +1,31 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** Compaction/repack for the PERSISTED INDEX layouts (MinHash LSH,
   * int8 IVF, IVF-PQ) — the index-aware sibling of [[Compaction]].
   *
   * Every append cycle ([[graft.operators.Dedup.ingestDedupBatchTo]],
   * [[graft.operators.Ivf.ingestAnnBatchTo]], `Pq.writeIndex` append
-  * mode) adds per-batch files under the index's partitioned datasets
-  * (`bands/`, `shingles/`, `cells/`). After N micro-batches a
-  * continuously-ingesting index fragments exactly like the small-file
-  * problem plain-table compaction solves — except an index is not a
-  * plain table: it carries partition columns the probes prune on and
-  * a `meta.txt` manifest the probes read their files from, whose
-  * `last_batch=` line is the replay marker the ingest folds consult. A
-  * naive directory rewrite destroys both.
+  * mode) adds one sorted file to each keyed dataset it writes
+  * (`bands/`, `shingles/`, `cells/`), whose key range overlaps the
+  * earlier files'. After N micro-batches a continuously-ingesting
+  * index fragments exactly like the small-file problem plain-table
+  * compaction solves — except an index is not a plain table: its
+  * `meta.txt` manifest lists the files the probes read, with the key
+  * ranges they prune on, and its `last_batch=` line is the replay
+  * marker the ingest folds consult. A naive directory rewrite destroys
+  * both.
   *
   * [[compactIndex]] reads the source's manifest ([[IndexManifest]]),
-  * rewrites each dataset it lists from that version's files — a
-  * partitioned one with one shuffle keyed on its partition column (so
-  * each partition directory collapses to one file per holding task —
-  * the same `repartition(partitionCol)` discipline the index writers
-  * use), an unpartitioned side table (`centroids/`, `codebook/`) with
-  * a single-file coalesce — and commits the output's own manifest
-  * with the same parameter lines (the replay marker included),
-  * listing exactly the compacted files. The rewrite goes to a
-  * NEW directory — atomic swap stays with the caller, the
-  * [[Compaction]] contract.
+  * rewrites each dataset it lists from that version's files through
+  * the writers' one rule ([[IndexManifest.Stage.write]]: a keyed
+  * dataset range-partitioned and sorted by its key, so the output
+  * files hold disjoint ranges in a data-proportional count; a side
+  * table as one file), and commits the output's own manifest with the
+  * same parameter lines (the replay marker included), listing exactly
+  * the compacted files. The rewrite goes to a NEW directory — atomic
+  * swap stays with the caller, the [[Compaction]] contract.
   *
   * Probe results over the compacted index are BIT-IDENTICAL to the
   * fragmented one: compaction permutes row and file placement only,
@@ -50,7 +48,7 @@ object IndexCompaction {
   /** Repack the index at `inPath` into `outPath` (per-dataset stats
     * keyed by dataset name, file counts and bytes from the two
     * manifests — nothing is listed). The layout is preserved exactly —
-    * partition columns and the parameter lines, the ingest replay
+    * the dataset keys and the parameter lines, the ingest replay
     * marker among them, all survive, so a probe (or the next
     * `ingestDedupBatchTo`/`ingestAnnBatchTo` fold step) pointed at
     * `outPath` behaves bit-identically to the fragmented original.
@@ -67,13 +65,7 @@ object IndexCompaction {
     // tail back-fills the other's idle slots (Actions scaladoc)
     val written = IndexManifest.commit(spark, outPath, manifest.params, base = None) { stage =>
       graft.operators.Actions.runConcurrently(manifest.datasets.map { d =>
-        () => {
-          val df = manifest.scan(spark, inPath, d.name)
-          stage.write(d.partitionCol match {
-            case Some(pc) => df.repartition(col(pc))
-            case None => df.coalesce(1)
-          }, d.name, d.partitionCol)
-        }
+        () => stage.write(manifest.scan(spark, inPath, d.name), d.name, d.key)
       }: _*)
     }
     written.map { w =>

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (JVM-wide — Spark startup
@@ -23,6 +25,22 @@ abstract class SparkTestBase extends AnyFunSuite {
     */
   def tempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(graft.queries.Harness.scratchRoot, prefix)
+
+  /** `body` with the session's SQL conf `key` set to `value`, restored
+    * afterwards (a test-local switch on the one shared session).
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Every file scan of an executed plan, through AQE's wrapper nodes. */
+  def scansOf(p: SparkPlan): Seq[FileSourceScanExec] =
+    p.collect { case f: FileSourceScanExec => f } ++ p.collect {
+      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+      case q: QueryStageExec => scansOf(q.plan)
+    }.flatten
 
   /** sf0.001 testdata dir (smoke scale). */
   val sfDir = "/root/testdata/sf0.001"

@@ -2,8 +2,6 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkTestBase {
@@ -28,14 +26,31 @@ class IvfSpec extends SparkTestBase {
     sunk
   }
 
-  /** Every file scan of an executed plan, through AQE's wrapper nodes. */
-  private def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-    val direct = p.collect { case f: FileSourceScanExec => f }
-    val nested = p.collect {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-    }.flatten
-    direct ++ nested
+  /** The int8 index at `dir`, written with AQE's partition coalescing
+    * off so that its `cells/` range-partitioned write yields several
+    * files to prune.
+    */
+  private def writeSplit(dir: String, nlist: Int): Ivf.IvfIndex =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = nlist, mode = "overwrite")
+    }
+
+  /** The `cells/` files of the index at `dir`, with their cell ranges. */
+  private def cellFiles(dir: String): Seq[graft.sources.IndexManifest.Entry] =
+    graft.sources.IndexManifest.read(spark, dir).get.filesOf("cells")
+
+  /** The files of `files` whose cell range holds one of `cells` (a file
+    * without a range always counts).
+    */
+  private def meeting(files: Seq[graft.sources.IndexManifest.Entry], cells: Set[Int]): Int =
+    files.count(_.range.forall { case (lo, hi) => cells.exists(c => c >= lo && c <= hi) })
+
+  /** The cells the queries `qs` probe under the index at `dir`. */
+  private def probedCells(dir: String, qs: DataFrame, nProbe: Int): Set[Int] = {
+    val idx = Ivf.readInt8Index(spark, dir)
+    qs.select(explode(graft.functions.VectorFunctions.nearestCentroids(
+        col("qv"), idx.centroids, idx.dim, nProbe)))
+      .collect().map(_.getInt(0)).toSet
   }
 
   /** Probe the index written at `dir`. */
@@ -180,8 +195,7 @@ class IvfSpec extends SparkTestBase {
 
   test("persisted int8 index: probe is bit-identical to in-session, scan pruned to probed cells") {
     val dir = tempDir("ivf_int8_idx_").toString
-    Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = 32,
-      mode = "overwrite")
+    writeSplit(dir, nlist = 32)
     // tinyint codes on disk — the honest 4x compression
     val schema = spark.read.parquet(s"$dir/cells").schema("cq").dataType
     assert(schema.simpleString == "array<tinyint>", schema.simpleString)
@@ -197,36 +211,39 @@ class IvfSpec extends SparkTestBase {
         ((r.getAs[Long]("id"), r.getAs[Long]("int_dot")))).toMap
     assert(got == inSession, "disk probe diverged from the in-session composition")
 
-    // the probe read ONLY the probed cells' code files (repartition by
-    // cell at write time => exactly one file per cell dir)
-    val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
+    // the probe read ONLY the files whose cell range holds a probed cell
+    val one = queries.limit(1)
+    val oneQuery = probe(dir, one, k = 10, nProbe = nProbe)
     oneQuery.collect()
     val scans = scansOf(oneQuery.queryExecution.executedPlan)
       .filter(_.metadata.get("Location").exists(_.contains("ivf_int8_idx_")))
     assert(scans.nonEmpty, oneQuery.queryExecution.executedPlan.toString)
     val filesRead = scans.map(_.metrics("numFiles").value).sum
-    assert(filesRead <= nProbe,
-      s"one-query probe read $filesRead files; expected <= $nProbe")
+    val files = cellFiles(dir)
+    val hit = meeting(files, probedCells(dir, one, nProbe))
+    assert(filesRead <= hit && filesRead < files.size,
+      s"one-query probe read $filesRead files; $hit of ${files.size} hold a probed cell")
   }
 
   test("written index prunes probe scans to nProbe cells' files; results unchanged") {
     val nlist = 32
     val nProbe = 4
     val dir = tempDir("ivf_index_").toString
-    val index = Ivf.writeInt8Index(emb, "vec_id", "embedding", dir, nlist = nlist,
-      mode = "overwrite")
+    val index = writeSplit(dir, nlist = nlist)
 
-    // one directory per occupied cell on disk
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "cells"))
-    val cellDirs =
-      try listing.filter(_.getFileName.toString.startsWith("cell=")).count()
-      finally listing.close()
-    val occupiedCells = Ivf.assign(
+    // one write's files hold disjoint cell ranges that cover every
+    // occupied cell
+    val files = cellFiles(dir)
+    val ranges = files.flatMap(_.range).sortBy(_._1)
+    assert(ranges.size == files.size && files.size > 1, files)
+    assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 }, ranges)
+    val occupied = Ivf.assign(
       emb.select(col("vec_id").as("id"), col("embedding").as("v")), "v", index)
-      .select("cell").distinct().count()
-    assert(cellDirs == occupiedCells)
+      .select("cell").distinct().collect().map(_.getInt(0))
+    assert(occupied.forall(c => ranges.exists { case (lo, hi) => c >= lo && c <= hi }), ranges)
 
-    // the scan read only the probed cells' files, not the whole index
+    // the scan read only the files that hold a probed cell, not the
+    // whole index
     val fromIndex = Ivf.ivfInt8ProbeIndex(spark, dir, index,
       queries.limit(1), "qid", "qv", k = 10, nProbe = nProbe)
     val rows = fromIndex.collect()
@@ -234,8 +251,9 @@ class IvfSpec extends SparkTestBase {
       .filter(_.metadata.get("Location").exists(_.contains("ivf_index_")))
     assert(scans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
     val filesRead = scans.map(_.metrics("numFiles").value).sum
-    assert(filesRead <= nProbe,
-      s"probe read $filesRead files; expected <= $nProbe of $cellDirs cell dirs")
+    val hit = meeting(files, probedCells(dir, queries.limit(1), nProbe))
+    assert(filesRead <= hit && filesRead < files.size,
+      s"probe read $filesRead files; $hit of ${files.size} hold a probed cell")
 
     // identical results to the in-session probe (same centroids)
     val inSession = Ivf.ivfInt8TopK(emb, "vec_id", "embedding",

@@ -49,7 +49,7 @@ class IndexCompactionSpec extends SparkTestBase {
       !l.startsWith("dataset ") && !l.startsWith("file "))
     assert(params(compacted) == params(frag))
     assert(params(compacted).exists(_.startsWith("format=")))
-    val listed = lines(compacted).filter(_.startsWith("file ")).map(_.split(" ", 3)(2)).toSet
+    val listed = lines(compacted).filter(_.startsWith("file ")).map(_.split(" ").last).toSet
     val root = java.nio.file.Paths.get(compacted)
     val onDisk = {
       val s = java.nio.file.Files.walk(root)

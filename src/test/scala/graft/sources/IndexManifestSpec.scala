@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkTestBase
-import graft.operators.{Dedup, Pq}
+import graft.operators.{Dedup, Ivf, Pq}
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.SpecBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -64,11 +64,11 @@ class IndexManifestSpec extends SparkTestBase {
     val dir = pqIndex("mf_stray")
     val before = probe(dir)
     val committed = spark.read.parquet(s"$dir/cells").count()
-    val donor = Files.list(Paths.get(dir, "cells", "cell=1")).filter(
+    val donor = Files.list(Paths.get(dir, "cells")).filter(
       _.getFileName.toString.endsWith(".parquet")).findFirst().get()
     val donorRows = spark.read.parquet(donor.toString).count()
     assert(donorRows > 0)
-    Files.copy(donor, Paths.get(dir, "cells", "cell=0", "part-stray.parquet"))
+    Files.copy(donor, Paths.get(dir, "cells", "part-stray.parquet"))
     assert(spark.read.parquet(s"$dir/cells").count() == committed + donorRows,
       "the bare read must see the stray file — else this test shows nothing")
     assert(probe(dir) == before)
@@ -183,10 +183,9 @@ class IndexManifestSpec extends SparkTestBase {
   test("a 64-cell PQ index: readIndex runs only its two quantizer collects, and building " +
       "probeIndex only the probe-cell collect") {
     val dir = pqIndex("mf_jobs_pq", nlist = 64)
-    // the control: a bare read of the same layout lists and infers
+    // the control: a bare read of the same layout infers the schema
     val (_, _, bare) = observe(spark.read.parquet(s"$dir/cells"))
-    assert(bare.exists(j => j.listing && j.tasks == 64) && bare.exists(_.inference),
-      s"control read ran neither a listing nor an inference job: $bare")
+    assert(bare.exists(_.inference), s"control read ran no inference job: $bare")
 
     val (idx, readActions, readJobs) = observe(Pq.readIndex(spark, dir))
     assert(readActions == Seq("collect", "collect"), readActions)
@@ -281,6 +280,126 @@ class IndexManifestSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(dir, "meta.txt")))
     assert(Dedup.minHashProbeIndex(spark, docs.limit(5), "doc_id", "text", dir,
       threshold = 0.0).count() == 0)
+  }
+
+  /** The number of `file` lines per dataset of the index at `dir`. */
+  private def fileCounts(dir: String): Map[String, Int] =
+    IndexManifest.read(spark, dir).get.files.groupBy(_.dataset).map { case (d, fs) => d -> fs.size }
+
+  private def docMod = pmod(col("doc_id"), lit(5))
+
+  /** Per layout: its name, a fresh build of the base corpus, an append
+    * of the 100-row increment in a given mode, the datasets an append
+    * writes, and a readout of the index (probe rows, stored rows).
+    */
+  private def layouts = Seq[(String, String => Unit, (String, String) => Unit, Set[String],
+      String => Seq[String])](
+    ("minhash",
+      dir => Dedup.writeMinHashIndex(docs.filter(docMod =!= 0), "doc_id", "text", dir,
+        mode = "overwrite"),
+      (dir, mode) => Dedup.writeMinHashIndex(docs.filter(docMod === 0), "doc_id", "text", dir,
+        mode = mode),
+      Set("shingles", "bands"),
+      dir => Dedup.minHashProbeIndex(spark, docs.filter(docMod === 0), "doc_id", "text", dir,
+        threshold = 0.0).collect().map(_.toString).sorted.toSeq :+
+        IndexManifest.read(spark, dir).get.scan(spark, dir, "shingles").count().toString),
+    ("ivf_int8",
+      dir => Ivf.writeInt8Index(base, "vec_id", "embedding", dir, nlist = 8, mode = "overwrite"),
+      (dir, mode) => Ivf.writeInt8Index(inc, "vec_id", "embedding", dir, nlist = 8, mode = mode),
+      Set("cells"),
+      dir => Ivf.ivfInt8ProbeIndex(spark, dir, Ivf.readInt8Index(spark, dir), queries,
+        "qid", "qv", k = 5, nProbe = 8).collect().map(_.toString).sorted.toSeq),
+    ("ivf_pq",
+      dir => Pq.writeIndex(base, "vec_id", "embedding", dir, m = 8, ncode = 16, nlist = 8,
+        mode = "overwrite"),
+      (dir, mode) => Pq.writeIndex(inc, "vec_id", "embedding", dir, m = 8, ncode = 16,
+        nlist = 8, mode = mode),
+      Set("cells"),
+      dir => probe(dir) ++ codes(dir)))
+
+  test("a 100-row append adds exactly one file line per dataset it writes, in each layout") {
+    assert(inc.count() == 100 && docs.filter(docMod === 0).count() == 100)
+    layouts.foreach { case (name, build, grow, writes, _) =>
+      val dir = tempDir(s"mf_one_$name").resolve("idx").toString
+      build(dir)
+      val before = fileCounts(dir)
+      grow(dir, "append")
+      val after = fileCounts(dir)
+      assert(after.keySet == before.keySet && writes.subsetOf(before.keySet), (before, after))
+      before.foreach { case (d, n) =>
+        assert(after(d) == n + (if (writes(d)) 1 else 0), s"$name $d: $n -> ${after(d)} files")
+      }
+    }
+  }
+
+  test("the index write mode is parsed once: \"Append\" and \"APPEND\" append exactly as " +
+      "\"append\" does, in each layout") {
+    layouts.foreach { case (name, build, grow, _, readout) =>
+      val grown = Seq("append", "Append", "APPEND").map { mode =>
+        val dir = tempDir(s"mf_mode_$name").resolve("idx").toString
+        build(dir)
+        grow(dir, mode)
+        (mode, fileCounts(dir), readout(dir))
+      }
+      val (_, files, rows) = grown.head
+      grown.tail.foreach { case (mode, f, r) =>
+        assert(f == files, s"$name $mode: $f, append: $files")
+        assert(r == rows, s"$name $mode: the index reads differently from an append")
+      }
+    }
+  }
+
+  test("a manifest of the partition-dir layout is refused with a request to rebuild") {
+    val dir = minHashIndex("mf_old")
+    val meta = Paths.get(dir, "meta.txt")
+    val lines = new String(Files.readAllBytes(meta), "UTF-8").linesIterator.toSeq
+    def files(f: String => String) = lines.map(l => if (l.startsWith("file ")) f(l) else l)
+    Seq(
+      // file lines without key ranges
+      files { l => val w = l.split(" "); s"file ${w(1)} ${w.last}" },
+      // a file under a partition dir
+      files(_.replace(" shingles/", " shingles/shard=3/"))
+    ).foreach { text =>
+      Files.deleteIfExists(Paths.get(dir, ".meta.txt.crc"))
+      Files.write(meta, text.mkString("", "\n", "\n").getBytes("UTF-8"))
+      val probing = intercept[IllegalArgumentException] {
+        Dedup.minHashProbeIndex(spark, docs.limit(5), "doc_id", "text", dir)
+      }
+      val appending = intercept[IllegalArgumentException] {
+        Dedup.writeMinHashIndex(docs.limit(60), "doc_id", "text", dir, mode = "append")
+      }
+      Seq(probing, appending).foreach(e =>
+        assert(e.getMessage.contains("rebuild the index"), e.getMessage))
+    }
+  }
+
+  test("a MinHash probe's shingles scan reads only the files whose shard range meets " +
+      "the hit shards") {
+    val dir = tempDir("mf_prune_mh").resolve("idx").toString
+    // several range-partitioned files: no coalescing of the write's shuffle
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      Dedup.writeMinHashIndex(docs.filter(docMod =!= 0), "doc_id", "text", dir,
+        mode = "overwrite", nShards = 64)
+    }
+    val files = IndexManifest.read(spark, dir).get.filesOf("shingles")
+    assert(files.size > 1, files)
+    // the batch doc with the fewest candidates, and the shards they live in
+    val pairs = Dedup.minHashProbeIndex(spark, docs.filter(docMod === 0), "doc_id", "text", dir,
+      threshold = 0.0)
+    val chosen = pairs.groupBy("batch_id").count()
+      .orderBy(col("count"), col("batch_id")).first().getLong(0)
+    val hit = pairs.filter(col("batch_id") === chosen)
+      .select(pmod(xxhash64(col("corpus_id")), lit(64L))).collect().map(_.getLong(0)).toSet
+    val probed = Dedup.minHashProbeIndex(spark, docs.filter(col("doc_id") === chosen),
+      "doc_id", "text", dir, threshold = 0.0)
+    assert(probed.collect().nonEmpty)
+    val scans = scansOf(probed.queryExecution.executedPlan)
+      .filter(_.metadata.get("Location").exists(_.contains("shingles")))
+    assert(scans.nonEmpty, probed.queryExecution.executedPlan.toString)
+    val read = scans.map(_.metrics("numFiles").value).sum
+    val meeting = files.count(_.range.forall { case (lo, hi) => hit.exists(h => h >= lo && h <= hi) })
+    assert(read <= meeting && meeting < files.size,
+      s"the shingles scan read $read files; $meeting of ${files.size} hold shards $hit")
   }
 
   test("an overwrite commits the new manifest and leaves only its files") {
