@@ -567,18 +567,25 @@ object Dedup {
     * relative to the accumulated corpus. Two parquet datasets under
     * `path`:
     *
-    *  - `bands/`: (bucket, bucket_size, id, band), sorted by band —
-    *    the LSH postings. `bucket_size` is denormalized per row so a
-    *    probe can cap hot buckets with a cheap scan filter; the cap is
-    *    a PROBE-time parameter, nothing is lost at build time.
+    *  - `bands/`: (bucket, bucket_size, id, band) — the LSH postings,
+    *    unkeyed: a probe joins them on (band, bucket) and filters on no
+    *    key, so they are written straight off the `bucket_size`
+    *    window's (band, bucket) exchange. `bucket_size` is
+    *    denormalized per row so a probe can cap hot buckets with a
+    *    cheap scan filter; the cap is a PROBE-time parameter, nothing
+    *    is lost at build time.
     *  - `shingles/`: (id, sh, shard), sorted by `shard` =
     *    pmod(xxhash64(id), nShards) — the shingle sets, for
     *    exact-Jaccard verification of candidates. Sharding lets a probe
     *    read only the files whose shard range holds candidate ids
-    *    instead of the whole (corpus-sized) shingle store.
+    *    instead of the whole (corpus-sized) shingle store. A small
+    *    append is one file whose range spans about every shard, which
+    *    every probe reads: appended shingles are pruned only once
+    *    [[graft.sources.IndexCompaction.compactIndex]] rewrites them
+    *    into disjoint ranges.
     *  - `meta.txt`: the manifest ([[graft.sources.IndexManifest]]) —
-    *    the LSH parameters plus every committed file of both datasets
-    *    with its key range.
+    *    the LSH parameters plus every committed file of both datasets,
+    *    with each `shingles/` file's shard range.
     *    A probe with different parameters would bucket into silently
     *    disjoint hash spaces and report zero pairs —
     *    [[minHashProbeIndex]] validates against it and fails loudly
@@ -589,9 +596,11 @@ object Dedup {
     *
     * The bucket sizes come from an algebraic count(*) joined back onto
     * the posting rows (no collect_list — per-bucket memory is constant,
-    * so a viral duplicate cannot OOM a reducer at build time); pass
-    * `storage` to persist the shingle projection when recomputing the
-    * banding for the count and posting branches is worth avoiding.
+    * so a viral duplicate cannot OOM a reducer at build time).
+    * `storage` persists the shingle projection, which three passes
+    * read: the `shingles/` write's range sample and its shuffle, and
+    * the `bands/` write. With `StorageLevel.NONE` the shingle kernel
+    * runs three times over the corpus.
     * Growing the corpus = appending new docs' postings (build the
     * increment's index with `mode="append"` after probing it). Under
     * append, `bucket_size` is per-INCREMENT: a probe's `maxBucket` cap
@@ -609,7 +618,7 @@ object Dedup {
       bands: Int = 16,
       mode: String = "error",
       nShards: Int = 64,
-      storage: StorageLevel = StorageLevel.NONE
+      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK
   ): Unit = {
     val params = IndexMeta(shingleSize, numHashes, bands, nShards)
     // append onto an existing index must use ITS parameters, or the
@@ -640,8 +649,10 @@ object Dedup {
     // re-read would see old increments too and re-append every existing
     // posting — duplicated ids, conflicting bucket_size values, and
     // quadratic index growth per increment. Both writes are actions
-    // inside this call, so an optional persist (one shingle-kernel run
-    // instead of two) can be released before returning.
+    // inside this call, so the persist (one shingle-kernel run instead
+    // of three: the shingles write's range sample and its shuffle each
+    // evaluate src, and so does the bands write) can be released before
+    // returning; a fold step's small batch skips it.
     val projected = corpus
       .select(col(idCol).as("id"), shingles(col(textCol), meta.shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -666,7 +677,7 @@ object Dedup {
           .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
           .withColumn("bucket_size", count(lit(1)).over(w).cast(IntegerType))
           .select(col("bucket"), col("bucket_size"), col("id"), col("band")),
-        "bands", Some("band"))
+        "bands", None)
       // the two dataset writes are INDEPENDENT (disjoint directories,
       // both deterministic projections of src) — overlap them so the
       // tail of one write's stages back-fills the other's idle slots
@@ -692,7 +703,9 @@ object Dedup {
     * nShards, like Ivf's cell literals) and pushed as a `shard IN`
     * filter, which drops the files whose shard range misses it, so a
     * small probe touches a small slice of the shingle store instead of
-    * all of it. Hot corpus buckets are skipped by the
+    * all of it — of the built or compacted store: each appended file
+    * spans its batch's shards, about all of them, and is read by every
+    * probe until compaction. Hot corpus buckets are skipped by the
     * `bucket_size <= maxBucket` scan filter — deliberately PUSHED DOWN
     * to the parquet scan (row-group skipping), which also means an
     * attached `observe` could not see the skipped rows; quantify the

@@ -5,6 +5,7 @@ import graft.sources.IndexManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
   * cell-probing alternative to hyperplane LSH ([[Similarity.lshTopK]]).
@@ -321,16 +322,20 @@ object Ivf {
         // lists only the new files, so cells empty in the new corpus never
         // keep stale ids scored under the old centroids.
         val params = Int8IndexMeta(index.nlist, index.dim).params
-        IndexManifest.commit(spark, path, params, None) { stage =>
+        // the corpus is assigned and quantized once: the keyed write's
+        // range sample and its shuffle both read the persisted codes
+        val cells = int8Cells(corpus, idCol, vecCol, index)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try IndexManifest.commit(spark, path, params, None) { stage =>
           Actions.runConcurrently(
             () => {
               import spark.implicits._
               stage.write((0 until index.nlist).map { cell =>
                 (cell, index.centroids.slice(cell * index.dim, (cell + 1) * index.dim).toSeq)
-              }.toDF("cell", "c"), "centroids", None)
+              }.toDF("cell", "c").coalesce(1), "centroids", None)
             },
-            () => stage.write(int8Cells(corpus, idCol, vecCol, index), "cells", Some("cell")))
-        }
+            () => stage.write(cells, "cells", Some("cell")))
+        } finally cells.unpersist()
         index
     }
   }
@@ -430,7 +435,9 @@ object Ivf {
     * `queries` to. Only the DISTINCT probe cells are collected to the
     * driver — at most nlist values, however many queries are in the
     * batch — to build the `cell IN (...)` predicate that drops the
-    * files whose cell range holds no probed cell;
+    * files whose cell range holds no probed cell (a small append's
+    * one file spans about every cell, so appended codes are pruned
+    * only after [[graft.sources.IndexCompaction.compactIndex]]);
     * the probe frame itself stays a lazy DataFrame on the broadcast
     * side of the caller's join, so a large query batch never
     * materializes queries×nProbe rows as a driver-side Array. The

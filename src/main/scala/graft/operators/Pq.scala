@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import Parallelism.widen
 
 /** Product quantization (PQ) — the third rung of the embedding
@@ -547,7 +548,7 @@ object Pq {
   /** Each query's `nProbe` nearest cells by exact integer squared-L2
     * (cc − 2·dot, ties → smallest cell): (query_id, cell).
     */
-  private def routed(
+  private[operators] def routed(
       index: PqIndex, queries: DataFrame, qidCol: String, qvecCol: String, nProbe: Int
   ): DataFrame =
     queries
@@ -663,13 +664,19 @@ object Pq {
             s"cannot append with m=$m/nlist=$nlist")
         appendEncoded(corpus, idCol, vecCol, path, readIndexFrom(spark, path, manifest), manifest)
       case IndexManifest.Replace =>
-        writeBuilt(buildIndex(corpus, idCol, vecCol, m, ncode, nlist, refineIters), path)
+        // the corpus is encoded and routed once: the keyed write's range
+        // sample and its shuffle both read the persisted codes
+        val built = buildIndex(corpus, idCol, vecCol, m, ncode, nlist, refineIters)
+        val encoded = built.encoded.persist(StorageLevel.MEMORY_AND_DISK)
+        try writeBuilt(built.copy(encoded = encoded), path) finally encoded.unpersist()
     }
   }
 
   /** Persist an already-built [[PqIndex]] (fresh builds only — append
     * needs the raw increment, use the corpus form). Callers holding a
-    * session-shared index avoid re-paying the encode.
+    * session-shared index avoid re-paying the encode. The `cells/`
+    * write evaluates `index.encoded` twice (its range sample, then its
+    * shuffle): persist it first unless it is cached already.
     */
   def writeIndex(index: PqIndex, path: String, mode: String): Unit =
     IndexManifest.base(index.encoded.sparkSession, path, mode, "ivf_pq") match {
@@ -689,10 +696,11 @@ object Pq {
       Actions.runConcurrently(
         () => stage.write(index.codebook
           .select(col("subspace"), col("code"),
-            col("cw").cast("array<tinyint>").as("cw")), "codebook", None),
+            col("cw").cast("array<tinyint>").as("cw"))
+          .coalesce(1), "codebook", None),
         () => stage.write(index.centroids
-          .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode")),
-          "centroids", None),
+          .select(col("cell"), col("ccode").cast("array<tinyint>").as("ccode"))
+          .coalesce(1), "centroids", None),
         () => stage.write(shiftedCells(index.encoded), "cells", Some("cell")))
     }
     ()

@@ -7,22 +7,26 @@ import org.apache.spark.sql.SparkSession
   *
   * Every append cycle ([[graft.operators.Dedup.ingestDedupBatchTo]],
   * [[graft.operators.Ivf.ingestAnnBatchTo]], `Pq.writeIndex` append
-  * mode) adds one sorted file to each keyed dataset it writes
-  * (`bands/`, `shingles/`, `cells/`), whose key range overlaps the
-  * earlier files'. After N micro-batches a continuously-ingesting
-  * index fragments exactly like the small-file problem plain-table
-  * compaction solves — except an index is not a plain table: its
+  * mode) adds one file to each dataset it writes (`bands/`,
+  * `shingles/`, `cells/`); a keyed one's (`shingles/`, `cells/`) is
+  * sorted, and its key range overlaps the earlier files', about all of
+  * them for a small batch, so a probe prunes none of the appended
+  * files until they are compacted. After N micro-batches a
+  * continuously-ingesting index fragments exactly like the small-file
+  * problem plain-table compaction solves — except an index is not a plain table: its
   * `meta.txt` manifest lists the files the probes read, with the key
   * ranges they prune on, and its `last_batch=` line is the replay
   * marker the ingest folds consult. A naive directory rewrite destroys
   * both.
   *
   * [[compactIndex]] reads the source's manifest ([[IndexManifest]]),
-  * rewrites each dataset it lists from that version's files through
-  * the writers' one rule ([[IndexManifest.Stage.write]]: a keyed
-  * dataset range-partitioned and sorted by its key, so the output
-  * files hold disjoint ranges in a data-proportional count; a side
-  * table as one file), and commits the output's own manifest with the
+  * rewrites each dataset it lists from that version's files — a keyed
+  * one through the writers' rule ([[IndexManifest.Stage.write]]:
+  * range-partitioned and sorted by its key, so the output files hold
+  * disjoint ranges in a data-proportional count), an unkeyed one
+  * (`bands/`, the side tables) as its scan merged into files of about
+  * `spark.sql.files.maxPartitionBytes` each (one file for a side
+  * table) — and commits the output's own manifest with the
   * same parameter lines (the replay marker included), listing exactly
   * the compacted files. The rewrite goes to a NEW directory — atomic
   * swap stays with the caller, the [[Compaction]] contract.
@@ -60,12 +64,18 @@ object IndexCompaction {
       throw new IllegalArgumentException(s"no meta.txt under $inPath — not a written index"))
     val format = manifest.param("format").getOrElse("")
     require(Set("minhash", "ivf_int8", "ivf_pq")(format), s"unknown index format '$format'")
+    val maxFileBytes = spark.sessionState.conf.filesMaxPartitionBytes
     // the per-dataset rewrites are independent (disjoint source and
     // destination directories) — overlap them so one dataset's write
     // tail back-fills the other's idle slots (Actions scaladoc)
     val written = IndexManifest.commit(spark, outPath, manifest.params, base = None) { stage =>
       graft.operators.Actions.runConcurrently(manifest.datasets.map { d =>
-        () => stage.write(manifest.scan(spark, inPath, d.name), d.name, d.key)
+        () => {
+          val scan = manifest.scan(spark, inPath, d.name)
+          val bytes = manifest.filesOf(d.name).map(_.len).sum
+          val files = math.max(1L, (bytes + maxFileBytes - 1) / maxFileBytes).toInt
+          stage.write(if (d.key.isDefined) scan else scan.coalesce(files), d.name, d.key)
+        }
       }: _*)
     }
     written.map { w =>

@@ -26,12 +26,14 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Each dataset is a flat dir of Parquet files. A keyed dataset
-  * (`cells/` by `cell`, `shingles/` by `shard`, `bands/` by `band`) is
-  * written sorted by its key ([[IndexManifest.Stage.write]]), so each
-  * file holds one contiguous key range, read from the file's Parquet
-  * footer when it is staged. A scan drops the files whose range misses
-  * the probe's `IN`/`=` filter on the key ([[GraftManifestScan]]); a
-  * file without a range is never dropped.
+  * (`cells/` by `cell`, `shingles/` by `shard`) is written sorted by
+  * its key ([[IndexManifest.Stage.write]]), so each file holds one
+  * contiguous key range, read from the file's Parquet footer when it
+  * is staged. A scan drops the files whose range misses the probe's
+  * `IN`/`=` filter on the key ([[GraftManifestScan]]); a file without
+  * a range is never dropped. A dataset no probe filters on a key
+  * (`bands/`, joined on (band, bucket); the side tables) is unkeyed,
+  * and its files record no range.
   *
   * Writers ([[IndexManifest.commit]]) let Spark write every dataset
   * into one hidden `_staging-<uuid>` dir under the root (ignored by
@@ -244,12 +246,18 @@ private[graft] object IndexManifest {
       * `repartitionByRange(key)` and sorted by `key` within each file,
       * so its files hold contiguous, non-overlapping key ranges (AQE
       * coalesces a small append into one file) and each entry records
-      * its file's range; an unkeyed side table is written as one file.
+      * its file's range. The range partitioner's sample job evaluates
+      * `df` in full before the shuffle evaluates it again, so a keyed
+      * write computes its input twice: the fresh builds persist theirs
+      * (an encode or kernel pass over the corpus), while a fold step's
+      * small append and a compaction's Parquet scan are recomputed. An
+      * unkeyed dataset is written one file per partition of `df` as it
+      * comes.
       * Each entry's path under the stage is its path under the index
       * root.
       */
     def write(df: DataFrame, name: String, key: Option[String]): Written = {
-      key.fold(df.coalesce(1))(k => df.repartitionByRange(col(k)).sortWithinPartitions(col(k)))
+      key.fold(df)(k => df.repartitionByRange(col(k)).sortWithinPartitions(col(k)))
         .write.parquet(new Path(dir, name).toString)
       val conf = spark.sessionState.newHadoopConf()
       val prefix = dir.toUri.getPath + "/"

@@ -481,8 +481,11 @@ class DedupSpec extends SparkTestBase {
   test("probe validates index parameters from meta.txt and prunes shingle shards") {
     val idx = tempDir("graft_idx_meta_").toString
     val docs01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    Dedup.writeMinHashIndex(docs01.filter(col("doc_id") < 400), "doc_id", "text",
-      idx, mode = "overwrite", nShards = 16)
+    // several range-partitioned shingle files: no coalescing of the write's shuffle
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      Dedup.writeMinHashIndex(docs01.filter(col("doc_id") < 400), "doc_id", "text",
+        idx, mode = "overwrite", nShards = 16)
+    }
     // mismatched bands -> disjoint hash space -> must fail loudly
     val e = intercept[IllegalArgumentException] {
       Dedup.minHashProbeIndex(spark, docs01.filter(col("doc_id") >= 400),
@@ -498,27 +501,21 @@ class DedupSpec extends SparkTestBase {
     val chosen = any.groupBy("batch_id").count()
       .orderBy(col("count"), col("batch_id")).first().getLong(0)
     val hitShards = any.filter(col("batch_id") === chosen)
-      .select(pmod(xxhash64(col("corpus_id")), lit(16L))).distinct().count()
+      .select(pmod(xxhash64(col("corpus_id")), lit(16L))).distinct()
+      .collect().map(_.getLong(0)).toSet
     val probed = Dedup.minHashProbeIndex(spark,
       docs01.filter(col("doc_id") === chosen), "doc_id", "text", idx, threshold = 0.0)
     assert(probed.collect().nonEmpty)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val direct = p.collect { case f: FileSourceScanExec => f }
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case q: QueryStageExec => scansOf(q.plan)
-      }.flatten
-      direct ++ nested
-    }
     val shingleScans = scansOf(probed.queryExecution.executedPlan)
       .filter(_.metadata.get("Location").exists(_.contains("shingles")))
     assert(shingleScans.nonEmpty, probed.queryExecution.executedPlan.toString)
     val parts = shingleScans.map(_.metrics("numFiles").value).sum
-    assert(parts <= hitShards && parts < 16,
-      s"shingle scan read $parts files for $hitShards candidate shards " +
-        "— shard pruning did not fire")
+    val files = graft.sources.IndexManifest.read(spark, idx).get.filesOf("shingles")
+    val meeting = files.count(_.range.forall { case (lo, hi) =>
+      hitShards.exists(s => s >= lo && s <= hi) })
+    assert(parts <= meeting && parts < files.size,
+      s"shingle scan read $parts files; $meeting of ${files.size} hold the candidate " +
+        s"shards $hitShards — shard pruning did not fire")
   }
 
   test("append-mode corpus growth: probe after append equals a fresh full index") {

@@ -121,8 +121,14 @@ class PqSpec extends SparkTestBase {
 
   test("persisted PQ index: probe is bit-identical to in-session, scan pruned to probed cells") {
     val dir = tempDir("ivf_pq_idx_").toString
-    Pq.writeIndex(emb, "vec_id", "embedding", dir,
-      m = 8, ncode = 32, nlist = 16, mode = "overwrite")
+    // about one range-partitioned file per cell: 16 shuffle partitions,
+    // not coalesced
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      withConf("spark.sql.shuffle.partitions", "16") {
+        Pq.writeIndex(emb, "vec_id", "embedding", dir,
+          m = 8, ncode = 32, nlist = 16, mode = "overwrite")
+      }
+    }
     // tinyint payloads on disk — the honest 1-byte-per-subspace codes
     assert(spark.read.parquet(s"$dir/cells").schema("codes")
       .dataType.simpleString == "array<tinyint>")
@@ -140,24 +146,21 @@ class PqSpec extends SparkTestBase {
     assert(fromDisk == inSession,
       "disk probe diverged from the in-session composition")
 
-    // the probe read ONLY the probed cells' code files (repartition by
-    // cell at write time => exactly one file per cell dir)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val direct = p.collect { case f: FileSourceScanExec => f }
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case q: QueryStageExec => scansOf(q.plan)
-      }.flatten
-      direct ++ nested
-    }
-    val oneQuery = probe(dir, queries.limit(1), k = 10, nProbe = nProbe)
+    // the probe read ONLY the files whose cell range holds a probed cell
+    val one = queries.limit(1)
+    val oneQuery = probe(dir, one, k = 10, nProbe = nProbe)
     oneQuery.collect()
     val scans = scansOf(oneQuery.queryExecution.executedPlan)
       .filter(_.metadata.get("Location").exists(_.contains("ivf_pq_idx_")))
     assert(scans.nonEmpty, oneQuery.queryExecution.executedPlan.toString)
-    assert(scans.map(_.metrics("numFiles").value).sum <= nProbe)
+    val filesRead = scans.map(_.metrics("numFiles").value).sum
+    val files = graft.sources.IndexManifest.read(spark, dir).get.filesOf("cells")
+    val probed = Pq.routed(Pq.readIndex(spark, dir), one, "qid", "qv", nProbe)
+      .select("cell").collect().map(_.getInt(0)).toSet
+    val hit = files.count(_.range.forall { case (lo, hi) =>
+      probed.exists(c => c >= lo && c <= hi) })
+    assert(filesRead <= hit && filesRead < files.size,
+      s"one-query probe read $filesRead files; $hit of ${files.size} hold a probed cell")
   }
 
   test("persisted PQ index: seed-then-append equals the fresh full build") {

@@ -183,9 +183,13 @@ class IndexManifestSpec extends SparkTestBase {
   test("a 64-cell PQ index: readIndex runs only its two quantizer collects, and building " +
       "probeIndex only the probe-cell collect") {
     val dir = pqIndex("mf_jobs_pq", nlist = 64)
-    // the control: a bare read of the same layout infers the schema
-    val (_, _, bare) = observe(spark.read.parquet(s"$dir/cells"))
-    assert(bare.exists(_.inference), s"control read ran no inference job: $bare")
+    // the control: a bare read of the same rows in 64 `cell=` dirs lists
+    // and infers, so the listener sees the jobs the index read must not run
+    val parted = tempDir("mf_jobs_pq_parted").resolve("cells").toString
+    spark.read.parquet(s"$dir/cells").write.partitionBy("cell").parquet(parted)
+    val (_, _, bare) = observe(spark.read.parquet(parted))
+    assert(bare.exists(j => j.listing && j.tasks == 64) && bare.exists(_.inference),
+      s"control read ran neither a listing nor an inference job: $bare")
 
     val (idx, readActions, readJobs) = observe(Pq.readIndex(spark, dir))
     assert(readActions == Seq("collect", "collect"), readActions)
@@ -264,7 +268,7 @@ class IndexManifestSpec extends SparkTestBase {
           () => stage.write(spark.read.parquet(s"$dir/shingles"), "shingles", Some("shard")),
           () => stage.write(spark.read.parquet(s"$dir/bands")
             .withColumn("id", when(col("id") >= 0, raise_error(lit("boom")))
-              .otherwise(col("id"))), "bands", Some("band")))
+              .otherwise(col("id"))), "bands", None))
       }
     }
     assert(e.toString.contains("boom") || Option(e.getCause).exists(_.toString.contains("boom")),
