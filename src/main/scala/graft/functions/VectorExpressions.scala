@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -472,6 +472,97 @@ object Kernels {
       j += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** A query's int8 codes as longs, null elements as 0 (the [[dotLong]]
+    * convention), for the PQ query-side kernels below.
+    */
+  private def longsOf(q: ArrayData, n: Int): Array[Long] = {
+    val out = new Array[Long](n)
+    var i = 0
+    while (i < n) { if (!q.isNullAt(i)) out(i) = q.getLong(i); i += 1 }
+    out
+  }
+
+  /** Flat ADC lookup table of ONE query — entry [j·nc + c] is the exact
+    * integer dot of query subvector j with codeword c of subspace j
+    * (`codebook` in the [[pqEncodeCodes]] layout), the m·nc table that
+    * [[adcLong]] indexes. The subvector width comes from the QUERY:
+    * qsub = ⌊len/m⌋, subvector j is q[j·qsub, (j+1)·qsub), and each
+    * dot runs over min(qsub, sub) elements; null elements contribute 0.
+    * A null query gives m·nc null entries, which [[adcLong]] scores as
+    * 0. Work per query is m·nc·sub multiply-adds — a plan-constant
+    * table, built in-row with no join or shuffle.
+    */
+  def pqQueryLut(
+      q: ArrayData, codebook: Array[Long], m: Int, nc: Int, sub: Int
+  ): ArrayData = {
+    if (q == null)
+      return new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](m * nc))
+    val qsub = q.numElements() / m
+    val w = math.min(qsub, sub)
+    val qv = longsOf(q, m * qsub)
+    val out = new Array[Long](m * nc)
+    var j = 0
+    while (j < m) {
+      var c = 0
+      while (c < nc) {
+        val base = (j * nc + c) * sub
+        var d = 0L
+        var i = 0
+        while (i < w) { d += qv(j * qsub + i) * codebook(base + i); i += 1 }
+        out(j * nc + c) = d
+        c += 1
+      }
+      j += 1
+    }
+    ArrayData.toArrayData(out)
+  }
+
+  /** IVF routing of ONE query: the `nProbe` cells nearest by exact
+    * integer squared L2 over full int8 codes, in the cc − 2·dot form
+    * (the dropped q·q term is constant per query), ascending, ties →
+    * smaller cell. `centroids` is cell-major, `dim` elements per cell
+    * (the coarse grid of [[pqEncodeCodes]] with one group). Elements
+    * past the query's length or null contribute 0 to the dot; a null
+    * query has no distances and takes cells 0..nProbe−1.
+    */
+  def pqRouteCells(
+      q: ArrayData, centroids: Array[Long], dim: Int, nProbe: Int
+  ): ArrayData = {
+    val k = centroids.length / dim
+    val top = math.min(nProbe, k)
+    if (q == null) return ArrayData.toArrayData(Array.range(0, top))
+    val n = math.min(q.numElements(), dim)
+    val qv = longsOf(q, n)
+    val topIdx = new Array[Int](top)
+    val topD = new Array[Long](top)
+    var filled = 0
+    var c = 0
+    while (c < k) {
+      val base = c * dim
+      var cc = 0L
+      var dotAcc = 0L
+      var i = 0
+      while (i < dim) {
+        val x = centroids(base + i)
+        cc += x * x
+        if (i < n) dotAcc += qv(i) * x
+        i += 1
+      }
+      val d = cc - 2L * dotAcc
+      // cells arrive ascending, so a strict `<` keeps the smaller cell
+      // ahead of a later one at the same distance
+      if (filled < top || d < topD(top - 1)) {
+        var pos = if (filled < top) { filled += 1; filled - 1 } else top - 1
+        while (pos > 0 && d < topD(pos - 1)) {
+          topD(pos) = topD(pos - 1); topIdx(pos) = topIdx(pos - 1); pos -= 1
+        }
+        topD(pos) = d; topIdx(pos) = c
+      }
+      c += 1
+    }
+    ArrayData.toArrayData(topIdx)
   }
 
   /** Cosine similarity in one pass; 0.0 when either norm is zero. */
@@ -1126,38 +1217,98 @@ case class HammingLongExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** [[Kernels.pqEncodeCodes]] over a plan-constant flat codebook (the
-  * [[NearestCentroidsExpr]] reference-object pattern).
+/** A PQ kernel over int8 codes and a plan-constant flat grid (the
+  * [[NearestCentroidsExpr]] reference-object pattern): codegen emits
+  * `Kernels.<kernelName>(codes, grid, shape...)`.
   */
-case class PqEncodeExpr(
-    child: Expression, codebook: Array[Long], m: Int, nc: Int, sub: Int)
-    extends UnaryExpression with ArrayElemTypes {
-  require(m >= 1 && nc >= 1 && sub >= 1, s"bad pq shape m=$m nc=$nc sub=$sub")
-  require(codebook.length == m * nc * sub,
-    s"codebook length ${codebook.length} != m*nc*sub (${m * nc * sub})")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    checkLongArray(child, "codes")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.pqEncodeCodes(input.asInstanceOf[ArrayData], codebook, m, nc, sub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebook", codebook, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.pqEncodeCodes($c, $ref, $m, $nc, $sub)")
+private[functions] sealed trait FlatGridExpr extends UnaryExpression with ArrayElemTypes {
+  def grid: Array[Long]
+  /** The kernel's int parameters after (codes, grid), in call order. */
+  protected def shape: Seq[Int]
+  protected def kernelName: String
+  override def checkInputDataTypes(): TypeCheckResult = checkLongArray(child, "codes")
+  protected def kernelCall(ctx: CodegenContext, codes: String): String = {
+    val ref = ctx.addReferenceObj("grid", grid, "long[]")
+    s"graft.functions.Kernels.$kernelName($codes, $ref, ${shape.mkString(", ")})"
   }
   // a JVM array's equals/hashCode are reference-based, which would
   // make canonicalization/semanticEquals (and common-subexpression
-  // elimination) never match two structurally identical encode
-  // expressions — compare the codebook by content instead
+  // elimination) never match two structurally identical expressions —
+  // compare the grid by content instead
   override def equals(other: Any): Boolean = other match {
-    case that: PqEncodeExpr =>
-      child == that.child && m == that.m && nc == that.nc && sub == that.sub &&
-        java.util.Arrays.equals(codebook, that.codebook)
+    case that: FlatGridExpr =>
+      getClass == that.getClass && child == that.child && shape == that.shape &&
+        java.util.Arrays.equals(grid, that.grid)
     case _ => false
   }
   override def hashCode(): Int =
-    java.util.Objects.hash(child, Int.box(m), Int.box(nc), Int.box(sub),
-      Int.box(java.util.Arrays.hashCode(codebook)))
+    java.util.Objects.hash(getClass, child, shape, Int.box(java.util.Arrays.hashCode(grid)))
+}
+
+/** A [[FlatGridExpr]] whose kernel defines the result of a null query
+  * (so the expression is never null): the query-side PQ kernels.
+  */
+private[functions] sealed trait QueryGridExpr extends FlatGridExpr {
+  protected def kernel(q: ArrayData): ArrayData
+  override def nullable: Boolean = false
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    kernel(child.eval(input).asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val q = child.genCode(ctx)
+    val call = kernelCall(ctx, s"${q.isNull} ? null : ${q.value}")
+    ev.copy(code = code"""
+      ${q.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = $call;""", isNull = FalseLiteral)
+  }
+}
+
+/** [[Kernels.pqEncodeCodes]] over a flat codebook. */
+case class PqEncodeExpr(
+    child: Expression, grid: Array[Long], m: Int, nc: Int, sub: Int)
+    extends FlatGridExpr {
+  require(m >= 1 && nc >= 1 && sub >= 1, s"bad pq shape m=$m nc=$nc sub=$sub")
+  require(grid.length == m * nc * sub,
+    s"codebook length ${grid.length} != m*nc*sub (${m * nc * sub})")
+  override protected def shape: Seq[Int] = Seq(m, nc, sub)
+  override protected def kernelName: String = "pqEncodeCodes"
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.pqEncodeCodes(input.asInstanceOf[ArrayData], grid, m, nc, sub)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => kernelCall(ctx, c))
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** [[Kernels.pqQueryLut]] over a flat codebook. */
+case class PqLutExpr(
+    child: Expression, grid: Array[Long], m: Int, nc: Int, sub: Int)
+    extends QueryGridExpr {
+  require(m >= 1 && nc >= 1 && sub >= 1, s"bad pq shape m=$m nc=$nc sub=$sub")
+  require(grid.length == m * nc * sub,
+    s"codebook length ${grid.length} != m*nc*sub (${m * nc * sub})")
+  override protected def shape: Seq[Int] = Seq(m, nc, sub)
+  override protected def kernelName: String = "pqQueryLut"
+  override protected def kernel(q: ArrayData): ArrayData =
+    Kernels.pqQueryLut(q, grid, m, nc, sub)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** [[Kernels.pqRouteCells]] over flat coarse centroids. */
+case class PqRouteExpr(
+    child: Expression, grid: Array[Long], dim: Int, nProbe: Int)
+    extends QueryGridExpr {
+  require(dim >= 1 && nProbe >= 1, s"bad routing shape dim=$dim nProbe=$nProbe")
+  require(grid.nonEmpty && grid.length % dim == 0,
+    s"centroids length ${grid.length} is not a positive multiple of dim $dim")
+  override protected def shape: Seq[Int] = Seq(dim, nProbe)
+  override protected def kernelName: String = "pqRouteCells"
+  override protected def kernel(q: ArrayData): ArrayData =
+    Kernels.pqRouteCells(q, grid, dim, nProbe)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -1248,7 +1399,7 @@ case class NearestCentroidsExpr(
     defineCodeGen(ctx, ev, c =>
       s"graft.functions.Kernels.nearestCentroids($c, ${isFloatArray(child)}, $ref, $dim, $nProbe)")
   }
-  // content-compare the centroid array (the PqEncodeExpr rationale):
+  // content-compare the centroid array (the FlatGridExpr rationale):
   // reference equality would defeat semanticEquals/CSE between
   // structurally identical assignment expressions
   override def equals(other: Any): Boolean = other match {
@@ -1311,6 +1462,11 @@ object VectorFunctions {
   def pqEncodeCodes(codes: Column, codebook: Array[Long],
       m: Int, nc: Int, sub: Int): Column =
     c(PqEncodeExpr(e(codes), codebook, m, nc, sub))
+  def pqQueryLut(codes: Column, codebook: Array[Long],
+      m: Int, nc: Int, sub: Int): Column =
+    c(PqLutExpr(e(codes), codebook, m, nc, sub))
+  def pqRouteCells(codes: Column, centroids: Array[Long], dim: Int, nProbe: Int): Column =
+    c(PqRouteExpr(e(codes), centroids, dim, nProbe))
   def cosine(a: Column, b: Column): Column = c(CosineSimilarityExpr(e(a), e(b)))
   def signBucket(vec: Column, planes: Int, seed: Long): Column =
     c(SignBucketExpr(e(vec), planes, seed))

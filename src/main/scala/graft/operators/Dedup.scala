@@ -699,15 +699,17 @@ object Dedup {
     * that join's scan of `bands/` (id-only postings, a small fraction
     * of corpus bytes). Verification then reads ONLY the shingle shards
     * containing candidate ids: candidate corpus_ids are hashed to their
-    * shard, the distinct shards are collected (bounded by the index's
-    * nShards, like Ivf's cell literals) and pushed as a `shard IN`
-    * filter, which drops the files whose shard range misses it, so a
-    * small probe touches a small slice of the shingle store instead of
-    * all of it — of the built or compacted store: each appended file
-    * spans its batch's shards, about all of them, and is read by every
-    * probe until compaction. Hot corpus buckets are skipped by the
-    * `bucket_size <= maxBucket` scan filter — deliberately PUSHED DOWN
-    * to the parquet scan (row-group skipping), which also means an
+    * shard, the set of hit shards is an observed metric
+    * (`collect_set`, at most the index's nShards values, like Ivf's
+    * cell literals) of the job that checkpoints the candidates, and it
+    * is pushed as a `shard IN` filter, which drops the files whose
+    * shard range misses it, so a small probe touches a small slice of
+    * the shingle store instead of all of it — of the built or
+    * compacted store: each appended file spans its batch's shards,
+    * about all of them, and is read by every probe until compaction.
+    * Hot corpus buckets are skipped by the `bucket_size <= maxBucket`
+    * scan filter — deliberately PUSHED DOWN to the parquet scan
+    * (row-group skipping), which also means an
     * attached `observe` could not see the skipped rows; quantify the
     * loss with [[minHashIndexStats]] instead (a one-column scan).
     *
@@ -726,10 +728,12 @@ object Dedup {
     * kernels, so the evaluations agree. A crawl increment is small by
     * definition — recompute beats cache management for the batch side;
     * persist `batch` upstream if yours is not. The CANDIDATE frame, by
-    * contrast, is materialized once (localCheckpoint): it is consumed
-    * by both shard discovery and verification, and recomputing it
-    * would re-run the postings join against the corpus-sized bands
-    * dataset — the one genuinely index-proportional scan here.
+    * contrast, is materialized once (localCheckpoint): that job also
+    * yields the hit shards, and verification reads its blocks, where
+    * recomputing it would re-run the postings join against the
+    * corpus-sized bands dataset — the one genuinely index-proportional
+    * scan here. Building the probe therefore runs one action, the
+    * checkpoint, and no collect.
     */
   def minHashProbeIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -761,22 +765,19 @@ object Dedup {
     val batchSh = batch
       .select(col(idCol).as("batch_id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-    // candidate pairs feed BOTH the shard-discovery collect just below
-    // (already an eager action at plan-construction time) and the
-    // verification join — left lazy, the postings join against the
-    // corpus-sized bands dataset ran twice per probe. localCheckpoint
-    // materializes the candidate-bounded frame once; discovery and
-    // verification both read the blocks (r18).
-    val candidates =
+    // localCheckpoint materializes the candidate-bounded frame once, so
+    // the verification join reads its blocks instead of re-running the
+    // postings join against the corpus-sized bands dataset (r18). The
+    // same job observes the set of shards that hold candidates (at most
+    // nShards values, never candidate-count-bounded), which prunes the
+    // shingle scan below with no job of its own.
+    val observed =
       probeCandidates(manifest.scan(spark, path, "bands"), batchSh,
         numHashes, bands, maxBucket)
-        .localCheckpoint()
-    // prune the shingle scan to the shards that hold candidates: the
-    // collect is bounded by nShards (distinct shard values), never by
-    // candidate count
-    val hit = candidates
-      .select(pmod(xxhash64(col("corpus_id")), lit(built.nShards.toLong)).as("shard"))
-      .distinct().collect().map(_.getLong(0))
+        .observe("hit_shards",
+          collect_set(pmod(xxhash64(col("corpus_id")), lit(built.nShards.toLong))))
+    val candidates = observed.localCheckpoint()
+    val hit = observed.queryExecution.observedMetrics("hit_shards").getSeq[Long](0)
     val corpusSh = manifest.scan(spark, path, "shingles")
       .filter(col("shard").isin(hit.toIndexedSeq: _*))
     candidates

@@ -455,6 +455,13 @@ object Ivf {
     * `exhaustive` (every cell probed) skips the collect: it would be
     * one wasted job ending in an always-true filter, paid per
     * micro-batch by the exhaustive ingest fold.
+    *
+    * The collect can also prune nothing without being exhaustive: on
+    * the benchmark's `index_ingest` fold, 100 queries × nProbe 8
+    * already probe all 64 cells. It stays anyway, because at
+    * nlist ≫ queries × nProbe it is what does the pruning, and whether
+    * it pays depends on where the batch's queries route, not on batch
+    * size — so nothing here branches on batch size.
     */
   private[operators] def pruneToProbed(
       cells: DataFrame, queries: DataFrame, probes: DataFrame, exhaustive: Boolean

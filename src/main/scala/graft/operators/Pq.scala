@@ -37,15 +37,12 @@ import Parallelism.widen
   * ≤ 127²·(dim/m), a score ≤ 127²·dim < 2^21 — BIGINT everywhere.
   *
   * Scale shape (100 TB): the codebook is m×ncode rows (2048 at the
-  * defaults) — a plan constant, broadcast everywhere it appears.
+  * defaults) — a plan constant, shipped to the kernels as a flat array.
   * Encoding is one corpus scan with a per-row m×ncode argmin (the
-  * inherent O(n·m·ncode) PQ encode cost) whose pair expansion
-  * collapses map-side: the subspace explode and codebook join happen
-  * within a task and the (id, subspace) min-struct agg combines
-  * before any shuffle, so the shuffle carries n·m skinny rows, never
-  * n·m·ncode. Serving scans CODES ONLY (m bytes/vector); per-query
-  * LUTs are ncode·m longs built from the broadcast codebook, and the
-  * score fold is an in-row `aggregate` over m lookups — the int8TopK
+  * inherent O(n·m·ncode) PQ encode cost) in one fused kernel, so it
+  * shuffles nothing. Serving scans CODES ONLY (m bytes/vector);
+  * per-query LUTs are ncode·m longs built in-row from that array, and
+  * the score fold is an in-row kernel over m lookups — the int8TopK
   * plan shape with 8× narrower corpus payload.
   */
 object Pq {
@@ -82,14 +79,6 @@ object Pq {
       .select(col("pos").cast(IntegerType).as("subspace"), col("code"),
         col("col").as("cw"))
   }
-
-  /** Exact integer dot between two BIGINT arrays — the codegen'd
-    * kernel ([[graft.functions.VectorFunctions.dotLong]]); the
-    * interpreted zip_with/aggregate HOF form was ~5× slower on the
-    * encode's n·m·ncode hot loop.
-    */
-  private def intDot(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotLong(a, b)
 
   /** Flatten a collected (groupIdx, code/cell, values) codeword table
     * into the kernel's group-major / code-major / element-minor
@@ -318,41 +307,30 @@ object Pq {
         flat, m, nc, sub).as("codes"))
   }
 
-  /** ADC top-k: per-query top `k` documents by the exact integer PQ
-    * score Σⱼ dot(q_subⱼ, codebook[j][codesⱼ]). Returns
-    * (query_id, id, adc_dot, rank), ties by id.
-    *
-    * Plan: codebook (m×ncode rows, plan-bounded) → per-query flat LUT
-    * (one array of m·ncode longs, built by a broadcast join + sorted
-    * collect, BOUNDED by m·ncode per query) → encoded corpus
-    * crossJoin broadcast(queries+LUT) → in-row m-lookup fold →
-    * per-query partial WindowGroupLimit. The corpus-side scan touches
-    * codes only; nothing data-proportional is collected or sorted.
+  /** (query_id, __q): each query's int8 codes ([[Similarity.int8Quantize]]). */
+  private[operators] def quantized(queries: DataFrame, qidCol: String, qvecCol: String): DataFrame =
+    queries.select(col(qidCol).as("query_id"),
+      Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
+
+  /** Per-query flat ADC lookup table over `__q`: one array of m·nc longs
+    * ordered by (subspace, code) — entry [j·nc + c] is dot(query
+    * subvector j, codeword c of subspace j), the sub-vector width taken
+    * from the query's own length. The codegen'd
+    * [[graft.functions.Kernels.pqQueryLut]] over the index's flat
+    * codebook: a per-row projection of the query batch, with no join,
+    * aggregate or shuffle.
     */
-  /** Per-query flat ADC lookup table: one array of m·nc longs ordered
-    * by (subspace, code) — entry [j·nc + c] is dot(query subvector j,
-    * codeword c of subspace j). Broadcast-join + sorted collect,
-    * BOUNDED at m·nc elements per query.
+  private[operators] def queryLut(index: PqIndex): Column =
+    graft.functions.VectorFunctions.pqQueryLut(col("__q"), index.codebookFlat,
+      index.m, index.nc, index.codebookFlat.length / (index.m * index.nc))
+
+  /** Each query's `nProbe` nearest cells over `__q` — the codegen'd
+    * [[graft.functions.Kernels.pqRouteCells]] over the index's flat
+    * centroids (exact integer cc − 2·dot, ties → smaller cell).
     */
-  private def queryLuts(
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      codebook: DataFrame, m: Int
-  ): DataFrame = {
-    val sub = floor(size(col("__q")) / lit(m)).cast(IntegerType)
-    queries
-      .select(col(qidCol).as("query_id"),
-        Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
-      .select(col("query_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("__q"), j * sub + 1, sub))))
-      .withColumnRenamed("pos", "subspace")
-      .join(broadcast(codebook), Seq("subspace"))
-      .groupBy(col("query_id"))
-      .agg(transform(array_sort(collect_list(struct(
-          col("subspace"), col("code"),
-          intDot(col("col"), col("cw")).as("d")))),
-        s => s.getField("d")).as("lut"))
-  }
+  private[operators] def routeCells(index: PqIndex, nProbe: Int): Column =
+    graft.functions.VectorFunctions.pqRouteCells(col("__q"), index.centroidsFlat,
+      index.dim, nProbe)
 
   /** The in-row ADC fold: m LUT lookups summed in exact BIGINT — the
     * codegen'd [[graft.functions.VectorFunctions.adcLong]] kernel
@@ -389,11 +367,12 @@ object Pq {
   private val codebookSchema = StructType(Seq(StructField("subspace", IntegerType),
     StructField("code", IntegerType), StructField("cw", ArrayType(LongType))))
   private val centroidsSchema = StructType(Seq(StructField("cell", IntegerType),
-    StructField("ccode", ArrayType(LongType)), StructField("__cc", LongType)))
+    StructField("ccode", ArrayType(LongType))))
 
   /** A [[PqIndex]] over flat quantizer grids: the codebook and centroid
     * frames are local relations re-seated from the arrays (one
-    * partition each; every consumer broadcasts them).
+    * partition each), which the index write stores; encode, routing and
+    * the LUTs read the arrays.
     */
   private def pqIndex(
       spark: SparkSession, m: Int, nc: Int, nlist: Int, dim: Int,
@@ -403,8 +382,7 @@ object Pq {
     val cbRows = for (g <- 0 until m; c <- 0 until nc) yield
       Row(g, c, cbFlat.slice((g * nc + c) * sub, (g * nc + c + 1) * sub).toSeq)
     val centRows = (0 until centFlat.length / dim).map { cell =>
-      val cc = centFlat.slice(cell * dim, (cell + 1) * dim)
-      Row(cell, cc.toSeq, cc.foldLeft(0L)((a, v) => a + v * v))
+      Row(cell, centFlat.slice(cell * dim, (cell + 1) * dim).toSeq)
     }
     def local(rows: Seq[Row], schema: StructType) =
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
@@ -521,10 +499,16 @@ object Pq {
     * flat scan — identical results to scoring everything. Returns
     * (query_id, id, adc_dot, rank), ties by id.
     *
-    * Plan: per-query flat LUT (m·nc longs, [[queryLuts]]) → encoded
-    * codes crossJoin/probe-join broadcast(queries+LUT) → in-row
-    * m-lookup fold → per-query partial WindowGroupLimit. The
-    * corpus-side scan touches codes (+cell) only; nothing
+    * Plan: one projection of the query batch computes each query's
+    * flat LUT ([[queryLut]], m·nc longs) and, when routing, its nProbe
+    * cells ([[routeCells]]) — per-row kernels over the index's flat
+    * grids, so the query side runs no join, aggregate or shuffle. That
+    * projection, (query_id, lut) or (query_id, cell, lut) exploded from
+    * the cells (the [[Ivf]] int8 probe shape), is broadcast into the
+    * codes scan: a cross join when exhaustive, an equi-join on cell
+    * when routed. Then the in-row m-lookup fold and the per-query
+    * partial WindowGroupLimit, whose exchange is the plan's only
+    * shuffle. The corpus-side scan touches codes (+cell) only; nothing
     * data-proportional is collected or sorted.
     */
   def adcTopK(
@@ -534,34 +518,34 @@ object Pq {
   ): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    val luts = queryLuts(queries, qidCol, qvecCol, index.codebook, index.m)
+    val q = quantized(queries, qidCol, qvecCol)
     val candidates =
-      if (nProbe >= index.nlist) index.encoded.crossJoin(broadcast(luts))
-      else index.encoded.join(
-        broadcast(routed(index, queries, qidCol, qvecCol, nProbe).join(luts, Seq("query_id"))),
-        Seq("cell"))
+      if (nProbe >= index.nlist)
+        index.encoded.crossJoin(broadcast(q.select(col("query_id"), queryLut(index).as("lut"))))
+      else {
+        // the LUT is built once per query, before the explode repeats
+        // it on each of the query's nProbe rows
+        val probes = q
+          .select(col("query_id"), queryLut(index).as("lut"),
+            routeCells(index, nProbe).as("__cells"))
+          .select(col("query_id"), explode(col("__cells")).as("cell"), col("lut"))
+        index.encoded.join(broadcast(probes), Seq("cell"))
+      }
     rankAdc(candidates
       .select(col("query_id"), col("id"),
         adcScore(col("codes"), col("lut"), index.m, index.nc).as("adc_dot")), k)
   }
 
   /** Each query's `nProbe` nearest cells by exact integer squared-L2
-    * (cc − 2·dot, ties → smallest cell): (query_id, cell).
+    * (cc − 2·dot, ties → smallest cell): (query_id, cell), one row per
+    * probed cell — a per-row projection of the query batch
+    * ([[routeCells]]).
     */
   private[operators] def routed(
       index: PqIndex, queries: DataFrame, qidCol: String, qvecCol: String, nProbe: Int
   ): DataFrame =
-    queries
-      .select(col(qidCol).as("query_id"),
-        Similarity.int8Quantize(col(qvecCol)).getField("q").as("__q"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("__d",
-        col("__cc") - lit(2L) * intDot(col("__q"), col("ccode")))
-      .withColumn("__rn",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("__d").asc, col("cell").asc)))
-      .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("cell"))
+    quantized(queries, qidCol, qvecCol)
+      .select(col("query_id"), explode(routeCells(index, nProbe)).as("cell"))
 
   /** One-shot flat PQ-ADC top-k (build + exhaustive serve). Callers
     * serving many query batches should [[buildIndex]] once and
@@ -863,7 +847,7 @@ object Pq {
     * version read by [[readIndex]] ([[cellsScan]]): later appends
     * commit later versions and stay invisible until the scan is
     * rebuilt from the current manifest, as [[ingestBatchTo]] does per
-    * step. Building the probe runs one job, the probe-cell collect
+    * step. Building the probe runs one action, the probe-cell collect
     * (none when nProbe == nlist).
     */
   def probeIndex(

@@ -35,12 +35,16 @@ abstract class SparkTestBase extends AnyFunSuite {
     try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** Every node of an executed plan, through AQE's wrapper nodes. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collect { case n => n } ++ p.collect {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+    }.flatten
+
   /** Every file scan of an executed plan, through AQE's wrapper nodes. */
   def scansOf(p: SparkPlan): Seq[FileSourceScanExec] =
-    p.collect { case f: FileSourceScanExec => f } ++ p.collect {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-    }.flatten
+    planNodes(p).collect { case f: FileSourceScanExec => f }
 
   /** sf0.001 testdata dir (smoke scale). */
   val sfDir = "/root/testdata/sf0.001"

@@ -1,7 +1,11 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.functions.VectorFunctions
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class PqSpec extends SparkTestBase {
   import spark.implicits._
@@ -200,6 +204,166 @@ class PqSpec extends SparkTestBase {
       Pq.writeIndex(rest, "vec_id", "embedding", grown,
         m = 4, ncode = 32, nlist = 16, mode = "append")
     }
+  }
+
+  // The relational query-side forms that Kernels.pqQueryLut and
+  // Kernels.pqRouteCells replaced, kept here as the reference the
+  // kernels must reproduce row for row.
+
+  /** Per-query LUTs by a broadcast codebook join + sorted collect. */
+  private def joinLuts(qs: DataFrame, idx: Pq.PqIndex): DataFrame = {
+    val sub = floor(size(col("__q")) / lit(idx.m)).cast("int")
+    Pq.quantized(qs, "qid", "qv")
+      .select(col("query_id"), posexplode(transform(sequence(lit(0), lit(idx.m - 1)),
+        j => slice(col("__q"), j * sub + 1, sub))))
+      .withColumnRenamed("pos", "subspace")
+      .join(broadcast(idx.codebook), Seq("subspace"))
+      .groupBy(col("query_id"))
+      .agg(transform(array_sort(collect_list(struct(col("subspace"), col("code"),
+        VectorFunctions.dotLong(col("col"), col("cw")).as("d")))), s => s.getField("d")).as("lut"))
+  }
+
+  /** (query_id, cell) routes by a broadcast nested-loop join against
+    * the centroids + a row_number window.
+    */
+  private def joinRouted(idx: Pq.PqIndex, qs: DataFrame, nProbe: Int): DataFrame = {
+    val cents = idx.centroids
+      .withColumn("__cc", aggregate(col("ccode"), lit(0L), (a, v) => a + v * v))
+    Pq.quantized(qs, "qid", "qv")
+      .crossJoin(broadcast(cents))
+      .withColumn("__d",
+        col("__cc") - lit(2L) * VectorFunctions.dotLong(col("__q"), col("ccode")))
+      .withColumn("__rn", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("__d").asc, col("cell").asc)))
+      .filter(col("__rn") <= nProbe)
+      .select(col("query_id"), col("cell"))
+  }
+
+  /** adcTopK over the join forms. */
+  private def joinAdcTopK(idx: Pq.PqIndex, qs: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val luts = joinLuts(qs, idx)
+    val candidates =
+      if (nProbe >= idx.nlist) idx.encoded.crossJoin(broadcast(luts))
+      else idx.encoded.join(
+        broadcast(joinRouted(idx, qs, nProbe).join(luts, Seq("query_id"))), Seq("cell"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dot").desc, col("id").asc)
+    candidates
+      .select(col("query_id"), col("id"),
+        VectorFunctions.adcLong(col("codes"), col("lut"), idx.nc).as("adc_dot"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** `n` seeded random query vectors of length `dim` (their int8 codes
+    * are random), then the edge cases: null elements, a null vector,
+    * vectors shorter than dim and than m, an empty one, one longer
+    * than dim, and an all-zero one (every distance is then the cell's
+    * cc, so equal centroids tie).
+    */
+  private def randomQueries(seed: Long, n: Int, dim: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def vec(len: Int): Seq[java.lang.Double] =
+      Seq.fill(len)(java.lang.Double.valueOf(rnd.nextGaussian()))
+    val rows = (0 until n).map(i => Row(i.toLong, vec(dim))) ++ Seq(
+      Row(n + 0L, vec(dim).updated(3, null).updated(17, null)),
+      Row(n + 1L, null),
+      Row(n + 2L, vec(dim - 5)),
+      Row(n + 3L, vec(3)),
+      Row(n + 4L, Seq.empty[java.lang.Double]),
+      Row(n + 5L, vec(dim + 9)),
+      Row(n + 6L, Seq.fill(dim)(java.lang.Double.valueOf(0.0))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), StructType(Seq(
+      StructField("qid", LongType), StructField("qv", ArrayType(DoubleType)))))
+  }
+
+  /** `idx` with a coarse quantizer whose cells 1–3 repeat cell 0 and
+    * whose cell 5 repeats cell 4, so routing meets exact distance ties.
+    */
+  private def dupCentroids(idx: Pq.PqIndex): Pq.PqIndex = {
+    val d = idx.dim
+    val flat = idx.centroidsFlat.clone()
+    (1 to 3).foreach(c => System.arraycopy(flat, 0, flat, c * d, d))
+    System.arraycopy(flat, 4 * d, flat, 5 * d, d)
+    val cents = (0 until flat.length / d).map(c => (c, flat.slice(c * d, (c + 1) * d).toSeq))
+    idx.copy(centroids = cents.toDF("cell", "ccode"), centroidsFlat = flat)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  private lazy val persisted: String = {
+    val dir = tempDir("pq_kernel_idx_").toString
+    Pq.writeIndex(emb, "vec_id", "embedding", dir, m = 8, ncode = 32, nlist = 16,
+      mode = "overwrite")
+    dir
+  }
+
+  test("query-side kernels equal the join forms they replaced: LUTs, routes, adcTopK rows") {
+    val built = Pq.buildIndex(emb, "vec_id", "embedding", m = 8, ncode = 32, nlist = 16)
+    // plus one query equal to centroid 0's codes: its distance to cells
+    // 0–3 of dupCentroids is the exact minimum, a four-way tie
+    val atCell0 = Seq((1000L, built.centroidsFlat.take(built.dim).map(_.toDouble).toSeq))
+      .toDF("qid", "qv")
+    val qs = randomQueries(seed = 17L, n = 40, dim = built.dim).union(atCell0).cache()
+    try {
+      for (idx <- Seq(built, dupCentroids(built))) {
+        assert(sortedRows(Pq.quantized(qs, "qid", "qv")
+          .select(col("query_id"), Pq.queryLut(idx).as("lut"))) == sortedRows(joinLuts(qs, idx)))
+        for (nProbe <- Seq(1, 2, 5, 16)) {
+          assert(sortedRows(Pq.routed(idx, qs, "qid", "qv", nProbe)) ==
+            sortedRows(joinRouted(idx, qs, nProbe)), s"routes differ at nProbe=$nProbe")
+          assert(sortedRows(Pq.adcTopK(idx, qs, "qid", "qv", 5, nProbe)) ==
+            sortedRows(joinAdcTopK(idx, qs, 5, nProbe)), s"adcTopK differs at nProbe=$nProbe")
+        }
+      }
+      // the tie is real, and the smaller cells win it
+      def routesOf(nProbe: Int) = Pq.routed(dupCentroids(built), qs, "qid", "qv", nProbe)
+        .collect().groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getInt(1)).toSet }
+      assert(routesOf(1)(1000L) == Set(0) && routesOf(2)(1000L) == Set(0, 1))
+      assert(routesOf(2).values.forall(r => !r.exists(Set(1, 2, 3)) || r.contains(0)))
+
+      // interpreted eval agrees with the codegen'd projection, null query included
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      import graft.functions.{PqLutExpr, PqRouteExpr}
+      val sub = built.codebookFlat.length / (built.m * built.nc)
+      Pq.quantized(qs, "qid", "qv")
+        .select(col("__q"), Pq.queryLut(built).as("lut"), Pq.routeCells(built, 5).as("cells"))
+        .collect().foreach { r =>
+          val q = Literal.create(r.get(0), ArrayType(LongType))
+          val lut = PqLutExpr(q, built.codebookFlat, built.m, built.nc, sub).eval()
+            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toSeq[Any](LongType)
+          val cells = PqRouteExpr(q, built.centroidsFlat, built.dim, 5).eval()
+            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toSeq[Int](IntegerType)
+          assert(lut.map(String.valueOf) == r.getSeq[Any](1).map(String.valueOf), r)
+          assert(cells == r.getSeq[Int](2), r)
+        }
+    } finally { qs.unpersist(); () }
+  }
+
+  test("probeIndex over the kernels equals the join-form probe over a persisted index") {
+    val idx = Pq.readIndex(spark, persisted)
+    val qs = randomQueries(seed = 29L, n = 40, dim = idx.dim)
+    val nProbe = 4
+    val joinForm = joinAdcTopK(idx.copy(encoded = Ivf.pruneToProbed(idx.encoded, qs,
+      joinRouted(idx, qs, nProbe), exhaustive = false)), qs, 5, nProbe)
+    assert(sortedRows(Pq.probeIndex(idx, qs, "qid", "qv", k = 5, nProbe = nProbe)) ==
+      sortedRows(joinForm))
+  }
+
+  test("probeIndex's plan: no nested-loop join, object-hash aggregate or sort-merge join, " +
+      "and one shuffle exchange, the top-k's") {
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, SortMergeJoinExec}
+    val idx = Pq.readIndex(spark, persisted)
+    val probed = Pq.probeIndex(idx, randomQueries(seed = 31L, n = 40, dim = idx.dim),
+      "qid", "qv", k = 5, nProbe = 4)
+    assert(probed.collect().nonEmpty)
+    val plan = probed.queryExecution.executedPlan
+    val nodes = planNodes(plan)
+    assert(!nodes.exists {
+      case _: BroadcastNestedLoopJoinExec | _: ObjectHashAggregateExec | _: SortMergeJoinExec => true
+      case _ => false
+    }, plan.toString)
+    assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, plan.toString)
   }
 
   test("adcLong kernel: flat LUT lookup sum; out-of-range codes contribute 0") {

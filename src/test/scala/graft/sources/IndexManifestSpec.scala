@@ -214,6 +214,18 @@ class IndexManifestSpec extends SparkTestBase {
     assert(!jobs.exists(j => j.listing || j.inference), jobs)
   }
 
+  test("a MinHash probe finds its hit shards on the candidate checkpoint: building and " +
+      "checkpointing it runs two localCheckpoints and no collect") {
+    val dir = tempDir("mf_actions_mh").resolve("idx").toString
+    val m = pmod(col("doc_id"), lit(5))
+    Dedup.writeMinHashIndex(docs.filter(m =!= 0), "doc_id", "text", dir,
+      mode = "overwrite", nShards = 64)
+    val (pairs, actions, _) = observe(Dedup.minHashProbeIndex(spark, docs.filter(m === 0),
+      "doc_id", "text", dir, threshold = 0.0).localCheckpoint())
+    assert(actions == Seq("localCheckpoint", "localCheckpoint"), actions)
+    assert(pairs.count() > 0, "the probe found no pairs — the shard filter pruned them all")
+  }
+
   test("an index without meta.txt fails loudly") {
     val dir = tempDir("mf_none").resolve("idx").toString
     Dedup.writeMinHashIndex(docs.limit(50), "doc_id", "text", dir, mode = "overwrite")
